@@ -202,19 +202,12 @@ class TaskManager:
             raise ValueError(
                 f"task {spec.task_id} already exists ({state}); "
                 "delete it before reusing the id")
-        if spec.task_kind not in ("cdc", "near_dup_index",
-                                  "search_index", "rollup",
-                                  "winnow_index", "item_cf",
-                                  "event_index", "user_seq"):
-            # a typo'd kind would silently fall into the CDC branch
-            # and run the replication pipeline over whatever stream
-            # the factory returns — fail at creation, like the
-            # task_id validation above (r11 review)
+        if spec.task_kind not in self._STARTERS:
+            # fail a typo'd kind at creation, like the task_id
+            # validation above (r11 review)
             raise ValueError(
-                f"task_kind {spec.task_kind!r} unknown: use 'cdc', "
-                "'near_dup_index', 'search_index', 'rollup', "
-                "'winnow_index', 'item_cf', 'event_index' or "
-                "'user_seq'")
+                f"task_kind {spec.task_kind!r} unknown: use one of "
+                f"{', '.join(map(repr, self._STARTERS))}")
         if spec.task_kind != "cdc":
             # fail configuration errors at creation, not at the
             # first store construction mid-stream (r11 ADVICE)
@@ -257,6 +250,11 @@ class TaskManager:
         self._persist()
         return spec.task_id
 
+    def _spec(self, spec_or_id) -> TaskSpec:
+        """A task's spec, given the spec itself or its id."""
+        return (self.tasks[spec_or_id]
+                if isinstance(spec_or_id, str) else spec_or_id)
+
     def store_root(self, spec: TaskSpec) -> str:
         """Durable-store root for stateful task kinds — scoped to
         the checkpoint epoch like the checkpoint dir itself:
@@ -274,8 +272,7 @@ class TaskManager:
             ParquetClusterStore, ParquetDocStore, ParquetLshStore,
             ParquetPairStore, ParquetRedirectStore)
 
-        spec = (self.tasks[spec_or_id]
-                if isinstance(spec_or_id, str) else spec_or_id)
+        spec = self._spec(spec_or_id)
         root = self.store_root(spec)
         stores = (
             ParquetLshStore(self.spark, os.path.join(root, "lsh")),
@@ -330,8 +327,7 @@ class TaskManager:
             ParquetCorpusStatsStore, ParquetDocLenStore,
             ParquetPostingsStore)
 
-        spec = (self.tasks[spec_or_id]
-                if isinstance(spec_or_id, str) else spec_or_id)
+        spec = self._spec(spec_or_id)
         root = self.store_root(spec)
         stores = (
             ParquetPostingsStore(self.spark,
@@ -365,11 +361,10 @@ class TaskManager:
 
         return streaming_inverted_index(self.search_stores(task_id)[0])
 
-    def _start_search_index(self, spec: TaskSpec):
+    def _start_search_index(self, spec: TaskSpec, env: DataFrame):
         from galaxy_spark.streaming.state_store import \
             start_streaming_search_index
 
-        env = self.source_factory(self.spark, spec)
         postings, doclen, stats = self.search_stores(spec)
         opts = dict(spec.index_options)
         return start_streaming_search_index(
@@ -384,8 +379,7 @@ class TaskManager:
         from galaxy_spark.streaming.state_store import \
             ParquetRollupStore
 
-        spec = (self.tasks[spec_or_id]
-                if isinstance(spec_or_id, str) else spec_or_id)
+        spec = self._spec(spec_or_id)
         store = ParquetRollupStore(
             self.spark,
             os.path.join(self.store_root(spec), "rollup"))
@@ -420,11 +414,10 @@ class TaskManager:
 
         return streaming_anomaly(self.rollup_store(task_id))
 
-    def _start_rollup(self, spec: TaskSpec):
+    def _start_rollup(self, spec: TaskSpec, env: DataFrame):
         from galaxy_spark.streaming.state_store import \
             start_incremental_rollup_parquet
 
-        env = self.source_factory(self.spark, spec)
         return start_incremental_rollup_parquet(
             env, self.rollup_store(spec), self.checkpoint_dir(spec))
 
@@ -434,8 +427,7 @@ class TaskManager:
         from galaxy_spark.streaming.state_store import \
             ParquetWinnowStore
 
-        spec = (self.tasks[spec_or_id]
-                if isinstance(spec_or_id, str) else spec_or_id)
+        spec = self._spec(spec_or_id)
         store = ParquetWinnowStore(
             self.spark,
             os.path.join(self.store_root(spec), "winnow"))
@@ -455,11 +447,10 @@ class TaskManager:
 
         return streaming_winnowing_pairs(self.winnow_store(task_id))
 
-    def _start_winnow(self, spec: TaskSpec):
+    def _start_winnow(self, spec: TaskSpec, env: DataFrame):
         from galaxy_spark.streaming.state_store import \
             start_streaming_winnowing_index
 
-        env = self.source_factory(self.spark, spec)
         opts = dict(spec.index_options)
         return start_streaming_winnowing_index(
             env, self.winnow_store(spec), self.checkpoint_dir(spec),
@@ -473,8 +464,7 @@ class TaskManager:
             ParquetBasketStore, ParquetCoocStore,
             ParquetItemDegStore)
 
-        spec = (self.tasks[spec_or_id]
-                if isinstance(spec_or_id, str) else spec_or_id)
+        spec = self._spec(spec_or_id)
         root = self.store_root(spec)
         stores = (
             ParquetBasketStore(self.spark,
@@ -561,11 +551,10 @@ class TaskManager:
         _b, cooc, _d = self.item_cf_stores(task_id)
         return streaming_resource_allocation(cooc)
 
-    def _start_item_cf(self, spec: TaskSpec):
+    def _start_item_cf(self, spec: TaskSpec, env: DataFrame):
         from galaxy_spark.streaming.state_store import \
             start_streaming_item_cf
 
-        env = self.source_factory(self.spark, spec)
         baskets, cooc, deg = self.item_cf_stores(spec)
         return start_streaming_item_cf(
             env, baskets, cooc, deg, self.checkpoint_dir(spec))
@@ -580,8 +569,7 @@ class TaskManager:
         from galaxy_spark.streaming.state_store import (
             ParquetEventIndexStore, ParquetPurchaseStore)
 
-        spec = (self.tasks[spec_or_id]
-                if isinstance(spec_or_id, str) else spec_or_id)
+        spec = self._spec(spec_or_id)
         root = self.store_root(spec)
         stores = (
             ParquetPurchaseStore(self.spark,
@@ -640,11 +628,10 @@ class TaskManager:
         pur, idx = self.event_index_stores(task_id)
         return streaming_time_to_convert(pur, idx)
 
-    def _start_event_index(self, spec: TaskSpec):
+    def _start_event_index(self, spec: TaskSpec, env: DataFrame):
         from galaxy_spark.streaming.state_store import \
             start_streaming_attribution_hub
 
-        env = self.source_factory(self.spark, spec)
         pur, idx = self.event_index_stores(spec)
         return start_streaming_attribution_hub(
             env, pur, idx, self.checkpoint_dir(spec))
@@ -657,8 +644,7 @@ class TaskManager:
         from galaxy_spark.streaming.state_store import \
             ParquetUserSeqStore
 
-        spec = (self.tasks[spec_or_id]
-                if isinstance(spec_or_id, str) else spec_or_id)
+        spec = self._spec(spec_or_id)
         store = ParquetUserSeqStore(
             self.spark,
             os.path.join(self.store_root(spec), "userseq"),
@@ -696,20 +682,18 @@ class TaskManager:
         return streaming_interarrival_burstiness(
             self.user_seq_store(task_id))
 
-    def _start_user_seq(self, spec: TaskSpec):
+    def _start_user_seq(self, spec: TaskSpec, env: DataFrame):
         from galaxy_spark.streaming.state_store import \
             start_streaming_user_seq
 
-        env = self.source_factory(self.spark, spec)
         return start_streaming_user_seq(
             env, self.user_seq_store(spec),
             self.checkpoint_dir(spec))
 
-    def _start_near_dup(self, spec: TaskSpec):
+    def _start_near_dup(self, spec: TaskSpec, env: DataFrame):
         from galaxy_spark.streaming.state_store import \
             start_streaming_near_dup_clustering
 
-        env = self.source_factory(self.spark, spec)
         lsh, doc, pair, cstore, rstore = self.near_dup_stores(spec)
         opts = dict(spec.index_options)
         return start_streaming_near_dup_clustering(
@@ -722,51 +706,36 @@ class TaskManager:
             text_col=opts.get("text_col", "text"),
             id_col=opts.get("id_col", "doc_id"))
 
-    def _start(self, spec: TaskSpec) -> None:
-        if spec.task_kind == "near_dup_index":
-            self.queries[spec.task_id] = self._start_near_dup(spec)
-            spec.stopped = False
-            return
-        if spec.task_kind == "search_index":
-            self.queries[spec.task_id] = self._start_search_index(spec)
-            spec.stopped = False
-            return
-        if spec.task_kind == "rollup":
-            self.queries[spec.task_id] = self._start_rollup(spec)
-            spec.stopped = False
-            return
-        if spec.task_kind == "winnow_index":
-            self.queries[spec.task_id] = self._start_winnow(spec)
-            spec.stopped = False
-            return
-        if spec.task_kind == "item_cf":
-            self.queries[spec.task_id] = self._start_item_cf(spec)
-            spec.stopped = False
-            return
-        if spec.task_kind == "event_index":
-            self.queries[spec.task_id] = \
-                self._start_event_index(spec)
-            spec.stopped = False
-            return
-        if spec.task_kind == "user_seq":
-            self.queries[spec.task_id] = \
-                self._start_user_seq(spec)
-            spec.stopped = False
-            return
-        env = self.source_factory(self.spark, spec)
-        if spec.live:
-            ref = LiveFilterRef(spec.task_filter())
-            self.live_filters[spec.task_id] = ref
-            q = start_pipeline_live(
-                env, spec.task_id, ref, list(spec.columns),
-                spec.sink(), self.checkpoint_dir(spec),
-            )
-        else:
-            q = start_pipeline(
+    def _start_cdc(self, spec: TaskSpec, env: DataFrame):
+        if not spec.live:
+            return start_pipeline(
                 env, spec.task_id, spec.task_filter(), list(spec.columns),
                 spec.sink(), self.checkpoint_dir(spec),
             )
-        self.queries[spec.task_id] = q
+        ref = LiveFilterRef(spec.task_filter())
+        self.live_filters[spec.task_id] = ref
+        return start_pipeline_live(
+            env, spec.task_id, ref, list(spec.columns),
+            spec.sink(), self.checkpoint_dir(spec),
+        )
+
+    #: task_kind -> the starter that runs it; this table is also the
+    #: list of kinds ``create_task`` accepts
+    _STARTERS = {
+        "cdc": _start_cdc,
+        "near_dup_index": _start_near_dup,
+        "search_index": _start_search_index,
+        "rollup": _start_rollup,
+        "winnow_index": _start_winnow,
+        "item_cf": _start_item_cf,
+        "event_index": _start_event_index,
+        "user_seq": _start_user_seq,
+    }
+
+    def _start(self, spec: TaskSpec) -> None:
+        env = self.source_factory(self.spark, spec)
+        self.queries[spec.task_id] = \
+            self._STARTERS[spec.task_kind](self, spec, env)
         spec.stopped = False
 
     def stop_task(self, task_id: str) -> None:

@@ -702,20 +702,23 @@ def lsh_near_dup_pairs(emb: DataFrame, threshold: float,
     # only on near-threshold survivors (~the output size).
     #
     # r15 (guide §4.2): mapInArrow instead of mapInPandas — the
-    # Arrow list<double> columns flatten to their contiguous
+    # Arrow list<float> columns flatten to their contiguous
     # values buffer and reshape to (rows, dim) with ZERO per-row
     # work, where the pandas path materialized one ndarray cell
     # per row and np.stack re-copied them (per-batch setup was the
-    # verify stage's CPU, not the dot itself).
+    # verify stage's CPU, not the dot itself). The blocks upcast to
+    # float64 before the dot: embeddings are stored as float32, and
+    # float32 rounding over a 64-term dot (~6e-8 relative per add)
+    # is not safely below the 1e-6 margin; f64 drift is ~1e-13.
     def prescore(batches):
         import pyarrow as pa
         for rb in batches:
             if rb.num_rows == 0:
                 continue
             A = np.asarray(rb.column("va").flatten()) \
-                .reshape(rb.num_rows, -1)
+                .astype(np.float64).reshape(rb.num_rows, -1)
             B = np.asarray(rb.column("vb").flatten()) \
-                .reshape(rb.num_rows, -1)
+                .astype(np.float64).reshape(rb.num_rows, -1)
             na = np.asarray(rb.column("na"))
             nb_ = np.asarray(rb.column("nb"))
             cos = np.einsum("ij,ij->i", A, B) / (na * nb_)

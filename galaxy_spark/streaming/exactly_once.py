@@ -41,6 +41,7 @@ the store the same bytes as a toy one (buckets, not events).
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import shutil
@@ -165,6 +166,26 @@ def _checkpoint_lineage(checkpoint_dir: str) -> str:
         return json.load(f)["id"][:8]
 
 
+def _require_lineage(checkpoint_dir: str, stores) -> str:
+    """The checkpoint lineage, refusing any store that holds state
+    from a DIFFERENT lineage: epoch ids restart at 0 per checkpoint,
+    so continuing into a foreign-lineage store would drop live
+    batches as replays — data loss masquerading as exactly-once.
+    ONE copy of the guard for every lineage-keyed foreachBatch sink,
+    however many stores it merges."""
+    lin = _checkpoint_lineage(checkpoint_dir)
+    for store in stores:
+        foreign = store.lineages() - {lin}
+        if foreign:
+            raise ValueError(
+                f"store {store.path!r} holds state from other "
+                f"checkpoint lineage(s) {sorted(foreign)}; epoch ids "
+                "restart at 0 per checkpoint, so reusing the store "
+                "would drop new batches as replays. Use a fresh "
+                "store (or checkpoint) per lineage.")
+    return lin
+
+
 def start_exactly_once_rollup(stream: DataFrame,
                               store: EpochKeyedRollupStore,
                               checkpoint_dir: str) -> StreamingQuery:
@@ -173,25 +194,15 @@ def start_exactly_once_rollup(stream: DataFrame,
     epoch-keyed idempotent merge, scoped to the checkpoint lineage.
 
     Fails loudly (killing the query) when ``store`` already holds
-    epochs from a DIFFERENT checkpoint lineage: epoch ids restart at
-    0 per checkpoint, so continuing would silently drop live batches
-    as replays — data loss masquerading as exactly-once."""
-    lineage: list[str] = []
+    epochs from a DIFFERENT checkpoint lineage (``_require_lineage``)."""
+    # resolved and checked once, at the first batch
+    lineage = functools.cache(
+        lambda: _require_lineage(checkpoint_dir, (store,)))
 
     def handle(batch_df: DataFrame, epoch_id: int) -> None:
-        if not lineage:
-            lin = _checkpoint_lineage(checkpoint_dir)
-            foreign = store.lineages() - {lin}
-            if foreign:
-                raise ValueError(
-                    f"store {store.path!r} holds epochs from other "
-                    f"checkpoint lineage(s) {sorted(foreign)}; epoch "
-                    "ids restart at 0 per checkpoint, so reusing the "
-                    "store would drop new batches as replays. Use a "
-                    "fresh store (or checkpoint) per lineage.")
-            lineage.append(lin)
+        lin = lineage()
         store.merge(_partial_rollup(batch_df).toPandas(), epoch_id,
-                    lineage=lineage[0])
+                    lineage=lin)
 
     return (stream.writeStream
             .option("checkpointLocation", checkpoint_dir)

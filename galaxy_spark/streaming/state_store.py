@@ -63,6 +63,8 @@ Layout and protocol::
 
 from __future__ import annotations
 
+import functools
+import inspect
 import os
 import uuid
 
@@ -70,7 +72,8 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from galaxy_spark.streaming.exactly_once import _checkpoint_lineage
+from galaxy_spark.streaming.exactly_once import (_checkpoint_lineage,
+                                                 _require_lineage)
 from galaxy_spark.streaming.store_fs import PosixStoreFs, store_fs
 from galaxy_spark.streaming.rollup import _partial_rollup
 from galaxy_spark.streaming.snapshot import partial_snapshot
@@ -78,11 +81,28 @@ from galaxy_spark.streaming.snapshot import partial_snapshot
 _BUCKET = "__bucket"
 
 
+def _retention_days(retention_days: int | None) -> int | None:
+    """The eviction horizon every retention-bearing store takes:
+    None keeps state forever, otherwise at least one day."""
+    if retention_days is not None and retention_days < 1:
+        raise ValueError("retention_days must be >= 1 or None")
+    return retention_days
+
+
 class KeyedParquetStore:
     """Generic keyed MERGE store: ``merge`` folds one partial
     DataFrame into the persisted state with ``aggs`` (which must be
     an associative/commutative fold over the union of old state
     rows and partial rows — latest-wins max_by, sums, counts)."""
+
+    def __new__(cls, *args, **kwargs):
+        self = super().__new__(cls)
+        #: the constructor call, as made — ``_clone`` replays it at a
+        #: new path and bucket count, so every tunable a subclass
+        #: takes (a KMV store's k, a retention horizon) survives a
+        #: rebuild without a per-subclass override
+        self._init_args = (args, kwargs)
+        return self
 
     def __init__(self, spark: SparkSession, path: str,
                  key_cols: list[str], aggs: list[Column],
@@ -172,7 +192,7 @@ class KeyedParquetStore:
     @delta_threshold.setter
     def delta_threshold(self, value: int | None) -> None:
         # the knob's BLESSED mutation path is attribute assignment
-        # (rebucket copies it post-construction; pipelines flip it
+        # (_clone copies it post-construction; pipelines flip it
         # at epoch boundaries), so the >= 1 guard must live on the
         # setter, not just __init__ — a 0/negative value would
         # silently degrade to compact-every-merge, which is WORSE
@@ -548,34 +568,26 @@ class KeyedParquetStore:
 
     def _clone(self, new_path: str, n_buckets: int) -> "KeyedParquetStore":
         """Same-configuration store at a new path / bucket count —
-        the ``rebucket`` reconstruction seam. Subclasses whose
-        configuration exceeds (spark, path, n_buckets) MUST override
-        (r10 ADVICE: reconstructing ``ParquetKmvStore`` through the
-        bare signature silently reset a non-default ``k`` to 256, so
-        migration re-truncated sketches under the wrong k — and
-        ``ParquetDailyHllStore``'s ``p`` likewise)."""
-        if type(self) is KeyedParquetStore:
-            # the base class takes key_cols/aggs explicitly — forward
-            # them (the fixed-schema subclasses bake theirs in, and
-            # calling their (spark, path, n_buckets) signature with
-            # the base class raised a bare TypeError)
-            return KeyedParquetStore(
-                self.spark, new_path, self.key_cols, self.aggs,
-                n_buckets=n_buckets, state_schema=self.state_schema,
-                layout_cols=self.layout_cols,
-                delta_threshold=self.delta_threshold,
-                fs=self.fs,
-                vacuum_grace_seconds=self.vacuum_grace_seconds)
-        try:
-            return self.__class__(self.spark, new_path,
-                                  n_buckets=n_buckets)
-        except TypeError as exc:
-            raise TypeError(
-                f"rebucket: {self.__class__.__name__} does not "
-                "accept the (spark, path, n_buckets) constructor "
-                "shape — override _clone (forwarding every tunable, "
-                "as ParquetKmvStore does for k) or migrate "
-                f"manually: {exc}") from exc
+        the ``rebucket`` reconstruction seam. Replays the recorded
+        constructor call with only ``path`` and ``n_buckets``
+        replaced, then carries what may have changed since
+        construction: the write strategy (``delta_threshold``,
+        ``fs``, ``vacuum_grace_seconds`` shape only HOW versions are
+        written, never the folded state) and a ``fold_finalize``
+        hook assigned after construction. A hook the constructor
+        derives is derived again, bound to the new store."""
+        args, kwargs = self._init_args
+        call = inspect.signature(type(self).__init__).bind(
+            self, *args, **kwargs).arguments
+        del call["self"]
+        call.update(path=new_path, n_buckets=n_buckets)
+        new = type(self)(**call)
+        new.delta_threshold = self.delta_threshold
+        new.fs = self.fs
+        new.vacuum_grace_seconds = self.vacuum_grace_seconds
+        if new.fold_finalize is None:
+            new.fold_finalize = self.fold_finalize
+        return new
 
 
 class ParquetSnapshotStore(KeyedParquetStore):
@@ -669,30 +681,6 @@ def rebucket(store: KeyedParquetStore, new_path: str,
             "in the docstring; pass checkpoint_dir to have it "
             "checked", stacklevel=2)
     new_store = store._clone(new_path, n_buckets)
-    # delta_threshold / fs / vacuum grace shape only the WRITE
-    # strategy (never the folded state), so it is safe — and
-    # required, subclass ctors don't take them — to copy them
-    # across post-construction
-    new_store.delta_threshold = store.delta_threshold
-    new_store.fs = store.fs
-    new_store.vacuum_grace_seconds = store.vacuum_grace_seconds
-    # the eviction seam must migrate too (r13 review: a store whose
-    # retention hangs on fold_finalize would silently stop evicting
-    # after rebucket; subclasses that re-derive the hook in their
-    # _clone override get the identical callable re-assigned)
-    new_store.fold_finalize = store.fold_finalize
-    # belt for the _clone suspenders: a subclass override that
-    # forgot a tunable shows up here as a key/schema drift before
-    # any state is rewritten (tunables that shape only the FOLD,
-    # like KmvStore's k, must be forwarded by the override itself —
-    # that is what _clone exists for)
-    if (new_store.key_cols != store.key_cols
-            or new_store.layout_cols != store.layout_cols
-            or new_store.state_schema != store.state_schema):
-        raise ValueError(
-            f"rebucket: {store.__class__.__name__}._clone produced "
-            "a differently-configured store (key_cols/layout_cols/"
-            "state_schema drift) — fix the _clone override")
     if not lineages:
         return new_store                       # empty store: done
     currents = []
@@ -727,40 +715,31 @@ def rebucket(store: KeyedParquetStore, new_path: str,
     return new_store
 
 
-def _require_lineage(checkpoint_dir: str, stores, cache: list) -> str:
-    """Resolve and cache the checkpoint lineage, refusing any store
-    that holds foreign-lineage state (epoch ids restart at 0 per
-    checkpoint — continuing into a foreign-lineage store would drop
-    live batches as replays; same contract as
-    start_exactly_once_rollup). ONE copy of the guard for every
-    foreachBatch handler in this module, however many stores it
-    merges."""
-    if not cache:
-        lin = _checkpoint_lineage(checkpoint_dir)
-        for store in stores:
-            foreign = store.lineages() - {lin}
-            if foreign:
-                raise ValueError(
-                    f"store {store.path!r} holds state from other "
-                    f"checkpoint lineage(s) {sorted(foreign)}; use a "
-                    "fresh store (or checkpoint) per lineage.")
-        cache.append(lin)
-    return cache[0]
-
-
-def _lineage_scoped_handler(store: KeyedParquetStore,
-                            checkpoint_dir: str, partial_fn):
-    """foreachBatch handler: distributed partial fold -> store
-    MERGE, with the epoch key scoped to the checkpoint lineage
-    (guard: ``_require_lineage``)."""
-    lineage: list[str] = []
+def _start_store_stream(stream: DataFrame, checkpoint_dir: str,
+                        stores, merges) -> StreamingQuery:
+    """THE foreachBatch starter for every store pipeline in this
+    module (the Structured Streaming foreachBatch + idempotent-sink
+    shape): per micro-batch, ``merges(batch_df)`` yields
+    ``(store, partial)`` pairs in MERGE ORDER, and each partial is
+    merged under one epoch key scoped to the checkpoint lineage.
+    ``merges`` is a generator so a partial that reads store state
+    (the view deltas, the cluster partials) is built only once the
+    merges before it have committed — merge order is the replay
+    contract each starter's docstring derives. ``stores`` lists every store
+    the merges touch, all refused up front when one holds another
+    lineage's state (``exactly_once._require_lineage``)."""
+    # resolved and checked once, at the first batch
+    lineage = functools.cache(
+        lambda: _require_lineage(checkpoint_dir, stores))
 
     def handle(batch_df: DataFrame, epoch_id: int) -> None:
-        lin = _require_lineage(checkpoint_dir, (store,), lineage)
-        store.merge(partial_fn(batch_df),
-                    f"{lin}.{epoch_id:012d}")
+        key = f"{lineage()}.{epoch_id:012d}"
+        for store, partial in merges(batch_df):
+            store.merge(partial, key)
 
-    return handle
+    return (stream.writeStream
+            .option("checkpointLocation", checkpoint_dir)
+            .foreachBatch(handle).start())
 
 
 def start_incremental_snapshot_parquet(
@@ -770,22 +749,18 @@ def start_incremental_snapshot_parquet(
     per-batch distributed latest-wins partial -> bucketed parquet
     MERGE. Result always equals the batch cdc_apply_snapshot fold
     (pinned in tests/test_streaming.py)."""
-    return (changes_stream.writeStream
-            .option("checkpointLocation", checkpoint_dir)
-            .foreachBatch(_lineage_scoped_handler(
-                store, checkpoint_dir, partial_snapshot))
-            .start())
+    return _start_store_stream(
+        changes_stream, checkpoint_dir, (store,),
+        lambda b: [(store, partial_snapshot(b))])
 
 
 def start_incremental_rollup_parquet(
         stream: DataFrame, store: ParquetRollupStore,
         checkpoint_dir: str) -> StreamingQuery:
     """Default durable backend for the continuous rollup."""
-    return (stream.writeStream
-            .option("checkpointLocation", checkpoint_dir)
-            .foreachBatch(_lineage_scoped_handler(
-                store, checkpoint_dir, _partial_rollup))
-            .start())
+    return _start_store_stream(
+        stream, checkpoint_dir, (store,),
+        lambda b: [(store, _partial_rollup(b))])
 
 
 def partial_scd2(changes: DataFrame) -> DataFrame:
@@ -847,11 +822,9 @@ def start_incremental_scd2_parquet(
         checkpoint_dir: str) -> StreamingQuery:
     """Maintain SCD2 history incrementally: per-batch distributed
     version-array partials -> bucketed parquet MERGE."""
-    return (changes_stream.writeStream
-            .option("checkpointLocation", checkpoint_dir)
-            .foreachBatch(_lineage_scoped_handler(
-                store, checkpoint_dir, partial_scd2))
-            .start())
+    return _start_store_stream(
+        changes_stream, checkpoint_dir, (store,),
+        lambda b: [(store, partial_scd2(b))])
 
 
 class ParquetViewStore(KeyedParquetStore):
@@ -933,21 +906,15 @@ def start_incremental_view_parquet(
     order has a poisoned window — snapshot merged, view not — where
     a replay's deltas compute to zero against the already-advanced
     snapshot and the view silently loses the batch."""
-    lineage: list[str] = []
-
-    def handle(batch_df: DataFrame, epoch_id: int) -> None:
-        lin = _require_lineage(checkpoint_dir,
-                               (view_store, snap_store), lineage)
-        key = f"{lin}.{epoch_id:012d}"
+    def merges(batch_df: DataFrame):
         # merge() checkpoints its partial internally, so the
         # state-sized snapshot join here runs once per batch
-        view_store.merge(partial_view_deltas(batch_df,
-                                             snap_store.state()), key)
-        snap_store.merge(partial_snapshot(batch_df), key)
+        yield view_store, partial_view_deltas(batch_df,
+                                              snap_store.state())
+        yield snap_store, partial_snapshot(batch_df)
 
-    return (changes_stream.writeStream
-            .option("checkpointLocation", checkpoint_dir)
-            .foreachBatch(handle).start())
+    return _start_store_stream(changes_stream, checkpoint_dir,
+                               (view_store, snap_store), merges)
 
 
 # ------------------------------------------------------------------
@@ -1028,19 +995,12 @@ def start_streaming_heavy_hitters(
     replay-correct in either order: after a crash between them the
     replay recomputes identical partials, the claimed store skips,
     the other completes."""
-    lineage: list[str] = []
+    def merges(batch_df: DataFrame):
+        yield cms_store, partial_cms(batch_df, key_col)
+        yield cand_store, partial_topk_candidates(batch_df, key_col, m)
 
-    def handle(batch_df: DataFrame, epoch_id: int) -> None:
-        lin = _require_lineage(checkpoint_dir,
-                               (cms_store, cand_store), lineage)
-        key = f"{lin}.{epoch_id:012d}"
-        cms_store.merge(partial_cms(batch_df, key_col), key)
-        cand_store.merge(partial_topk_candidates(batch_df, key_col,
-                                                 m), key)
-
-    return (stream.writeStream
-            .option("checkpointLocation", checkpoint_dir)
-            .foreachBatch(handle).start())
+    return _start_store_stream(stream, checkpoint_dir,
+                               (cms_store, cand_store), merges)
 
 
 def streaming_heavy_hitters(cms_store: ParquetCmsStore,
@@ -1118,16 +1078,9 @@ def start_streaming_cardinality(
     variant of the heavy-hitters starter (one merge per epoch, so
     replay correctness needs only the store's own claim skip; with
     MAX it would hold even without it)."""
-    lineage: list[str] = []
-
-    def handle(batch_df: DataFrame, epoch_id: int) -> None:
-        lin = _require_lineage(checkpoint_dir, (hll_store,), lineage)
-        hll_store.merge(partial_hll(batch_df, key_col),
-                        f"{lin}.{epoch_id:012d}")
-
-    return (stream.writeStream
-            .option("checkpointLocation", checkpoint_dir)
-            .foreachBatch(handle).start())
+    return _start_store_stream(
+        stream, checkpoint_dir, (hll_store,),
+        lambda b: [(hll_store, partial_hll(b, key_col))])
 
 
 def streaming_cardinality_estimate(hll_store: ParquetHllStore) -> DataFrame:
@@ -1169,14 +1122,6 @@ class ParquetDailyHllStore(KeyedParquetStore):
             n_buckets,
             state_schema="day date, hll_bucket long, register int")
 
-    def _clone(self, new_path: str,
-               n_buckets: int) -> "ParquetDailyHllStore":
-        # forward p — same tunable-reset hazard as ParquetKmvStore.k
-        # (r10 ADVICE): a non-default-precision store migrated
-        # through the bare signature would mislabel its registers
-        return ParquetDailyHllStore(self.spark, new_path, p=self.p,
-                                    n_buckets=n_buckets)
-
 
 def partial_daily_hll(batch_df: DataFrame, ts_col: str, key_col: str,
                       p: int = 5) -> DataFrame:
@@ -1199,17 +1144,10 @@ def start_streaming_sliding_wau(
         checkpoint_dir: str, ts_col: str,
         key_col: str) -> StreamingQuery:
     """Maintain the per-day register store from one stream."""
-    lineage: list[str] = []
-
-    def handle(batch_df: DataFrame, epoch_id: int) -> None:
-        lin = _require_lineage(checkpoint_dir, (store,), lineage)
-        store.merge(partial_daily_hll(batch_df, ts_col, key_col,
-                                      store.p),
-                    f"{lin}.{epoch_id:012d}")
-
-    return (stream.writeStream
-            .option("checkpointLocation", checkpoint_dir)
-            .foreachBatch(handle).start())
+    return _start_store_stream(
+        stream, checkpoint_dir, (store,),
+        lambda b: [(store, partial_daily_hll(b, ts_col, key_col,
+                                             store.p))])
 
 
 def streaming_sliding_wau(store: ParquetDailyHllStore,
@@ -1425,30 +1363,22 @@ def start_streaming_near_dup_index(
     union makes the probe indifferent to insert replay), then the
     index and corpus inserts; all three merges share the epoch key,
     so any crash window replays to exactly the same stores."""
-    lineage: list[str] = []
-
-    def handle(batch_df: DataFrame, epoch_id: int) -> None:
-        lin = _require_lineage(
-            checkpoint_dir, (lsh_store, doc_store, pair_store),
-            lineage)
-        key = f"{lin}.{epoch_id:012d}"
+    def merges(batch_df: DataFrame):
         # consumed three times (probe signatures, text attach,
         # inserts) — materialize the micro-batch once
         batch = batch_df.localCheckpoint()
-        pair_store.merge(
-            lsh_probe_pairs(batch, lsh_store, doc_store, n,
-                            n_hashes, bands, threshold, text_col,
-                            id_col), key)
-        lsh_store.merge(
-            partial_lsh_index(batch, n, n_hashes, bands, text_col,
-                              id_col), key)
-        doc_store.merge(
-            batch.select(F.col(id_col).cast("long").alias("id"),
-                         F.col(text_col).alias("text")), key)
+        yield pair_store, lsh_probe_pairs(
+            batch, lsh_store, doc_store, n, n_hashes, bands,
+            threshold, text_col, id_col)
+        yield lsh_store, partial_lsh_index(batch, n, n_hashes, bands,
+                                           text_col, id_col)
+        yield doc_store, batch.select(
+            F.col(id_col).cast("long").alias("id"),
+            F.col(text_col).alias("text"))
 
-    return (stream.writeStream
-            .option("checkpointLocation", checkpoint_dir)
-            .foreachBatch(handle).start())
+    return _start_store_stream(stream, checkpoint_dir,
+                               (lsh_store, doc_store, pair_store),
+                               merges)
 
 
 def streaming_near_dup_pairs(pair_store: ParquetPairStore) -> DataFrame:
@@ -1642,33 +1572,27 @@ def start_streaming_near_dup_clustering(
     and the root's lost redirect is never regenerated — a permanent
     cluster split. Same derivation-order discipline as the IVM
     starter's view-before-snapshot."""
-    lineage: list[str] = []
-
-    def handle(batch_df: DataFrame, epoch_id: int) -> None:
-        lin = _require_lineage(
-            checkpoint_dir, (lsh_store, doc_store, pair_store,
-                             cluster_store, redirect_store), lineage)
-        key = f"{lin}.{epoch_id:012d}"
+    def merges(batch_df: DataFrame):
         batch = batch_df.localCheckpoint()
         emitted = lsh_probe_pairs(batch, lsh_store, doc_store, n,
                                   n_hashes, bands, threshold,
                                   text_col, id_col) \
             .localCheckpoint(eager=False)
-        pair_store.merge(emitted, key)
+        yield pair_store, emitted
         red_p, id_p = _cluster_partials(emitted, cluster_store,
                                         redirect_store)
-        redirect_store.merge(red_p, key)
-        cluster_store.merge(id_p, key)
-        lsh_store.merge(
-            partial_lsh_index(batch, n, n_hashes, bands, text_col,
-                              id_col), key)
-        doc_store.merge(
-            batch.select(F.col(id_col).cast("long").alias("id"),
-                         F.col(text_col).alias("text")), key)
+        yield redirect_store, red_p
+        yield cluster_store, id_p
+        yield lsh_store, partial_lsh_index(batch, n, n_hashes, bands,
+                                           text_col, id_col)
+        yield doc_store, batch.select(
+            F.col(id_col).cast("long").alias("id"),
+            F.col(text_col).alias("text"))
 
-    return (stream.writeStream
-            .option("checkpointLocation", checkpoint_dir)
-            .foreachBatch(handle).start())
+    return _start_store_stream(
+        stream, checkpoint_dir,
+        (lsh_store, doc_store, pair_store, cluster_store,
+         redirect_store), merges)
 
 
 def streaming_cluster_assignments(
@@ -1893,28 +1817,20 @@ def start_streaming_emb_near_dup_index(
     """Probe-then-insert per micro-batch, embedding modality — same
     commutation story as the text starter (the probe's state-union
     makes all three same-epoch merges replay-order-free)."""
-    lineage: list[str] = []
-
-    def handle(batch_df: DataFrame, epoch_id: int) -> None:
-        lin = _require_lineage(
-            checkpoint_dir, (emb_store, vec_store, pair_store),
-            lineage)
-        key = f"{lin}.{epoch_id:012d}"
+    def merges(batch_df: DataFrame):
         batch = batch_df.localCheckpoint()
-        pair_store.merge(
-            emb_lsh_probe_pairs(batch, emb_store, vec_store,
-                                threshold, n_planes, dim, n_tables,
-                                n_probe_bits, vec_col, id_col), key)
-        emb_store.merge(
-            partial_emb_lsh_index(batch, n_planes, dim, n_tables,
-                                  vec_col, id_col), key)
-        vec_store.merge(
-            batch.select(F.col(id_col).cast("long").alias("id"),
-                         F.col(vec_col).alias("vec")), key)
+        yield pair_store, emb_lsh_probe_pairs(
+            batch, emb_store, vec_store, threshold, n_planes, dim,
+            n_tables, n_probe_bits, vec_col, id_col)
+        yield emb_store, partial_emb_lsh_index(
+            batch, n_planes, dim, n_tables, vec_col, id_col)
+        yield vec_store, batch.select(
+            F.col(id_col).cast("long").alias("id"),
+            F.col(vec_col).alias("vec"))
 
-    return (stream.writeStream
-            .option("checkpointLocation", checkpoint_dir)
-            .foreachBatch(handle).start())
+    return _start_store_stream(stream, checkpoint_dir,
+                               (emb_store, vec_store, pair_store),
+                               merges)
 
 
 def streaming_emb_near_dup_pairs(
@@ -1962,12 +1878,6 @@ class ParquetWinnowStore(KeyedParquetStore):
                 self.df_cap + 1).alias("doc_ids")],
             n_buckets,
             state_schema="fp string, doc_ids array<bigint>")
-
-    def _clone(self, new_path: str,
-               n_buckets: int) -> "ParquetWinnowStore":
-        return ParquetWinnowStore(self.spark, new_path,
-                                  n_buckets=n_buckets,
-                                  df_cap=self.df_cap)
 
 
 def partial_winnow_index(batch_df: DataFrame,
@@ -2094,18 +2004,10 @@ def start_streaming_winnowing_index(
     stream: ONE idempotent merge per micro-batch (the readers are
     derived views over the store — the rollup-hub shape, no
     separate emission store to drift)."""
-    lineage: list[str] = []
-
-    def handle(batch_df: DataFrame, epoch_id: int) -> None:
-        lin = _require_lineage(checkpoint_dir, (store,), lineage)
-        store.merge(
-            partial_winnow_index(batch_df, text_col, id_col,
-                                 df_cap=store.df_cap),
-            f"{lin}.{epoch_id:012d}")
-
-    return (stream.writeStream
-            .option("checkpointLocation", checkpoint_dir)
-            .foreachBatch(handle).start())
+    return _start_store_stream(
+        stream, checkpoint_dir, (store,),
+        lambda b: [(store, partial_winnow_index(
+            b, text_col, id_col, df_cap=store.df_cap))])
 
 
 # ------------------------------------------------------------------
@@ -2201,9 +2103,7 @@ class ParquetBasketStore(KeyedParquetStore):
                  n_buckets: int = 4,
                  retention_days: int | None = None,
                  basket_cap: int | None = None) -> None:
-        if retention_days is not None and retention_days < 1:
-            raise ValueError("retention_days must be >= 1 or None")
-        self.retention_days = retention_days
+        self.retention_days = _retention_days(retention_days)
         if basket_cap is not None and basket_cap < 2:
             raise ValueError(
                 f"basket cap must allow pairs: {basket_cap!r}")
@@ -2242,15 +2142,6 @@ class ParquetBasketStore(KeyedParquetStore):
                 and self.current_wm is not None:
             df = df.filter(F.col("t") >= F.lit(self.current_wm))
         return df
-
-    def _clone(self, new_path: str,
-               n_buckets: int) -> "ParquetBasketStore":
-        # retention/cap shape the fold AND the schema — rebucket's
-        # drift belt would catch a bare-signature reconstruction
-        return ParquetBasketStore(
-            self.spark, new_path, n_buckets=n_buckets,
-            retention_days=self.retention_days,
-            basket_cap=self.basket_cap)
 
 
 class ParquetCoocStore(KeyedParquetStore):
@@ -2486,21 +2377,15 @@ def start_streaming_item_cf(stream: DataFrame,
     monoids, claim-protected) run BEFORE the basket insert, so a
     crash anywhere in the window replays against the same
     pre-insert basket state and recomputes identical deltas."""
-    lineage: list[str] = []
-
-    def handle(batch_df: DataFrame, epoch_id: int) -> None:
-        lin = _require_lineage(
-            checkpoint_dir, (basket_store, cooc_store, deg_store),
-            lineage)
-        key = f"{lin}.{epoch_id:012d}"
+    def merges(batch_df: DataFrame):
         pair_d, deg_d, baskets = cooc_deltas(batch_df, basket_store)
-        cooc_store.merge(pair_d, key)
-        deg_store.merge(deg_d, key)
-        basket_store.merge(baskets, key)       # insert LAST
+        yield cooc_store, pair_d
+        yield deg_store, deg_d
+        yield basket_store, baskets            # insert LAST
 
-    return (stream.writeStream
-            .option("checkpointLocation", checkpoint_dir)
-            .foreachBatch(handle).start())
+    return _start_store_stream(stream, checkpoint_dir,
+                               (basket_store, cooc_store, deg_store),
+                               merges)
 
 
 def streaming_item_cf_topk(cooc_store: ParquetCoocStore,
@@ -2665,15 +2550,6 @@ class ParquetKmvStore(KeyedParquetStore):
             n_buckets,
             state_schema="side string, hvs array<bigint>")
 
-    def _clone(self, new_path: str,
-               n_buckets: int) -> "ParquetKmvStore":
-        # forward k: migrating through the bare (spark, path,
-        # n_buckets) signature silently reset a non-default k to
-        # 256, so rebucket re-truncated (or mislabeled) the
-        # sketches under the wrong k (r10 ADVICE)
-        return ParquetKmvStore(self.spark, new_path, k=self.k,
-                               n_buckets=n_buckets)
-
 
 def partial_kmv(batch_df: DataFrame, side_col: str, key_col: str,
                 k: int = 256, n_splits: int = 32) -> DataFrame:
@@ -2709,17 +2585,10 @@ def start_streaming_kmv(stream: DataFrame, store: ParquetKmvStore,
                         checkpoint_dir: str, side_col: str,
                         key_col: str) -> StreamingQuery:
     """Maintain per-side KMV sketches from one stream."""
-    lineage: list[str] = []
-
-    def handle(batch_df: DataFrame, epoch_id: int) -> None:
-        lin = _require_lineage(checkpoint_dir, (store,), lineage)
-        store.merge(partial_kmv(batch_df, side_col, key_col,
-                                store.k),
-                    f"{lin}.{epoch_id:012d}")
-
-    return (stream.writeStream
-            .option("checkpointLocation", checkpoint_dir)
-            .foreachBatch(handle).start())
+    return _start_store_stream(
+        stream, checkpoint_dir, (store,),
+        lambda b: [(store, partial_kmv(b, side_col, key_col,
+                                       store.k))])
 
 
 def streaming_kmv_sketch(store: ParquetKmvStore) -> DataFrame:
@@ -2808,16 +2677,6 @@ class ParquetOlsStore(KeyedParquetStore):
                          f"sy long, sxx {dec}, sxy {dec}, "
                          f"syy {dec}")
 
-    def _clone(self, new_path: str,
-               n_buckets: int) -> "ParquetOlsStore":
-        # forward key_col/key_type (they shape the schema — the
-        # bare signature would rebucket a custom-keyed store into
-        # the default name and trip the drift belt)
-        return ParquetOlsStore(self.spark, new_path,
-                               key_col=self.key_col,
-                               key_type=self.key_type,
-                               n_buckets=n_buckets)
-
 
 def start_streaming_ols(stream: DataFrame, store: ParquetOlsStore,
                         checkpoint_dir: str, key) -> StreamingQuery:
@@ -2827,13 +2686,9 @@ def start_streaming_ols(stream: DataFrame, store: ParquetOlsStore,
     batch queries' ``_ols_stats`` wraps)."""
     from galaxy_spark.queries.ml import ols_partial_stats
 
-    return (stream.writeStream
-            .option("checkpointLocation", checkpoint_dir)
-            .foreachBatch(_lineage_scoped_handler(
-                store, checkpoint_dir,
-                lambda df: ols_partial_stats(df, key,
-                                             store.key_col)))
-            .start())
+    return _start_store_stream(
+        stream, checkpoint_dir, (store,),
+        lambda b: [(store, ols_partial_stats(b, key, store.key_col))])
 
 
 def streaming_ols_estimates(store: ParquetOlsStore) -> DataFrame:
@@ -2925,9 +2780,7 @@ class ParquetSessionStore(KeyedParquetStore):
     def __init__(self, spark: SparkSession, path: str,
                  n_buckets: int = 2,
                  retention_days: int | None = None) -> None:
-        if retention_days is not None and retention_days < 1:
-            raise ValueError("retention_days must be >= 1 or None")
-        self.retention_days = retention_days
+        self.retention_days = _retention_days(retention_days)
         merged = _gap_merge_ivs(F.flatten(F.collect_list("ivs")))
         if retention_days is None:
             aggs = [merged.alias("ivs")]
@@ -2941,12 +2794,6 @@ class ParquetSessionStore(KeyedParquetStore):
         super().__init__(
             spark, path, ["user_id"], aggs, n_buckets,
             state_schema=schema)
-
-    def _clone(self, new_path: str,
-               n_buckets: int) -> "ParquetSessionStore":
-        return ParquetSessionStore(
-            self.spark, new_path, n_buckets=n_buckets,
-            retention_days=self.retention_days)
 
 
 def partial_sessions(batch_df: DataFrame,
@@ -2980,13 +2827,9 @@ def start_streaming_sessions(stream: DataFrame,
     """Maintain gap-merged sessions from an events-shaped stream;
     the partial shape follows the STORE's retention knob, so the
     two cannot disagree."""
-    return (stream.writeStream
-            .option("checkpointLocation", checkpoint_dir)
-            .foreachBatch(_lineage_scoped_handler(
-                store, checkpoint_dir,
-                lambda b: partial_sessions(
-                    b, store.retention_days)))
-            .start())
+    return _start_store_stream(
+        stream, checkpoint_dir, (store,),
+        lambda b: [(store, partial_sessions(b, store.retention_days))])
 
 
 def streaming_session_rows(store: ParquetSessionStore) -> DataFrame:
@@ -3104,12 +2947,7 @@ def start_streaming_search_index(
     postings, doc lengths and the O(1) corpus statistics, all under
     one shared epoch key so crash windows replay to the same
     stores."""
-    lineage: list[str] = []
-
-    def handle(batch_df: DataFrame, epoch_id: int) -> None:
-        lin = _require_lineage(checkpoint_dir,
-                               (postings, doclen, stats), lineage)
-        key = f"{lin}.{epoch_id:012d}"
+    def merges(batch_df: DataFrame):
         batch = batch_df.localCheckpoint()   # consumed twice
         dls = partial_doc_stats(batch, text_col, id_col) \
             .localCheckpoint(eager=False)    # feeds doclen AND stats
@@ -3121,17 +2959,14 @@ def start_streaming_search_index(
         # epoch — only biases avgdl/n_docs one batch ahead, and
         # every returned doc is fully scored; the replay then
         # converges the stores (r11 review wave 2).
-        doclen.merge(dls, key)
-        stats.merge(
-            dls.groupBy(F.lit("corpus").alias("scope"))
-            .agg(F.count("*").cast("long").alias("n_docs"),
-                 F.sum("dl").cast("long").alias("sum_dl")), key)
-        postings.merge(partial_postings(batch, text_col, id_col),
-                       key)
+        yield doclen, dls
+        yield stats, (dls.groupBy(F.lit("corpus").alias("scope"))
+                      .agg(F.count("*").cast("long").alias("n_docs"),
+                           F.sum("dl").cast("long").alias("sum_dl")))
+        yield postings, partial_postings(batch, text_col, id_col)
 
-    return (stream.writeStream
-            .option("checkpointLocation", checkpoint_dir)
-            .foreachBatch(handle).start())
+    return _start_store_stream(stream, checkpoint_dir,
+                               (postings, doclen, stats), merges)
 
 
 def streaming_inverted_index(
@@ -3209,8 +3044,7 @@ class ParquetUserDayStore(KeyedParquetStore):
     def __init__(self, spark: SparkSession, path: str,
                  n_buckets: int = 4,
                  retention_days: int | None = None) -> None:
-        if retention_days is not None and retention_days < 1:
-            raise ValueError("retention_days must be >= 1 or None")
+        self.retention_days = _retention_days(retention_days)
         if retention_days is not None and retention_days < 40:
             # r13 ADVICE: the decay reader's exactness claim vs the
             # unbounded batch twin is CONDITIONAL on H covering the
@@ -3227,7 +3061,6 @@ class ParquetUserDayStore(KeyedParquetStore):
                 "scores will answer over the retained window only, "
                 "not equal the unbounded events_decay_score",
                 stacklevel=2)
-        self.retention_days = retention_days
         aggs = [F.sum("n").cast("long").alias("n"),
                 F.sum("np").cast("long").alias("np")]
         schema = "user_id long, day date, n long, np long"
@@ -3240,12 +3073,6 @@ class ParquetUserDayStore(KeyedParquetStore):
         if retention_days is not None:
             self.fold_finalize = \
                 lambda df: df.filter(F.col("day") >= F.col("wm"))
-
-    def _clone(self, new_path: str,
-               n_buckets: int) -> "ParquetUserDayStore":
-        return ParquetUserDayStore(
-            self.spark, new_path, n_buckets=n_buckets,
-            retention_days=self.retention_days)
 
     def retained_state(self) -> DataFrame:
         """State rows restricted to the GLOBAL retention window
@@ -3285,13 +3112,9 @@ def start_streaming_user_days(stream: DataFrame,
                               checkpoint_dir: str) -> StreamingQuery:
     """Maintain per-(user, day) counts from an events stream; the
     partial shape follows the STORE's retention knob."""
-    return (stream.writeStream
-            .option("checkpointLocation", checkpoint_dir)
-            .foreachBatch(_lineage_scoped_handler(
-                store, checkpoint_dir,
-                lambda b: partial_user_days(
-                    b, store.retention_days)))
-            .start())
+    return _start_store_stream(
+        stream, checkpoint_dir, (store,),
+        lambda b: [(store, partial_user_days(b, store.retention_days))])
 
 
 def streaming_decay_scores(store: ParquetUserDayStore) -> DataFrame:
@@ -3355,11 +3178,9 @@ def start_streaming_order_facts(
         checkpoint_dir: str) -> StreamingQuery:
     """Maintain the per-customer order timeline from an
     orders-shaped stream."""
-    return (stream.writeStream
-            .option("checkpointLocation", checkpoint_dir)
-            .foreachBatch(_lineage_scoped_handler(
-                store, checkpoint_dir, partial_order_facts))
-            .start())
+    return _start_store_stream(
+        stream, checkpoint_dir, (store,),
+        lambda b: [(store, partial_order_facts(b))])
 
 
 def streaming_order_cadence(store: ParquetOrderFactStore,
@@ -3424,9 +3245,7 @@ class ParquetEventIndexStore(KeyedParquetStore):
     def __init__(self, spark: SparkSession, path: str,
                  n_buckets: int = 4,
                  retention_days: int | None = None) -> None:
-        if retention_days is not None and retention_days < 1:
-            raise ValueError("retention_days must be >= 1 or None")
-        self.retention_days = retention_days
+        self.retention_days = _retention_days(retention_days)
         if retention_days is None:
             aggs = [F.array_sort(F.array_distinct(F.flatten(
                 F.collect_list("tss")))).alias("tss")]
@@ -3447,14 +3266,6 @@ class ParquetEventIndexStore(KeyedParquetStore):
         super().__init__(
             spark, path, ["user_id", "event_type"], aggs,
             n_buckets, state_schema=schema)
-
-    def _clone(self, new_path: str,
-               n_buckets: int) -> "ParquetEventIndexStore":
-        # retention shapes the fold AND the schema — rebucket's
-        # drift belt would catch a bare-signature reconstruction
-        return ParquetEventIndexStore(
-            self.spark, new_path, n_buckets=n_buckets,
-            retention_days=self.retention_days)
 
     def retained_state(self) -> DataFrame:
         """State rows restricted to the GLOBAL retention window
@@ -3506,13 +3317,10 @@ def start_streaming_event_index(stream: DataFrame,
     """Maintain the per-(user, type) event-time index; the partial
     shape follows the STORE's retention knob, so the two cannot
     disagree."""
-    return (stream.writeStream
-            .option("checkpointLocation", checkpoint_dir)
-            .foreachBatch(_lineage_scoped_handler(
-                store, checkpoint_dir,
-                lambda b: partial_event_index(
-                    b, store.retention_days)))
-            .start())
+    return _start_store_stream(
+        stream, checkpoint_dir, (store,),
+        lambda b: [(store, partial_event_index(b,
+                                               store.retention_days))])
 
 
 def streaming_funnel(store: ParquetEventIndexStore) -> DataFrame:
@@ -3628,20 +3436,13 @@ def start_streaming_attribution_hub(
     ride in the index the funnel/retention readers already use).
     Both merges are idempotent set-unions, so replay order across
     the two stores cannot matter."""
-    lineage: list[str] = []
+    def merges(batch_df: DataFrame):
+        yield purchase_store, partial_purchases(batch_df)
+        yield index_store, partial_event_index(
+            batch_df, index_store.retention_days)
 
-    def handle(batch_df: DataFrame, epoch_id: int) -> None:
-        lin = _require_lineage(
-            checkpoint_dir, (purchase_store, index_store), lineage)
-        key = f"{lin}.{epoch_id:012d}"
-        purchase_store.merge(partial_purchases(batch_df), key)
-        index_store.merge(
-            partial_event_index(batch_df,
-                                index_store.retention_days), key)
-
-    return (stream.writeStream
-            .option("checkpointLocation", checkpoint_dir)
-            .foreachBatch(handle).start())
+    return _start_store_stream(stream, checkpoint_dir,
+                               (purchase_store, index_store), merges)
 
 
 def streaming_attribution_last_touch(
@@ -3723,11 +3524,9 @@ def start_streaming_customer_orders(
         checkpoint_dir: str) -> StreamingQuery:
     """Maintain the per-customer order rollup from an
     orders-shaped stream."""
-    return (stream.writeStream
-            .option("checkpointLocation", checkpoint_dir)
-            .foreachBatch(_lineage_scoped_handler(
-                store, checkpoint_dir, partial_customer_orders))
-            .start())
+    return _start_store_stream(
+        stream, checkpoint_dir, (store,),
+        lambda b: [(store, partial_customer_orders(b))])
 
 
 def streaming_rfm_segments(store: ParquetCustomerOrderStore
@@ -3816,9 +3615,7 @@ class ParquetUserSeqStore(KeyedParquetStore):
     def __init__(self, spark: SparkSession, path: str,
                  n_buckets: int = 4,
                  retention_days: int | None = None) -> None:
-        if retention_days is not None and retention_days < 1:
-            raise ValueError("retention_days must be >= 1 or None")
-        self.retention_days = retention_days
+        self.retention_days = _retention_days(retention_days)
         if retention_days is None:
             aggs = [F.array_sort(F.array_distinct(F.flatten(
                 F.collect_list("es")))).alias("es")]
@@ -3836,14 +3633,6 @@ class ParquetUserSeqStore(KeyedParquetStore):
         super().__init__(
             spark, path, ["user_id"], aggs, n_buckets,
             state_schema=schema)
-
-    def _clone(self, new_path: str,
-               n_buckets: int) -> "ParquetUserSeqStore":
-        # retention shapes the fold AND the schema — rebucket's
-        # drift belt would catch a bare-signature reconstruction
-        return ParquetUserSeqStore(
-            self.spark, new_path, n_buckets=n_buckets,
-            retention_days=self.retention_days)
 
     def retained_state(self) -> DataFrame:
         """State rows restricted to the GLOBAL retention window
@@ -3890,17 +3679,9 @@ def start_streaming_user_seq(stream: DataFrame,
     """Maintain the per-user typed event timeline; the partial
     shape follows the STORE's retention knob, so the two cannot
     disagree."""
-    lineage: list[str] = []
-
-    def handle(batch_df: DataFrame, epoch_id: int) -> None:
-        lin = _require_lineage(checkpoint_dir, (store,), lineage)
-        store.merge(partial_user_seq(batch_df,
-                                     store.retention_days),
-                    f"{lin}.{epoch_id:012d}")
-
-    return (stream.writeStream
-            .option("checkpointLocation", checkpoint_dir)
-            .foreachBatch(handle).start())
+    return _start_store_stream(
+        stream, checkpoint_dir, (store,),
+        lambda b: [(store, partial_user_seq(b, store.retention_days))])
 
 
 def streaming_path_trigrams(store: ParquetUserSeqStore

@@ -4012,6 +4012,73 @@ def test_rebucket_carries_fs_and_grace(spark, tmp_path):
         sorted(map(tuple, st.state().collect()))
 
 
+@pytest.mark.parametrize("cls_name, tunables", [
+    ("ParquetDailyHllStore", {"p": 7}),
+    ("ParquetWinnowStore", {"df_cap": 3}),
+    ("ParquetBasketStore", {"retention_days": 5, "basket_cap": 4}),
+    ("ParquetKmvStore", {"k": 16}),
+    ("ParquetOlsStore", {"key_col": "p", "key_type": "long"}),
+    ("ParquetSessionStore", {"retention_days": 3}),
+    ("ParquetUserDayStore", {"retention_days": 45}),
+    ("ParquetEventIndexStore", {"retention_days": 2}),
+    ("ParquetUserSeqStore", {"retention_days": 2}),
+])
+def test_rebucket_keeps_parametric_store_tunables(spark, tmp_path,
+                                                  cls_name, tunables):
+    """Every store whose constructor takes a tunable beyond
+    (spark, path, n_buckets) must come out of rebucket with the same
+    class, the same non-default tunable and the same fold: a
+    rebuild through the bare signature once reset a KMV store's k
+    to 256 and re-truncated its sketches under the wrong k."""
+    import re
+
+    from galaxy_spark.streaming import state_store as ss
+
+    cls = getattr(ss, cls_name)
+    default = cls(spark, str(tmp_path / "default"))
+    for name, value in tunables.items():
+        assert getattr(default, name) != value, "tunable is the default"
+    src = cls(spark, str(tmp_path / "src"), **tunables)
+    with pytest.warns(UserWarning, match="quiesced"):
+        new = ss.rebucket(src, str(tmp_path / "dst"), 5)
+    assert type(new) is cls
+    assert new.n_buckets == 5
+    for name, value in tunables.items():
+        assert getattr(new, name) == value
+    assert new.key_cols == src.key_cols
+    assert new.layout_cols == src.layout_cols
+    assert new.state_schema == src.state_schema
+    # lambda variables (x_6, y_7) are numbered per construction
+    def fold(store):
+        return [re.sub(r"_\d+\b", "", str(c)) for c in store.aggs]
+    assert fold(new) == fold(src)
+    assert (new.fold_finalize is None) == (src.fold_finalize is None)
+
+
+def test_rebucket_basket_retention_reads_new_store_watermark(spark,
+                                                             tmp_path):
+    """The basket store's retention hook reads the store's own
+    stream watermark, which ``cooc_deltas`` advances on the store the
+    stream writes to. After rebucket that is the NEW store, so the
+    migrated store's hook must evict against the new store's
+    watermark, not the source's."""
+    import datetime
+
+    from galaxy_spark.streaming.state_store import (ParquetBasketStore,
+                                                    rebucket)
+
+    src = ParquetBasketStore(spark, str(tmp_path / "src"),
+                             retention_days=5)
+    with pytest.warns(UserWarning, match="quiesced"):
+        new = rebucket(src, str(tmp_path / "dst"), 3)
+    new.current_wm = datetime.date(2024, 1, 10)
+    rows = spark.createDataFrame(
+        [(1, [1, 2], datetime.date(2024, 1, 1)),
+         (2, [3, 4], datetime.date(2024, 1, 20))],
+        "o long, parts array<bigint>, t date")
+    assert [r.o for r in new._finalized(rows).collect()] == [2]
+
+
 def test_vacuum_grace_defers_drop(spark, tmp_path):
     """vacuum_grace_seconds (r11 ADVICE): superseded versions
     younger than the grace survive the post-merge vacuum — a drain
