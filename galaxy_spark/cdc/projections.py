@@ -110,9 +110,11 @@ def project_changes_by_schema(df: DataFrame, schemas: DataFrame,
     Rows whose table has no registry entry quarantine (the
     reference lazily runs SHOW FULL COLUMNS on a miss — a live
     catalog round-trip from inside a 100 TB stream is the wrong
-    shape at scale; bootstrap the registry up front, route unknown
-    tables to the DLQ, refresh the broadcast on the next
-    micro-batch after a registry update)."""
+    shape at scale; bootstrap the registry up front and route
+    unknown tables to the DLQ). A running ``start_pipeline`` task
+    sees the registry as of its start; DDL evolution reaches it by a
+    restart, or per micro-batch on a foreachBatch path that rebuilds
+    ``registry_frame`` at each batch's plan build)."""
     action = F.col(action_col)
     rows = F.col(org_row_col)
     # F.get, not getItem: a malformed update with ONE row must take

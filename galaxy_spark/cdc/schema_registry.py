@@ -274,10 +274,26 @@ def registry_frame(spark, registry: "SchemaRegistry"):
     ``(database, table, columns array<string>)`` that
     ``projections.project_changes_by_schema`` joins onto the
     stream (P1's SURVEY-named Spark mapping: "broadcast-join event
-    stream with schema-registry table"). Rebuild + re-broadcast
-    after DDL evolution — in a foreachBatch pipeline that happens
-    naturally at the next micro-batch's plan build."""
-    rows = [(db, tbl, registry.column_names(db, tbl))
-            for db, tbl in registry.tables()]
-    return spark.createDataFrame(
-        rows, "database string, `table` string, columns array<string>")
+    stream with schema-registry table"). The frame is the registry
+    as of this call: after DDL evolution, build it again. A
+    foreachBatch pipeline does that at each micro-batch's plan
+    build; a running ``start_pipeline`` task keeps the registry it
+    started with until it restarts."""
+    return local_registry_frame(
+        spark, [(db, tbl, registry.column_names(db, tbl))
+                for db, tbl in registry.tables()])
+
+
+def local_registry_frame(spark, rows):
+    """``(database, table, columns)`` rows as a driver-local relation
+    (``LocalRelation``). Broadcasting it is a JVM-only job; a frame
+    made from Python rows with ``createDataFrame`` plans a Python RDD
+    scan instead, which runs as its own job at every broadcast, i.e.
+    at every micro-batch of a stream joined to it."""
+    import pyarrow as pa
+
+    dbs, tables, cols = zip(*rows) if rows else ((), (), ())
+    return spark.createDataFrame(pa.table(
+        [pa.array(dbs, pa.string()), pa.array(tables, pa.string()),
+         pa.array(cols, pa.list_(pa.string()))],
+        names=["database", "table", "columns"]))

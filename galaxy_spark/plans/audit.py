@@ -14,12 +14,19 @@ from __future__ import annotations
 import re
 
 from pyspark.sql import DataFrame
+from pyspark.sql.streaming import StreamingQuery
 
 
 def physical_plan(df: DataFrame) -> str:
     """The formatted physical plan as a string."""
     return df._sc._jvm.PythonSQLUtils.explainString(  # type: ignore[attr-defined]
         df._jdf.queryExecution(), "formatted")
+
+
+def streaming_plan(query: StreamingQuery) -> str:
+    """The executed physical plan of ``query``'s last micro-batch
+    (empty before its first batch has run)."""
+    return query._jsq.explainInternal(False)  # type: ignore[attr-defined]
 
 
 def pushed_filters(df: DataFrame) -> list[str]:

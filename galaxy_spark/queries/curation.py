@@ -504,11 +504,12 @@ def dedup_semantic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # vec_a-widened frame, i.e. candidates × embedding-dim bytes,
     # undercutting the candidates-are-small argument. Each vector
     # attaches through its own bare-pair broadcast (the corpus
-    # still never exchanges; ReuseExchange shares the one broadcast
-    # of cand), and the two candidate-sized halves meet on the pair
-    # key — a bounded shuffle of output-sized rows, never a forced
-    # embedding-payload broadcast.
-    cand = cand.select("id_a", "id_b")
+    # still never exchanges), and the two candidate-sized halves
+    # meet on the pair key — a bounded shuffle of output-sized rows,
+    # never a forced embedding-payload broadcast. Both broadcasts
+    # read cand, and reuse only shares the exchange BELOW the pandas
+    # pass, so checkpoint the pairs or the GEMM pass runs twice.
+    cand = cand.select("id_a", "id_b").localCheckpoint(eager=False)
     witha = F.broadcast(cand).join(va, "id_a")
     withb = F.broadcast(cand).join(vb, "id_b")
     return (witha.join(withb, ["id_a", "id_b"])

@@ -29,13 +29,14 @@ from __future__ import annotations
 from collections.abc import Sequence
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from galaxy_spark.cdc.filters import TaskFilter
 from galaxy_spark.cdc.projections import project_changes
-from galaxy_spark.cdc.schema_registry import SchemaRegistry
+from galaxy_spark.cdc.schema_registry import (SchemaRegistry,
+                                              local_registry_frame)
 
 
 @dataclass
@@ -87,17 +88,33 @@ def transform_envelope(env: DataFrame, task_filter: TaskFilter,
     return project_changes(filtered, columns)
 
 
+#: message bodies: a routed change carries its projected images, a
+#: dead letter the raw event it failed to project from
+_ROUTED_BODY = ("database", "table", "action", "before", "after",
+                "org_row", "event_header")
+_DEAD_LETTER_BODY = ("database", "table", "action", "org_row",
+                     "event_header")
+
+
+def _topic(task_id: str, *route: str) -> Column:
+    return F.concat_ws(".", F.lit(task_id), *map(F.lit, route),
+                       "database", "table")
+
+
+def _key() -> Column:
+    return F.concat_ws(".", "database", "table")
+
+
+def _value(events: DataFrame, body: Sequence[str]) -> Column:
+    return F.to_json(F.struct(*[c for c in body if c in events.columns]))
+
+
 def routed_messages(events: DataFrame, task_id: str) -> DataFrame:
     """K1: one JSON message per change, with topic/key routing
     columns understood natively by the Kafka sink."""
-    body = [c for c in ("database", "table", "action", "before", "after",
-                        "org_row", "event_header") if c in events.columns]
-    payload = F.to_json(F.struct(*body))
-    return events.select(
-        F.concat_ws(".", F.lit(task_id), "database", "table").alias("topic"),
-        F.concat_ws(".", "database", "table").alias("key"),
-        payload.alias("value"),
-    )
+    return events.select(_topic(task_id).alias("topic"),
+                         _key().alias("key"),
+                         _value(events, _ROUTED_BODY).alias("value"))
 
 
 def dead_letter_messages(projected: DataFrame, task_id: str) -> DataFrame:
@@ -106,16 +123,30 @@ def dead_letter_messages(projected: DataFrame, task_id: str) -> DataFrame:
     (org_row, header, action) so nothing is lost and the malformed
     payload is replayable after a fix — the standard Kafka
     dead-letter-queue pattern, one stream and one sink (the DLQ is
-    just more topic routing, not a second query)."""
+    just more topic routing, not a second query or scan)."""
     bad = projected.filter(F.col("quarantined"))
-    body = [c for c in ("database", "table", "action", "org_row",
-                        "event_header") if c in bad.columns]
-    return bad.select(
-        F.concat_ws(".", F.lit(task_id), F.lit("deadletter"),
-                    "database", "table").alias("topic"),
-        F.concat_ws(".", "database", "table").alias("key"),
-        F.to_json(F.struct(*body)).alias("value"),
-    )
+    return bad.select(_topic(task_id, "deadletter").alias("topic"),
+                      _key().alias("key"),
+                      _value(bad, _DEAD_LETTER_BODY).alias("value"))
+
+
+def task_messages(projected: DataFrame, task_id: str,
+                  dead_letter: bool = True) -> DataFrame:
+    """A task's whole output in ONE projection of ``projected``:
+    ``routed_messages`` of the good rows and, with ``dead_letter``,
+    ``dead_letter_messages`` of the quarantined ones, as the same
+    rows a union of the two would give. A union plans the source
+    twice, so every micro-batch would decode its input twice and
+    count each row-change twice in ``numInputRows``."""
+    if not dead_letter:
+        projected = projected.filter(~F.col("quarantined"))
+    dead = F.col("quarantined")
+    return projected.select(
+        F.when(dead, _topic(task_id, "deadletter"))
+        .otherwise(_topic(task_id)).alias("topic"),
+        _key().alias("key"),
+        F.when(dead, _value(projected, _DEAD_LETTER_BODY))
+        .otherwise(_value(projected, _ROUTED_BODY)).alias("value"))
 
 
 def start_pipeline(env_stream: DataFrame, task_id: str,
@@ -126,21 +157,28 @@ def start_pipeline(env_stream: DataFrame, task_id: str,
                    dead_letter: bool = True) -> StreamingQuery:
     """Assemble + start one CDC task as a streaming query.
     ``columns`` accepts a single literal name list or a per-table
-    schema-registry frame (see ``transform_envelope``).
+    schema-registry frame (see ``transform_envelope``). A registry
+    frame is read ONCE, here: the task projects with the registry as
+    of its start, held as a driver-local relation so each
+    micro-batch's broadcast of it runs no Python. DDL evolution
+    reaches a running task by a restart (or use a foreachBatch
+    pipeline, which rebuilds ``registry_frame`` per batch).
 
     ``dead_letter=True`` (default): rows the projection quarantines
     (arity mismatch, malformed image — projections.py) are NOT
     silently dropped; they route to the task's
-    ``<task>.deadletter.<db>.<table>`` topic through the SAME sink.
+    ``<task>.deadletter.<db>.<table>`` topic through the SAME sink
+    and the same scan (``task_messages``).
     At 100 TB a poison row must neither abort hours of progress
     (the quarantine flag's job) nor vanish without trace (this
     routing's job — the reference errors the whole event instead,
     process.go:120-122; divergence documented in README)."""
+    if isinstance(columns, DataFrame):
+        columns = local_registry_frame(
+            columns.sparkSession,
+            columns.select("database", "table", "columns").collect())
     projected = transform_envelope(env_stream, task_filter, columns)
-    good = projected.filter(~F.col("quarantined"))
-    msgs = routed_messages(good, task_id)
-    if dead_letter:
-        msgs = msgs.unionByName(dead_letter_messages(projected, task_id))
+    msgs = task_messages(projected, task_id, dead_letter)
     writer = msgs.writeStream.outputMode("append") \
         .option("checkpointLocation", checkpoint_dir)
     writer = sink.apply(writer, query_name=task_id)
@@ -220,14 +258,12 @@ def start_pipeline_live(env_stream: DataFrame, task_id: str,
     def handle(batch_df: DataFrame, epoch_id: int) -> None:
         projected = transform_envelope(batch_df, live_filter.get(),
                                        columns)
-        good = projected.filter(~F.col("quarantined"))
         # same DLQ contract as start_pipeline: quarantined rows
         # route to <task>.deadletter.<db>.<table> through the SAME
         # sink — the live variant used to drop them on the floor,
         # losing malformed payloads exactly on the pipeline meant
         # for production filter updates
-        msgs = routed_messages(good, task_id).unionByName(
-            dead_letter_messages(projected, task_id))
+        msgs = task_messages(projected, task_id)
         if sink.kind == "kafka":
             msgs.write.format("kafka").options(**sink.options).save()
         elif sink.kind == "memory":
@@ -263,8 +299,10 @@ def ddl_apply_batch(registry: SchemaRegistry, default_db: str,
     The reference processes DDL inline in its single-threaded loop
     (``process.go:216-242``); in Spark the DDL stream is a separate
     low-volume branch whose batches mutate the registry on the
-    driver, then persist (the registry is re-broadcast to the data
-    plane on the next micro-batch).
+    driver, then persist. The data plane sees the change where it
+    next builds ``registry_frame``: at the next micro-batch of a
+    foreachBatch pipeline, at the next start of a ``start_pipeline``
+    task (which snapshots the registry when it starts).
 
     ``save_path`` is the persistence half of that contract: the
     registry is saved (atomic tmp+rename) after each batch BEFORE

@@ -7,6 +7,7 @@ driven end-to-end on the recorded wire-format fixture."""
 from __future__ import annotations
 
 import os
+import re
 import shutil
 import struct
 
@@ -370,6 +371,86 @@ def test_reference_shape_pipeline_end_to_end(spark, binlog_dir,
     # hand-derived truth of segment 1: id 1 inserted then deleted
     # (tombstone), id 2 inserted@299 then updated@390 -> 21.0
     assert store.snapshot() == [("shop", "orders", 2, 21.0, 390, 2)]
+
+
+def _run_registry_pipeline(spark, binlog_dir, tmp_path, registry):
+    """``start_pipeline`` with a registry frame over both fixture
+    segments (shop.orders, then shop.payments). Returns the stopped
+    query and the message count published on each topic."""
+    import glob
+    from types import SimpleNamespace
+
+    from galaxy_spark.cdc.filters import TaskFilter
+    from galaxy_spark.sinks_topic import TopicFilesDataSource
+    from galaxy_spark.sources.binlog_source import binlog_envelope_factory
+    from galaxy_spark.streaming.pipeline import SinkConfig, start_pipeline
+
+    try:
+        spark.dataSource.register(TopicFilesDataSource)
+    except Exception:
+        pass
+    rich = os.path.join(os.path.dirname(__file__), "fixtures",
+                        "binlog_v4_rich.bin")
+    shutil.copy(rich, os.path.join(binlog_dir, "binlog.000002.bin"))
+    topics = str(tmp_path / "topics")
+    env = binlog_envelope_factory(binlog_dir)(
+        spark, SimpleNamespace(checkpoint_epoch=0))
+    q = start_pipeline(
+        env, "t_reg", TaskFilter(databases=("shop",)),
+        spark.createDataFrame(
+            registry,
+            "database string, `table` string, columns array<string>"),
+        SinkConfig("topic_files", {"path": topics}),
+        str(tmp_path / "ck"))
+    q.processAllAvailable()
+    q.stop()
+
+    def lines(path):
+        with open(path) as fh:
+            return sum(1 for _line in fh)
+    return q, {t: sum(map(lines, glob.glob(f"{topics}/{t}/batch-*.jsonl")))
+               for t in os.listdir(topics)}
+
+
+_ORDERS = [("shop", "orders", ["id", "qty", "amount", "note"])]
+
+
+def test_registry_pipeline_counts_each_row_change_once(spark, binlog_dir,
+                                                       tmp_path):
+    """The dead-letter routing rides the same scan as the good rows:
+    the query's progress counts each of the 8 decoded row-changes
+    once (a union of the two routes read the source twice and
+    reported 16), and each lands on its own topic."""
+    q, published = _run_registry_pipeline(spark, binlog_dir, tmp_path,
+                                          _ORDERS)
+    assert sum(p["numInputRows"] for p in q.recentProgress) == 8
+    assert published == {"t_reg.shop.orders": 4,
+                         "t_reg.deadletter.shop.payments": 4}
+
+
+def test_registry_pipeline_plan_is_one_scan(spark, binlog_dir, tmp_path):
+    """The final micro-batch plan reads the source once (no Union)
+    and broadcasts the registry from the driver-local snapshot taken
+    at query start, not from a Python RDD scan."""
+    from galaxy_spark.plans.audit import streaming_plan
+
+    q, _ = _run_registry_pipeline(spark, binlog_dir, tmp_path, _ORDERS)
+    final = streaming_plan(q).split("== Initial Plan ==")[0]
+    assert "== Final Plan ==" in final
+    assert final.count("MicroBatchScan") == 1
+    assert "Union" not in final
+    assert re.search(r"BroadcastExchange .*\n\s*\+- LocalTableScan ",
+                     final)
+
+
+def test_empty_registry_routes_every_row_to_dead_letter(spark, binlog_dir,
+                                                        tmp_path):
+    """With no table in the registry every row quarantines: all 8
+    row-changes reach their table's dead-letter topic and the query
+    does not fail."""
+    _, published = _run_registry_pipeline(spark, binlog_dir, tmp_path, [])
+    assert published == {"t_reg.deadletter.shop.orders": 4,
+                         "t_reg.deadletter.shop.payments": 4}
 
 
 def test_checkpoint_restart_resumes_from_saved_offset(spark, binlog_dir,

@@ -511,6 +511,35 @@ def test_triangle_edges_materialize_once(q):
     assert p.count("Scan ExistingRDD") >= 3
 
 
+def test_semantic_dedup_candidate_pass_runs_once(spark, monkeypatch):
+    """dedup_semantic_clusters reads its candidate pairs in two
+    re-attach joins; the pandas GEMM pass that makes them must run
+    once, not once per join. A counting pass stacked on the
+    candidates sees every candidate row exactly once."""
+    from galaxy_spark.operators import similarity
+
+    real = similarity.within_cluster_candidates
+    seen = spark.sparkContext.accumulator(0)
+    made = []
+
+    def counted(assigned, threshold):
+        cand = real(assigned, threshold)
+        made.append(cand)
+
+        def count(batches):
+            for pdf in batches:
+                seen.add(len(pdf))
+                yield pdf
+        return cand.mapInPandas(count, cand.schema)
+
+    monkeypatch.setattr(similarity, "within_cluster_candidates", counted)
+    QUERIES["dedup_semantic_clusters"](spark, SF_SMOKE).collect()
+    (cand,) = made
+    n = cand.count()
+    assert n > 0
+    assert seen.value == n, f"candidate pass ran {seen.value / n:g} times"
+
+
 def test_second_moments_single_exchange(q):
     """The one-pass moment fold: Arrow mapInPandas emits 2080
     partial rows per task; exactly ONE exchange (the tiny (i, j)
