@@ -130,16 +130,13 @@ def dead_letter_messages(projected: DataFrame, task_id: str) -> DataFrame:
                       _value(bad, _DEAD_LETTER_BODY).alias("value"))
 
 
-def task_messages(projected: DataFrame, task_id: str,
-                  dead_letter: bool = True) -> DataFrame:
+def task_messages(projected: DataFrame, task_id: str) -> DataFrame:
     """A task's whole output in ONE projection of ``projected``:
-    ``routed_messages`` of the good rows and, with ``dead_letter``,
-    ``dead_letter_messages`` of the quarantined ones, as the same
-    rows a union of the two would give. A union plans the source
-    twice, so every micro-batch would decode its input twice and
-    count each row-change twice in ``numInputRows``."""
-    if not dead_letter:
-        projected = projected.filter(~F.col("quarantined"))
+    ``routed_messages`` of the good rows and ``dead_letter_messages``
+    of the quarantined ones, as the same rows a union of the two
+    would give. A union plans the source twice, so every micro-batch
+    would decode its input twice and count each row-change twice in
+    ``numInputRows``."""
     dead = F.col("quarantined")
     return projected.select(
         F.when(dead, _topic(task_id, "deadletter"))
@@ -178,7 +175,9 @@ def start_pipeline(env_stream: DataFrame, task_id: str,
             columns.sparkSession,
             columns.select("database", "table", "columns").collect())
     projected = transform_envelope(env_stream, task_filter, columns)
-    msgs = task_messages(projected, task_id, dead_letter)
+    if not dead_letter:
+        projected = projected.filter(~F.col("quarantined"))
+    msgs = task_messages(projected, task_id)
     writer = msgs.writeStream.outputMode("append") \
         .option("checkpointLocation", checkpoint_dir)
     writer = sink.apply(writer, query_name=task_id)
