@@ -231,6 +231,10 @@ def live_memory_rows(task_id: str) -> list:
     return list(_LIVE_MEMORY.get(task_id, []))
 
 
+#: the sinks the live handler writes
+LIVE_SINK_KINDS = ("kafka", "memory", "parquet")
+
+
 def start_pipeline_live(env_stream: DataFrame, task_id: str,
                         live_filter: LiveFilterRef,
                         columns: Sequence[str], sink: SinkConfig,
@@ -250,8 +254,13 @@ def start_pipeline_live(env_stream: DataFrame, task_id: str,
     buffer and therefore HARD-CAPS total buffered rows
     (``sink.options["maxRows"]``, default 10_000) — exceeding the
     cap kills the query with a clear error instead of silently
-    eating driver memory at real volume.
+    eating driver memory at real volume. Any other sink kind is
+    refused here, before the query starts.
     """
+    if sink.kind not in LIVE_SINK_KINDS:
+        raise NotImplementedError(
+            f"live sink {sink.kind!r} not implemented: use one of "
+            f"{', '.join(map(repr, LIVE_SINK_KINDS))}")
     _LIVE_MEMORY[task_id] = []
 
     def handle(batch_df: DataFrame, epoch_id: int) -> None:
@@ -275,13 +284,9 @@ def start_pipeline_live(env_stream: DataFrame, task_id: str,
                     "sink is a test/debug surface — use the kafka or "
                     "parquet sink for real volume")
             buf.extend(batch)
-        elif sink.kind == "parquet":
+        else:                                   # parquet
             msgs.write.mode("append").options(**sink.options).parquet(
                 sink.options["path"])
-        else:
-            raise NotImplementedError(
-                f"sink {sink.kind!r} not implemented (reference "
-                "parity: nsq/es/mongodb are stubs there too)")
 
     writer = env_stream.writeStream \
         .option("checkpointLocation", checkpoint_dir) \

@@ -89,6 +89,20 @@ def _retention_days(retention_days: int | None) -> int | None:
     return retention_days
 
 
+def _with_batch_watermark(part: DataFrame, batch_df: DataFrame,
+                          retention_days: int | None) -> DataFrame:
+    """``part`` with the batch watermark on every row: max event
+    micros − H days, one 1-row agg broadcast into the partial.
+    Without retention, ``part`` unchanged."""
+    if retention_days is None:
+        return part
+    horizon = int(retention_days) * 86_400_000_000
+    wm = (batch_df
+          .agg((F.max(F.unix_micros("ts")) - F.lit(horizon))
+               .alias("wm")))
+    return part.crossJoin(F.broadcast(wm))
+
+
 class KeyedParquetStore:
     """Generic keyed MERGE store: ``merge`` folds one partial
     DataFrame into the persisted state with ``aggs`` (which must be
@@ -2812,13 +2826,7 @@ def partial_sessions(batch_df: DataFrame,
     part = (batch_df.select("user_id", iv.alias("iv"))
             .groupBy("user_id")
             .agg(_gap_merge_ivs(F.collect_list("iv")).alias("ivs")))
-    if retention_days is None:
-        return part
-    horizon = int(retention_days) * 86_400_000_000
-    wm = (batch_df
-          .agg((F.max(F.unix_micros("ts")) - F.lit(horizon))
-               .alias("wm")))
-    return part.crossJoin(F.broadcast(wm))
+    return _with_batch_watermark(part, batch_df, retention_days)
 
 
 def start_streaming_sessions(stream: DataFrame,
@@ -3302,13 +3310,7 @@ def partial_event_index(batch_df: DataFrame,
                     F.unix_micros("ts").alias("t"))
             .groupBy("user_id", "event_type")
             .agg(F.collect_set("t").alias("tss")))
-    if retention_days is None:
-        return part
-    horizon = int(retention_days) * 86_400_000_000
-    wm = (batch_df
-          .agg((F.max(F.unix_micros("ts")) - F.lit(horizon))
-               .alias("wm")))
-    return part.crossJoin(F.broadcast(wm))
+    return _with_batch_watermark(part, batch_df, retention_days)
 
 
 def start_streaming_event_index(stream: DataFrame,
@@ -3664,13 +3666,7 @@ def partial_user_seq(batch_df: DataFrame,
                 F.col("event_type").alias("et")).alias("e"))
             .groupBy("user_id")
             .agg(F.collect_set("e").alias("es")))
-    if retention_days is None:
-        return part
-    horizon = int(retention_days) * 86_400_000_000
-    wm = (batch_df
-          .agg((F.max(F.unix_micros("ts")) - F.lit(horizon))
-               .alias("wm")))
-    return part.crossJoin(F.broadcast(wm))
+    return _with_batch_watermark(part, batch_df, retention_days)
 
 
 def start_streaming_user_seq(stream: DataFrame,

@@ -391,6 +391,84 @@ def test_task_kind_and_live_validation(spark, tmp_path):
     assert mgr.tasks == {"t3": mgr.tasks["t3"]}
 
 
+def test_failed_start_leaves_no_task(tmp_path):
+    """A source that fails to start must not leave the task
+    registered: a retry would be refused as "already exists" and the
+    next persist would write the dead id to tasks.json as running."""
+    import json
+
+    import pytest as _pytest
+
+    from galaxy_spark.control.tasks import TaskManager, TaskSpec
+
+    def boom(spark_, spec):
+        raise OSError("source unavailable")
+
+    mgr = TaskManager(None, str(tmp_path / "ft_state"), boom)
+    spec = TaskSpec(task_id="t1", live=True)
+    with _pytest.raises(OSError, match="source unavailable"):
+        mgr.create_task(spec)
+    assert mgr.tasks == {} and mgr.queries == {}
+    assert mgr.live_filters == {}
+    mgr._persist()
+    with open(tmp_path / "ft_state" / "tasks.json") as f:
+        assert "t1" not in json.load(f)
+    with _pytest.raises(OSError, match="source unavailable"):
+        mgr.create_task(TaskSpec(task_id="t1", live=True))
+
+
+def test_live_task_refuses_sink_the_live_pipeline_cannot_write(tmp_path):
+    """The live handler writes kafka, memory and parquet only; any
+    other sink used to pass creation and kill the query on its first
+    micro-batch."""
+    import pytest as _pytest
+
+    from galaxy_spark.control.tasks import TaskManager, TaskSpec
+
+    mgr = TaskManager(None, str(tmp_path / "ls_state"),
+                      lambda s, spec: None)
+    with _pytest.raises(ValueError,
+                        match="'kafka', 'memory', 'parquet'"):
+        mgr.create_task(TaskSpec(
+            task_id="t1", live=True, sink_kind="topic_files",
+            sink_options={"path": str(tmp_path / "topics")}))
+    assert mgr.tasks == {} and mgr.queries == {}
+
+
+def test_create_refuses_index_option_the_kind_does_not_read(spark,
+                                                            tmp_path):
+    """A rollup keeps no retention horizon, so retention_days on it
+    would silently do nothing: creation refuses it, naming the key.
+    The check is creation-only — a spec persisted before it still
+    recovers."""
+    import pytest as _pytest
+
+    from galaxy_spark.control.tasks import TaskManager, TaskSpec
+
+    ev_src = str(tmp_path / "ik_events")
+    load_table(spark, SF, "events").write.parquet(ev_src)
+    ev_schema = spark.read.parquet(ev_src).schema
+
+    def factory(spark_, spec):
+        return spark_.readStream.schema(ev_schema).parquet(ev_src)
+
+    state = str(tmp_path / "ik_state")
+    mgr = TaskManager(spark, state, factory)
+    with _pytest.raises(ValueError, match="retention_days"):
+        mgr.create_task(TaskSpec(task_id="ru", task_kind="rollup",
+                                 index_options={"retention_days": 30}))
+    assert mgr.tasks == {}
+
+    mgr.tasks["ru"] = TaskSpec(task_id="ru", task_kind="rollup",
+                               index_options={"retention_days": 30})
+    mgr._persist()
+    mgr2 = TaskManager(spark, state, factory)
+    assert mgr2.recover_all() == ["ru"]
+    mgr2.await_all()
+    assert mgr2.rollup_snapshot("ru").count() > 0
+    mgr2.stop_task("ru")
+
+
 def test_search_index_task_lifecycle(spark, tmp_path):
     """r11 verdict #4: the incrementally-maintained search index
     runs as a TASK KIND under the reference's T1 lifecycle —
@@ -490,26 +568,26 @@ def test_stateful_task_store_write_strategies(spark, tmp_path):
                       lambda s, spec: None)
 
     nd = TaskSpec(task_id="nd", task_kind="near_dup_index")
-    assert [s.delta_threshold for s in mgr.near_dup_stores(nd)] == \
+    assert [s.delta_threshold for s in mgr.stores(nd)] == \
         [8, 8, 8, None, None]
     si = TaskSpec(task_id="si", task_kind="search_index")
-    assert [s.delta_threshold for s in mgr.search_stores(si)] == \
+    assert [s.delta_threshold for s in mgr.stores(si)] == \
         [8, 8, None]
     # explicit null -> CoW everywhere; explicit int -> uniform
     cow = TaskSpec(task_id="c", task_kind="search_index",
                    index_options={"delta_threshold": None})
-    assert [s.delta_threshold for s in mgr.search_stores(cow)] == \
+    assert [s.delta_threshold for s in mgr.stores(cow)] == \
         [None, None, None]
     four = TaskSpec(task_id="f", task_kind="near_dup_index",
                     index_options={"delta_threshold": 4})
-    assert [s.delta_threshold for s in mgr.near_dup_stores(four)] == \
+    assert [s.delta_threshold for s in mgr.stores(four)] == \
         [4, 4, 4, 4, 4]
     # float with integral value is accepted (JSON round-trip), but
     # 8.9 must NOT silently truncate to 8, and junk must name the
     # option
     ok = TaskSpec(task_id="k", task_kind="search_index",
                   index_options={"delta_threshold": 4.0})
-    assert mgr.search_stores(ok)[0].delta_threshold == 4
+    assert mgr.stores(ok)[0].delta_threshold == 4
     for bad in (8.9, "8", True, 0, -2, "many"):
         with _pytest.raises(ValueError,
                             match=r"delta_threshold"):
@@ -527,12 +605,12 @@ def test_stateful_task_store_write_strategies(spark, tmp_path):
     man = TaskSpec(task_id="m", task_kind="near_dup_index",
                    index_options={"fs": "manifest"})
     assert all(type(s.fs) is ManifestStoreFs
-               for s in mgr.near_dup_stores(man))
+               for s in mgr.stores(man))
     cas = TaskSpec(task_id="cs", task_kind="rollup",
                    index_options={"fs": "manifest_cas"})
-    assert type(mgr.rollup_store(cas).fs) is CasManifestStoreFs
+    assert type(mgr.stores(cas)[0].fs) is CasManifestStoreFs
     assert all(type(s.fs) is PosixStoreFs
-               for s in mgr.search_stores(si))    # default
+               for s in mgr.stores(si))    # default
     with _pytest.raises(ValueError, match=r"\['fs'\]"):
         mgr.create_task(TaskSpec(
             task_id="bad", task_kind="rollup",
@@ -894,6 +972,29 @@ def test_item_cf_task_lifecycle(spark, tmp_path):
     want_fp = sorted(map(tuple, all_queries()["mining_frequent_pairs"](
         spark, SF).collect()))
     assert got_fp == want_fp and len(want_fp) > 10
+    # the hub's other five readers; each takes its stores from the
+    # (basket, cooc, deg) tuple by position
+    from galaxy_spark.queries.graphs import graph_common_neighbors
+    readers = {"mining_pair_lift": mgr2.pair_lift,
+               "graph_clustering_coefficient":
+                   mgr2.clustering_coefficient,
+               "graph_degree_assortativity": mgr2.degree_assortativity,
+               "graph_common_neighbors": mgr2.common_neighbors,
+               "graph_resource_allocation": mgr2.resource_allocation}
+    got_r = {}
+    for batch_name, reader in readers.items():
+        got_r[batch_name] = sorted(map(tuple, reader("cf1").collect()))
+        want_r = sorted(map(tuple, all_queries()[batch_name](
+            spark, SF).collect()))
+        assert got_r[batch_name] == want_r and want_r, batch_name
+    # the per-read hot-node cap == batch under the same cap, and
+    # the cap bites
+    got_cap = sorted(map(tuple, mgr2.common_neighbors(
+        "cf1", max_degree=3).collect()))
+    want_cap = sorted(map(tuple, graph_common_neighbors(
+        spark, SF, max_degree=3).collect()))
+    assert got_cap == want_cap \
+        and got_cap != got_r["graph_common_neighbors"]
 
     root = mgr2.store_root(mgr2.tasks["cf1"])
     assert os.path.isdir(os.path.join(root, "cooc"))
@@ -912,7 +1013,7 @@ def test_item_cf_task_lifecycle(spark, tmp_path):
     mgr2.create_task(spec)
     mgr2.await_all()
     mgr2.stop_task("cf_ret")
-    b, c, d = mgr2.item_cf_stores("cf_ret")
+    b, c, d = mgr2.stores("cf_ret")
     assert b.retention_days == 90
     assert "t date" in (b.state_schema or "")
     mgr2.delete_task("cf_ret")
@@ -929,7 +1030,7 @@ def test_item_cf_task_lifecycle(spark, tmp_path):
     mgr2.create_task(spec)
     mgr2.await_all()
     mgr2.stop_task("cf_cap")
-    b, c, d = mgr2.item_cf_stores("cf_cap")
+    b, c, d = mgr2.stores("cf_cap")
     assert b.basket_cap == 50
     mgr2.delete_task("cf_cap")
 
@@ -1013,7 +1114,7 @@ def test_event_index_task_lifecycle(spark, tmp_path):
     mgr2.create_task(spec)
     mgr2.await_all()
     mgr2.stop_task("ei_ret")
-    pur, idx = mgr2.event_index_stores("ei_ret")
+    pur, idx = mgr2.stores("ei_ret")
     assert idx.retention_days == 30 and "wm" in idx.state_schema
     assert "retention" not in repr(pur.state_schema)
     mgr2.delete_task("ei_ret")
@@ -1093,7 +1194,7 @@ def test_user_seq_task_lifecycle(spark, tmp_path):
     mgr2.create_task(spec)
     mgr2.await_all()
     mgr2.stop_task("us_ret")
-    store = mgr2.user_seq_store("us_ret")
+    store = mgr2.stores("us_ret")[0]
     assert store.retention_days == 30 \
         and "wm" in store.state_schema
     mgr2.delete_task("us_ret")
