@@ -36,7 +36,6 @@ import os
 import re
 import shutil
 import time
-import uuid
 from collections.abc import Callable
 from dataclasses import asdict, dataclass, field
 from typing import NamedTuple
@@ -698,7 +697,3 @@ def _index_options(spec: TaskSpec, strict: bool = False) -> dict:
             v = kind.options[key](v)
         out[key] = v
     return out
-
-
-def new_task_id() -> str:
-    return uuid.uuid4().hex[:12]

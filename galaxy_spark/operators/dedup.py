@@ -41,17 +41,6 @@ def exact_dedup(df: DataFrame, text_col: str = "text",
     )
 
 
-def exact_dedup_keep_first(df: DataFrame, text_col: str = "text",
-                           id_col: str = "id") -> DataFrame:
-    """Keep exactly one row per distinct text (min id wins)."""
-    w_min = (
-        df.groupBy(text_col).agg(F.min(id_col).alias("__keep_id"))
-    )
-    return df.join(
-        w_min, (df[text_col] == w_min[text_col]) & (df[id_col] == w_min["__keep_id"])
-    ).select(df["*"])
-
-
 def shingle_pairs_jaccard(df: DataFrame, n: int = 5, text_col: str = "text",
                           id_col: str = "doc_id",
                           max_df: int | None = None) -> DataFrame:

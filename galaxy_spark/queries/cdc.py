@@ -351,8 +351,9 @@ def snapshot_change_frame(env: DataFrame) -> DataFrame:
     """Projected change frame for snapshot folds: (database, table,
     action, pk, v, pos) out of the FULL §2.1 chain (classify S3,
     project P2-P4). Shared by the batch cdc_apply_snapshot query
-    and the incremental streaming fold (streaming/snapshot.py), so
-    their semantics can't drift apart."""
+    and the incremental streaming fold
+    (``state_store.start_incremental_snapshot_parquet``), so their
+    semantics can't drift apart."""
     proj = project_changes(env, EVENT_SOURCE_COLUMNS)
     img = F.coalesce(F.col("after"), F.col("before"))
     return proj.select(
@@ -624,7 +625,8 @@ def cdc_incremental_view_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
     the fold after it partial-aggregates to |groups| rows map-side,
     so the second exchange moves O(partitions x groups). In the
     streaming deployment the LAG state is the per-key last image
-    the snapshot store already holds (streaming/snapshot.py), and
+    the snapshot store already holds
+    (``state_store.ParquetSnapshotStore``), and
     each micro-batch ships only its partial delta sums — the view
     update cost is independent of both history length and key
     cardinality, which is the entire point of the delta rule.

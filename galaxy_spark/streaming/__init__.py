@@ -5,10 +5,6 @@ galaxy_spark.queries; here the same column expressions run against
 ``readStream`` sources.
 """
 
-from galaxy_spark.streaming.exactly_once import (  # noqa: E402
-    EpochKeyedRollupStore,
-    start_exactly_once_rollup,
-)
 from galaxy_spark.streaming.state_store import (  # noqa: E402
     KeyedParquetStore,
     ParquetRollupStore,
@@ -23,14 +19,12 @@ from galaxy_spark.streaming.state_store import (  # noqa: E402
 )
 
 __all__ = [
-    "EpochKeyedRollupStore",
     "KeyedParquetStore",
     "ParquetRollupStore",
     "ParquetScd2Store",
     "ParquetSnapshotStore",
     "ParquetViewStore",
     "rebucket",
-    "start_exactly_once_rollup",
     "start_incremental_rollup_parquet",
     "start_incremental_scd2_parquet",
     "start_incremental_snapshot_parquet",

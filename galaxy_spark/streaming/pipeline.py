@@ -149,9 +149,7 @@ def task_messages(projected: DataFrame, task_id: str) -> DataFrame:
 def start_pipeline(env_stream: DataFrame, task_id: str,
                    task_filter: TaskFilter,
                    columns: Sequence[str] | DataFrame,
-                   sink: SinkConfig, checkpoint_dir: str,
-                   trigger: dict | None = None,
-                   dead_letter: bool = True) -> StreamingQuery:
+                   sink: SinkConfig, checkpoint_dir: str) -> StreamingQuery:
     """Assemble + start one CDC task as a streaming query.
     ``columns`` accepts a single literal name list or a per-table
     schema-registry frame (see ``transform_envelope``). A registry
@@ -161,29 +159,23 @@ def start_pipeline(env_stream: DataFrame, task_id: str,
     reaches a running task by a restart (or use a foreachBatch
     pipeline, which rebuilds ``registry_frame`` per batch).
 
-    ``dead_letter=True`` (default): rows the projection quarantines
-    (arity mismatch, malformed image — projections.py) are NOT
-    silently dropped; they route to the task's
-    ``<task>.deadletter.<db>.<table>`` topic through the SAME sink
-    and the same scan (``task_messages``).
-    At 100 TB a poison row must neither abort hours of progress
-    (the quarantine flag's job) nor vanish without trace (this
-    routing's job — the reference errors the whole event instead,
-    process.go:120-122; divergence documented in README)."""
+    Rows the projection quarantines (arity mismatch, malformed
+    image — projections.py) are NOT silently dropped; they route to
+    the task's ``<task>.deadletter.<db>.<table>`` topic through the
+    SAME sink and the same scan (``task_messages``). At 100 TB a
+    poison row must neither abort hours of progress (the quarantine
+    flag's job) nor vanish without trace (this routing's job — the
+    reference errors the whole event instead, process.go:120-122;
+    divergence documented in README)."""
     if isinstance(columns, DataFrame):
         columns = local_registry_frame(
             columns.sparkSession,
             columns.select("database", "table", "columns").collect())
     projected = transform_envelope(env_stream, task_filter, columns)
-    if not dead_letter:
-        projected = projected.filter(~F.col("quarantined"))
     msgs = task_messages(projected, task_id)
     writer = msgs.writeStream.outputMode("append") \
         .option("checkpointLocation", checkpoint_dir)
-    writer = sink.apply(writer, query_name=task_id)
-    if trigger:
-        writer = writer.trigger(**trigger)
-    return writer.start()
+    return sink.apply(writer, query_name=task_id).start()
 
 
 class LiveFilterRef:
@@ -238,8 +230,7 @@ LIVE_SINK_KINDS = ("kafka", "memory", "parquet")
 def start_pipeline_live(env_stream: DataFrame, task_id: str,
                         live_filter: LiveFilterRef,
                         columns: Sequence[str], sink: SinkConfig,
-                        checkpoint_dir: str,
-                        trigger: dict | None = None) -> StreamingQuery:
+                        checkpoint_dir: str) -> StreamingQuery:
     """``start_pipeline`` with LIVE filter updates: the task filter
     is re-read from ``live_filter`` at every micro-batch, so
     ``TaskManager.update_filters`` swaps take effect without a query
@@ -288,12 +279,9 @@ def start_pipeline_live(env_stream: DataFrame, task_id: str,
             msgs.write.mode("append").options(**sink.options).parquet(
                 sink.options["path"])
 
-    writer = env_stream.writeStream \
+    return env_stream.writeStream \
         .option("checkpointLocation", checkpoint_dir) \
-        .foreachBatch(handle)
-    if trigger:
-        writer = writer.trigger(**trigger)
-    return writer.start()
+        .foreachBatch(handle).start()
 
 
 def ddl_apply_batch(registry: SchemaRegistry, default_db: str,

@@ -1,16 +1,12 @@
 """Executor-side keyed state for foreachBatch pipelines: a
 bucketed, epoch-versioned parquet MERGE store.
 
-This is the DEFAULT durable backend for the incremental CDC
-snapshot (streaming/snapshot.py) and the continuous rollup
-(streaming/rollup.py): the driver-resident dict stores in those
-modules remain as the in-memory TEST TWINS, and
-``streaming/stateful.py`` stays as the Spark-4
-``transformWithStateInPandas`` tier (RocksDB state store; needs
-protobuf, absent in this sandbox). Here, the ACCUMULATED state
-never exists as Python objects: each micro-batch's pre-folded
-partial (a DataFrame, one row per touched key) is merged into a
-keyed parquet dataset by a distributed Spark job, and the only
+This is the ONE durable store for every foreachBatch fold in the
+package (the incremental CDC snapshot, the continuous rollup and
+the index/view stores below). The ACCUMULATED state never exists
+as Python objects: each micro-batch's pre-folded partial (a
+DataFrame, one row per touched key) is merged into a keyed
+parquet dataset by a distributed Spark job, and the only
 things the driver ever holds are bucket ids and version names —
 O(n_buckets) metadata, independent of key cardinality. At 100 TB
 the table's full key set lives in parquet on the executors' shared
@@ -40,7 +36,7 @@ Layout and protocol::
   remaining O(history) per-trigger cost).
 - A bucket's CURRENT state is its lexicographically-greatest
   committed version (epoch ids zero-padded; one checkpoint lineage
-  per store, enforced like exactly_once.py, since Spark restarts
+  per store, enforced by ``_require_lineage``, since Spark restarts
   epoch numbering per checkpoint).
 - Commit per (bucket, epoch) goes through the commit-protocol seam
   (``store_fs.py``): the POSIX default is write to a staging dir ->
@@ -52,10 +48,10 @@ Layout and protocol::
   already-applied buckets and skips them, while buckets the crash
   left unfinished recompute from their pre-epoch version — the
   non-idempotent parts of the fold (n_changes, sums) never
-  double-count. Same claim discipline as
-  ``exactly_once.EpochKeyedRollupStore``, applied to folded state
-  instead of per-epoch partials (reference replay-skip:
-  ``concurrently_task_manager.go:97-120``).
+  double-count. The replay-skip key is (bucket, lineage.epoch):
+  the reference's skip of positions behind the saved one
+  (``concurrently_task_manager.go:97-120``), scoped to one
+  checkpoint lineage.
 - Older versions of a bucket are vacuumed after its new commit; a
   crash mid-vacuum leaves extra old dirs that the max-version rule
   ignores and the next merge sweeps.
@@ -65,6 +61,7 @@ from __future__ import annotations
 
 import functools
 import inspect
+import json
 import os
 import uuid
 
@@ -72,11 +69,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from galaxy_spark.streaming.exactly_once import (_checkpoint_lineage,
-                                                 _require_lineage)
 from galaxy_spark.streaming.store_fs import PosixStoreFs, store_fs
-from galaxy_spark.streaming.rollup import _partial_rollup
-from galaxy_spark.streaming.snapshot import partial_snapshot
 
 _BUCKET = "__bucket"
 
@@ -605,8 +598,9 @@ class KeyedParquetStore:
 
 
 class ParquetSnapshotStore(KeyedParquetStore):
-    """Executor-side twin of ``snapshot.SnapshotStore``: CDC
-    latest-wins state keyed by (database, table, pk)."""
+    """The incremental CDC snapshot: latest-wins state keyed by
+    (database, table, pk), the streaming fold of the batch
+    ``queries.cdc.cdc_apply_snapshot``."""
 
     def __init__(self, spark: SparkSession, path: str,
                  n_buckets: int = 8) -> None:
@@ -622,9 +616,10 @@ class ParquetSnapshotStore(KeyedParquetStore):
                          "last_pos long, n_changes long")
 
     def snapshot(self) -> list[tuple]:
-        """Same contract as SnapshotStore.snapshot (live rows only,
-        sorted). Collect happens HERE, in the test/read path — the
-        streaming merge path never materializes state rows."""
+        """Live rows only (delete tombstones drop), sorted — the
+        same contract as cdc_apply_snapshot's output. Collect happens
+        HERE, in the test/read path — the streaming merge path never
+        materializes state rows."""
         st = self.state().filter(F.col("last_action") != "delete")
         return sorted(
             (r.database, r["table"], r.pk, r.last_value, r.last_pos,
@@ -632,9 +627,11 @@ class ParquetSnapshotStore(KeyedParquetStore):
 
 
 class ParquetRollupStore(KeyedParquetStore):
-    """Executor-side twin of ``rollup.RollupStore``: continuous
-    multi-grain aggregate keyed by (grain, bucket_start,
-    event_type)."""
+    """The continuous rollup: multi-grain (``GRAINS``) aggregate
+    keyed by (grain, bucket_start, event_type), the streaming fold
+    of the batch ``queries.events.events_multi_rollup``. Count and
+    sum are commutative monoids, so per-batch partials merge into
+    the same numbers a full re-aggregation gives."""
 
     def __init__(self, spark: SparkSession, path: str,
                  n_buckets: int = 8) -> None:
@@ -729,6 +726,35 @@ def rebucket(store: KeyedParquetStore, new_path: str,
     return new_store
 
 
+def _checkpoint_lineage(checkpoint_dir: str) -> str:
+    """The stable query id Spark writes to ``<ckpt>/metadata`` at
+    first start. Restarts from the same checkpoint keep it; a fresh
+    checkpoint mints a new one — exactly the scope of Spark's epoch
+    numbering, and so the scope our replay-skip key needs."""
+    with open(os.path.join(checkpoint_dir, "metadata")) as f:
+        return json.load(f)["id"][:8]
+
+
+def _require_lineage(checkpoint_dir: str, stores) -> str:
+    """The checkpoint lineage, refusing any store that holds state
+    from a DIFFERENT lineage: epoch ids restart at 0 per checkpoint,
+    so continuing into a foreign-lineage store would drop live
+    batches as replays — data loss masquerading as exactly-once.
+    ONE copy of the guard for every lineage-keyed foreachBatch sink,
+    however many stores it merges."""
+    lin = _checkpoint_lineage(checkpoint_dir)
+    for store in stores:
+        foreign = store.lineages() - {lin}
+        if foreign:
+            raise ValueError(
+                f"store {store.path!r} holds state from other "
+                f"checkpoint lineage(s) {sorted(foreign)}; epoch ids "
+                "restart at 0 per checkpoint, so reusing the store "
+                "would drop new batches as replays. Use a fresh "
+                "store (or checkpoint) per lineage.")
+    return lin
+
+
 def _start_store_stream(stream: DataFrame, checkpoint_dir: str,
                         stores, merges) -> StreamingQuery:
     """THE foreachBatch starter for every store pipeline in this
@@ -741,7 +767,7 @@ def _start_store_stream(stream: DataFrame, checkpoint_dir: str,
     merges before it have committed — merge order is the replay
     contract each starter's docstring derives. ``stores`` lists every store
     the merges touch, all refused up front when one holds another
-    lineage's state (``exactly_once._require_lineage``)."""
+    lineage's state (``_require_lineage``)."""
     # resolved and checked once, at the first batch
     lineage = functools.cache(
         lambda: _require_lineage(checkpoint_dir, stores))
@@ -756,11 +782,23 @@ def _start_store_stream(stream: DataFrame, checkpoint_dir: str,
             .foreachBatch(handle).start())
 
 
+def partial_snapshot(changes: DataFrame) -> DataFrame:
+    """One micro-batch's latest-wins partial: expects the projected
+    change frame (database, table, action, pk, v, pos) that
+    cdc_apply_snapshot builds, folds it per key with max_by —
+    partial-aggregated map-side, one row per touched key."""
+    return (changes.groupBy("database", "table", "pk")
+            .agg(F.max_by("action", "pos").alias("last_action"),
+                 F.max_by("v", "pos").alias("last_value"),
+                 F.max("pos").alias("last_pos"),
+                 F.count("*").alias("n_changes")))
+
+
 def start_incremental_snapshot_parquet(
         changes_stream: DataFrame, store: ParquetSnapshotStore,
         checkpoint_dir: str) -> StreamingQuery:
-    """Default durable backend for the incremental CDC snapshot:
-    per-batch distributed latest-wins partial -> bucketed parquet
+    """The incremental CDC snapshot as a stream: per-batch
+    distributed latest-wins partial -> bucketed parquet
     MERGE. Result always equals the batch cdc_apply_snapshot fold
     (pinned in tests/test_streaming.py)."""
     return _start_store_stream(
@@ -768,10 +806,28 @@ def start_incremental_snapshot_parquet(
         lambda b: [(store, partial_snapshot(b))])
 
 
+GRAINS = ("hour", "day")
+
+
+def _partial_rollup(batch_df: DataFrame) -> DataFrame:
+    grains = batch_df.select(
+        F.explode(F.array(*[
+            F.struct(F.lit(g).alias("grain"),
+                     F.date_trunc(g, "ts").alias("bucket_start"))
+            for g in GRAINS
+        ])).alias("g"),
+        "event_type", "value",
+    ).select("g.grain", "g.bucket_start", "event_type", "value")
+    return grains.groupBy("grain", "bucket_start", "event_type").agg(
+        F.count("*").alias("n_events"),
+        F.sum("value").alias("total_value"))
+
+
 def start_incremental_rollup_parquet(
         stream: DataFrame, store: ParquetRollupStore,
         checkpoint_dir: str) -> StreamingQuery:
-    """Default durable backend for the continuous rollup."""
+    """The continuous rollup as a stream: per-batch distributed
+    partial aggregate -> bucketed parquet MERGE."""
     return _start_store_stream(
         stream, checkpoint_dir, (store,),
         lambda b: [(store, _partial_rollup(b))])

@@ -67,82 +67,3 @@ def running_change_totals(envelope: DataFrame) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-
-
-# ------------------------------------------------------------------
-# transformWithStateInPandas (Spark 4 arbitrary-state API)
-# ------------------------------------------------------------------
-
-SNAPSHOT_OUTPUT_SCHEMA = (
-    "database string, table string, pk bigint, last_pos bigint, "
-    "last_value double, is_deleted boolean, n_changes bigint"
-)
-
-
-def snapshot_maintenance(changes: DataFrame) -> DataFrame:
-    """Streaming twin of the batch ``cdc_apply_snapshot`` fold:
-    maintain the latest-wins row image per (database, table, pk)
-    across ALL micro-batches, on the Spark-4 arbitrary-state API
-    (``transformWithStateInPandas`` + ValueState) rather than the
-    legacy ``applyInPandasWithState`` above — the engine exercises
-    both stateful surfaces.
-
-    ``changes`` must carry ``database, table, pk, action, v, pos``
-    (the projected-envelope columns ``cdc_apply_snapshot`` derives).
-    Emits one refreshed snapshot row per touched key per batch
-    (update mode); delete tombstones surface as ``is_deleted`` so a
-    downstream sink can drop or retract them. State is ONE tiny
-    tuple per live key, partitioned by the group key — the same
-    shape, distribution and skew story as the batch fold's exchange,
-    but resident in the checkpointed state store.
-
-    Requires ``google.protobuf`` (the transformWithState protocol's
-    driver worker) and the RocksDB state store provider; raises a
-    clear ImportError up front where the sandbox lacks protobuf
-    instead of crashing the streaming query mid-start.
-    """
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError as e:
-        raise ImportError(
-            "transformWithStateInPandas needs google.protobuf for its "
-            "driver worker; install protobuf (absent in this sandbox — "
-            "the applyInPandasWithState surface above covers the same "
-            "semantics there)") from e
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor, StatefulProcessorHandle)
-
-    class LatestWins(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._latest = handle.getValueState(
-                "latest", "pos long, action string, v double, n long")
-
-        def handleInputRows(self, key, rows, timer_values):
-            cur = self._latest.get()
-            pos, action, v, n = (cur if cur is not None
-                                 else (-1, "", 0.0, 0))
-            for pdf in rows:
-                if pdf.empty:
-                    continue
-                n += len(pdf)
-                i = pdf["pos"].idxmax()
-                if int(pdf.at[i, "pos"]) > pos:
-                    pos = int(pdf.at[i, "pos"])
-                    action = str(pdf.at[i, "action"])
-                    v = float(pdf.at[i, "v"])
-            self._latest.update((pos, action, v, n))
-            yield pd.DataFrame({
-                "database": [key[0]], "table": [key[1]], "pk": [key[2]],
-                "last_pos": [pos], "last_value": [v],
-                "is_deleted": [action == "delete"], "n_changes": [n],
-            })
-
-        def close(self) -> None:
-            pass
-
-    return (changes.groupBy("database", "table", "pk")
-            .transformWithStateInPandas(
-                statefulProcessor=LatestWins(),
-                outputStructType=SNAPSHOT_OUTPUT_SCHEMA,
-                outputMode="Update",
-                timeMode="None"))

@@ -70,9 +70,15 @@ import shutil
 import time
 import uuid
 
-from galaxy_spark.streaming.exactly_once import _fsync_path
-
 _MANIFEST = "_MANIFEST.json"
+
+
+def _fsync_path(path: str) -> None:
+    fd = os.open(path, os.O_RDONLY)
+    try:
+        os.fsync(fd)
+    finally:
+        os.close(fd)
 
 
 class StoreFs:

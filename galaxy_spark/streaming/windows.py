@@ -15,11 +15,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def with_watermark(df: DataFrame, ts_col: str = "ts",
-                   delay: str = "10 minutes") -> DataFrame:
-    return df.withWatermark(ts_col, delay)
-
-
 def tumbling(df: DataFrame, ts_col: str, size: str,
              *keys: str, watermark: str | None = None) -> DataFrame:
     """Tumbling-window count+sum aggregation."""

@@ -295,7 +295,7 @@ def test_reference_shape_pipeline_end_to_end(spark, binlog_dir,
     from galaxy_spark.sinks_topic import TopicFilesDataSource
     from galaxy_spark.sources.binlog_source import binlog_envelope_factory
     from galaxy_spark.streaming.pipeline import SinkConfig, start_pipeline
-    from galaxy_spark.streaming.snapshot import partial_snapshot
+    from galaxy_spark.streaming.state_store import partial_snapshot
     from galaxy_spark.streaming.state_store import ParquetSnapshotStore
 
     try:

@@ -60,7 +60,7 @@ def test_snapshot_fold_correct_under_100x_hot_key(spark, tmp_path):
     keep AQE skew-join on via the session defaults asserted here."""
     import random
 
-    from galaxy_spark.streaming.snapshot import partial_snapshot
+    from galaxy_spark.streaming.state_store import partial_snapshot
     from galaxy_spark.streaming.state_store import ParquetSnapshotStore
 
     rng = random.Random(42)

@@ -474,7 +474,7 @@ def test_mariadb_reference_shape_chain(spark, tmp_path):
     from galaxy_spark.sources.binlog_source import BinlogDataSource
     from galaxy_spark.streaming.pipeline import (SinkConfig,
                                                  start_pipeline)
-    from galaxy_spark.streaming.snapshot import partial_snapshot
+    from galaxy_spark.streaming.state_store import partial_snapshot
     from galaxy_spark.streaming.state_store import ParquetSnapshotStore
 
     for ds in (BinlogDataSource, TopicFilesDataSource):

@@ -108,7 +108,7 @@ def test_delta_rule_invariant_under_any_batch_split(spark, changes, seed):
     and one-row-per-batch splits."""
     import random
 
-    from galaxy_spark.streaming.snapshot import partial_snapshot
+    from galaxy_spark.streaming.state_store import partial_snapshot
     from galaxy_spark.streaming.state_store import partial_view_deltas
 
     rows = [("d", "t", act, pk, cents / 100.0, pos)

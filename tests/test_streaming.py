@@ -385,148 +385,31 @@ def test_watermark_drops_late_rows(spark, tmp_path):
     assert got[t0 + dt.timedelta(hours=6)] == 1
 
 
-def test_incremental_rollup_matches_batch(spark, events_dir, tmp_path):
-    """foreachBatch-maintained continuous aggregate == one-shot
-    batch aggregation over the same data."""
-    from galaxy_spark.streaming.rollup import (
-        RollupStore,
-        start_incremental_rollup,
-    )
-
-    stream = _stream_events(spark, events_dir)
-    store = RollupStore()
-    q = start_incremental_rollup(stream, store,
-                                 str(tmp_path / "rollup_ckpt"))
-    q.processAllAvailable()
-    q.stop()
-
-    ev = load_table(spark, SF, "events")
-    exp = sorted(
-        (r.grain, r.bucket_start, r.event_type, r.n_events,
-         round(r.total_value, 2))
-        for g in ("hour", "day")
-        for r in (ev.groupBy(F.lit(g).alias("grain"),
-                             F.date_trunc(g, "ts").alias("bucket_start"),
-                             "event_type")
-                  .agg(F.count("*").alias("n_events"),
-                       F.sum("value").alias("total_value"))).collect())
-    assert store.snapshot() == exp
-
-
-def test_exactly_once_rollup_survives_epoch_replay(spark, events_dir,
-                                                   tmp_path):
-    """foreachBatch is at-least-once: force Spark to REPLAY the last
-    epoch (drop its commit marker, restart from the same checkpoint)
-    and prove the epoch-keyed store does not double-count — the
-    replay-skip guarantee the reference gets from its saved-position
-    check (concurrently_task_manager.go:97-120)."""
-    import os
-
-    from galaxy_spark.streaming.exactly_once import (
-        EpochKeyedRollupStore,
-        start_exactly_once_rollup,
-    )
-
-    ckpt = str(tmp_path / "eo_ckpt")
-    store = EpochKeyedRollupStore(str(tmp_path / "eo_store"))
-    q = start_exactly_once_rollup(_stream_events(spark, events_dir),
-                                  store, ckpt)
-    q.processAllAvailable()
-    q.stop()
-    q.awaitTermination(30)
-    first = store.snapshot()
-    epochs = store.epochs()
-    assert first and epochs
-
-    # simulate the crash window: sink write landed, checkpoint commit
-    # didn't -> on restart Spark re-runs the batch with the SAME epoch.
-    # Hadoop's local FS keeps a .<name>.crc checksum sidecar next to
-    # each commit marker; a real crash loses both, and leaving the
-    # sidecar makes the replayed commit's rename die with
-    # FileAlreadyExistsException — so remove the pair.
-    commits_dir = os.path.join(ckpt, "commits")
-    last = [c for c in sorted(os.listdir(commits_dir))
-            if not c.startswith(".")][-1]
-    os.remove(os.path.join(commits_dir, last))
-    crc = os.path.join(commits_dir, f".{last}.crc")
-    if os.path.exists(crc):
-        os.remove(crc)
-
-    q2 = start_exactly_once_rollup(_stream_events(spark, events_dir),
-                                   store, ckpt)
-    q2.processAllAvailable()
-    q2.stop()
-    q2.awaitTermination(30)
-
-    assert store.epochs() == epochs, "replay must not mint new epochs"
-    assert store.snapshot() == first, "replayed epoch double-counted"
-
-    # direct idempotence: merging the same epoch twice is a no-op
-    import pandas as pd
-    pdf = pd.DataFrame({"grain": ["hour"], "bucket_start": [None],
-                        "event_type": ["x"], "n_events": [1],
-                        "total_value": [1.0]})
-    fresh = EpochKeyedRollupStore(str(tmp_path / "eo_store2"))
-    assert fresh.merge(pdf, 0) is True
-    assert fresh.merge(pdf, 0) is False
-    assert fresh.snapshot()[0][3] == 1
-
-
-def test_exactly_once_store_rejects_foreign_lineage(spark, events_dir,
-                                                    tmp_path):
+def test_parquet_store_rejects_foreign_lineage(spark, events_dir,
+                                               tmp_path):
     """Spark epoch ids restart at 0 per checkpoint, so pointing a
     FRESH checkpoint at a used store would silently drop live
     batches as 'replays'. The sink must fail loudly instead."""
     import pytest
     from pyspark.errors.exceptions.captured import StreamingQueryException
 
-    from galaxy_spark.streaming.exactly_once import (
-        EpochKeyedRollupStore,
-        start_exactly_once_rollup,
-    )
+    from galaxy_spark.streaming.state_store import (
+        ParquetRollupStore, start_incremental_rollup_parquet)
 
-    store = EpochKeyedRollupStore(str(tmp_path / "eo_store"))
-    q = start_exactly_once_rollup(_stream_events(spark, events_dir),
-                                  store, str(tmp_path / "ckpt_a"))
+    store = ParquetRollupStore(spark, str(tmp_path / "pr_store"))
+    q = start_incremental_rollup_parquet(
+        _stream_events(spark, events_dir), store, str(tmp_path / "ckpt_a"))
     q.processAllAvailable()
     q.stop()
     q.awaitTermination(30)
-    assert store.epochs()
+    assert store.lineages()
 
-    q2 = start_exactly_once_rollup(_stream_events(spark, events_dir),
-                                   store, str(tmp_path / "ckpt_b"))
+    q2 = start_incremental_rollup_parquet(
+        _stream_events(spark, events_dir), store, str(tmp_path / "ckpt_b"))
     with pytest.raises(StreamingQueryException, match="lineage"):
         q2.processAllAvailable()
         q2.awaitTermination(30)
     q2.stop()
-
-
-def test_exactly_once_store_sweeps_orphan_tmp_dirs(tmp_path):
-    """A crash between the tmp write and the claiming rename leaves
-    an unclaimed *.tmp-* dir; construction (= restart) sweeps it and
-    the epoch stays claimable."""
-    import os
-
-    import pandas as pd
-
-    from galaxy_spark.streaming.exactly_once import EpochKeyedRollupStore
-
-    path = str(tmp_path / "eo_store")
-    orphan = os.path.join(path, "epoch=0.tmp-deadbeef")
-    os.makedirs(orphan)
-    with open(os.path.join(orphan, "part-0.parquet"), "wb") as f:
-        f.write(b"torn")
-
-    store = EpochKeyedRollupStore(path)
-    assert not os.path.exists(orphan)
-    assert store.epochs() == []
-
-    pdf = pd.DataFrame({"grain": ["hour"], "bucket_start": [None],
-                        "event_type": ["x"], "n_events": [1],
-                        "total_value": [1.0]})
-    assert store.merge(pdf, 0, lineage="aaaa0000") is True
-    assert store.merge(pdf, 0, lineage="aaaa0000") is False
-    assert store.lineages() == {"aaaa0000"}
 
 
 def test_live_filter_update_no_restart(spark, tmp_path):
@@ -632,112 +515,6 @@ def test_incremental_dedup_suppresses_cross_batch_duplicates(spark, tmp_path):
     docs.unpersist()
 
 
-def test_transform_with_state_snapshot_matches_batch_fold(spark, tmp_path):
-    """Spark-4 arbitrary-state surface (transformWithStateInPandas):
-    the streaming latest-wins snapshot over two micro-batches must
-    agree key-for-key with the batch cdc_apply_snapshot fold over
-    the same events (deletes tombstoned, positions/values/counts
-    equal).
-
-    SKIPS in this sandbox: the transformWithState protocol runs a
-    protobuf-based driver worker and ``google.protobuf`` is not
-    installed here (pip is unavailable). The operator is still the
-    committed cluster path; the same latest-wins semantics are
-    exercised end-to-end through the legacy applyInPandasWithState
-    surface (test_stateful_running_totals) and the batch fold's
-    oracle row (cdc_apply_snapshot)."""
-    pytest.importorskip(
-        "google.protobuf",
-        reason="transformWithState driver worker needs protobuf; "
-               "absent in this container")
-    from galaxy_spark.cdc.envelope import (EVENT_SOURCE_COLUMNS,
-                                           envelope_from_events)
-    from galaxy_spark.cdc.projections import project_changes
-    from galaxy_spark.streaming.stateful import snapshot_maintenance
-
-    def project(env):
-        proj = project_changes(env, EVENT_SOURCE_COLUMNS)
-        img = F.coalesce(F.col("after"), F.col("before"))
-        return proj.select(
-            "database", "table", "action",
-            F.element_at(img, "user_id").cast("long").alias("pk"),
-            F.element_at(img, "value").cast("double").alias("v"),
-            F.col("event_header.log_pos").alias("pos"))
-
-    src = tmp_path / "env_src"
-    src.mkdir()
-    ev = load_table(spark, SF, "events").limit(300).cache()
-    ev.filter("event_id % 2 = 0").write.parquet(str(src / "b1"))
-
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass",
-                          None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider")
-    try:
-        raw = spark.readStream.schema(ev.schema).parquet(str(src) + "/*")
-        out = snapshot_maintenance(project(envelope_from_events(raw)))
-        q = (out.writeStream.outputMode("update").format("memory")
-             .queryName("tws_snap")
-             .option("checkpointLocation", str(tmp_path / "ckpt"))
-             .start())
-        try:
-            q.processAllAvailable()
-            ev.filter("event_id % 2 = 1").write.parquet(str(src / "b2"))
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", prev)
-
-    # latest emitted row per key = the one with the max n_changes
-    # (monotone per key); drop tombstoned keys
-    stream_rows = spark.sql("""
-        SELECT database, table, pk, last_pos, last_value, n_changes
-        FROM (SELECT *, ROW_NUMBER() OVER (
-                  PARTITION BY database, table, pk
-                  ORDER BY n_changes DESC) rn
-              FROM tws_snap) WHERE rn = 1 AND NOT is_deleted
-    """).collect()
-
-    batch = (project(envelope_from_events(ev))
-             .groupBy("database", "table", "pk")
-             .agg(F.max_by("action", "pos").alias("last_action"),
-                  F.max_by("v", "pos").alias("last_value"),
-                  F.max("pos").alias("last_pos"),
-                  F.count("*").alias("n_changes"))
-             .filter(F.col("last_action") != "delete")).collect()
-
-    key = lambda r: (r.database, r["table"], r.pk)
-    s = {key(r): (r.last_pos, r.last_value, r.n_changes)
-         for r in stream_rows}
-    b = {key(r): (r.last_pos, r.last_value, r.n_changes) for r in batch}
-    assert s == b
-    ev.unpersist()
-
-
-def test_snapshot_maintenance_gate_raises_cleanly_without_protobuf(spark):
-    """Where protobuf is absent the operator must fail fast with an
-    actionable message, not crash the query mid-start."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-        pytest.skip("protobuf present; gate not exercised")
-    except ImportError:
-        pass
-    from galaxy_spark.streaming.stateful import snapshot_maintenance
-    df = spark.createDataFrame(
-        [("db0", "click", 1, "insert", 1.0, 1)],
-        "database string, table string, pk long, action string, "
-        "v double, pos long")
-    with pytest.raises(ImportError, match="protobuf"):
-        snapshot_maintenance(df)
-
-
 def test_stream_static_bloom_gate_matches_batch(spark, tmp_path):
     """Stream-static join: a document stream probes the STATIC
     Bloom position set built from the reference sources — the
@@ -776,34 +553,6 @@ def test_stream_static_bloom_gate_matches_batch(spark, tmp_path):
     want = {(r.doc_id, r.bloom_hit)
             for r in dedup_bloom_reference(spark, SF).collect()}
     assert got == want and any(h for _, h in want)
-
-
-def test_incremental_snapshot_matches_batch(spark, events_dir, tmp_path):
-    """Streaming latest-wins snapshot fold (foreachBatch, per-batch
-    partials merged into a keyed store) must end at EXACTLY the
-    rows the batch cdc_apply_snapshot query computes over the same
-    changelog — the continuous-aggregate guarantee, applied to the
-    reference's canonical downstream consumer."""
-    from galaxy_spark.queries.cdc import (cdc_apply_snapshot,
-                                          snapshot_change_frame)
-    from galaxy_spark.streaming.snapshot import (SnapshotStore,
-                                                 start_incremental_snapshot)
-
-    changes = snapshot_change_frame(
-        envelope_from_events(_stream_events(spark, events_dir)))
-    store = SnapshotStore()
-    q = start_incremental_snapshot(
-        changes, store, str(tmp_path / "snap_ckpt"))
-    q.processAllAvailable()
-    q.stop()
-
-    got = store.snapshot()
-    want = sorted(
-        (r.database, r["table"], r.pk, r.last_value, r.last_pos,
-         r.n_changes)
-        for r in cdc_apply_snapshot(spark, SF).collect())
-    assert got == want
-    assert len(want) > 50
 
 
 def test_parquet_snapshot_store_matches_batch_and_stays_off_driver(
@@ -1043,8 +792,7 @@ def test_parquet_rollup_store_survives_spark_epoch_replay(
     drop the last checkpoint commit marker, restart, and the
     bucketed MERGE must recognize its committed (bucket, epoch)
     versions and skip the replayed batch — totals unchanged, no new
-    version dirs minted (the state_store twin of the
-    EpochKeyedRollupStore replay test)."""
+    version dirs minted."""
     from galaxy_spark.streaming.state_store import (
         ParquetRollupStore, start_incremental_rollup_parquet)
 
@@ -1764,16 +1512,18 @@ def test_ddl_apply_batch_persists_registry(spark, tmp_path):
 def test_store_rename_failure_raises_not_skips(tmp_path, monkeypatch):
     """A commit-rename failure that is NOT a lost replay race must
     RAISE (so Spark retries the batch) — swallowing it as a replay
-    skip silently dropped a live epoch's contribution while the
+    skip would silently drop a live epoch's contribution while the
     checkpoint advanced."""
-    import pandas as pd
+    from galaxy_spark.streaming.store_fs import PosixStoreFs
 
-    from galaxy_spark.streaming.exactly_once import EpochKeyedRollupStore
+    fs = PosixStoreFs()
+    bucket = str(tmp_path / "bucket-0")
 
-    store = EpochKeyedRollupStore(str(tmp_path / "eo"))
-    pdf = pd.DataFrame({"grain": ["day"], "bucket_start": ["2024-01-01"],
-                        "event_type": ["click"], "n_events": [1],
-                        "total_value": [1.0]})
+    def stage(name):
+        d = tmp_path / name
+        d.mkdir()
+        (d / "part-0.parquet").write_bytes(b"x")
+        return str(d)
 
     real_rename = os.rename
 
@@ -1782,13 +1532,17 @@ def test_store_rename_failure_raises_not_skips(tmp_path, monkeypatch):
 
     monkeypatch.setattr(os, "rename", failing_rename)
     with pytest.raises(OSError, match="injected"):
-        store.merge(pdf, epoch_id=1, lineage="lin")
+        fs.publish_version(bucket, "v-lin.000000000001", stage("s1"))
+    assert not fs.committed(bucket, "v-lin.000000000001")
     monkeypatch.setattr(os, "rename", real_rename)
 
-    # genuine lost race (dest exists) still reports a replay skip
-    assert store.merge(pdf, epoch_id=2, lineage="lin") is True
+    # genuine lost race (the version is already committed) returns
+    # quietly and leaves the committed version in place
+    fs.publish_version(bucket, "v-lin.000000000002", stage("s2"))
+    assert fs.committed(bucket, "v-lin.000000000002")
     monkeypatch.setattr(os, "rename", failing_rename)
-    assert store.merge(pdf, epoch_id=2, lineage="lin") is False
+    fs.publish_version(bucket, "v-lin.000000000002", stage("s3"))
+    assert fs.committed(bucket, "v-lin.000000000002")
 
 
 def test_live_pipeline_routes_quarantined_to_dlq(spark, tmp_path):
