@@ -203,7 +203,7 @@ def components_with_size(vertices: DataFrame, edges: DataFrame,
 
 def degree_orient(edges: DataFrame, src_col: str = "src",
                   dst_col: str = "dst",
-                  broadcast_state: bool = True) -> DataFrame:
+                  broadcast_state: bool | None = None) -> DataFrame:
     """Re-orient an UNDIRECTED edge set so every edge points from
     its lower-degree endpoint to its higher-degree one (ties broken
     by id) — the classic skew fix for triangle counting
@@ -220,12 +220,14 @@ def degree_orient(edges: DataFrame, src_col: str = "src",
     against the id-oriented query.
 
     Plan: one degree aggregation over the symmetrized ends (one
-    shuffle), then a broadcast-sized (|V| rows) degree join onto
-    each endpoint — or a shuffle join at billion-node |V|
-    (``broadcast_state=False``; the degree frame is not
-    checkpointed here, so the decision is the caller's rather than
-    a count that would re-run the aggregation) — and a scan-local
-    CASE to flip. Cost is O(|E|) with no new skew: degrees
+    shuffle), then a (|V| rows) degree join onto each endpoint, and
+    a scan-local CASE to flip. The degree join broadcasts only when
+    |V| fits the budget in ``operators.util.bcast_max_rows``
+    (``broadcast_state=None``, the default: the degree frame is
+    localCheckpointed and counted once, like
+    ``connected_components``' edge list); past it, e.g. at
+    billion-node |V|, it is a shuffle join. ``True``/``False``
+    force the choice. Cost is O(|E|) with no new skew: degrees
     partial-aggregate map-side.
     """
     # _symmetrize always emits columns named src/dst — group on
@@ -234,6 +236,9 @@ def degree_orient(edges: DataFrame, src_col: str = "src",
     sym = _symmetrize(edges, src_col, dst_col)
     deg = (sym.groupBy(F.col("src").alias("node"))
            .agg(F.count("*").alias("deg")))
+    if broadcast_state is None:
+        deg = deg.localCheckpoint(eager=False)
+        broadcast_state = within_broadcast_budget(deg)
     da = deg.select(F.col("node").alias("__a"), F.col("deg").alias("da"))
     db = deg.select(F.col("node").alias("__b"), F.col("deg").alias("db"))
     lower_first = ((F.col("da") < F.col("db"))
@@ -251,7 +256,8 @@ def degree_orient(edges: DataFrame, src_col: str = "src",
 
 
 def triangle_count_oriented(edges: DataFrame,
-                            broadcast_state: bool = True) -> DataFrame:
+                            broadcast_state: bool | None = None
+                            ) -> DataFrame:
     """Edge-iterator triangle count over a DEGREE-ORIENTED edge set
     (see degree_orient): same successor-adjacency intersect plan as
     the registered graph_triangle_count query, but with adjacency
@@ -260,7 +266,8 @@ def triangle_count_oriented(edges: DataFrame,
     single row (n_triangles,). The closure condition intersects
     succ(a) with succ(b) for each oriented edge (a, b); because the
     orientation is acyclic, every triangle is counted exactly once
-    from its unique source-of-two-edges node."""
+    from its unique source-of-two-edges node. ``broadcast_state``
+    forwards to ``degree_orient`` (None = size-derived)."""
     oriented = degree_orient(edges, broadcast_state=broadcast_state) \
         .localCheckpoint(eager=False)
     adj = oriented.groupBy("src").agg(

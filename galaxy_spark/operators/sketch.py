@@ -67,10 +67,8 @@ def sliding_hll_estimates(regs: DataFrame, days: DataFrame,
     repo's engine-exact arithmetic (integer harmonic numerator; one
     identically-ordered IEEE op for the estimate).
 
-    Shared by the batch certification query
-    (``queries/events.py:agg_hll_sliding_distinct_users``) and the
-    streaming reader (``streaming/state_store.py:
-    streaming_sliding_wau``) — one drift channel fewer.
+    The arithmetic of the batch certification query
+    (``queries/events.py:agg_hll_sliding_distinct_users``).
 
     ``regs``: (day date, bucket long, register int-ish);
     ``days``: one column ``tday`` — the target-day universe.
@@ -104,11 +102,8 @@ def global_hll_estimate(harmonic_col):
     p=8 precision: alpha_256 * m^2 * 2^50 / T in ONE fixed IEEE
     operation order — shared by the batch certification query
     (``queries/indexing.py:agg_hll_cardinality_bound``) and the
-    streaming reader (``streaming/state_store.py:
-    streaming_cardinality_estimate``) so the documented
-    'streaming equals batch to the last IEEE bit' contract cannot
-    drift (the sliding pair already shares
-    ``sliding_hll_estimates`` for the same reason)."""
+    HyperBall ball-size estimate (``queries/graphs.py``), so the two
+    estimates cannot drift."""
     return F.round((F.lit(0.7213) / (F.lit(1.0)
                                      + F.lit(1.079) / F.lit(256.0)))
                    * F.lit(65536.0) * F.lit(1125899906842624.0)

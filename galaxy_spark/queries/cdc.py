@@ -334,10 +334,8 @@ def scd2_history_frame(env: DataFrame) -> DataFrame:
 def scd2_change_frame(env: DataFrame) -> DataFrame:
     """SCD2's projected change rows: (database, table, action, pk,
     value, pos) with value = the AFTER image only (null for delete
-    tombstones — they close intervals but never open one). Shared
-    by the batch window build above and the streaming incremental
-    maintenance (streaming/state_store.py:ParquetScd2Store), so the
-    two paths cannot drift."""
+    tombstones — they close intervals but never open one); the
+    input of the batch window build above."""
     proj = project_changes(env, EVENT_SOURCE_COLUMNS)
     img = F.coalesce(F.col("after"), F.col("before"))
     return proj.select(

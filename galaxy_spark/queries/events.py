@@ -43,8 +43,7 @@ def events_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def events_tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tumbling 1h window aggregation (batch twin of the streaming
-    ``F.window`` aggregation in galaxy_spark.streaming.windows)."""
+    """Tumbling 1h window aggregation (``F.window``)."""
     ev = load_table(spark, sf_dir, "events")
     return (
         ev.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
@@ -718,8 +717,8 @@ def agg_histogram_sliding_quantiles(spark: SparkSession,
     (<= 512 rows per day regardless of event volume) SUM-merge
     across the 7 target days exactly as the WAU registers MAX-merge,
     so window quantiles never re-scan raw events and the per-day
-    state streams incrementally on the durable store (the
-    ``ParquetCmsStore`` family — same cell-wise SUM monoid,
+    state can fold incrementally on the keyed parquet store
+    (cell-wise SUM;
     ``test_streaming_histogram_quantile_on_durable_store`` pins the
     single-window build).
 
@@ -879,10 +878,8 @@ def events_decay_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def decay_scores_from_events(ev: DataFrame) -> DataFrame:
     """The full decay query over any events-shaped frame — the
-    funnel_from_events pattern, so restricted-window twins (the
-    user-day store's retention tests) run the REAL query body over
-    a filtered frame instead of a re-derivation that could
-    drift."""
+    funnel_from_events pattern, so a restricted-window check runs
+    the REAL query body over a filtered frame."""
     anchor = ev.agg(F.max(F.to_date("ts")).alias("d0"))
     aged = (ev.crossJoin(F.broadcast(anchor))
             .select("user_id",
@@ -896,10 +893,9 @@ def decay_scores_from_events(ev: DataFrame) -> DataFrame:
 
 
 def decay_scores_from_aged(aged: DataFrame) -> DataFrame:
-    """The decay fold over any (user_id, age, n, np) frame — shared
-    with the streaming per-day reader (``streaming_decay_scores``),
-    imported not copied, so the horizon (40 days) and the exact
-    integer weight arithmetic cannot drift between tiers. Every
+    """The decay fold of ``events_decay_score`` over any
+    (user_id, age, n, np) frame: a 40-day horizon and exact
+    integer weight arithmetic. Every
     weight is INTEGER (shiftleft by 40 - age; the bit count must be
     a COLUMN, so F.expr — pyspark's function form takes a literal
     only), and n/np are exact counts, so w*n == summing w per event:
@@ -1178,9 +1174,8 @@ def events_stickiness_dau_wau(spark: SparkSession,
 
 
 def stickiness_from_user_days(d: DataFrame) -> DataFrame:
-    """The DAU/WAU tail over a distinct (user_id, day) frame —
-    shared by the batch query and the streaming reader off the
-    user-day store (imported, not copied)."""
+    """The DAU/WAU tail of ``events_stickiness_dau_wau`` over a
+    distinct (user_id, day) frame."""
     d = d.localCheckpoint(eager=False)     # dau + wau + grid
     days = d.select("day").distinct()
     dau = d.groupBy("day").agg(F.count("*").cast("long")

@@ -754,19 +754,16 @@ def graph_hyperball_ball2(spark: SparkSession, sf_dir: str) -> DataFrame:
     h2 = (state_broadcast(h1.withColumnRenamed("w", "mid"), small)
           .join(edges, F.col("mid") == edges.src)
           .select("node", F.col("dst").alias("w")))
-    # exact ball size = COUNT(DISTINCT w) per sampled node. The
-    # distinct->count form paid two exchanges on the ~|S|·deg² union
-    # (hashpartition on (node, w), then again on node); folding it
-    # into one set-valued aggregation dedups MAP-SIDE (collect_set
-    # partial-merges per partition — ball members repeat heavily
-    # across the 2-hop wedges, so the exchange carries merged sets,
-    # not raw wedge rows) and shuffles ONCE on node (guide §2.3
-    # "aggregate before you shuffle"; r14 verdict #6). Set size is
-    # bounded by the ball (≤ |V|), the same bound the old
-    # distinct's groupBy state had.
+    # exact ball size = COUNT(DISTINCT w) per sampled node, planned
+    # as hash aggregation: a map-side partial dedup on (node, w)
+    # (ball members repeat heavily across the 2-hop wedges), an
+    # exchange on (node, w), then a partial count per node and an
+    # exchange on node. Every stage is keyed hash-aggregate state,
+    # which spills; a per-node collect_set is one aggregation buffer
+    # per node that cannot spill, up to |V| entries at a hub.
     exact = (h0.union(h1).union(h2)
              .groupBy("node")
-             .agg(F.size(F.collect_set("w")).cast("long")
+             .agg(F.count_distinct("w").cast("long")
                   .alias("exact_ball2")))
     t = (agg.join(exact, "node")
          .select("node", "occupied",

@@ -1498,9 +1498,9 @@ _KMV_2P48 = float(1 << 48)
 
 def _kmv_hv(col):
     """The KMV hash: 48-bit md5-slice BIGINT (the repo's
-    engine-portable hash discipline). Shared with the streaming
-    twin (``state_store.partial_kmv``) so batch and stream cannot
-    drift — the ``_cms_positions`` pattern."""
+    engine-portable hash discipline). Shared by the KMV queries
+    so their sketches hash identically — the ``_cms_positions``
+    pattern."""
     return F.conv(F.substring(F.md5(col.cast("string")), 1, 12),
                   16, 10).cast("long")
 

@@ -24,11 +24,9 @@ _OLS_DEN = ("(CAST(n AS DOUBLE)*sxx - CAST(sx AS DOUBLE)*sx)")
 def ols_partial_stats(li: DataFrame, key, key_name: str) -> DataFrame:
     """The six-statistic fold in its EXACT (pre-cast) form:
     cents-quantized x/y, int64 n/Σx/Σy, DECIMAL(38,0) product sums.
-    Every statistic is an exact integer under a SUM monoid, so this
-    is simultaneously the batch fold and a streaming micro-batch
-    partial: summing per-batch partials in ``ParquetOlsStore``
-    reproduces the whole-corpus fold integer-for-integer, and the
-    double cast happens once, at solve time, on identical values."""
+    Every statistic is an exact integer under a SUM monoid, so any
+    split of the input sums to the same integers, and the double
+    cast happens once, at solve time, on identical values."""
     q = li.select(
         key.alias(key_name),
         F.round(F.col("l_quantity") * 100, 0).cast("long").alias("xi"),
@@ -48,9 +46,8 @@ def ols_partial_stats(li: DataFrame, key, key_name: str) -> DataFrame:
 
 def ols_cast_stats(s: DataFrame, key_name: str) -> DataFrame:
     """Exact-integer statistics -> the solve's input layout (the
-    three product sums as correctly-rounded doubles). Shared by the
-    batch queries and the streaming reader so the one lossy step
-    cannot drift between them."""
+    three product sums as correctly-rounded doubles) — the one
+    lossy step, in one place."""
     return s.select(
         key_name, "n", "sx", "sy",
         F.col("sxx").cast("double").alias("sxx"),
@@ -140,9 +137,8 @@ def ml_ols_price_on_quantity(spark: SparkSession,
 
 def ols_model_select(s: DataFrame, key_name: str) -> DataFrame:
     """The flagship fit's output projection over a solved-input
-    statistics frame — shared with the streaming reader
-    (``streaming_ols_estimates``) so the IEEE solve tree and the
-    1e-6 rounding are imported, never re-typed."""
+    statistics frame: the IEEE solve tree and the 1e-6 rounding of
+    ``ml_ols_price_on_quantity``."""
     num, den, ydev, intercept = _ols_solve()
     return s.select(
         key_name, "n", "sx", "sy",

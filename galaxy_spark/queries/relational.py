@@ -1485,9 +1485,8 @@ def customer_rfm_segments(spark: SparkSession,
 
 def rfm_segments_from_rollup(per_c: DataFrame) -> DataFrame:
     """The RFM scoring tail over an already-built per-customer
-    rollup (o_custkey, last_day, f, m_cents) — shared by the batch
-    query and the streaming twin (imported, not copied, so the
-    quartile arithmetic and tiebreaks cannot drift)."""
+    rollup (o_custkey, last_day, f, m_cents): the quartile
+    arithmetic and tiebreaks of ``customer_rfm_segments``."""
     # anchor + ranking both consume it — one upstream scan
     per_c = per_c.localCheckpoint(eager=False)
     anchor = per_c.agg(F.max("last_day").alias("d0"))
@@ -1571,9 +1570,8 @@ def customer_order_cadence(spark: SparkSession,
 
 def cadence_from_order_rows(rows: DataFrame,
                             customer: DataFrame) -> DataFrame:
-    """The cadence tail over (o_custkey, day, o_orderkey) rows —
-    shared by the batch query and the streaming reader off the
-    order-fact store (imported, not copied)."""
+    """The cadence tail of ``customer_order_cadence`` over
+    (o_custkey, day, o_orderkey) rows."""
     w = Window.partitionBy("o_custkey").orderBy("day", "o_orderkey")
     gaps = (rows.select(
         "o_custkey",

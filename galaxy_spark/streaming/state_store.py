@@ -3,7 +3,7 @@ bucketed, epoch-versioned parquet MERGE store.
 
 This is the ONE durable store for every foreachBatch fold in the
 package (the incremental CDC snapshot, the continuous rollup and
-the index/view stores below). The ACCUMULATED state never exists
+the task kinds' index stores below). The ACCUMULATED state never exists
 as Python objects: each micro-batch's pre-folded partial (a
 DataFrame, one row per touched key) is merged into a keyed
 parquet dataset by a distributed Spark job, and the only
@@ -106,8 +106,8 @@ class KeyedParquetStore:
         self = super().__new__(cls)
         #: the constructor call, as made — ``_clone`` replays it at a
         #: new path and bucket count, so every tunable a subclass
-        #: takes (a KMV store's k, a retention horizon) survives a
-        #: rebuild without a per-subclass override
+        #: takes (a winnow store's df_cap, a retention horizon)
+        #: survives a rebuild without a per-subclass override
         self._init_args = (args, kwargs)
         return self
 
@@ -833,414 +833,6 @@ def start_incremental_rollup_parquet(
         lambda b: [(store, _partial_rollup(b))])
 
 
-def partial_scd2(changes: DataFrame) -> DataFrame:
-    """One micro-batch's SCD2 partial: one ROW PER VERSION keyed by
-    (database, table, pk, pos). SCD2's *state* inherently grows
-    with a key's version count, but its *representation* must not
-    concentrate that growth: an earlier design folded each key's
-    history into a single collect_list array cell, so a realistic
-    CDC hot key (one pk updated millions of times) became one
-    multi-GB row in one bucket — the same hot-key hazard the
-    snapshot fold is hardened against. Row-per-version spreads a
-    hot key's versions across buckets (pos is part of the bucket
-    hash) and keeps every stored row O(1). Expects
-    scd2_change_frame columns (value = after image only; tombstones
-    close intervals downstream)."""
-    return changes.select("database", "table", "pk", "pos", "value",
-                          "action")
-
-
-class ParquetScd2Store(KeyedParquetStore):
-    """Incrementally-maintained SCD2 dimension history: the
-    streaming twin of queries.cdc.scd2_history_frame, stored
-    ROW-PER-VERSION in the bucketed parquet store with key
-    (database, table, pk, pos). Merge = insert-new-versions: rows
-    for the same (key, pos) are identical (a binlog position is one
-    change), so the max-fold is a dedup and the merge is IDEMPOTENT
-    even beyond the per-(bucket, epoch) commit claims — a replayed
-    version row collapses instead of duplicating. Hot keys spread:
-    pos is part of the bucket hash, so a million-update pk lands
-    across all buckets rather than as one giant array cell."""
-
-    def __init__(self, spark: SparkSession, path: str,
-                 n_buckets: int = 8) -> None:
-        super().__init__(
-            spark, path, ["database", "table", "pk", "pos"],
-            [F.max("value").alias("value"),
-             F.max("action").alias("action")],
-            n_buckets,
-            state_schema="database string, table string, pk long, "
-                         "pos long, value double, action string")
-
-    def history(self) -> DataFrame:
-        """Validity intervals — same columns and semantics as the
-        batch scd2_history_frame: LEAD over position closes
-        intervals (deletes close, then drop)."""
-        from pyspark.sql import Window
-
-        w = Window.partitionBy("database", "table", "pk").orderBy("pos")
-        return (self.state()
-                .withColumn("valid_to", F.lead("pos").over(w))
-                .filter(F.col("action") != "delete")
-                .drop("action")
-                .select("database", "table", "pk", "value", "pos",
-                        "valid_to"))
-
-
-def start_incremental_scd2_parquet(
-        changes_stream: DataFrame, store: ParquetScd2Store,
-        checkpoint_dir: str) -> StreamingQuery:
-    """Maintain SCD2 history incrementally: per-batch distributed
-    version-array partials -> bucketed parquet MERGE."""
-    return _start_store_stream(
-        changes_stream, checkpoint_dir, (store,),
-        lambda b: [(store, partial_scd2(b))])
-
-
-class ParquetViewStore(KeyedParquetStore):
-    """Executor-side maintained aggregate VIEW over the CDC
-    snapshot: (database, table) -> (sum_cents, n_rows), updated by
-    ADDING per-batch signed deltas — the streaming deployment of
-    the delta rule certified by
-    ``queries/cdc.py:cdc_incremental_view_sum`` (insert -> +v/+1,
-    update -> +Δ/0, delete -> -v/-1). View state is |groups| rows;
-    per-batch cost is the batch's touched keys, independent of both
-    history length and key cardinality."""
-
-    def __init__(self, spark: SparkSession, path: str,
-                 n_buckets: int = 2) -> None:
-        super().__init__(
-            spark, path, ["database", "table"],
-            [F.sum("dv").cast("long").alias("dv"),
-             F.sum("dn").cast("long").alias("dn")],
-            n_buckets,
-            state_schema="database string, table string, "
-                         "dv long, dn long")
-
-    def view(self) -> list[tuple]:
-        return sorted((r.database, r["table"], r.dv, r.dn)
-                      for r in self.state().collect())
-
-
-def partial_view_deltas(batch_df: DataFrame,
-                        snap_state: DataFrame) -> DataFrame:
-    """One micro-batch's signed view deltas: per touched key only
-    the (stored image -> batch-last image) transition matters —
-    intra-batch intermediate changes telescope away, so the fold is
-    one max_by per key + a left join against the snapshot store's
-    current state (int64 cents, the batch query's quantization).
-    Requires the binlog contract that per-key positions never move
-    backward across batches (the source's offset monotonicity
-    guarantee) — an out-of-order key would retract an image the
-    store no longer holds."""
-    last = (batch_df.groupBy("database", "table", "pk")
-            .agg(F.max_by("action", "pos").alias("a"),
-                 F.max_by("v", "pos").alias("v")))
-    cur = F.when(F.col("a") == "delete", F.lit(0)).otherwise(
-        F.round(F.col("v") * 100, 0).cast("long"))
-    curn = F.when(F.col("a") == "delete", F.lit(0)).otherwise(F.lit(1))
-    if "last_action" in snap_state.columns:
-        prev = snap_state.select(
-            "database", "table", "pk",
-            F.when(F.col("last_action") == "delete", F.lit(0)).otherwise(
-                F.round(F.col("last_value") * 100, 0).cast("long"))
-            .alias("pv"),
-            F.when(F.col("last_action") == "delete", F.lit(0))
-            .otherwise(F.lit(1)).alias("pn"))
-        joined = last.join(prev, ["database", "table", "pk"], "left")
-    else:  # a never-written store's empty-state sentinel
-        joined = last.withColumn("pv", F.lit(None).cast("long")) \
-                     .withColumn("pn", F.lit(None).cast("long"))
-    return (joined
-            .select("database", "table",
-                    (cur - F.coalesce(F.col("pv"), F.lit(0))).alias("dv"),
-                    (curn - F.coalesce(F.col("pn"), F.lit(0))).alias("dn"))
-            .groupBy("database", "table")
-            .agg(F.sum("dv").cast("long").alias("dv"),
-                 F.sum("dn").cast("long").alias("dn")))
-
-
-def start_incremental_view_parquet(
-        changes_stream: DataFrame, view_store: ParquetViewStore,
-        snap_store: ParquetSnapshotStore,
-        checkpoint_dir: str) -> StreamingQuery:
-    """Maintain snapshot AND aggregate view from one change stream.
-
-    Per batch: (1) compute deltas against the snapshot's CURRENT
-    state and merge them into the view, (2) THEN merge the batch
-    into the snapshot. The order is load-bearing for replay
-    correctness: both merges claim the same (lineage, epoch) key,
-    so after a crash between (1) and (2) the replay recomputes
-    identical deltas (the snapshot is unchanged), the view merge
-    skips on its claim, and the snapshot completes. The reverse
-    order has a poisoned window — snapshot merged, view not — where
-    a replay's deltas compute to zero against the already-advanced
-    snapshot and the view silently loses the batch."""
-    def merges(batch_df: DataFrame):
-        # merge() checkpoints its partial internally, so the
-        # state-sized snapshot join here runs once per batch
-        yield view_store, partial_view_deltas(batch_df,
-                                              snap_store.state())
-        yield snap_store, partial_snapshot(batch_df)
-
-    return _start_store_stream(changes_stream, checkpoint_dir,
-                               (view_store, snap_store), merges)
-
-
-# ------------------------------------------------------------------
-# Streaming approximate top-k (heavy hitters) on the durable store
-# ------------------------------------------------------------------
-
-class ParquetCmsStore(KeyedParquetStore):
-    """Streaming count-min sketch on the durable store: the d x w
-    counter grid as (row_i, pos) -> cnt rows under a cell-wise SUM
-    monoid. State is FIXED-SIZE regardless of key cardinality (the
-    property that makes CMS the 100 TB frequency primitive —
-    ``agg_countmin_heavy_hitters``'s batch rationale), and sum is
-    associative/commutative, so the incrementally-accumulated grid
-    equals the batch sketch CELL-FOR-CELL under any micro-batch
-    split."""
-
-    def __init__(self, spark: SparkSession, path: str,
-                 n_buckets: int = 2) -> None:
-        super().__init__(
-            spark, path, ["row_i", "pos"],
-            [F.sum("cnt").cast("long").alias("cnt")],
-            n_buckets,
-            state_schema="row_i int, pos string, cnt long")
-
-
-class ParquetCandidateStore(KeyedParquetStore):
-    """Heavy-hitter CANDIDATE set: every item that entered any
-    micro-batch's per-batch top-m (by batch count). Bounded by
-    m x batches rows — never the key universe. ``seen_cnt`` sums
-    the item's counts over the batches where it ranked (a LOWER
-    bound on its true count, bookkeeping only); the AUTHORITATIVE
-    estimate is the CMS probe in ``streaming_heavy_hitters``."""
-
-    def __init__(self, spark: SparkSession, path: str,
-                 n_buckets: int = 2) -> None:
-        super().__init__(
-            spark, path, ["item"],
-            [F.sum("seen_cnt").cast("long").alias("seen_cnt")],
-            n_buckets,
-            state_schema="item string, seen_cnt long")
-
-
-def partial_cms(batch_df: DataFrame, key_col: str) -> DataFrame:
-    """One micro-batch's CMS cell partials: d seed-prefixed
-    md5-slice positions per key (the batch query's exact
-    arithmetic, shared import), summed per cell map-side."""
-    from galaxy_spark.queries.indexing import _cms_positions
-
-    return (batch_df
-            .select(F.posexplode(F.array(
-                *_cms_positions(F.col(key_col))))
-                .alias("row_i", "pos"))
-            .groupBy("row_i", "pos")
-            .agg(F.count("*").cast("long").alias("cnt")))
-
-
-def partial_topk_candidates(batch_df: DataFrame, key_col: str,
-                            m: int) -> DataFrame:
-    """One micro-batch's top-m items by batch count — a
-    TakeOrderedAndProject (per-partition m-row heap partials merged
-    on the driver, the KMV pattern), so the candidate feed is
-    bounded at m rows per batch no matter the batch's key count."""
-    return (batch_df.groupBy(key_col)
-            .agg(F.count("*").cast("long").alias("seen_cnt"))
-            .orderBy(F.desc("seen_cnt"), key_col).limit(m)
-            .select(F.col(key_col).cast("string").alias("item"),
-                    "seen_cnt"))
-
-
-def start_streaming_heavy_hitters(
-        stream: DataFrame, cms_store: ParquetCmsStore,
-        cand_store: ParquetCandidateStore, checkpoint_dir: str,
-        key_col: str, m: int = 16) -> StreamingQuery:
-    """Maintain sketch + candidates from one stream. Unlike the IVM
-    starter (where view-before-snapshot order is load-bearing),
-    BOTH partials here depend only on the batch — never on the
-    other store's state — so the two same-epoch-keyed merges are
-    replay-correct in either order: after a crash between them the
-    replay recomputes identical partials, the claimed store skips,
-    the other completes."""
-    def merges(batch_df: DataFrame):
-        yield cms_store, partial_cms(batch_df, key_col)
-        yield cand_store, partial_topk_candidates(batch_df, key_col, m)
-
-    return _start_store_stream(stream, checkpoint_dir,
-                               (cms_store, cand_store), merges)
-
-
-def streaming_heavy_hitters(cms_store: ParquetCmsStore,
-                            cand_store: ParquetCandidateStore,
-                            k: int) -> DataFrame:
-    """Approximate top-k off the stores: probe every candidate's d
-    cells in the accumulated sketch, estimate = MIN (identical
-    arithmetic to the batch query, so for any candidate the
-    streaming estimate EQUALS the batch estimate over the same
-    rows), rank by estimate. Approximation contract: the estimate
-    is exact-or-over (collisions only add); the candidate set can
-    miss an adversarial key that never ranks in any single batch's
-    top-m while accumulating across batches — size m against the
-    expected skew (a true heavy hitter is heavy in most batches).
-
-    The sketch read is layout-pruned (r11): the candidate set is
-    O(m x batches) rows, its probe cells are known before the read,
-    so ``state_for_keys`` opens only the grid buckets those cells
-    hash to instead of the full d x w state."""
-    from galaxy_spark.queries.indexing import _cms_positions
-
-    probes = (cand_store.state().select(
-        "item",
-        F.posexplode(F.array(*_cms_positions(F.col("item"))))
-        .alias("row_i", "pos"))
-        .localCheckpoint(eager=False))  # bucket probe + cell join
-    return (probes.join(cms_store.state_for_keys(
-                probes.select("row_i", "pos")), ["row_i", "pos"])
-            .groupBy("item")
-            .agg(F.min("cnt").alias("cms_estimate"))
-            .orderBy(F.desc("cms_estimate"), "item").limit(k))
-
-
-# ------------------------------------------------------------------
-# Streaming cardinality (HLL registers) on the durable store
-# ------------------------------------------------------------------
-
-class ParquetHllStore(KeyedParquetStore):
-    """Streaming HyperLogLog on the durable store: the m max-rank
-    registers as (hll_bucket -> register) rows under a cell-wise
-    MAX monoid. Like the CMS grid this state is FIXED-SIZE
-    regardless of key cardinality, and max is associative/
-    commutative/IDEMPOTENT — so the incrementally-accumulated
-    registers equal the batch sketch (``operators/sketch.py:
-    hll_registers``) cell-for-cell under any micro-batch split,
-    and even a re-merged duplicate partial cannot move a register
-    (strictly stronger replay story than the sum monoids, which
-    rely on the store's epoch-claim skip). The key column is
-    ``hll_bucket`` — ``__bucket`` is the store's own layout key."""
-
-    def __init__(self, spark: SparkSession, path: str,
-                 n_buckets: int = 2) -> None:
-        super().__init__(
-            spark, path, ["hll_bucket"],
-            [F.max("register").cast("int").alias("register")],
-            n_buckets,
-            state_schema="hll_bucket long, register int")
-
-
-def partial_hll(batch_df: DataFrame, key_col: str) -> DataFrame:
-    """One micro-batch's register partials: the batch query's exact
-    (bucket, rho) arithmetic (shared import — one drift channel
-    fewer), MAXed per bucket map-side."""
-    from galaxy_spark.operators.sketch import hll_registers
-
-    return (hll_registers(batch_df, F.col(key_col))
-            .select(F.col("bucket").alias("hll_bucket"),
-                    F.col("register").cast("int").alias("register")))
-
-
-def start_streaming_cardinality(
-        stream: DataFrame, hll_store: ParquetHllStore,
-        checkpoint_dir: str, key_col: str) -> StreamingQuery:
-    """Maintain the register store from one stream — single-store
-    variant of the heavy-hitters starter (one merge per epoch, so
-    replay correctness needs only the store's own claim skip; with
-    MAX it would hold even without it)."""
-    return _start_store_stream(
-        stream, checkpoint_dir, (hll_store,),
-        lambda b: [(hll_store, partial_hll(b, key_col))])
-
-
-def streaming_cardinality_estimate(hll_store: ParquetHllStore) -> DataFrame:
-    """The accumulated estimate off the store: identical occupied/
-    harmonic/alpha arithmetic to the batch certification query
-    (``agg_hll_cardinality_bound``), so over the same rows the
-    streaming estimate EQUALS the batch estimate to the last IEEE
-    bit. Raw-regime estimator only — same documented limit."""
-    from galaxy_spark.operators.sketch import (HLL_2P50, HLL_M,
-                                               global_hll_estimate)
-
-    agg = hll_store.state().agg(
-        F.count("*").cast("long").alias("occupied"),
-        F.sum(F.pow(F.lit(2.0), F.lit(50) - F.col("register"))
-              .cast("long")).cast("long").alias("t_occ"))
-    t = agg.select(
-        "occupied",
-        (F.col("t_occ") + (F.lit(HLL_M) - F.col("occupied"))
-         * F.lit(HLL_2P50)).cast("long").alias("harmonic_num"))
-    return t.select(F.lit(HLL_M).alias("m"), "occupied",
-                    "harmonic_num",
-                    global_hll_estimate(F.col("harmonic_num"))
-                    .alias("est"))
-
-
-class ParquetDailyHllStore(KeyedParquetStore):
-    """Per-day HLL registers under the same cell-wise MAX monoid —
-    the durable state behind a continuously-maintained sliding-
-    window distinct count (the WAU curve, batch twin
-    ``agg_hll_sliding_distinct_users``). State is O(calendar x m)
-    rows: it grows with DAYS, never with key cardinality."""
-
-    def __init__(self, spark: SparkSession, path: str, p: int = 5,
-                 n_buckets: int = 2) -> None:
-        self.p = p
-        super().__init__(
-            spark, path, ["day", "hll_bucket"],
-            [F.max("register").cast("int").alias("register")],
-            n_buckets,
-            state_schema="day date, hll_bucket long, register int")
-
-
-def partial_daily_hll(batch_df: DataFrame, ts_col: str, key_col: str,
-                      p: int = 5) -> DataFrame:
-    """One micro-batch's per-day register partials (shared
-    (bucket, rho) arithmetic at precision ``p``)."""
-    from galaxy_spark.operators.sketch import hll_bucket_rho
-
-    bucket, rho = hll_bucket_rho(F.col(key_col), p=p)
-    return (batch_df
-            .select(F.to_date(F.date_trunc("day", ts_col)).alias("day"),
-                    bucket, rho)
-            .groupBy("day", "bucket")
-            .agg(F.max("rho").cast("int").alias("register"))
-            .select("day", F.col("bucket").alias("hll_bucket"),
-                    "register"))
-
-
-def start_streaming_sliding_wau(
-        stream: DataFrame, store: ParquetDailyHllStore,
-        checkpoint_dir: str, ts_col: str,
-        key_col: str) -> StreamingQuery:
-    """Maintain the per-day register store from one stream."""
-    return _start_store_stream(
-        stream, checkpoint_dir, (store,),
-        lambda b: [(store, partial_daily_hll(b, ts_col, key_col,
-                                             store.p))])
-
-
-def streaming_sliding_wau(store: ParquetDailyHllStore,
-                          window_days: int = 7,
-                          alpha: float = 0.697) -> DataFrame:
-    """The trailing-window estimates off the store — the SAME
-    merge + estimate code the batch query runs
-    (``operators/sketch.py:sliding_hll_estimates``), so over the
-    same rows streaming equals batch field-for-field. Late events
-    are absorbed exactly (a late row can only raise its day's MAX
-    registers, and every window containing that day re-merges from
-    state on the next read) — no watermark-drop tradeoff, which is
-    the operational argument for register state over windowed
-    COUNT(DISTINCT) state."""
-    from galaxy_spark.operators.sketch import sliding_hll_estimates
-
-    regs = store.state().select(
-        "day", F.col("hll_bucket").alias("bucket"), "register")
-    days = regs.select(F.col("day").alias("tday")).distinct()
-    return sliding_hll_estimates(regs, days, window_days, store.p,
-                                 alpha)
-
-
 # ------------------------------------------------------------------
 # Streaming incremental near-dup index (durable MinHash-LSH)
 # ------------------------------------------------------------------
@@ -1258,7 +850,7 @@ class ParquetLshStore(KeyedParquetStore):
 
     State rows are set MEMBERS — the fold is an idempotent MAX over
     a constant marker, so a replayed insert cannot change the index
-    (the HLL-register replay story, strictly stronger than the
+    (an idempotent fold, strictly stronger than the
     epoch-claim skip it also gets). Signature arithmetic is the
     batch tier's own ``minhash_band_buckets`` (operators/dedup.py),
     imported not copied, so streaming and batch can never drift.
@@ -1420,37 +1012,6 @@ def lsh_probe_pairs(batch_df: DataFrame, lsh_store: ParquetLshStore,
             .select("id_a", "id_b", "jaccard"))
 
 
-def start_streaming_near_dup_index(
-        stream: DataFrame, lsh_store: ParquetLshStore,
-        doc_store: ParquetDocStore, pair_store: ParquetPairStore,
-        checkpoint_dir: str, n: int = 5, n_hashes: int = 32,
-        bands: int = 8, threshold: float = 0.5,
-        text_col: str = "text",
-        id_col: str = "doc_id") -> StreamingQuery:
-    """Maintain the growing near-dup index from one document
-    stream: probe-then-insert per micro-batch. Pairs merge FIRST
-    (probe against pre-insert state — but see lsh_probe_pairs: the
-    union makes the probe indifferent to insert replay), then the
-    index and corpus inserts; all three merges share the epoch key,
-    so any crash window replays to exactly the same stores."""
-    def merges(batch_df: DataFrame):
-        # consumed three times (probe signatures, text attach,
-        # inserts) — materialize the micro-batch once
-        batch = batch_df.localCheckpoint()
-        yield pair_store, lsh_probe_pairs(
-            batch, lsh_store, doc_store, n, n_hashes, bands,
-            threshold, text_col, id_col)
-        yield lsh_store, partial_lsh_index(batch, n, n_hashes, bands,
-                                           text_col, id_col)
-        yield doc_store, batch.select(
-            F.col(id_col).cast("long").alias("id"),
-            F.col(text_col).alias("text"))
-
-    return _start_store_stream(stream, checkpoint_dir,
-                               (lsh_store, doc_store, pair_store),
-                               merges)
-
-
 def streaming_near_dup_pairs(pair_store: ParquetPairStore) -> DataFrame:
     """All near-dup pairs emitted so far, in the batch query's
     output shape (``dedup_minhash_lsh``: id_a < id_b, jaccard
@@ -1469,8 +1030,8 @@ class ParquetClusterStore(KeyedParquetStore):
     """Per-document cluster assignment: id -> label (the smallest
     reachable doc id at last touch). New pairs can only MERGE
     clusters, so labels are monotone non-increasing over time and
-    the MIN fold is both the correct accumulator and idempotent
-    (the HLL-register replay story). Rows exist only for ids that
+    the MIN fold is both the correct accumulator and idempotent,
+    so a replay cannot move it. Rows exist only for ids that
     ever appeared in a near-dup pair — singletons resolve to
     themselves at read time — so state is O(near-dup docs), not
     O(corpus)."""
@@ -1718,201 +1279,6 @@ def streaming_cluster_assignments(
 
 
 # ------------------------------------------------------------------
-# Streaming incremental EMBEDDING near-dup index (hyperplane LSH)
-# ------------------------------------------------------------------
-
-class ParquetEmbLshStore(KeyedParquetStore):
-    """Durable growing hyperplane-LSH index over embeddings: the
-    MinHash index's twin for the vector modality (r10 verdict #5).
-    Rows are (bucket, id) set members where ``bucket`` is the batch
-    tier's composite ``(table << n_planes) | signature`` key
-    (operators/similarity.py:lsh_near_dup_pairs), so the per-batch
-    probe is ONE equi-join on bucket. Laid out by ``bucket`` alone
-    — the probe knows only the incoming batch's (masked) signatures
-    and prunes its read to their buckets."""
-
-    def __init__(self, spark: SparkSession, path: str,
-                 n_buckets: int = 2) -> None:
-        super().__init__(
-            spark, path, ["bucket", "id"],
-            [F.max("seen").cast("int").alias("seen")],
-            n_buckets,
-            state_schema="bucket long, id long, seen int",
-            layout_cols=["bucket"])
-
-
-class ParquetVecStore(KeyedParquetStore):
-    """The verification corpus behind the embedding index:
-    id -> vector (ids unique in the pipeline contract, MAX is the
-    deterministic tie-break — arrays order lexicographically).
-    Exact-cosine verification reads ONLY candidate ids' buckets
-    (``state_for_keys``)."""
-
-    def __init__(self, spark: SparkSession, path: str,
-                 n_buckets: int = 2) -> None:
-        super().__init__(
-            spark, path, ["id"],
-            [F.max("vec").alias("vec")],
-            n_buckets,
-            state_schema="id long, vec array<float>")
-
-
-class ParquetCosinePairStore(KeyedParquetStore):
-    """Accumulated embedding near-dup emissions: (id_a, id_b) ->
-    exact cosine; MAX over identical recomputed values is
-    idempotent (the text tier's ParquetPairStore, for the cosine
-    column)."""
-
-    def __init__(self, spark: SparkSession, path: str,
-                 n_buckets: int = 2) -> None:
-        super().__init__(
-            spark, path, ["id_a", "id_b"],
-            [F.max("cos_sim").alias("cos_sim")],
-            n_buckets,
-            state_schema="id_a long, id_b long, cos_sim double")
-
-
-def _emb_sigs(batch_df: DataFrame, n_planes: int, dim: int,
-              n_tables: int, vec_col: str,
-              id_col: str) -> DataFrame:
-    """(id, vec, sigarr) for one batch — the batch tier's own
-    signature arithmetic (one Arrow GEMM pass), shared import."""
-    from galaxy_spark.operators.similarity import \
-        hyperplane_signatures
-    from galaxy_spark.operators.util import spread
-
-    return spread(batch_df.select(
-        F.col(id_col).cast("long").alias("id"),
-        F.col(vec_col).alias("vec"))) \
-        .withColumn("sigarr", hyperplane_signatures(
-            F.col("vec"), n_planes, dim, n_tables))
-
-
-def partial_emb_lsh_index(batch_df: DataFrame, n_planes: int = 8,
-                          dim: int = 64, n_tables: int = 8,
-                          vec_col: str = "embedding",
-                          id_col: str = "vec_id") -> DataFrame:
-    """One micro-batch's index rows: the UNPROBED composite buckets
-    (the batch tier's b-side expression, exactly)."""
-    sigs = _emb_sigs(batch_df, n_planes, dim, n_tables, vec_col,
-                     id_col)
-    return sigs.select(
-        "id",
-        F.explode(F.array(*[
-            F.col("sigarr")[t] + F.lit(t << n_planes)
-            for t in range(n_tables)])).alias("bucket"),
-        F.lit(1).alias("seen")).select("bucket", "id", "seen")
-
-
-def emb_lsh_probe_pairs(batch_df: DataFrame,
-                        emb_store: ParquetEmbLshStore,
-                        vec_store: ParquetVecStore,
-                        threshold: float = 0.4, n_planes: int = 8,
-                        dim: int = 64, n_tables: int = 8,
-                        n_probe_bits: int = 1,
-                        vec_col: str = "embedding",
-                        id_col: str = "vec_id") -> DataFrame:
-    """Embedding near-dup pairs for ONE incoming micro-batch
-    against all previously streamed vectors AND the batch itself —
-    the ``lsh_probe_pairs`` discipline on the vector modality:
-    multi-probe (XOR-mask) the INCOMING side only, equi-join on the
-    composite bucket against (index state UNION incoming unprobed
-    rows), normalize pair orientation, verify with the EXACT cosine
-    expression the batch tier emits (``_dot/(norm*norm)``, shared
-    import — bit-identical values), keep >= threshold.
-
-    XOR symmetry makes the probe arrival-order-insensitive
-    (sig_x ^ m == sig_y iff sig_y ^ m == sig_x), so the union of
-    per-batch emissions over a replayed corpus equals the batch
-    ``dedup_embedding_cosine_lsh`` pair set regardless of slicing —
-    and the state-union trick makes it insert-replay-insensitive,
-    like the text probe. Reads are layout-pruned on both stores."""
-    from galaxy_spark.operators.similarity import (_dot, _norm,
-                                                   probe_masks)
-
-    masks = probe_masks(n_planes, n_probe_bits)
-    sigs = _emb_sigs(batch_df, n_planes, dim, n_tables, vec_col,
-                     id_col).localCheckpoint(eager=False)
-    probe = sigs.select(
-        F.col("id").alias("id_a"),
-        F.explode(F.array(*[
-            F.col("sigarr")[t].bitwiseXOR(F.lit(m))
-            + F.lit(t << n_planes)
-            for t in range(n_tables) for m in masks]))
-        .alias("bucket")).localCheckpoint(eager=False)
-    unprobed = sigs.select(
-        "id",
-        F.explode(F.array(*[
-            F.col("sigarr")[t] + F.lit(t << n_planes)
-            for t in range(n_tables)])).alias("bucket"))
-    index = (emb_store.state_for_keys(probe.select("bucket"))
-             .select("bucket", "id")
-             .unionByName(unprobed.select("bucket", "id")))
-    cands = (probe.join(index, "bucket")
-             .filter(F.col("id_a") != F.col("id"))
-             .select(F.least("id_a", "id").alias("id_a"),
-                     F.greatest("id_a", "id").alias("id_b"))
-             .distinct()
-             .localCheckpoint(eager=False))
-    cand_ids = (cands.select(F.col("id_a").alias("id"))
-                .unionByName(cands.select(F.col("id_b").alias("id")))
-                .distinct()
-                .localCheckpoint(eager=False))
-    vecs = (vec_store.state_for_keys(cand_ids)
-            .unionByName(sigs.select("id", "vec"))
-            .join(cand_ids, "id", "left_semi")
-            .groupBy("id").agg(F.max("vec").alias("vec"))
-            .withColumn("nrm", _norm(F.col("vec"))))
-    va = vecs.select(F.col("id").alias("id_a"),
-                     F.col("vec").alias("va"),
-                     F.col("nrm").alias("na"))
-    vb = vecs.select(F.col("id").alias("id_b"),
-                     F.col("vec").alias("vb"),
-                     F.col("nrm").alias("nb"))
-    return (cands.join(va, "id_a").join(vb, "id_b")
-            .select("id_a", "id_b",
-                    (_dot(F.col("va"), F.col("vb"))
-                     / (F.col("na") * F.col("nb"))).alias("cos_sim"))
-            .filter(F.col("cos_sim") >= threshold))
-
-
-def start_streaming_emb_near_dup_index(
-        stream: DataFrame, emb_store: ParquetEmbLshStore,
-        vec_store: ParquetVecStore,
-        pair_store: ParquetCosinePairStore, checkpoint_dir: str,
-        threshold: float = 0.4, n_planes: int = 8, dim: int = 64,
-        n_tables: int = 8, n_probe_bits: int = 1,
-        vec_col: str = "embedding",
-        id_col: str = "vec_id") -> StreamingQuery:
-    """Probe-then-insert per micro-batch, embedding modality — same
-    commutation story as the text starter (the probe's state-union
-    makes all three same-epoch merges replay-order-free)."""
-    def merges(batch_df: DataFrame):
-        batch = batch_df.localCheckpoint()
-        yield pair_store, emb_lsh_probe_pairs(
-            batch, emb_store, vec_store, threshold, n_planes, dim,
-            n_tables, n_probe_bits, vec_col, id_col)
-        yield emb_store, partial_emb_lsh_index(
-            batch, n_planes, dim, n_tables, vec_col, id_col)
-        yield vec_store, batch.select(
-            F.col(id_col).cast("long").alias("id"),
-            F.col(vec_col).alias("vec"))
-
-    return _start_store_stream(stream, checkpoint_dir,
-                               (emb_store, vec_store, pair_store),
-                               merges)
-
-
-def streaming_emb_near_dup_pairs(
-        pair_store: ParquetCosinePairStore) -> DataFrame:
-    """All embedding near-dup pairs emitted so far, in the batch
-    query's output shape (``dedup_embedding_cosine_lsh``: id_a <
-    id_b, cos_sim rounded at 1e-4)."""
-    return pair_store.state().select(
-        "id_a", "id_b", F.round("cos_sim", 4).alias("cos_sim"))
-
-
-# ------------------------------------------------------------------
 # Streaming WINNOWING near-dup index (r12 verdict #3)
 # ------------------------------------------------------------------
 
@@ -1924,7 +1290,7 @@ class ParquetWinnowStore(KeyedParquetStore):
     ``dedup_winnowing_pairs``).
 
     State is ONE bounded array row per fingerprint under the min-k
-    truncation monoid (the KMV store's fold): members = the
+    truncation monoid (a k-minimum-values fold): members = the
     DF_CAP+1 smallest distinct doc ids ever seen for the fp.
     Truncation at cap+1 IS the merge-time DF-cap enforcement — the
     batch query drops fingerprints appearing in more than
@@ -2125,7 +1491,7 @@ class ParquetBasketStore(KeyedParquetStore):
     class) before probing. Two consumers read it:
 
     - the ``fold_finalize`` hook drops rows with t < current_wm
-      at every fold site. Unlike the user-day/session stores'
+      at every fold site. Unlike the event-index/user-seq stores'
       per-key folded watermark (their keys keep being touched;
       basket keys quiesce, so a per-key wm would never advance
       for exactly the rows that need evicting), the store-level
@@ -2223,7 +1589,7 @@ class ParquetCoocStore(KeyedParquetStore):
     computation's insert-insensitivity (deltas derive from
     PRE-insert basket state, and the basket merge runs LAST in the
     handler, so a crash-window replay recomputes byte-identical
-    deltas; the CMS/view-store story).
+    deltas).
 
     Under a capped basket store (r14) deltas can be NEGATIVE (a
     pair leaves an order's hash sample when a better-hashed item
@@ -2594,338 +1960,8 @@ def streaming_resource_allocation(cooc_store: ParquetCoocStore
 
 
 # ------------------------------------------------------------------
-# Streaming KMV (k-minimum-values) sketches on the durable store
+# Streaming full-text search index and events-analytics hubs
 # ------------------------------------------------------------------
-
-class ParquetKmvStore(KeyedParquetStore):
-    """Streaming KMV sketch per SET (side): the k smallest distinct
-    48-bit hashes as ONE bounded array row per side. Min-k
-    truncation is a true monoid — trunc_k(A ∪ B) =
-    trunc_k(trunc_k(A) ∪ trunc_k(B)) (dropping anything above the
-    k-th smallest can never evict a global top-k member) — and the
-    fold is IDEMPOTENT (set union), so like the HLL registers a
-    replayed partial cannot move the sketch even without the epoch
-    claim. This was the one mergeable sketch in the batch axis
-    (``agg_kmv_set_intersection``) without a streaming counterpart
-    (r9 verdict #4). State is O(sides × k) — fixed-size regardless
-    of key cardinality."""
-
-    def __init__(self, spark: SparkSession, path: str,
-                 k: int = 256, n_buckets: int = 2) -> None:
-        self.k = k
-        super().__init__(
-            spark, path, ["side"],
-            [F.slice(F.array_sort(F.array_distinct(F.flatten(
-                F.collect_list("hvs")))), 1, k).alias("hvs")],
-            n_buckets,
-            state_schema="side string, hvs array<bigint>")
-
-
-def partial_kmv(batch_df: DataFrame, side_col: str, key_col: str,
-                k: int = 256, n_splits: int = 32) -> DataFrame:
-    """One micro-batch's per-side min-k distinct hashes (the batch
-    query's exact md5-slice arithmetic, shared import), as a
-    two-level salted fold: level 1 groups by (side, hv mod
-    n_splits) — equal hashes land in the same split, so the
-    collect_set dedups globally — sorts each split's set across
-    n_splits-many tasks and truncates to k; level 2 merges the <=
-    n_splits bounded arrays per side under the same min-k
-    truncation monoid the store fold uses (trunc_k(A ∪ B) =
-    trunc_k(trunc_k(A) ∪ trunc_k(B)): a global top-k member is a
-    top-k member of its own split, so no level-1 truncation can
-    evict it). Replaces the row_number window partitioned by bare
-    ``side`` (r10 verdict #2), which funneled each side's whole
-    batch through ONE task's sort; now the widest single-task work
-    is one split's distinct hashes, ~1/n_splits of a side."""
-    from galaxy_spark.queries.indexing import _kmv_hv
-
-    return (batch_df
-            .select(F.col(side_col).alias("side"),
-                    _kmv_hv(F.col(key_col)).alias("hv"))
-            .groupBy("side", F.pmod("hv", F.lit(n_splits))
-                     .alias("__split"))
-            .agg(F.slice(F.array_sort(F.collect_set("hv")), 1, k)
-                 .alias("hvs"))
-            .groupBy("side")
-            .agg(F.slice(F.array_sort(F.array_distinct(F.flatten(
-                F.collect_list("hvs")))), 1, k).alias("hvs")))
-
-
-def start_streaming_kmv(stream: DataFrame, store: ParquetKmvStore,
-                        checkpoint_dir: str, side_col: str,
-                        key_col: str) -> StreamingQuery:
-    """Maintain per-side KMV sketches from one stream."""
-    return _start_store_stream(
-        stream, checkpoint_dir, (store,),
-        lambda b: [(store, partial_kmv(b, side_col, key_col,
-                                       store.k))])
-
-
-def streaming_kmv_sketch(store: ParquetKmvStore) -> DataFrame:
-    """The accumulated sketches as (side, hv) element rows — over
-    the same data this equals the batch tier's per-side min-k frame
-    ELEMENT-FOR-ELEMENT (pinned in tests/test_streaming.py)."""
-    return (store.state()
-            .select("side", F.explode("hvs").alias("hv")))
-
-
-def streaming_kmv_union_stats(store: ParquetKmvStore,
-                              side_a: str,
-                              side_b: str) -> DataFrame:
-    """The set-algebra instrument off two stored sketches: union
-    sketch = min-k of the two arrays' union, cnt/hk as its
-    size/max, j = union members present in BOTH sides, and the
-    directed one-side-only counts j_ab/j_ba — identical integers
-    to BOTH batch queries' (``agg_kmv_set_intersection``'s
-    (cnt, hk, j) and ``agg_kmv_set_difference``'s (j_ab, j_ba)),
-    from pure array ops over two bounded rows (no shuffle at
-    all)."""
-    k = store.k
-    empty = F.array().cast("array<bigint>")
-    sides = (store.state()
-             .filter(F.col("side").isin(side_a, side_b))
-             .groupBy()
-             .agg(F.coalesce(F.max(F.when(F.col("side") == side_a,
-                                          F.col("hvs"))), empty)
-                  .alias("a"),
-                  F.coalesce(F.max(F.when(F.col("side") == side_b,
-                                          F.col("hvs"))), empty)
-                  .alias("b")))
-    # a side with no stored sketch yet is the EMPTY set — without
-    # the coalesce, array_intersect(u, NULL) is NULL and j comes
-    # back NULL instead of 0 (r10 review)
-    u = F.slice(F.array_sort(F.array_distinct(
-        F.concat(F.col("a"), F.col("b")))), 1, k)
-    return (sides.select(F.col("a"), F.col("b"), u.alias("u"))
-            .select(
-                F.size("u").cast("long").alias("cnt"),
-                F.array_max("u").alias("hk"),
-                F.size(F.array_intersect(
-                    F.array_intersect("u", "a"), "b"))
-                .cast("long").alias("j"),
-                F.size(F.array_except(
-                    F.array_intersect("u", "a"), "b"))
-                .cast("long").alias("j_ab"),
-                F.size(F.array_except(
-                    F.array_intersect("u", "b"), "a"))
-                .cast("long").alias("j_ba")))
-
-
-class ParquetOlsStore(KeyedParquetStore):
-    """Streaming twin of the sufficient-statistics OLS queries
-    (``queries/ml.py``): per-key (n, Σx, Σy, Σx², Σxy, Σy²) under a
-    pure SUM monoid — n/Σx/Σy as exact int64, the product sums as
-    exact DECIMAL(38,0) (the batch fold's own pre-cast form, so the
-    one lossy double cast happens once, at solve time, on identical
-    integers). State is O(keys); a micro-batch partial is O(batch
-    keys); every statistic is order-free, so streaming == batch
-    integer-for-integer however the corpus is sliced. The natural
-    delta-tier resident: partials are tiny, folds are cheap, and a
-    model refit reads O(keys) rows."""
-
-    def __init__(self, spark: SparkSession, path: str,
-                 key_col: str = "gkey", key_type: str = "string",
-                 n_buckets: int = 2) -> None:
-        self.key_col = key_col
-        #: the key's DDL type: the empty-state schema must not lie
-        #: about it — a per-part fit (long keys, ml_ols_per_part's
-        #: shape) polled before the first commit would otherwise
-        #: hand downstream joins a string-typed key column that
-        #: silently changes type once state exists
-        self.key_type = key_type
-        dec = "decimal(38,0)"
-        super().__init__(
-            spark, path, [key_col],
-            [F.sum("n").cast("long").alias("n"),
-             F.sum("sx").cast("long").alias("sx"),
-             F.sum("sy").cast("long").alias("sy"),
-             F.sum("sxx").cast(dec).alias("sxx"),
-             F.sum("sxy").cast(dec).alias("sxy"),
-             F.sum("syy").cast(dec).alias("syy")],
-            n_buckets,
-            state_schema=f"{key_col} {key_type}, n long, sx long, "
-                         f"sy long, sxx {dec}, sxy {dec}, "
-                         f"syy {dec}")
-
-
-def start_streaming_ols(stream: DataFrame, store: ParquetOlsStore,
-                        checkpoint_dir: str, key) -> StreamingQuery:
-    """Maintain per-key OLS sufficient statistics from a
-    lineitem-shaped stream (the batch quantization + fold, imported
-    not copied: ``ols_partial_stats`` is the same function the
-    batch queries' ``_ols_stats`` wraps)."""
-    from galaxy_spark.queries.ml import ols_partial_stats
-
-    return _start_store_stream(
-        stream, checkpoint_dir, (store,),
-        lambda b: [(store, ols_partial_stats(b, key, store.key_col))])
-
-
-def streaming_ols_estimates(store: ParquetOlsStore) -> DataFrame:
-    """Solve the accumulated statistics: cast once to double
-    (``ols_cast_stats``) and run the SAME IEEE solve tree + 1e-6
-    rounding as the flagship batch fit (``ols_model_select``) —
-    over the same rows the result equals ``ml_ols_price_on_
-    quantity`` field-for-field (pinned in tests)."""
-    from galaxy_spark.queries.ml import (ols_cast_stats,
-                                         ols_model_select)
-
-    return ols_model_select(
-        ols_cast_stats(store.state(), store.key_col),
-        store.key_col)
-
-
-_SESSION_GAP_US = 30 * 60 * 1_000_000
-_IV_DDL = ("array<struct<s: bigint, e: bigint, n: bigint, "
-           "v: bigint>>")
-
-
-def _gap_merge_ivs(col: Column) -> Column:
-    """Gap-merge a (possibly unsorted, possibly overlapping)
-    interval array: sort by start, fold left extending the
-    accumulator's LAST interval whenever the next starts within
-    the session gap of its end (classic sorted interval merge —
-    only the last element ever grows, and starts are sorted, so a
-    non-last interval can never bridge a later one). This closure
-    is associative, commutative and split-insensitive: pre-merging
-    any subset first contracts exactly the intervals the full
-    merge would contract (extra intervals only ADD bridges, never
-    split one), and a contracted interval carries its events' span
-    (s = first event, e = last event), which is precisely what the
-    bridge test measures. n/v SUM through a merge — not idempotent,
-    so replay safety is the store's epoch claim (the snapshot
-    store's n_changes contract), while SPLIT-placement of events
-    across batches is free."""
-    def step(acc, x):
-        l = F.element_at(acc, -1)
-        merged = F.struct(
-            l["s"].alias("s"),
-            F.greatest(l["e"], x["e"]).alias("e"),
-            (l["n"] + x["n"]).alias("n"),
-            (l["v"] + x["v"]).alias("v"))
-        return (F.when(F.size(acc) == 0, F.array(x))
-                .when(x["s"] <= l["e"] + F.lit(_SESSION_GAP_US),
-                      F.concat(F.slice(acc, F.lit(1),
-                                       F.size(acc) - 1),
-                               F.array(merged)))
-                .otherwise(F.concat(acc, F.array(x))))
-
-    return F.aggregate(
-        F.array_sort(col),
-        F.expr(f"CAST(array() AS {_IV_DDL})"),
-        step)
-
-
-class ParquetSessionStore(KeyedParquetStore):
-    """Streaming sessionization on the durable store: per-user
-    gap-merged session intervals (start/end micros, event count,
-    cents-exact value sum). The fold is the gap-merge closure —
-    associative and split-insensitive — so a session SPANNING
-    micro-batches (even events arriving interleaved across
-    batches) reassembles exactly; no watermark is needed because
-    state is the merged intervals themselves, and late data simply
-    merges in. State is O(users x sessions-per-user); value folds
-    as exact int64 cents (events.value is 2-decimal by contract),
-    so the read-time ROUND(v/100, 2) equals the batch query's
-    ROUND(SUM(value), 2) deterministically — integer cents keep
-    the true sum >= 5e-3 away from every rounding boundary, where
-    float partial-sum order (~1e-13) cannot reach.
-
-    ``retention_days=H`` (r12 verdict #5, the event-index design):
-    CLOSED sessions are immutable once the stream has moved H days
-    past them, so each partial carries a watermark ``wm`` = (batch
-    max event micros) − H days folded under MAX, and the fold
-    drops intervals whose END sits below it — eviction on touch,
-    replay/arrival-order-proof. Intervals are evicted WHOLE (a
-    session reaching past the horizon keeps its pre-horizon events
-    — sessions never truncate mid-way), and the reader re-applies
-    the GLOBAL max watermark, so with events arriving less than H
-    days late the reader equals the batch query over the events of
-    retained sessions. Data arriving MORE than H days late lands
-    below the watermark and is dropped — the same contract a
-    Structured Streaming watermark gives, and the reason H is an
-    operator choice. Default None keeps exact-forever behavior and
-    the schema unchanged."""
-
-    def __init__(self, spark: SparkSession, path: str,
-                 n_buckets: int = 2,
-                 retention_days: int | None = None) -> None:
-        self.retention_days = _retention_days(retention_days)
-        merged = _gap_merge_ivs(F.flatten(F.collect_list("ivs")))
-        if retention_days is None:
-            aggs = [merged.alias("ivs")]
-            schema = f"user_id long, ivs {_IV_DDL}"
-        else:
-            aggs = [F.filter(merged,
-                             lambda iv: iv["e"] >= F.max("wm"))
-                    .alias("ivs"),
-                    F.max("wm").alias("wm")]
-            schema = f"user_id long, ivs {_IV_DDL}, wm long"
-        super().__init__(
-            spark, path, ["user_id"], aggs, n_buckets,
-            state_schema=schema)
-
-
-def partial_sessions(batch_df: DataFrame,
-                     retention_days: int | None = None) -> DataFrame:
-    """One micro-batch's per-user pre-merged intervals: each event
-    is the singleton interval (ts, ts, 1, cents), gap-merged within
-    the batch by the SAME closure the store folds with (pre-merge
-    is sound because the closure is associative). With retention,
-    each row also carries the batch watermark (max event micros −
-    H days, one 1-row agg broadcast into the partial)."""
-    iv = F.struct(
-        F.unix_micros("ts").alias("s"),
-        F.unix_micros("ts").alias("e"),
-        F.lit(1).cast("long").alias("n"),
-        F.round(F.col("value") * 100, 0).cast("long").alias("v"))
-    part = (batch_df.select("user_id", iv.alias("iv"))
-            .groupBy("user_id")
-            .agg(_gap_merge_ivs(F.collect_list("iv")).alias("ivs")))
-    return _with_batch_watermark(part, batch_df, retention_days)
-
-
-def start_streaming_sessions(stream: DataFrame,
-                             store: ParquetSessionStore,
-                             checkpoint_dir: str) -> StreamingQuery:
-    """Maintain gap-merged sessions from an events-shaped stream;
-    the partial shape follows the STORE's retention knob, so the
-    two cannot disagree."""
-    return _start_store_stream(
-        stream, checkpoint_dir, (store,),
-        lambda b: [(store, partial_sessions(b, store.retention_days))])
-
-
-def streaming_session_rows(store: ParquetSessionStore) -> DataFrame:
-    """The accumulated sessions in the batch query's output shape —
-    over the same events this equals ``events_sessionization``
-    field-for-field (session_id is the per-user ordinal by start,
-    exactly the batch query's cumulative new-session counter);
-    with a retention horizon, restricted to sessions ending at or
-    after the GLOBAL max watermark (per-key watermarks can lag for
-    users untouched since the horizon moved), ordinals re-ranked
-    over the retained set."""
-    from pyspark.sql import Window
-
-    st = store.state()
-    if store.retention_days is not None:
-        st = st.localCheckpoint(eager=False)   # read once, used 2x
-        gwm = st.agg(F.max("wm").alias("gwm"))
-        st = (st.crossJoin(F.broadcast(gwm))
-              .select("user_id",
-                      F.filter("ivs",
-                               lambda iv: iv["e"] >= F.col("gwm"))
-                      .alias("ivs"))
-              .filter(F.size("ivs") > 0))
-    iv = st.select("user_id", F.explode("ivs").alias("iv"))
-    w = Window.partitionBy("user_id").orderBy(F.col("iv.s"))
-    return iv.select(
-        "user_id",
-        F.row_number().over(w).cast("long").alias("session_id"),
-        F.col("iv.n").alias("n_events"),
-        F.round(F.col("iv.v") / 100, 2).alias("session_value"),
-        F.timestamp_micros(F.col("iv.s")).alias("session_start"))
-
 
 class ParquetPostingsStore(KeyedParquetStore):
     """Incrementally-maintained inverted index: (term, doc_id) ->
@@ -3082,207 +2118,6 @@ def streaming_bm25(postings: ParquetPostingsStore,
     return bm25_score_topk(tf, dl, st)
 
 
-class ParquetUserDayStore(KeyedParquetStore):
-    """Per-(user, day) event counts under SUM — the sufficient
-    statistics for any time-decayed engagement score. Decay weights
-    depend on the evolving anchor (newest day), so the SCORE is not
-    a monoid — but the (day -> counts) layer is, and the read-time
-    decay fold touches O(users x days) state rows, never raw
-    events (the sliding-sketch discipline, SCALE.md r9). Horizon
-    and half-life are read-time choices, not ingest-time ones.
-
-    ``retention_days=H`` (r12 verdict #5): the decay weight is
-    ZERO past the 40-day horizon, so days older than H >= 40
-    behind the newest day are mathematically dead state. The AGING
-    column here is part of the KEY, so eviction cannot live inside
-    the agg like the array stores' — instead each row carries a
-    MAX-folded watermark (batch max day − H) and the store's
-    ``fold_finalize`` hook drops rows whose day sits below their
-    folded watermark at every fold site (CoW rewrite, delta
-    pre-fold, compaction, read-side delta fold). Rows in touched
-    buckets evict as the watermark advances; untouched keys'
-    stale-watermark rows are the frozen-tail class the reader's
-    GLOBAL watermark filter handles (``retained_state``), exactly
-    like the event-index store. Default None = exact-forever."""
-
-    def __init__(self, spark: SparkSession, path: str,
-                 n_buckets: int = 4,
-                 retention_days: int | None = None) -> None:
-        self.retention_days = _retention_days(retention_days)
-        if retention_days is not None and retention_days < 40:
-            # r13 ADVICE: the decay reader's exactness claim vs the
-            # unbounded batch twin is CONDITIONAL on H covering the
-            # 40-day zero-weight horizon (events.py decay weights:
-            # shiftleft(1, 40 - age), zero past 40). Below it the
-            # store silently evicts rows still carrying nonzero
-            # weight — legal (answers become the batch query over
-            # the retained window, which is what the tests pin),
-            # but it must be a CHOICE, not a surprise.
-            import warnings
-            warnings.warn(
-                f"retention_days={retention_days} is below the "
-                "40-day decay-weight horizon: streaming_decay_"
-                "scores will answer over the retained window only, "
-                "not equal the unbounded events_decay_score",
-                stacklevel=2)
-        aggs = [F.sum("n").cast("long").alias("n"),
-                F.sum("np").cast("long").alias("np")]
-        schema = "user_id long, day date, n long, np long"
-        if retention_days is not None:
-            aggs.append(F.max("wm").alias("wm"))
-            schema += ", wm date"
-        super().__init__(
-            spark, path, ["user_id", "day"], aggs, n_buckets,
-            state_schema=schema)
-        if retention_days is not None:
-            self.fold_finalize = \
-                lambda df: df.filter(F.col("day") >= F.col("wm"))
-
-    def retained_state(self) -> DataFrame:
-        """State rows restricted to the GLOBAL retention window
-        (max folded watermark); plain ``state()`` with no
-        retention configured."""
-        st = self.state()
-        if self.retention_days is None:
-            return st
-        st = st.localCheckpoint(eager=False)   # read once, used 2x
-        gwm = st.agg(F.max("wm").alias("gwm"))
-        return (st.crossJoin(F.broadcast(gwm))
-                .filter(F.col("day") >= F.col("gwm"))
-                .select("user_id", "day", "n", "np"))
-
-
-def partial_user_days(batch_df: DataFrame,
-                      retention_days: int | None = None) -> DataFrame:
-    """One micro-batch's per-(user, day) event/purchase counts;
-    with retention, each row also carries the batch watermark
-    (max event day − H days, one 1-row agg broadcast)."""
-    part = (batch_df
-            .groupBy("user_id", F.to_date("ts").alias("day"))
-            .agg(F.count("*").cast("long").alias("n"),
-                 F.sum(F.when(F.col("event_type") == "purchase",
-                              F.lit(1)).otherwise(F.lit(0)))
-                 .cast("long").alias("np")))
-    if retention_days is None:
-        return part
-    wm = (batch_df
-          .agg(F.date_sub(F.max(F.to_date("ts")),
-                          int(retention_days)).alias("wm")))
-    return part.crossJoin(F.broadcast(wm))
-
-
-def start_streaming_user_days(stream: DataFrame,
-                              store: ParquetUserDayStore,
-                              checkpoint_dir: str) -> StreamingQuery:
-    """Maintain per-(user, day) counts from an events stream; the
-    partial shape follows the STORE's retention knob."""
-    return _start_store_stream(
-        stream, checkpoint_dir, (store,),
-        lambda b: [(store, partial_user_days(b, store.retention_days))])
-
-
-def streaming_decay_scores(store: ParquetUserDayStore) -> DataFrame:
-    """Time-decayed engagement scores off the accumulated per-day
-    state: the batch query's exact integer arithmetic (anchor =
-    in-plan 1-row broadcast of the newest stored day; weight =
-    shiftleft(1, 40 - age), every score an exact BIGINT), so over
-    the same events this equals ``events_decay_score``
-    field-for-field — while reading O(users x days) rows however
-    long the stream has run. With a retention horizon the read is
-    the global-watermark-restricted state; at H >= the 40-day
-    weight horizon the only difference from the unbounded twin is
-    users whose entire activity aged out (they carried
-    all-zero scores)."""
-    from galaxy_spark.queries.events import decay_scores_from_aged
-
-    st = store.retained_state().localCheckpoint(eager=False)
-    anchor = st.agg(F.max("day").alias("d0"))        # used twice
-    aged = (st.crossJoin(F.broadcast(anchor))
-            .select("user_id",
-                    F.datediff(F.col("d0"), F.col("day"))
-                    .alias("age"), "n", "np"))
-    return decay_scores_from_aged(aged)
-
-
-class ParquetOrderFactStore(KeyedParquetStore):
-    """Per-customer order facts — (o_orderkey, order day) structs
-    under sorted-distinct set union (idempotent: the order key
-    makes each fact self-identifying, so replay and re-delivery
-    cannot move it). The cadence twin's honest minimal state:
-    inter-order gaps need the customer's full order TIMELINE, not
-    a bounded fold — the purchase-store class, O(orders) rows
-    laid out by customer. Trade vs ``ParquetCustomerOrderStore``
-    (the RFM rollup): that one is O(customers) but SUM-partial
-    (claim-protected only); this one is bigger but idempotent and
-    serves timeline readers."""
-
-    def __init__(self, spark: SparkSession, path: str,
-                 n_buckets: int = 2) -> None:
-        super().__init__(
-            spark, path, ["o_custkey"],
-            [F.array_sort(F.array_distinct(F.flatten(
-                F.collect_list("os")))).alias("os")],
-            n_buckets,
-            state_schema=("o_custkey long, os array<struct<"
-                          "k: long, day: date>>"))
-
-
-def partial_order_facts(batch_df: DataFrame) -> DataFrame:
-    """One micro-batch's per-customer order-fact sets."""
-    return (batch_df
-            .select("o_custkey", F.struct(
-                F.col("o_orderkey").cast("long").alias("k"),
-                F.to_date("o_orderdate").alias("day")).alias("o"))
-            .groupBy("o_custkey")
-            .agg(F.collect_set("o").alias("os")))
-
-
-def start_streaming_order_facts(
-        stream: DataFrame, store: ParquetOrderFactStore,
-        checkpoint_dir: str) -> StreamingQuery:
-    """Maintain the per-customer order timeline from an
-    orders-shaped stream."""
-    return _start_store_stream(
-        stream, checkpoint_dir, (store,),
-        lambda b: [(store, partial_order_facts(b))])
-
-
-def streaming_order_cadence(store: ParquetOrderFactStore,
-                            customer: DataFrame) -> DataFrame:
-    """Segment-level order cadence off the accumulated per-customer
-    timelines: explode the fact sets back to (custkey, day, key)
-    rows — already collapsed to distinct orders — then the batch
-    query's own tail (``queries.relational.cadence_from_order_rows``,
-    imported). Over the same orders this equals
-    ``customer_order_cadence`` field-for-field; ``customer`` is the
-    dimension frame (read it from the warehouse dim, it is not
-    stream state)."""
-    from galaxy_spark.queries.relational import \
-        cadence_from_order_rows
-
-    rows = (store.state()
-            .select("o_custkey", F.explode("os").alias("o"))
-            .select("o_custkey", F.col("o.day").alias("day"),
-                    F.col("o.k").alias("o_orderkey")))
-    return cadence_from_order_rows(rows, customer)
-
-
-def streaming_stickiness(store: ParquetUserDayStore) -> DataFrame:
-    """DAU/WAU stickiness off the accumulated per-(user, day)
-    state — the user-day store's THIRD reader (decay scores,
-    retention-bounded decay, now stickiness; one write path, many
-    readers): state rows ARE the distinct (user, day) frame the
-    batch query collapses the event log to, so the reader is the
-    batch query's own imported tail over O(users x days) state
-    rows, never raw events. Equals ``events_stickiness_dau_wau``
-    field-for-field (restricted to the retained window when the
-    store has a retention horizon)."""
-    from galaxy_spark.queries.events import stickiness_from_user_days
-
-    return stickiness_from_user_days(
-        store.retained_state().select("user_id", "day"))
-
-
 class ParquetEventIndexStore(KeyedParquetStore):
     """Per-(user, event_type) sorted distinct event-time index under
     set-union — a true idempotent monoid, so arrival order and
@@ -3292,7 +2127,7 @@ class ParquetEventIndexStore(KeyedParquetStore):
     events arrive out of order — a late earlier view can re-gate
     which clicks qualify, so any click may become the answer later —
     and the minimal exact state is the event-time index itself
-    (O(user activity), the session store's class, cheap next to the
+    (O(user activity), cheap next to the
     raw log since it collapses duplicates and carries no payload).
 
     ``retention_days=H`` (r11 verdict #3) bounds that state: each
@@ -3367,18 +2202,6 @@ def partial_event_index(batch_df: DataFrame,
             .groupBy("user_id", "event_type")
             .agg(F.collect_set("t").alias("tss")))
     return _with_batch_watermark(part, batch_df, retention_days)
-
-
-def start_streaming_event_index(stream: DataFrame,
-                                store: ParquetEventIndexStore,
-                                checkpoint_dir: str) -> StreamingQuery:
-    """Maintain the per-(user, type) event-time index; the partial
-    shape follows the STORE's retention knob, so the two cannot
-    disagree."""
-    return _start_store_stream(
-        stream, checkpoint_dir, (store,),
-        lambda b: [(store, partial_event_index(b,
-                                               store.retention_days))])
 
 
 def streaming_funnel(store: ParquetEventIndexStore) -> DataFrame:
@@ -3541,66 +2364,6 @@ def streaming_attribution_last_touch(
                  F.round(F.sum(F.when(hit, 0)
                                .otherwise(F.col("cents"))) / 100.0,
                          2).alias("organic_revenue")))
-
-
-class ParquetCustomerOrderStore(KeyedParquetStore):
-    """Per-customer order rollup — (last order day, order count,
-    lifetime cents) under MAX/SUM/SUM: recency, frequency and
-    monetary are ALL monoid folds, so the whole RFM input is
-    O(customers) state rows (r13 verdict #7, completing the event
-    family's streaming coverage). SUM partials rely on the store's
-    per-(bucket, epoch) claim discipline for replay safety, the
-    rollup/OLS class — orders are facts delivered once by the
-    checkpointed source."""
-
-    def __init__(self, spark: SparkSession, path: str,
-                 n_buckets: int = 2) -> None:
-        super().__init__(
-            spark, path, ["o_custkey"],
-            [F.max("last_day").alias("last_day"),
-             F.sum("f").cast("long").alias("f"),
-             F.sum("m_cents").cast("long").alias("m_cents")],
-            n_buckets,
-            state_schema=("o_custkey long, last_day date, f long, "
-                          "m_cents long"))
-
-
-def partial_customer_orders(batch_df: DataFrame) -> DataFrame:
-    """One micro-batch's per-customer rollup partial (integer
-    cents: the batch query's own arithmetic)."""
-    return (batch_df
-            .groupBy("o_custkey")
-            .agg(F.max(F.to_date("o_orderdate")).alias("last_day"),
-                 F.count("*").cast("long").alias("f"),
-                 F.sum(F.round(F.col("o_totalprice") * 100, 0)
-                       .cast("long")).cast("long")
-                 .alias("m_cents")))
-
-
-def start_streaming_customer_orders(
-        stream: DataFrame, store: ParquetCustomerOrderStore,
-        checkpoint_dir: str) -> StreamingQuery:
-    """Maintain the per-customer order rollup from an
-    orders-shaped stream."""
-    return _start_store_stream(
-        stream, checkpoint_dir, (store,),
-        lambda b: [(store, partial_customer_orders(b))])
-
-
-def streaming_rfm_segments(store: ParquetCustomerOrderStore
-                           ) -> DataFrame:
-    """RFM quartile segmentation off the accumulated per-customer
-    rollup — the batch query's own scoring tail
-    (``queries.relational.rfm_segments_from_rollup``, imported),
-    so over the same orders this equals ``customer_rfm_segments``
-    field-for-field while ranking O(customers) state rows, never
-    raw orders."""
-    from galaxy_spark.queries.relational import \
-        rfm_segments_from_rollup
-
-    return rfm_segments_from_rollup(
-        store.state().select("o_custkey", "last_day", "f",
-                             "m_cents"))
 
 
 def streaming_time_to_convert(

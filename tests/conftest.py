@@ -33,26 +33,16 @@ _SLOW_BASES = {
     "test_streaming_search_index_matches_batch",
     "test_streaming_clustering_matches_batch",
     "test_basket_retention_bounds_state",
-    "test_streaming_ols_matches_batch_fit",
-    "test_streaming_emb_near_dup_index_matches_batch",
     "test_cluster_redirect_replay_regenerates_lost_edges",
-    "test_streaming_near_dup_index_matches_batch",
-    "test_streaming_sessions_match_batch",
     "test_streaming_item_cf_basket_cap_matches_capped_batch",
     "test_delta_threshold_flip_both_directions",
     "test_streaming_funnel_matches_batch",
-    "test_fold_finalize_empty_bucket_slice_still_claims_epoch",
     "test_streaming_attribution_matches_batch",
     "test_delta_tier_state_matches_cow",
     "test_delta_store_rebucket_carries_mode_and_state",
-    "test_user_day_store_retention_bounds_state",
-    "test_streaming_near_dup_index_restart_resumes",
-    "test_streaming_decay_scores_match_batch",
-    "test_streaming_incremental_view_on_durable_store",
     "test_manifest_strategy_state_matches_posix",
     "test_streaming_path_trigrams_matches_batch",
     "test_delta_review_fixes",
-    "test_session_store_retention_bounds_state",
     # tests/test_control_api.py — full task lifecycles
     "test_near_dup_index_task_lifecycle",
     "test_item_cf_task_lifecycle",
@@ -61,7 +51,6 @@ _SLOW_BASES = {
     "test_event_index_task_lifecycle",
     # tests/test_properties.py — exhaustive schedule batteries
     "test_delta_tier_any_schedule_matches_cow",
-    "test_delta_rule_invariant_under_any_batch_split",
     # e2e binlog chains
     "test_reference_shape_pipeline_end_to_end",
     "test_mariadb_reference_shape_chain",

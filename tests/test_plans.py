@@ -602,6 +602,16 @@ def test_hyperball_register_max_map_side(q):
     assert broadcast_join_count(df) >= 2
 
 
+def test_hyperball_exact_ball_count_is_hash_aggregated(q):
+    """HyperBall's exact ball-2 size is a COUNT(DISTINCT w) per node
+    planned as hash aggregation over (node, w), whose state spills.
+    A per-node collect_set holds one set per node in an aggregation
+    buffer that cannot spill: up to |V| entries at a hub."""
+    from galaxy_spark.plans import physical_plan
+
+    assert "collect_set" not in physical_plan(q("graph_hyperball_ball2"))
+
+
 def test_kmv_sketch_uses_top_k_not_global_sort(q):
     """The k-minimum-values sketch must execute as
     TakeOrderedAndProject (per-partition top-k partials merged on
@@ -1226,6 +1236,24 @@ def test_graph_state_broadcasts_are_size_gated(q, monkeypatch):
         "budget=0 must drop every gated hint"
     assert "SortMergeJoin" in p or "ShuffledHashJoin" in p, \
         "the degraded plan must fall back to a shuffle join"
+
+
+def test_degree_orientation_broadcast_is_size_gated(spark, monkeypatch):
+    """``degree_orient`` (the orientation ``triangle_count_oriented``
+    runs) size-derives its degree-join broadcast by default, like
+    ``connected_components``: with a budget of 0 rows its plan has
+    no broadcast join, and the triangle count is unchanged."""
+    from galaxy_spark.operators.graph import (degree_orient,
+                                              triangle_count_oriented)
+    from galaxy_spark.plans import physical_plan
+
+    monkeypatch.setenv("GALAXY_SPARK_BCAST_MAX_ROWS", "0")
+    edges = spark.createDataFrame([(1, 2), (2, 3), (1, 3), (3, 4)],
+                                  "src long, dst long")
+    p = physical_plan(degree_orient(edges))
+    assert "BroadcastHashJoin" not in p, \
+        "budget=0 must drop the degree-join hint"
+    assert triangle_count_oriented(edges).collect()[0].n_triangles == 1
 
 
 def test_connected_components_gate_preserves_results(spark, monkeypatch):

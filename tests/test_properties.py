@@ -89,67 +89,6 @@ def test_rolling_fingerprint_matches_python_reference(spark, text):
     assert got == ref
 
 
-@given(
-    st.lists(st.tuples(st.integers(0, 3),                  # pk
-                       st.sampled_from(["insert", "update", "delete"]),
-                       st.integers(0, 10000)),             # cents value
-             min_size=1, max_size=24),
-    st.integers(0, 2 ** 20),                               # split seed
-)
-@settings(max_examples=8, deadline=None)  # several Spark jobs each
-def test_delta_rule_invariant_under_any_batch_split(spark, changes, seed):
-    """The streaming view's correctness rests on an algebraic
-    invariant: for ANY changelog and ANY partition of it into
-    pos-ordered micro-batches, folding partial_view_deltas batch by
-    batch (against the evolving latest-wins snapshot) lands on
-    exactly the latest-wins recompute. Hypothesis drives arbitrary
-    key/action/value sequences and arbitrary batch boundaries —
-    including immediate deletes, delete-then-reinsert, single-batch
-    and one-row-per-batch splits."""
-    import random
-
-    from galaxy_spark.streaming.state_store import partial_snapshot
-    from galaxy_spark.streaming.state_store import partial_view_deltas
-
-    rows = [("d", "t", act, pk, cents / 100.0, pos)
-            for pos, (pk, act, cents) in enumerate(changes)]
-    schema = ("database string, table string, action string, "
-              "pk long, v double, pos long")
-
-    # random pos-ordered split into 1..4 batches
-    rng = random.Random(seed)
-    n_cuts = rng.randint(0, min(3, len(rows) - 1))
-    cuts = sorted(rng.sample(range(1, len(rows)), n_cuts)) if n_cuts else []
-    bounds = [0] + cuts + [len(rows)]
-    batches = [rows[a:b] for a, b in zip(bounds, bounds[1:])]
-
-    view: dict = {}
-    snap: dict = {}  # pk -> (pos, action, value): latest-wins twin
-    for batch in batches:
-        bdf = spark.createDataFrame(batch, schema)
-        if snap:
-            snap_df = spark.createDataFrame(
-                [("d", "t", pk, a, v, p) for pk, (p, a, v) in snap.items()],
-                "database string, table string, pk long, "
-                "last_action string, last_value double, last_pos long")
-        else:
-            snap_df = spark.createDataFrame([], "x int").limit(0)
-        for r in partial_view_deltas(bdf, snap_df).collect():
-            key = (r.database, r["table"])
-            dv, dn = view.get(key, (0, 0))
-            view[key] = (dv + r.dv, dn + r.dn)
-        for r in partial_snapshot(bdf).collect():
-            cur = snap.get(r.pk)
-            if cur is None or r.last_pos > cur[0]:
-                snap[r.pk] = (r.last_pos, r.last_action, r.last_value)
-
-    want_dv = sum(round(v * 100) for (p, a, v) in snap.values()
-                  if a != "delete")
-    want_dn = sum(1 for (p, a, v) in snap.values() if a != "delete")
-    got_dv, got_dn = view.get(("d", "t"), (0, 0))
-    assert (got_dv, got_dn) == (want_dv, want_dn)
-
-
 @given(st.lists(st.tuples(st.integers(1, 60), st.integers(1, 40)),
                 min_size=1, max_size=12),
        st.lists(st.tuples(st.integers(1, 60), st.integers(1, 40)),
@@ -332,75 +271,6 @@ def test_mariadb_gtidset_merge_covers_both_and_monotone(a_gtids,
         bm = {p.rsplit("-", 1)[0].split("-")[0]: p.rsplit("-", 1)[1]
               for p in str(b).split(",")}
         assert am == bm
-
-
-# ------------------------------------------------------------------
-# r11: gap-merge closure (streaming sessionization) properties
-# ------------------------------------------------------------------
-
-_GAP_US = 30 * 60 * 1_000_000
-
-
-def _py_gap_merge(events):
-    """Pure-Python reference: sessionize (ts_us, cents) tuples by
-    the 30-min gap, returning (s, e, n, v) intervals."""
-    out = []
-    for ts, cents in sorted(events):
-        if out and ts <= out[-1][1] + _GAP_US:
-            s, e, n, v = out[-1]
-            out[-1] = (s, max(e, ts), n + 1, v + cents)
-        else:
-            out.append((ts, ts, 1, cents))
-    return out
-
-
-@given(
-    st.lists(st.tuples(st.integers(0, 2),                 # user key
-                       st.integers(0, 7),                 # half-gaps
-                       st.integers(0, 3),                 # jitter us
-                       st.integers(0, 9999)),             # cents
-             min_size=1, max_size=24),
-    st.integers(0, 2 ** 20),                              # split seed
-)
-@settings(max_examples=8, deadline=None)  # several Spark jobs each
-def test_gap_merge_closure_split_invariant(spark, raw, seed):
-    """The session store's fold is the gap-merge closure, which
-    must be (a) equal to the pure-Python sessionizer and (b)
-    SPLIT-INSENSITIVE: pre-merging arbitrary batch subsets first,
-    then folding the parts (exactly the store's merge shape), lands
-    on the same intervals. Timestamps are built from half-gap
-    multiples plus microsecond jitter so the exact-30-minute
-    boundary (merge on <=, batch's is_new on >) is hit often."""
-    import random
-
-    from pyspark.sql import functions as F
-
-    from galaxy_spark.streaming.state_store import _gap_merge_ivs
-
-    events = [(u, h * (_GAP_US // 2) + j, c) for u, h, j, c in raw]
-    rng = random.Random(seed)
-    parts = [rng.randint(0, 2) for _ in events]
-
-    rows = [(u, p, ts, ts, 1, c)
-            for (u, ts, c), p in zip(events, parts)]
-    df = spark.createDataFrame(
-        rows, "u long, p long, s long, e long, n long, v long")
-    iv = F.struct(F.col("s").alias("s"), F.col("e").alias("e"),
-                  F.col("n").alias("n"), F.col("v").alias("v"))
-    # split path: pre-merge per (u, part), then fold parts per u —
-    # the store's exact two-level shape
-    split = (df.select("u", "p", iv.alias("iv"))
-             .groupBy("u", "p")
-             .agg(_gap_merge_ivs(F.collect_list("iv")).alias("ivs"))
-             .groupBy("u")
-             .agg(_gap_merge_ivs(F.flatten(F.collect_list("ivs")))
-                  .alias("ivs")))
-    got = {r.u: [tuple(x) for x in r.ivs] for r in split.collect()}
-    want = {}
-    for u, ts, c in events:
-        want.setdefault(u, []).append((ts, c))
-    want = {u: _py_gap_merge(evs) for u, evs in want.items()}
-    assert got == want
 
 
 @given(

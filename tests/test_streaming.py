@@ -1,6 +1,7 @@
 """Streaming assembly tests: file-source -> envelope -> filters ->
 projections -> memory sink, task lifecycle (stop/recover_v1/
-recover_v2/update_filters/boot recovery), windows + watermark dedup.
+recover_v2/update_filters/boot recovery), and the keyed parquet
+store behind the stateful task kinds.
 
 File sources + ``processAllAvailable()`` drive deterministic
 micro-batches without external brokers (the Kafka path differs only
@@ -19,7 +20,6 @@ from pyspark.sql import functions as F
 from galaxy_spark.cdc.envelope import EVENT_SOURCE_COLUMNS, envelope_from_events
 from galaxy_spark.control.metrics import MetricsListener
 from galaxy_spark.control.tasks import TaskManager, TaskSpec
-from galaxy_spark.streaming import windows as W
 from galaxy_spark.streaming.pipeline import (
     SinkConfig,
     ddl_apply_batch,
@@ -152,50 +152,6 @@ def test_update_filters_restarts_with_new_predicate(spark, events_dir, tmp_path)
     mgr.stop_task("t_upd")
 
 
-def test_streaming_tumbling_window_matches_batch(spark, events_dir):
-    stream = _stream_events(spark, events_dir)
-    agg = W.tumbling(stream, "ts", "1 hour", "event_type", watermark="1 hour")
-    q = (agg.writeStream.outputMode("complete").format("memory")
-         .queryName("win_out").start())
-    q.processAllAvailable()
-    q.stop()
-    got = spark.sql(
-        "SELECT window.start AS ws, event_type, n_events FROM win_out")
-    exp = (load_table(spark, SF, "events")
-           .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-           .agg(F.count("*").alias("n_events"))
-           .select(F.col("w.start").alias("ws"), "event_type", "n_events"))
-    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, exp.collect()))
-
-
-def test_streaming_session_window_runs(spark, events_dir):
-    stream = _stream_events(spark, events_dir)
-    agg = W.session(stream, "ts", "30 minutes", "user_id", watermark="1 hour")
-    q = (agg.writeStream.outputMode("complete").format("memory")
-         .queryName("sess_out").start())
-    q.processAllAvailable()
-    q.stop()
-    got = spark.sql("SELECT user_id, n_events FROM sess_out")
-    # session count must match the batch gaps-and-islands twin
-    from galaxy_spark.registry import all_queries
-    exp_sessions = all_queries()["events_sessionization"](spark, SF).count()
-    assert got.count() == exp_sessions
-
-
-def test_streaming_dedup_within_watermark(spark, tmp_path):
-    src_dir = str(tmp_path / "dup_src")
-    ev = load_table(spark, SF, "events").limit(200)
-    dup = ev.unionAll(ev)  # every event twice
-    dup.write.mode("overwrite").parquet(src_dir)
-    stream = spark.readStream.schema(dup.schema).parquet(src_dir)
-    deduped = W.dedup_within_watermark(stream, ["event_id"], "ts", "1 hour")
-    q = (deduped.writeStream.outputMode("append").format("memory")
-         .queryName("dedup_out").start())
-    q.processAllAvailable()
-    q.stop()
-    assert spark.sql("SELECT count(*) c FROM dedup_out").collect()[0]["c"] == 200
-
-
 def test_ddl_foreach_batch_applies_to_registry(spark):
     from galaxy_spark.cdc.schema_registry import ColumnDef, SchemaRegistry
     reg = SchemaRegistry()
@@ -246,31 +202,6 @@ def test_sink_mux_unimplemented_kinds_raise(spark):
         SinkConfig("es").apply(None, "x")
     with pytest.raises(NotImplementedError):
         SinkConfig("mongodb").apply(None, "x")
-
-
-def test_stateful_running_totals(spark, events_dir):
-    """applyInPandasWithState cumulative per-(db,table) counts must
-    equal the batch groupBy at end of stream."""
-    from galaxy_spark.streaming.stateful import running_change_totals
-
-    env = envelope_from_events(_stream_events(spark, events_dir))
-    q = (running_change_totals(env)
-         .writeStream.outputMode("update").format("memory")
-         .queryName("state_out").start())
-    q.processAllAvailable()
-    q.stop()
-    # update mode emits one row per key per batch; last row per key wins
-    got = spark.sql("""
-        SELECT database, table, n_changes, last_pos FROM (
-            SELECT *, ROW_NUMBER() OVER (PARTITION BY database, table
-                                         ORDER BY n_changes DESC) rk
-            FROM state_out) WHERE rk = 1
-    """)
-    exp = (envelope_from_events(load_table(spark, SF, "events"))
-           .groupBy("database", "table")
-           .agg(F.count("*").alias("n_changes"),
-                F.max("event_header.log_pos").alias("last_pos")))
-    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, exp.collect()))
 
 
 def test_stream_stream_join_within_interval(spark, events_dir, tmp_path):
@@ -480,41 +411,6 @@ def test_live_task_survives_filter_identity_update(spark, tmp_path):
     mgr.stop_task("t_live2")
 
 
-def test_incremental_dedup_suppresses_cross_batch_duplicates(spark, tmp_path):
-    """Streaming exact dedup must remember history ACROSS
-    micro-batches: batch 2 re-sends half of batch 1's documents plus
-    new ones; only the new ones may come out."""
-    src_dir = tmp_path / "docs_src"
-    src_dir.mkdir()
-    docs = load_table(spark, SF, "documents").limit(60).cache()
-    b1 = docs.filter("doc_id < 40")
-    b1.write.parquet(str(src_dir / "b1"))
-
-    stream = spark.readStream.schema(docs.schema).parquet(
-        str(src_dir) + "/*")
-    out = W.incremental_exact_dedup(stream)
-    q = (out.writeStream.outputMode("append").format("memory")
-         .queryName("inc_dedup").start())
-    try:
-        q.processAllAvailable()
-        n1 = spark.sql("SELECT count(DISTINCT digest) c FROM inc_dedup") \
-            .collect()[0]["c"]
-        # batch 2: doc_ids 20-59 — 20 repeats of batch 1 + 20 new
-        docs.filter("doc_id >= 20").write.parquet(str(src_dir / "b2"))
-        q.processAllAvailable()
-        rows = spark.sql("SELECT digest, count(*) n FROM inc_dedup "
-                         "GROUP BY digest").collect()
-    finally:
-        q.stop()
-    # every digest exactly once, even though 20 docs were re-sent
-    assert all(r.n == 1 for r in rows)
-    exact = b1.unionAll(docs.filter("doc_id >= 20")) \
-        .selectExpr("sha2(cast(text AS string), 256) d").distinct().count()
-    assert len(rows) == exact
-    assert n1 <= len(rows)
-    docs.unpersist()
-
-
 def test_stream_static_bloom_gate_matches_batch(spark, tmp_path):
     """Stream-static join: a document stream probes the STATIC
     Bloom position set built from the reference sources — the
@@ -696,74 +592,6 @@ def test_parquet_rollup_store_matches_batch(spark, events_dir, tmp_path):
     assert store.snapshot() == exp
 
 
-def test_watermarked_dedup_state_bounded_vs_unbounded(spark, tmp_path):
-    """Certify the state-eviction behavior the two streaming dedup
-    tiers advertise: under an advancing watermark,
-    dropDuplicatesWithinWatermark EVICTS expired keys (state stays
-    bounded at ~the lateness horizon; a duplicate arriving after
-    eviction re-emits — the documented at-least-once-outside-horizon
-    contract, the reference's own guarantee level), while the
-    unbounded incremental_exact_dedup twin retains EVERY key ever
-    seen. Pinned on the state-operator metrics Spark reports per
-    batch (numRowsTotal) plus the semantic re-emission."""
-    import datetime as dt
-
-    src_dir = str(tmp_path / "dd_src")
-    os.makedirs(src_dir)
-    schema = "event_id long, ts timestamp, text string"
-    t0 = dt.datetime(2024, 1, 1, 10, 0, 0)
-
-    def write_batch(name, rows):
-        spark.createDataFrame(rows, schema).coalesce(1) \
-            .write.mode("overwrite").parquet(f"{src_dir}/{name}")
-
-    def stream():
-        return (spark.readStream.schema(schema)
-                .option("maxFilesPerTrigger", "1")
-                .parquet(f"{src_dir}/*"))
-
-    def rows_at(hours, lo, hi):
-        t = t0 + dt.timedelta(hours=hours)
-        return [(k, t, f"doc-{k}") for k in range(lo, hi)]
-
-    # four time-ordered files; maxFilesPerTrigger=1 => one batch each
-    write_batch("b0", rows_at(0, 0, 100))
-    write_batch("b1", rows_at(2, 100, 200) + [(0, t0, "doc-0")])
-    write_batch("b2", rows_at(4, 200, 300))
-    write_batch("b3", [(0, t0 + dt.timedelta(hours=4, minutes=30),
-                        "doc-0")])
-
-    bounded = W.dedup_within_watermark(stream(), ["event_id"], "ts",
-                                       "1 hour")
-    qb = (bounded.writeStream.outputMode("append").format("memory")
-          .queryName("dd_bounded")
-          .option("checkpointLocation", str(tmp_path / "ck_b")).start())
-    qb.processAllAvailable()
-    bounded_state = qb.lastProgress["stateOperators"][0]["numRowsTotal"]
-    qb.stop()
-
-    unbounded = W.incremental_exact_dedup(stream(), "text", "event_id")
-    qu = (unbounded.writeStream.outputMode("append").format("memory")
-          .queryName("dd_unbounded")
-          .option("checkpointLocation", str(tmp_path / "ck_u")).start())
-    qu.processAllAvailable()
-    unbounded_state = qu.lastProgress["stateOperators"][0]["numRowsTotal"]
-    qu.stop()
-
-    # unbounded: every distinct key ever seen is live state forever
-    assert unbounded_state == 300
-    # bounded: batches 0-1 (keys 0..199) expired once the watermark
-    # passed their ts+delay; only the recent horizon remains
-    assert bounded_state <= 101, bounded_state
-    # semantics: within-horizon duplicate suppressed (b1's key 0),
-    # post-eviction duplicate re-emitted (b3's key 0)
-    n_b = spark.sql("SELECT count(*) c FROM dd_bounded").collect()[0]["c"]
-    n_u = spark.sql("SELECT count(*) c FROM dd_unbounded") \
-        .collect()[0]["c"]
-    assert n_u == 300   # history never forgotten, b3 dup suppressed
-    assert n_b == 301   # 300 firsts + the re-emitted evicted key
-
-
 def test_live_memory_sink_hard_caps_driver_buffer(spark, events_dir,
                                                   tmp_path):
     """The live pipeline's memory sink is a test surface: it must
@@ -884,37 +712,6 @@ def test_stream_static_minhash_gate_matches_batch(spark, tmp_path):
     assert got == want and want
 
 
-def test_parquet_scd2_store_matches_batch_window(spark, events_dir,
-                                                 tmp_path):
-    """Incrementally-maintained SCD2 history (version arrays in the
-    durable parquet store, intervals derived at read) must equal
-    the batch single-window build over the same changelog — the
-    continuous-aggregate guarantee extended from latest-wins state
-    to FULL dimension history."""
-    from galaxy_spark.queries.cdc import (scd2_change_frame,
-                                          scd2_history_frame)
-    from galaxy_spark.streaming.state_store import (
-        ParquetScd2Store, start_incremental_scd2_parquet)
-
-    changes = scd2_change_frame(
-        envelope_from_events(_stream_events(spark, events_dir)))
-    store = ParquetScd2Store(spark, str(tmp_path / "scd2_store"))
-    q = start_incremental_scd2_parquet(
-        changes, store, str(tmp_path / "scd2_ckpt"))
-    q.processAllAvailable()
-    q.stop()
-
-    got = {(r.database, r["table"], r.pk, r.value, r.pos, r.valid_to)
-           for r in store.history().collect()}
-    want = {(r.database, r["table"], r.pk, r.value, r.pos, r.valid_to)
-            for r in scd2_history_frame(
-                envelope_from_events(load_table(spark, SF, "events")))
-            .collect()}
-    assert got == want and len(want) > 100
-    # multi-version keys exist, so the array merge is exercised
-    assert len(want) > len({(d, t, p) for d, t, p, *_ in want})
-
-
 def test_streaming_histogram_quantile_on_durable_store(spark, events_dir,
                                                        tmp_path):
     """Streaming quantiles on the durable store (VERDICT r6 #8):
@@ -1008,51 +805,6 @@ def test_streaming_hll_registers_on_durable_store(spark, events_dir,
     want = {(r.bucket, r.register)
             for r in hll_registers(ev, F.col("event_id")).collect()}
     assert got == want and len(want) > 100
-
-
-def test_scd2_store_hot_key_stays_row_per_version(spark, tmp_path):
-    """A CDC hot key (one pk updated 100k times) must spread across
-    the store as O(1) rows — never concentrate as one giant
-    collect_list array cell in a single bucket (the r6 design that
-    recreated the hot-key hazard the snapshot fold was hardened
-    against). Pins: row-per-version schema (no array column), every
-    bucket holds a share of the hot key, history intervals still
-    chain, and replaying version rows dedups instead of
-    duplicating."""
-    import glob
-
-    import pyarrow.parquet as pq
-
-    from galaxy_spark.streaming.state_store import (ParquetScd2Store,
-                                                    partial_scd2)
-
-    store = ParquetScd2Store(spark, str(tmp_path / "scd2_hot"),
-                             n_buckets=4)
-    n = 100_000
-    changes = spark.range(n).select(
-        F.lit("d").alias("database"), F.lit("t").alias("table"),
-        F.lit(7).alias("pk"), F.col("id").alias("pos"),
-        (F.col("id") * 1.0).alias("value"),
-        F.lit("update").alias("action"))
-    store.merge(partial_scd2(changes), "lin.000000000000")
-
-    st = store.state()
-    assert st.count() == n
-    assert not any("array" in f.dataType.simpleString()
-                   for f in st.schema.fields)
-    per_bucket: dict = {}
-    for f in glob.glob(f"{store.path}/bucket-*/v-*/part-*.parquet"):
-        b = f.split("bucket-")[1].split("/")[0]
-        per_bucket[b] = per_bucket.get(b, 0) + pq.read_table(f).num_rows
-    assert len(per_bucket) == 4 and min(per_bucket.values()) > n // 16
-
-    hist = store.history()
-    assert hist.count() == n
-    assert hist.filter(F.col("pos") == 5).collect()[0].valid_to == 6
-
-    # a replayed slice of versions collapses by (key, pos) dedup
-    store.merge(partial_scd2(changes.limit(1000)), "lin.000000000001")
-    assert store.state().count() == n
 
 
 def test_rebucket_preserves_state_and_resumes_stream(spark, events_dir,
@@ -1363,127 +1115,6 @@ def test_quarantined_rows_route_to_dead_letter_topic(spark, tmp_path):
     assert payload["event_header"]["log_pos"] == 20
 
 
-def test_streaming_incremental_view_on_durable_store(spark, tmp_path):
-    """The delta rule on the durable stores: a multi-batch change
-    stream maintains (snapshot, aggregate view) in lockstep, and the
-    final view equals BOTH the batch cdc_incremental_view_sum fold
-    and a recompute off the snapshot store. Also pins the
-    view-before-snapshot replay window: after the snapshot has
-    absorbed a batch, a replayed merge under the same claimed epoch
-    is a no-op even though its recomputed deltas are zero."""
-    import time as _time
-
-    from galaxy_spark.queries.cdc import snapshot_change_frame
-    from galaxy_spark.registry import all_queries
-    from galaxy_spark.streaming.state_store import (
-        ParquetSnapshotStore, ParquetViewStore, partial_view_deltas,
-        start_incremental_view_parquet)
-
-    # three arrival slices in pos order (the binlog contract),
-    # mtime-separated so maxFilesPerTrigger=1 yields >= 3 batches
-    ev = load_table(spark, SF, "events")
-    src = str(tmp_path / "view_src")
-    mx = ev.agg(F.max("event_id")).collect()[0][0]
-    cuts = [0, mx // 3, (2 * mx) // 3, mx + 1]
-    for lo, hi in zip(cuts, cuts[1:]):
-        (ev.filter((F.col("event_id") >= lo) & (F.col("event_id") < hi))
-         .coalesce(1).write.mode("append").parquet(src))
-        _time.sleep(1.1)
-
-    changes = snapshot_change_frame(envelope_from_events(
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1).parquet(src)))
-    view = ParquetViewStore(spark, str(tmp_path / "view_store"))
-    snap = ParquetSnapshotStore(spark, str(tmp_path / "view_snap"))
-    ck = str(tmp_path / "view_ckpt")
-    q = start_incremental_view_parquet(changes, view, snap, ck)
-    q.processAllAvailable()
-    q.stop()
-
-    commits = os.listdir(os.path.join(ck, "commits"))
-    assert len([c for c in commits if c.isdigit()]) >= 3
-
-    want = sorted(
-        (r.database, r["table"], r.incr_sum_cents, r.incr_rows)
-        for r in all_queries()["cdc_incremental_view_sum"](
-            spark, SF).collect())
-    assert view.view() == want and len(want) >= 10
-
-    # view == recompute off the snapshot store's live rows
-    st = (snap.state().filter(F.col("last_action") != "delete")
-          .groupBy("database", "table")
-          .agg(F.sum(F.round(F.col("last_value") * 100, 0).cast("long"))
-               .alias("dv"),
-               F.count("*").cast("long").alias("dn")))
-    recompute = sorted((r.database, r["table"], r.dv, r.dn)
-                       for r in st.collect())
-    assert view.view() == recompute
-
-    # replay window: batch already in snapshot -> recomputed deltas
-    # are zero, and the claimed epoch skips the merge regardless
-    batch3 = snapshot_change_frame(envelope_from_events(
-        ev.filter(F.col("event_id") >= cuts[2])))
-    replay = partial_view_deltas(batch3, snap.state())
-    assert all(r.dv == 0 and r.dn == 0 for r in replay.collect())
-    lin = sorted(view.lineages())[0]
-    view.merge(replay, f"{lin}.{2:012d}")
-    assert view.view() == want
-
-
-def test_streaming_incremental_view_survives_restart(spark, tmp_path):
-    """Kill/restart for the dual-store handler: stop after the first
-    slices commit, append more changes, resume from the SAME
-    checkpoint against the SAME stores — the final view and snapshot
-    must equal the batch folds over everything (the lineage-scoped
-    epoch claims make the restart's epoch numbering safe)."""
-    import time as _time
-
-    from galaxy_spark.queries.cdc import snapshot_change_frame
-    from galaxy_spark.registry import all_queries
-    from galaxy_spark.streaming.state_store import (
-        ParquetSnapshotStore, ParquetViewStore,
-        start_incremental_view_parquet)
-
-    ev = load_table(spark, SF, "events")
-    src = str(tmp_path / "rv_src")
-    mx = ev.agg(F.max("event_id")).collect()[0][0]
-    half = mx // 2
-
-    def changes_stream():
-        return snapshot_change_frame(envelope_from_events(
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 1).parquet(src)))
-
-    (ev.filter(F.col("event_id") < half)
-     .coalesce(1).write.mode("append").parquet(src))
-    view = ParquetViewStore(spark, str(tmp_path / "rv_view"))
-    snap = ParquetSnapshotStore(spark, str(tmp_path / "rv_snap"))
-    ck = str(tmp_path / "rv_ckpt")
-    q = start_incremental_view_parquet(changes_stream(), view, snap, ck)
-    q.processAllAvailable()
-    q.stop()
-    mid = view.view()
-    assert mid and all(dv > 0 for (_, _, dv, _) in mid)
-
-    _time.sleep(1.1)  # mtime-separate the post-restart slice
-    (ev.filter(F.col("event_id") >= half)
-     .coalesce(1).write.mode("append").parquet(src))
-    q2 = start_incremental_view_parquet(changes_stream(), view, snap, ck)
-    q2.processAllAvailable()
-    q2.stop()
-
-    want = sorted(
-        (r.database, r["table"], r.incr_sum_cents, r.incr_rows)
-        for r in all_queries()["cdc_incremental_view_sum"](
-            spark, SF).collect())
-    assert view.view() == want != mid
-    want_snap = sorted(
-        (r.database, r["table"], r.pk, r.last_value, r.last_pos,
-         r.n_changes)
-        for r in all_queries()["cdc_apply_snapshot"](spark, SF).collect())
-    assert snap.snapshot() == want_snap
-
-
 def test_ddl_apply_batch_persists_registry(spark, tmp_path):
     """The persistence half of the DDL contract: with save_path
     set, applied DDL survives a restart via SchemaRegistry.load —
@@ -1660,213 +1291,6 @@ def test_rebucket_base_class_store_and_quiesce_warning(spark, tmp_path):
         [("a", 1), ("b", 2)]
 
 
-def test_streaming_cms_heavy_hitters_on_durable_store(spark, events_dir,
-                                                      tmp_path):
-    """Streaming approximate top-k on the durable store (the
-    CMS + per-batch top-m candidate pattern): (1) the accumulated
-    sketch equals the batch sketch CELL-FOR-CELL (cell-wise sum
-    monoid — no batch split can move a counter); (2) with m sized
-    to the key skew, the store-ranked top-k equals the batch
-    query's CMS ranking, estimate-for-estimate; (3) the candidate
-    store is bounded by m x batches rows, never the key universe."""
-    from galaxy_spark.streaming.state_store import (
-        ParquetCandidateStore, ParquetCmsStore, partial_cms,
-        start_streaming_heavy_hitters, streaming_heavy_hitters)
-
-    cms = ParquetCmsStore(spark, str(tmp_path / "cms_store"))
-    cand = ParquetCandidateStore(spark, str(tmp_path / "cand_store"))
-    q = start_streaming_heavy_hitters(
-        _stream_events(spark, events_dir), cms, cand,
-        str(tmp_path / "hh_ck"), key_col="user_id", m=64)
-    q.processAllAvailable()
-    q.stop()
-
-    ev = load_table(spark, SF, "events")
-    got_cells = {(r.row_i, r.pos): r.cnt
-                 for r in cms.state().collect()}
-    want_cells = {(r.row_i, r.pos): r.cnt
-                  for r in partial_cms(ev, "user_id").collect()}
-    assert got_cells == want_cells and len(want_cells) > 50
-
-    # candidate set bounded: <= m per committed batch
-    import os as _os
-
-    n_batches = len([f for f in _os.listdir(
-        str(tmp_path / "hh_ck" / "commits")) if f.isdigit()])
-    n_cand = cand.state().count()
-    assert 0 < n_cand <= 64 * max(n_batches, 1)
-
-    # top-k off the stores == the batch query's CMS ranking
-    from galaxy_spark.registry import all_queries
-
-    got_top = [(r.item, r.cms_estimate)
-               for r in streaming_heavy_hitters(cms, cand, 5).collect()]
-    want_top = [(str(r.user_id), r.cms_estimate)
-                for r in all_queries()["agg_countmin_heavy_hitters"](
-                    spark, SF)
-                .orderBy(F.desc("cms_estimate"),
-                         F.col("user_id").cast("string"))
-                .limit(5).collect()]
-    assert got_top == want_top
-
-
-def test_streaming_heavy_hitters_restart_resumes(spark, tmp_path):
-    """Kill/restart mid-stream: the same-epoch-keyed double merge
-    replays idempotently, and the final sketch equals the batch
-    sketch over ALL rows."""
-    from galaxy_spark.streaming.state_store import (
-        ParquetCmsStore, ParquetCandidateStore, partial_cms,
-        start_streaming_heavy_hitters)
-
-    src = str(tmp_path / "hh_src")
-    ev = load_table(spark, SF, "events").select("user_id")
-    half1 = ev.filter(F.col("user_id") % 2 == 0)
-    half2 = ev.filter(F.col("user_id") % 2 == 1)
-    half1.write.mode("overwrite").parquet(src)
-
-    cms = ParquetCmsStore(spark, str(tmp_path / "cms2"))
-    cand = ParquetCandidateStore(spark, str(tmp_path / "cand2"))
-    ck = str(tmp_path / "hh_ck2")
-
-    def start():
-        stream = spark.readStream.schema(
-            spark.read.parquet(src).schema).parquet(src)
-        return start_streaming_heavy_hitters(stream, cms, cand, ck,
-                                             key_col="user_id", m=64)
-
-    q = start()
-    q.processAllAvailable()
-    q.stop()                                   # the "kill"
-    half2.write.mode("append").parquet(src)
-    q = start()
-    q.processAllAvailable()
-    q.stop()
-
-    got = {(r.row_i, r.pos): r.cnt for r in cms.state().collect()}
-    want = {(r.row_i, r.pos): r.cnt
-            for r in partial_cms(ev, "user_id").collect()}
-    assert got == want
-
-
-def test_streaming_hll_cardinality_on_durable_store(spark, events_dir,
-                                                    tmp_path):
-    """Streaming cardinality on the durable store: (1) accumulated
-    registers equal the batch sketch cell-for-cell (cell-wise MAX
-    monoid); (2) the store estimate equals the batch certification
-    query's estimate to the last bit; (3) MAX idempotence: re-merging
-    a duplicate partial moves nothing."""
-    from galaxy_spark.operators.sketch import hll_registers
-    from galaxy_spark.registry import all_queries
-    from galaxy_spark.streaming.state_store import (
-        ParquetHllStore, partial_hll, start_streaming_cardinality,
-        streaming_cardinality_estimate)
-
-    store = ParquetHllStore(spark, str(tmp_path / "hll_store"))
-    q = start_streaming_cardinality(
-        _stream_events(spark, events_dir), store,
-        str(tmp_path / "hll_ck"), key_col="event_id")
-    q.processAllAvailable()
-    q.stop()
-
-    ev = load_table(spark, SF, "events")
-    got = {(r.hll_bucket, r.register) for r in store.state().collect()}
-    want = {(r.bucket, r.register)
-            for r in hll_registers(ev, F.col("event_id")).collect()}
-    assert got == want and len(want) > 100
-
-    got_est = streaming_cardinality_estimate(store).collect()[0]
-    want_est = all_queries()["agg_hll_cardinality_bound"](
-        spark, SF).collect()[0]
-    assert (got_est.occupied, got_est.harmonic_num, got_est.est) == \
-        (want_est.occupied, want_est.harmonic_num, want_est.est)
-
-    # idempotence: a replayed partial under a NEW epoch key (the
-    # claim-skip can't help) still cannot move a MAX register
-    store.merge(partial_hll(ev, "event_id"), "zzreplay.000000000099")
-    assert {(r.hll_bucket, r.register)
-            for r in store.state().collect()} == want
-
-
-def test_streaming_sliding_wau_on_durable_store(spark, events_dir,
-                                                tmp_path):
-    """Continuously-maintained sliding WAU: the streaming store's
-    trailing-7-day estimates equal the batch certification query's
-    sketch columns field-for-field (same shared merge + estimate
-    code over the same registers), and a late-arriving duplicate
-    day re-merges idempotently (MAX registers)."""
-    from galaxy_spark.registry import all_queries
-    from galaxy_spark.streaming.state_store import (
-        ParquetDailyHllStore, partial_daily_hll,
-        start_streaming_sliding_wau, streaming_sliding_wau)
-
-    store = ParquetDailyHllStore(spark, str(tmp_path / "wau_store"))
-    q = start_streaming_sliding_wau(
-        _stream_events(spark, events_dir), store,
-        str(tmp_path / "wau_ck"), ts_col="ts", key_col="user_id")
-    q.processAllAvailable()
-    q.stop()
-
-    got = sorted(
-        (str(r.day), r.occupied, r.harmonic_num, r.est)
-        for r in streaming_sliding_wau(store).collect())
-    want = sorted(
-        (str(r.day), r.occupied, r.harmonic_num, r.est)
-        for r in all_queries()["agg_hll_sliding_distinct_users"](
-            spark, SF).collect())
-    assert got == want and len(got) > 10
-
-    # late-data absorption: replaying every event as a "late"
-    # partial under a fresh epoch key cannot move a MAX register
-    ev = load_table(spark, SF, "events")
-    store.merge(partial_daily_hll(ev, "ts", "user_id"),
-                "zzlate.000000000099")
-    got2 = sorted(
-        (str(r.day), r.occupied, r.harmonic_num, r.est)
-        for r in streaming_sliding_wau(store).collect())
-    assert got2 == got
-
-
-def test_streaming_sliding_wau_restart_resumes(spark, tmp_path):
-    """Kill/restart mid-stream: the per-day register merges replay
-    idempotently and the final sliding estimates equal the batch
-    query's sketch columns over ALL rows."""
-    from galaxy_spark.registry import all_queries
-    from galaxy_spark.streaming.state_store import (
-        ParquetDailyHllStore, start_streaming_sliding_wau,
-        streaming_sliding_wau)
-
-    src = str(tmp_path / "wau_src")
-    ev = load_table(spark, SF, "events").select("ts", "user_id")
-    half1 = ev.filter(F.col("user_id") % 2 == 0)
-    half2 = ev.filter(F.col("user_id") % 2 == 1)
-    half1.write.mode("overwrite").parquet(src)
-
-    store = ParquetDailyHllStore(spark, str(tmp_path / "wau2"))
-    ck = str(tmp_path / "wau_ck2")
-
-    def start():
-        stream = spark.readStream.schema(
-            spark.read.parquet(src).schema).parquet(src)
-        return start_streaming_sliding_wau(stream, store, ck,
-                                           ts_col="ts",
-                                           key_col="user_id")
-
-    q = start()
-    q.processAllAvailable()
-    q.stop()                                   # the "kill"
-    half2.write.mode("append").parquet(src)
-    q = start()
-    q.processAllAvailable()
-    q.stop()
-
-    got = sorted((str(r.day), r.occupied, r.harmonic_num, r.est)
-                 for r in streaming_sliding_wau(store).collect())
-    want = sorted((str(r.day), r.occupied, r.harmonic_num, r.est)
-                  for r in all_queries()["agg_hll_sliding_distinct_users"](
-                      spark, SF).collect())
-    assert got == want and len(got) > 10
-
-
 # ------------------------------------------------------------------
 # Streaming incremental near-dup index (durable MinHash-LSH)
 # ------------------------------------------------------------------
@@ -1884,115 +1308,6 @@ def _near_dup_stores(spark, tmp_path, tag, delta=None, fs="posix"):
         s.delta_threshold = delta         # epoch boundary (r11);
         s.fs = store_fs(fs)               # fs before first commit
     return stores
-
-
-@pytest.mark.parametrize("delta,fs", [(None, "posix"), (2, "posix"),
-                                      (None, "manifest"),
-                                      (2, "manifest"),
-                                      (2, "manifest_cas")],
-                         ids=["cow", "delta2", "cow-manifest",
-                              "delta2-manifest", "delta2-cas"])
-def test_streaming_near_dup_index_matches_batch(spark, tmp_path,
-                                                delta, fs):
-    """The r9 verdict's top item: near-dup-check every micro-batch
-    against ALL previously streamed documents on a durable growing
-    LSH index. Union of per-batch pair emissions over the replayed
-    corpus == the batch ``dedup_minhash_lsh`` answer pair-for-pair
-    and jaccard-for-jaccard — and the match is NOT vacuous: pairs
-    must span arrival slices (cross-batch matches through the
-    index), not just co-arrive."""
-    import time as _time
-
-    from galaxy_spark.registry import all_queries
-    from galaxy_spark.streaming.state_store import (
-        lsh_probe_pairs, start_streaming_near_dup_index,
-        streaming_near_dup_pairs)
-
-    docs = load_table(spark, SF, "documents")
-    src = str(tmp_path / "nd_src")
-    for k in range(3):                 # three mtime-separated slices
-        (docs.filter(F.col("doc_id") % 3 == k)
-         .coalesce(1).write.mode("append").parquet(src))
-        _time.sleep(1.1)
-
-    lsh, dstore, pairs = _near_dup_stores(spark, tmp_path, "nd",
-                                          delta=delta, fs=fs)
-    stream = spark.readStream.schema(docs.schema) \
-        .option("maxFilesPerTrigger", 1).parquet(src)
-    q = start_streaming_near_dup_index(
-        stream, lsh, dstore, pairs, str(tmp_path / "nd_ck"))
-    q.processAllAvailable()
-    q.stop()
-
-    commits = os.listdir(os.path.join(str(tmp_path / "nd_ck"),
-                                      "commits"))
-    assert len([c for c in commits if c.isdigit()]) >= 3
-
-    got = sorted((r.id_a, r.id_b, r.jaccard)
-                 for r in streaming_near_dup_pairs(pairs).collect())
-    want = sorted((r.id_a, r.id_b, r.jaccard)
-                  for r in all_queries()["dedup_minhash_lsh"](
-                      spark, SF).collect())
-    assert got == want and len(want) >= 3
-    assert any(a % 3 != b % 3 for a, b, _ in got), \
-        "no cross-slice pair: the growing-index probe went untested"
-
-    # replay insensitivity: after all inserts, re-probing a slice
-    # under a FRESH epoch key (claim-skip can't help) emits a
-    # subset of already-known pairs at identical jaccard — MAX
-    # folds it away
-    replay = lsh_probe_pairs(docs.filter(F.col("doc_id") % 3 == 0),
-                             lsh, dstore)
-    lin = sorted(pairs.lineages())[0]
-    pairs.merge(replay, f"zz{lin}.000000000099")
-    got2 = sorted((r.id_a, r.id_b, r.jaccard)
-                  for r in streaming_near_dup_pairs(pairs).collect())
-    assert got2 == got
-
-
-def test_streaming_near_dup_index_restart_resumes(spark, tmp_path):
-    """Kill/restart mid-stream: stop after the first half commits,
-    append the rest, resume from the SAME checkpoint against the
-    SAME stores — emissions still equal the batch answer (epoch
-    claims + idempotent MAX folds make the replay window safe)."""
-    import time as _time
-
-    from galaxy_spark.registry import all_queries
-    from galaxy_spark.streaming.state_store import (
-        start_streaming_near_dup_index, streaming_near_dup_pairs)
-
-    docs = load_table(spark, SF, "documents")
-    src = str(tmp_path / "ndr_src")
-    (docs.filter(F.col("doc_id") % 2 == 0)
-     .coalesce(1).write.mode("append").parquet(src))
-
-    lsh, dstore, pairs = _near_dup_stores(spark, tmp_path, "ndr")
-    ck = str(tmp_path / "ndr_ck")
-
-    def start():
-        stream = spark.readStream.schema(docs.schema) \
-            .option("maxFilesPerTrigger", 1).parquet(src)
-        return start_streaming_near_dup_index(stream, lsh, dstore,
-                                              pairs, ck)
-
-    q = start()
-    q.processAllAvailable()
-    q.stop()                           # the "kill"
-    mid = streaming_near_dup_pairs(pairs).count()
-
-    _time.sleep(1.1)
-    (docs.filter(F.col("doc_id") % 2 == 1)
-     .coalesce(1).write.mode("append").parquet(src))
-    q = start()
-    q.processAllAvailable()
-    q.stop()
-
-    got = sorted((r.id_a, r.id_b, r.jaccard)
-                 for r in streaming_near_dup_pairs(pairs).collect())
-    want = sorted((r.id_a, r.id_b, r.jaccard)
-                  for r in all_queries()["dedup_minhash_lsh"](
-                      spark, SF).collect())
-    assert got == want and len(want) > mid >= 0
 
 
 def test_lsh_probe_plans_as_equi_join(spark, tmp_path):
@@ -2151,61 +1466,6 @@ def test_streaming_clustering_chain_merge_and_restart(spark,
             for r in streaming_cluster_assignments(
                 docs, cstore, rstore).collect()}
     assert got2 == got
-
-
-def test_streaming_emb_near_dup_index_matches_batch(spark, tmp_path):
-    """r10 verdict #5: the embedding modality gets the same growing
-    streaming index as text — union of per-batch emissions over the
-    replayed corpus (WITH a kill/restart mid-stream) equals the
-    batch ``dedup_embedding_cosine_lsh`` answer pair-for-pair and
-    cosine-for-cosine, with cross-batch pairs proving the index
-    probe (not just co-arrival) found them."""
-    import time as _time
-
-    from galaxy_spark.registry import all_queries
-    from galaxy_spark.streaming.state_store import (
-        ParquetCosinePairStore, ParquetEmbLshStore, ParquetVecStore,
-        start_streaming_emb_near_dup_index,
-        streaming_emb_near_dup_pairs)
-
-    emb = load_table(spark, SF, "embeddings")
-    src = str(tmp_path / "el_src")
-    ck = str(tmp_path / "el_ck")
-    estore = ParquetEmbLshStore(spark, str(tmp_path / "el_idx"))
-    vstore = ParquetVecStore(spark, str(tmp_path / "el_vec"))
-    pstore = ParquetCosinePairStore(spark, str(tmp_path / "el_pair"))
-
-    def start():
-        stream = spark.readStream.schema(emb.schema) \
-            .option("maxFilesPerTrigger", 1).parquet(src)
-        return start_streaming_emb_near_dup_index(
-            stream, estore, vstore, pstore, ck, threshold=0.4)
-
-    for k in range(2):
-        (emb.filter(F.col("vec_id") % 3 == k)
-         .coalesce(1).write.mode("append").parquet(src))
-        _time.sleep(1.1)
-    q = start()
-    q.processAllAvailable()
-    q.stop()                           # the "kill"
-    mid = streaming_emb_near_dup_pairs(pstore).count()
-    _time.sleep(1.1)
-    (emb.filter(F.col("vec_id") % 3 == 2)
-     .coalesce(1).write.mode("append").parquet(src))
-    q = start()
-    q.processAllAvailable()
-    q.stop()
-
-    got = sorted((r.id_a, r.id_b, r.cos_sim)
-                 for r in streaming_emb_near_dup_pairs(pstore)
-                 .collect())
-    want = sorted((r.id_a, r.id_b, r.cos_sim)
-                  for r in all_queries()
-                  ["dedup_embedding_cosine_lsh"](spark, SF)
-                  .collect())
-    assert got == want and len(want) > max(mid, 2)
-    assert any(a % 3 != b % 3 for a, b, _ in got), \
-        "no cross-slice pair: the growing-index probe went untested"
 
 
 def test_cluster_redirect_replay_regenerates_lost_edges(spark,
@@ -2384,160 +1644,6 @@ def test_lsh_probe_reads_are_layout_pruned(spark, tmp_path,
     all_doc = {int(d.split("-")[1]) for d in os.listdir(dstore.path)
                if d.startswith("bucket-")}
     assert doc_opened and doc_opened < all_doc
-
-
-def test_partial_kmv_avoids_single_task_window(spark):
-    """r10 verdict #2: the per-side pre-truncation must not funnel
-    a side's whole batch through one task — no Window in the plan —
-    and the two-level salted fold's contents must equal the min-k
-    distinct hashes computed independently."""
-    from galaxy_spark.plans import physical_plan
-    from galaxy_spark.queries.indexing import _kmv_hv
-    from galaxy_spark.streaming.state_store import partial_kmv
-
-    df = _orders_fo(spark)
-    part = partial_kmv(df, "o_orderstatus", "o_custkey", k=16)
-    p = physical_plan(part)
-    assert "Window" not in p
-    want: dict = {}
-    for r in (df.select(F.col("o_orderstatus").alias("side"),
-                        _kmv_hv(F.col("o_custkey")).alias("hv"))
-              .distinct().collect()):
-        want.setdefault(r.side, set()).add(r.hv)
-    assert {r.side: list(r.hvs) for r in part.collect()} == \
-        {s: sorted(hs)[:16] for s, hs in want.items()}
-
-
-# ------------------------------------------------------------------
-# Streaming KMV sketches on the durable store
-# ------------------------------------------------------------------
-
-def _orders_fo(spark):
-    return (load_table(spark, SF, "orders")
-            .filter(F.col("o_orderstatus").isin("F", "O"))
-            .select("o_orderkey", "o_orderstatus", "o_custkey"))
-
-
-def test_streaming_kmv_matches_batch_sketch(spark, tmp_path):
-    """The accumulated per-side KMV sketches equal the batch tier's
-    min-k frames ELEMENT-FOR-ELEMENT, and the union-sketch
-    instrument reproduces the registered query's (cnt, hk, j)
-    integers exactly. Plus the monoid's replay story: a re-merged
-    full partial under a fresh epoch key cannot move a sketch."""
-    import time as _time
-
-    from galaxy_spark.queries.indexing import _KMV_K, _kmv_hv
-    from galaxy_spark.registry import all_queries
-    from galaxy_spark.streaming.state_store import (
-        ParquetKmvStore, partial_kmv, start_streaming_kmv,
-        streaming_kmv_sketch, streaming_kmv_union_stats)
-
-    od = _orders_fo(spark)
-    src = str(tmp_path / "kmv_src")
-    for k in range(3):
-        (od.filter(F.col("o_orderkey") % 3 == k)
-         .coalesce(1).write.mode("append").parquet(src))
-        _time.sleep(1.1)
-
-    store = ParquetKmvStore(spark, str(tmp_path / "kmv_store"))
-    stream = spark.readStream.schema(od.schema) \
-        .option("maxFilesPerTrigger", 1).parquet(src)
-    q = start_streaming_kmv(stream, store, str(tmp_path / "kmv_ck"),
-                            side_col="o_orderstatus",
-                            key_col="o_custkey")
-    q.processAllAvailable()
-    q.stop()
-
-    got = sorted((r.side, r.hv)
-                 for r in streaming_kmv_sketch(store).collect())
-    want = []
-    for side in ("F", "O"):
-        rows = (od.filter(F.col("o_orderstatus") == side)
-                .select(_kmv_hv(F.col("o_custkey")).alias("hv"))
-                .distinct().orderBy("hv").limit(_KMV_K).collect())
-        want += [(side, r.hv) for r in rows]
-    assert got == sorted(want) and len(want) > 10
-
-    got_u = streaming_kmv_union_stats(store, "F", "O").collect()[0]
-    want_u = all_queries()["agg_kmv_set_intersection"](
-        spark, SF).collect()[0]
-    assert (got_u.cnt, got_u.hk, got_u.j) == \
-        (want_u.cnt, want_u.hk, want_u.j)
-    want_d = all_queries()["agg_kmv_set_difference"](
-        spark, SF).collect()[0]
-    assert (got_u.j_ab, got_u.j_ba) == (want_d.j_ab, want_d.j_ba)
-
-    # idempotence without the claim: full-corpus partial, new epoch
-    store.merge(partial_kmv(od, "o_orderstatus", "o_custkey",
-                            store.k), "zzreplay.000000000099")
-    assert sorted((r.side, r.hv)
-                  for r in streaming_kmv_sketch(store).collect()) == got
-
-
-def test_streaming_kmv_restart_and_truncation(spark, tmp_path):
-    """Kill/restart mid-stream at a small k (so every merge runs in
-    the TRUNCATING regime — the monoid claim under stress): the
-    resumed store still equals the batch min-k over everything."""
-    import time as _time
-
-    from galaxy_spark.queries.indexing import _kmv_hv
-    from galaxy_spark.streaming.state_store import (
-        ParquetKmvStore, start_streaming_kmv, streaming_kmv_sketch)
-
-    od = _orders_fo(spark)
-    src = str(tmp_path / "kmvr_src")
-    (od.filter(F.col("o_orderkey") % 2 == 0)
-     .coalesce(1).write.mode("append").parquet(src))
-
-    store = ParquetKmvStore(spark, str(tmp_path / "kmvr_store"), k=16)
-    ck = str(tmp_path / "kmvr_ck")
-
-    def start():
-        stream = spark.readStream.schema(od.schema) \
-            .option("maxFilesPerTrigger", 1).parquet(src)
-        return start_streaming_kmv(stream, store, ck,
-                                   side_col="o_orderstatus",
-                                   key_col="o_custkey")
-
-    q = start()
-    q.processAllAvailable()
-    q.stop()                           # the "kill"
-    _time.sleep(1.1)
-    (od.filter(F.col("o_orderkey") % 2 == 1)
-     .coalesce(1).write.mode("append").parquet(src))
-    q = start()
-    q.processAllAvailable()
-    q.stop()
-
-    got = sorted((r.side, r.hv)
-                 for r in streaming_kmv_sketch(store).collect())
-    want = []
-    for side in ("F", "O"):
-        rows = (od.filter(F.col("o_orderstatus") == side)
-                .select(_kmv_hv(F.col("o_custkey")).alias("hv"))
-                .distinct().orderBy("hv").limit(16).collect())
-        want += [(side, r.hv) for r in rows]
-    assert got == sorted(want) and len(got) == 32
-
-
-def test_streaming_kmv_union_stats_with_one_empty_side(spark,
-                                                       tmp_path):
-    """r10 review: before the second side's first row arrives, the
-    union stats must treat it as the EMPTY set — j = 0, not NULL
-    (array_intersect against NULL nulled the whole column)."""
-    from galaxy_spark.queries.indexing import _kmv_hv
-    from galaxy_spark.streaming.state_store import (
-        ParquetKmvStore, partial_kmv, streaming_kmv_union_stats)
-
-    od = _orders_fo(spark).filter(F.col("o_orderstatus") == "F")
-    store = ParquetKmvStore(spark, str(tmp_path / "kmv_one"), k=16)
-    store.merge(partial_kmv(od, "o_orderstatus", "o_custkey", 16),
-                "lin.000000000000")
-    row = streaming_kmv_union_stats(store, "F", "O").collect()[0]
-    want_cnt = (od.select(_kmv_hv(F.col("o_custkey")).alias("hv"))
-                .distinct().count())
-    assert row.j == 0 and row.cnt == min(want_cnt, 16)
-    assert row.hk is not None
 
 
 def test_near_dup_emissions_invariant_under_batch_splits(spark,
@@ -2809,138 +1915,14 @@ def test_delta_store_rebucket_carries_mode_and_state(spark, tmp_path):
         sorted(map(tuple, st.state().collect()))
 
 
-# ------------------------------------------------------------------
-# Streaming OLS twin (r11): SUM-monoid sufficient statistics
-# ------------------------------------------------------------------
-
-def test_streaming_ols_matches_batch_fit(spark, tmp_path):
-    """Streaming per-key OLS on the durable store == the flagship
-    batch fit FIELD-FOR-FIELD: every sufficient statistic is an
-    exact integer under SUM (int64 + DECIMAL(38,0)), so slicing the
-    corpus into micro-batches cannot move the model. Runs the store
-    in DELTA-TIER mode (threshold 2) — a real pipeline exercising
-    O(batch) appends over DECIMAL state — with a kill/restart in
-    the middle of the replay corpus."""
-    import time as _time
-
-    from galaxy_spark.queries.ml import ols_partial_stats
-    from galaxy_spark.registry import all_queries
-    from galaxy_spark.streaming.state_store import (
-        ParquetOlsStore, start_streaming_ols,
-        streaming_ols_estimates)
-
-    li = load_table(spark, SF, "lineitem")
-    src = str(tmp_path / "ols_src")
-    for k in range(3):
-        (li.filter(F.col("l_orderkey") % 3 == k)
-         .coalesce(1).write.mode("append").parquet(src))
-        _time.sleep(1.1)
-
-    store = ParquetOlsStore(spark, str(tmp_path / "ols_store"),
-                            key_col="returnflag")
-    store.delta_threshold = 2
-    ck = str(tmp_path / "ols_ck")
-
-    def start():
-        stream = spark.readStream.schema(li.schema) \
-            .option("maxFilesPerTrigger", 1).parquet(src)
-        return start_streaming_ols(stream, store, ck,
-                                   key=F.col("l_returnflag"))
-
-    q = start()                       # kill after the first batch:
-    while True:                       # resume must replay/continue
-        done = os.path.join(ck, "commits", "0")
-        if os.path.exists(done):
-            break
-        _time.sleep(0.1)
-    q.stop()
-    q = start()
-    q.processAllAvailable()
-    q.stop()
-
-    got = sorted(map(tuple, streaming_ols_estimates(store)
-                     .collect()))
-    want = sorted(map(tuple, all_queries()
-                      ["ml_ols_price_on_quantity"](spark, SF)
-                      .collect()))
-    assert got == want and len(want) == 3
-
-    # monoid sanity the solve hides: the stored statistics are the
-    # batch fold's exact integers (pre-cast), not approximations
-    exact = {r.returnflag: (r.n, r.sx, r.sy, r.sxx, r.sxy, r.syy)
-             for r in ols_partial_stats(
-                 li, F.col("l_returnflag"), "returnflag").collect()}
-    stored = {r.returnflag: (r.n, r.sx, r.sy, r.sxx, r.sxy, r.syy)
-              for r in store.state().collect()}
-    assert stored == exact
-
-
-# ------------------------------------------------------------------
-# Streaming sessionization twin (r11): gap-merge closure store
-# ------------------------------------------------------------------
-
-def test_streaming_sessions_match_batch(spark, tmp_path):
-    """Streaming sessionization on the durable store ==
-    ``events_sessionization`` FIELD-FOR-FIELD over the replayed
-    corpus — with the nastiest possible slicing: events interleave
-    across micro-batches by event_id, so most sessions SPAN batches
-    and reassemble purely through the gap-merge closure's
-    associativity. Includes a kill/restart after the first
-    commit."""
-    import time as _time
-
-    from galaxy_spark.registry import all_queries
-    from galaxy_spark.streaming.state_store import (
-        ParquetSessionStore, start_streaming_sessions,
-        streaming_session_rows)
-
-    ev = load_table(spark, SF, "events")
-    src = str(tmp_path / "sess_src")
-    for k in range(3):                # interleaved-in-time slices
-        (ev.filter(F.col("event_id") % 3 == k)
-         .coalesce(1).write.mode("append").parquet(src))
-        _time.sleep(1.1)
-
-    store = ParquetSessionStore(spark, str(tmp_path / "sess_store"))
-    ck = str(tmp_path / "sess_ck")
-
-    def start():
-        stream = spark.readStream.schema(ev.schema) \
-            .option("maxFilesPerTrigger", 1).parquet(src)
-        return start_streaming_sessions(stream, store, ck)
-
-    q = start()
-    while not os.path.exists(os.path.join(ck, "commits", "0")):
-        _time.sleep(0.1)
-    q.stop()
-    q = start()
-    q.processAllAvailable()
-    q.stop()
-
-    got = sorted((r.user_id, r.session_id, r.n_events,
-                  r.session_value, r.session_start)
-                 for r in streaming_session_rows(store).collect())
-    want = sorted((r.user_id, r.session_id, r.n_events,
-                   r.session_value, r.session_start)
-                  for r in all_queries()["events_sessionization"](
-                      spark, SF).collect())
-    assert len(got) == len(want) > 500
-    assert got == want
-    # non-vacuous: sessions must actually span arrival slices
-    assert any(n > 1 for _, _, n, _, _ in got), \
-        "all sessions are singletons: the merge went untested"
-
-
 def test_delta_review_fixes(spark, tmp_path):
     """r11 review wave: (a) a stray FILE named bucket-* is noise,
     not a NotADirectoryError inside the lineage check; (b) the
     delta_threshold guard holds on the blessed (attribute) mutation
     path; (c) the read fold is scoped to delta-bearing buckets —
-    compacted buckets stay scan-only (one aggregate under a union);
-    (d) an un-written ParquetOlsStore's empty state carries the
-    declared key TYPE."""
+    compacted buckets stay scan-only (one aggregate under a
+    union)."""
     from galaxy_spark.plans import physical_plan
-    from galaxy_spark.streaming.state_store import ParquetOlsStore
 
     st = _sum_store(spark, str(tmp_path / "rf"), 2)
     # (b) setter guard
@@ -2970,10 +1952,6 @@ def test_delta_review_fixes(spark, tmp_path):
     assert "Union" in p, "compacted bucket must bypass the fold"
     assert p.count("partial_max") == 1, \
         "exactly one fold branch (the delta-bearing bucket)"
-    # (d) typed empty state for a long-keyed OLS store
-    ols = ParquetOlsStore(spark, str(tmp_path / "rf_ols"),
-                          key_col="partkey", key_type="long")
-    assert dict(ols.state().dtypes)["partkey"] == "bigint"
 
 
 # ------------------------------------------------------------------
@@ -3082,61 +2060,6 @@ def test_streaming_search_index_matches_batch(spark, tmp_path,
 
 
 # ------------------------------------------------------------------
-# Streaming decay-score twin (r11): per-(user, day) SUM statistics
-# ------------------------------------------------------------------
-
-def test_streaming_decay_scores_match_batch(spark, tmp_path):
-    """The read-time decay fold over accumulated per-(user, day)
-    counts equals ``events_decay_score`` field-for-field — the
-    anchor re-derives from state, so the twin stays correct as the
-    stream's newest day advances (scores are NOT a monoid; the
-    day layer is). Delta-tier store, interleaved slices."""
-    import time as _time
-
-    from galaxy_spark.registry import all_queries
-    from galaxy_spark.streaming.state_store import (
-        ParquetUserDayStore, start_streaming_user_days,
-        streaming_decay_scores)
-
-    ev = load_table(spark, SF, "events")
-    src = str(tmp_path / "ud_src")
-    for k in range(3):
-        (ev.filter(F.col("event_id") % 3 == k)
-         .coalesce(1).write.mode("append").parquet(src))
-        _time.sleep(1.1)
-
-    store = ParquetUserDayStore(spark, str(tmp_path / "ud_store"))
-    store.delta_threshold = 2
-    stream = spark.readStream.schema(ev.schema) \
-        .option("maxFilesPerTrigger", 1).parquet(src)
-    q = start_streaming_user_days(stream, store,
-                                  str(tmp_path / "ud_ck"))
-    q.processAllAvailable()
-    q.stop()
-
-    got = sorted((r.user_id, r.decay_score, r.purchase_score,
-                  r.n_recent)
-                 for r in streaming_decay_scores(store).collect())
-    want = sorted((r.user_id, r.decay_score, r.purchase_score,
-                   r.n_recent)
-                  for r in all_queries()["events_decay_score"](
-                      spark, SF).collect())
-    assert got == want and len(want) >= 15
-
-    # the same state serves DAU/WAU stickiness (r14, third
-    # reader): state rows ARE the distinct (user, day) frame
-    from galaxy_spark.streaming.state_store import \
-        streaming_stickiness
-    got_s = sorted((r.day, r.dau, r.wau, r.stickiness_bp)
-                   for r in streaming_stickiness(store).collect())
-    want_s = sorted((r.day, r.dau, r.wau, r.stickiness_bp)
-                    for r in all_queries()[
-                        "events_stickiness_dau_wau"](
-                        spark, SF).collect())
-    assert got_s == want_s and len(want_s) >= 20
-
-
-# ------------------------------------------------------------------
 # Streaming funnel twin (r11): event-time index under set-union
 # ------------------------------------------------------------------
 
@@ -3152,8 +2075,9 @@ def test_streaming_funnel_matches_batch(spark, tmp_path):
 
     from galaxy_spark.registry import all_queries
     from galaxy_spark.streaming.state_store import (
-        ParquetEventIndexStore, partial_event_index,
-        start_streaming_event_index, streaming_funnel)
+        ParquetEventIndexStore, ParquetPurchaseStore,
+        partial_event_index, start_streaming_attribution_hub,
+        streaming_funnel)
 
     ev = load_table(spark, SF, "events")
     src = str(tmp_path / "fun_src")
@@ -3166,8 +2090,9 @@ def test_streaming_funnel_matches_batch(spark, tmp_path):
     store.delta_threshold = 2
     stream = spark.readStream.schema(ev.schema) \
         .option("maxFilesPerTrigger", 1).parquet(src)
-    q = start_streaming_event_index(stream, store,
-                                    str(tmp_path / "fun_ck"))
+    q = start_streaming_attribution_hub(
+        stream, ParquetPurchaseStore(spark, str(tmp_path / "fun_pur")),
+        store, str(tmp_path / "fun_ck"))
     q.processAllAvailable()
     q.stop()
 
@@ -3437,108 +2362,6 @@ def test_user_seq_retention_bounds_state(spark, tmp_path):
                             retention_days=0)
 
 
-def test_streaming_rfm_matches_batch(spark, tmp_path):
-    """RFM quartiles off the continuously maintained per-customer
-    order rollup (r13 verdict #7): MAX/SUM/SUM monoid state,
-    kill/restart mid-stream, reader == ``customer_rfm_segments``
-    field-for-field through the batch query's own imported scoring
-    tail."""
-    import time as _time
-
-    from galaxy_spark.registry import all_queries
-    from galaxy_spark.streaming.state_store import (
-        ParquetCustomerOrderStore, start_streaming_customer_orders,
-        streaming_rfm_segments)
-
-    o = load_table(spark, SF, "orders")
-    src = str(tmp_path / "rfm_src")
-    for k in range(3):
-        (o.filter(F.col("o_orderkey") % 3 == k)
-         .coalesce(1).write.mode("append").parquet(src))
-        _time.sleep(1.1)
-
-    store = ParquetCustomerOrderStore(spark,
-                                      str(tmp_path / "rfm_store"))
-    store.delta_threshold = 2
-    ck = str(tmp_path / "rfm_ck")
-
-    def start():
-        stream = spark.readStream.schema(o.schema) \
-            .option("maxFilesPerTrigger", 1).parquet(src)
-        return start_streaming_customer_orders(stream, store, ck)
-
-    q = start()
-    while not os.path.exists(os.path.join(ck, "commits", "0")):
-        _time.sleep(0.1)
-    q.stop()                           # the "kill"
-    q = start()
-    q.processAllAvailable()
-    q.stop()
-
-    def rows(df):
-        return sorted((r.r_bucket, r.f_bucket, r.m_bucket,
-                       r.n_customers, r.total_monetary)
-                      for r in df.collect())
-
-    got = rows(streaming_rfm_segments(store))
-    want = rows(all_queries()["customer_rfm_segments"](spark, SF))
-    assert got == want and len(want) >= 20
-
-
-def test_streaming_order_cadence_matches_batch(spark, tmp_path):
-    """Segment cadence off the per-customer order timelines (r14):
-    idempotent set-union facts, kill/restart mid-stream plus a
-    whole-slice re-merge under a fresh epoch, reader ==
-    ``customer_order_cadence`` through the imported tail."""
-    import time as _time
-
-    from galaxy_spark.registry import all_queries
-    from galaxy_spark.streaming.state_store import (
-        ParquetOrderFactStore, partial_order_facts,
-        start_streaming_order_facts, streaming_order_cadence)
-
-    o = load_table(spark, SF, "orders")
-    c = load_table(spark, SF, "customer")
-    src = str(tmp_path / "oc_src")
-    for k in range(3):
-        (o.filter(F.col("o_orderkey") % 3 == k)
-         .coalesce(1).write.mode("append").parquet(src))
-        _time.sleep(1.1)
-
-    store = ParquetOrderFactStore(spark, str(tmp_path / "oc_store"))
-    store.delta_threshold = 2
-    ck = str(tmp_path / "oc_ck")
-
-    def start():
-        stream = spark.readStream.schema(o.schema) \
-            .option("maxFilesPerTrigger", 1).parquet(src)
-        return start_streaming_order_facts(stream, store, ck)
-
-    q = start()
-    while not os.path.exists(os.path.join(ck, "commits", "0")):
-        _time.sleep(0.1)
-    q.stop()                           # the "kill"
-    q = start()
-    q.processAllAvailable()
-    q.stop()
-
-    def rows(df):
-        return sorted((r.mktsegment, r.n_customers, r.n_gaps,
-                       r.avg_gap_days, r.max_gap_days)
-                      for r in df.collect())
-
-    got = rows(streaming_order_cadence(store, c))
-    want = rows(all_queries()["customer_order_cadence"](spark, SF))
-    assert got == want and len(want) == 5
-
-    # idempotence WITHOUT the claim: full-slice re-merge, new epoch
-    lin = sorted(store.lineages())[0]
-    store.merge(partial_order_facts(
-        o.filter(F.col("o_orderkey") % 3 == 0)),
-        f"zz{lin}.000000000099")
-    assert rows(streaming_order_cadence(store, c)) == got
-
-
 def test_state_for_keys_prunes_and_folds_under_deltas(spark, tmp_path,
                                                       monkeypatch):
     """Layout pruning and the delta tier compose: a probe on a
@@ -3767,13 +2590,8 @@ def test_rebucket_carries_fs_and_grace(spark, tmp_path):
 
 
 @pytest.mark.parametrize("cls_name, tunables", [
-    ("ParquetDailyHllStore", {"p": 7}),
     ("ParquetWinnowStore", {"df_cap": 3}),
     ("ParquetBasketStore", {"retention_days": 5, "basket_cap": 4}),
-    ("ParquetKmvStore", {"k": 16}),
-    ("ParquetOlsStore", {"key_col": "p", "key_type": "long"}),
-    ("ParquetSessionStore", {"retention_days": 3}),
-    ("ParquetUserDayStore", {"retention_days": 45}),
     ("ParquetEventIndexStore", {"retention_days": 2}),
     ("ParquetUserSeqStore", {"retention_days": 2}),
 ])
@@ -4183,8 +3001,9 @@ def test_event_index_retention_bounds_state(spark, tmp_path):
     from galaxy_spark.queries.events import (
         funnel_from_events, retention_cohorts_from_events)
     from galaxy_spark.streaming.state_store import (
-        ParquetEventIndexStore, start_streaming_event_index,
-        streaming_funnel, streaming_retention)
+        ParquetEventIndexStore, ParquetPurchaseStore,
+        start_streaming_attribution_hub, streaming_funnel,
+        streaming_retention)
 
     ev = load_table(spark, SF, "events")
     src = str(tmp_path / "ret_src")
@@ -4199,8 +3018,9 @@ def test_event_index_retention_bounds_state(spark, tmp_path):
     store.delta_threshold = 2
     stream = spark.readStream.schema(ev.schema) \
         .option("maxFilesPerTrigger", 1).parquet(src)
-    q = start_streaming_event_index(stream, store,
-                                    str(tmp_path / "ret_ck"))
+    q = start_streaming_attribution_hub(
+        stream, ParquetPurchaseStore(spark, str(tmp_path / "ret_pur")),
+        store, str(tmp_path / "ret_ck"))
     q.processAllAvailable()
     q.stop()
 
@@ -4248,32 +3068,6 @@ def test_event_index_retention_bounds_state(spark, tmp_path):
     with pytest.raises(ValueError, match="retention_days"):
         ParquetEventIndexStore(spark, str(tmp_path / "bad"),
                                retention_days=0)
-
-
-def test_user_day_retention_below_decay_horizon_warns(
-        spark, tmp_path):
-    """r13 ADVICE: streaming_decay_scores equals the unbounded
-    batch twin only at H >= the 40-day zero-weight horizon; an H
-    in [1, 39] silently evicts rows still carrying nonzero decay
-    weight. The store now warns at construction (retained-window
-    answers stay legal — the bounded-state test pins them — but
-    sub-horizon eviction must be a choice, not a surprise)."""
-    import warnings as _warnings
-
-    from galaxy_spark.streaming.state_store import ParquetUserDayStore
-
-    with pytest.warns(UserWarning, match="40-day decay-weight"):
-        ParquetUserDayStore(spark, str(tmp_path / "ud_w"),
-                            retention_days=14)
-    # at or above the horizon, and with no retention: silent
-    with _warnings.catch_warnings():
-        _warnings.simplefilter("error")
-        ParquetUserDayStore(spark, str(tmp_path / "ud_40"),
-                            retention_days=40)
-        ParquetUserDayStore(spark, str(tmp_path / "ud_n"))
-    with pytest.raises(ValueError, match="retention_days"):
-        ParquetUserDayStore(spark, str(tmp_path / "ud_bad"),
-                            retention_days=0)
 
 
 def test_streaming_gapfill_matches_batch(spark, tmp_path):
@@ -4472,143 +3266,6 @@ def test_winnow_store_caps_boilerplate_and_probe_is_superset(
     assert winnow_probe_pairs(batch2, store).count() == 0
     # the early emission was a strict superset of the final answer
     assert early > set()
-
-
-# ------------------------------------------------------------------
-# Retention knobs: session + user-day stores (r12 verdict #5)
-# ------------------------------------------------------------------
-
-def test_session_store_retention_bounds_state(spark, tmp_path):
-    """retention_days=H on the session store: merge-time eviction
-    of sessions that END more than H days behind the folded
-    watermark. Pins (a) the absorption property — evicting DURING
-    the stream (intermediate watermarks) lands on exactly the
-    exact-forever store's state filtered at the final global
-    watermark, sessions evicted WHOLE, never truncated; (b) every
-    batch session starting inside the window survives with
-    identical fields; (c) state is strictly bounded below the
-    full-history twin."""
-    import time as _time
-
-    from galaxy_spark.registry import all_queries
-    from galaxy_spark.streaming.state_store import (
-        ParquetSessionStore, start_streaming_sessions,
-        streaming_session_rows)
-
-    ev = load_table(spark, SF, "events")
-    src = str(tmp_path / "sr_src")
-    for k in range(3):
-        (ev.filter(F.col("event_id") % 3 == k)
-         .coalesce(1).write.mode("append").parquet(src))
-        _time.sleep(1.1)
-
-    H = 14
-    ret = ParquetSessionStore(spark, str(tmp_path / "sr_ret"),
-                              retention_days=H)
-    ret.delta_threshold = 2          # exercise the delta-fold site
-    full = ParquetSessionStore(spark, str(tmp_path / "sr_full"))
-    for store, ck in ((ret, "sr_ck_r"), (full, "sr_ck_f")):
-        stream = spark.readStream.schema(ev.schema) \
-            .option("maxFilesPerTrigger", 1).parquet(src)
-        q = start_streaming_sessions(stream, store,
-                                     str(tmp_path / ck))
-        q.processAllAvailable()
-        q.stop()
-
-    cutoff = ev.agg(F.max(F.unix_micros("ts"))).collect()[0][0] \
-        - H * 86_400_000_000
-
-    # (a) absorption: retained state == exact state filtered at
-    # the global watermark (whole intervals, e >= cutoff)
-    got_iv = sorted(
-        (r.user_id, tuple(map(tuple, r.ivs)))
-        for r in ret.state().select(
-            "user_id", F.filter("ivs",
-                                lambda iv: iv["e"] >= F.lit(cutoff))
-            .alias("ivs")).filter(F.size("ivs") > 0).collect())
-    want_iv = sorted(
-        (r.user_id, tuple(map(tuple, r.ivs)))
-        for r in full.state().select(
-            "user_id", F.filter("ivs",
-                                lambda iv: iv["e"] >= F.lit(cutoff))
-            .alias("ivs")).filter(F.size("ivs") > 0).collect())
-    assert got_iv == want_iv and len(want_iv) > 5
-
-    # (b) every batch session starting in-window survives with
-    # identical (user, n_events, value, start); the only extras
-    # the reader may add are straddlers (start < cutoff <= end) —
-    # retained whole by design
-    got = {(r.user_id, r.n_events, r.session_value, r.session_start)
-           for r in streaming_session_rows(ret).collect()}
-    batch = all_queries()["events_sessionization"](spark, SF)
-    from datetime import datetime, timezone
-    cut_ts = datetime.fromtimestamp(cutoff / 1e6, tz=timezone.utc)
-    want_in = {(r.user_id, r.n_events, r.session_value,
-                r.session_start)
-               for r in batch.collect()
-               if r.session_start.replace(tzinfo=timezone.utc)
-               >= cut_ts}
-    assert want_in <= got and len(want_in) > 5
-    extras = got - want_in               # straddlers only
-    all_batch = {(r.user_id, r.n_events, r.session_value,
-                  r.session_start) for r in batch.collect()}
-    assert extras <= all_batch
-
-    # (c) bounded state: strictly fewer stored intervals
-    n_ret = ret.state().agg(F.sum(F.size("ivs"))).collect()[0][0]
-    n_full = full.state().agg(F.sum(F.size("ivs"))).collect()[0][0]
-    assert 0 < n_ret < n_full
-
-
-def test_user_day_store_retention_bounds_state(spark, tmp_path):
-    """retention_days=H on the user-day store (the fold_finalize
-    row-eviction seam — the aging column is part of the KEY, so
-    eviction cannot live inside the agg): the decay reader answers
-    exactly the batch decay query over events restricted to the
-    retained window, and state is strictly bounded below the
-    full-history twin. Delta tier on, so the pre-fold, compaction
-    and read-side fold sites all run the finalize filter."""
-    import time as _time
-
-    from galaxy_spark.queries.events import decay_scores_from_events
-    from galaxy_spark.streaming.state_store import (
-        ParquetUserDayStore, start_streaming_user_days,
-        streaming_decay_scores)
-
-    ev = load_table(spark, SF, "events")
-    src = str(tmp_path / "udr_src")
-    for k in range(3):
-        (ev.filter(F.col("event_id") % 3 == k)
-         .coalesce(1).write.mode("append").parquet(src))
-        _time.sleep(1.1)
-
-    H = 14
-    store = ParquetUserDayStore(spark, str(tmp_path / "udr_store"),
-                                retention_days=H)
-    store.delta_threshold = 2
-    full = ParquetUserDayStore(spark, str(tmp_path / "udr_full"))
-    for st, ck in ((store, "udr_ck"), (full, "udr_ck_f")):
-        stream = spark.readStream.schema(ev.schema) \
-            .option("maxFilesPerTrigger", 1).parquet(src)
-        q = start_streaming_user_days(stream, st,
-                                      str(tmp_path / ck))
-        q.processAllAvailable()
-        q.stop()
-
-    cut = ev.agg(F.date_sub(F.max(F.to_date("ts")), H)
-                 .alias("c")).collect()[0].c
-    ev_r = ev.filter(F.to_date("ts") >= F.lit(cut))
-    assert 0 < ev_r.count() < ev.count()
-
-    got = sorted((r.user_id, r.decay_score, r.purchase_score,
-                  r.n_recent)
-                 for r in streaming_decay_scores(store).collect())
-    want = sorted((r.user_id, r.decay_score, r.purchase_score,
-                   r.n_recent)
-                  for r in decay_scores_from_events(ev_r).collect())
-    assert got == want and len(want) >= 10
-
-    assert 0 < store.state().count() < full.state().count()
 
 
 # ------------------------------------------------------------------
@@ -4970,56 +3627,32 @@ def test_streaming_item_cf_basket_cap_matches_capped_batch(
 
 def test_fold_finalize_empty_bucket_slice_still_claims_epoch(
         spark, tmp_path):
-    """r13 review: a retention filter can evict a touched bucket's
-    ENTIRE folded slice — the commit must still publish (an empty
-    0-row version) so the epoch is claimed and replays skip,
-    instead of re-running the fold for that bucket forever."""
-    from datetime import datetime
+    """r13 review: a ``fold_finalize`` filter can drop a touched
+    bucket's ENTIRE folded slice — the commit must still publish
+    (an empty 0-row version) so the epoch is claimed and replays
+    skip, instead of re-running the fold for that bucket forever.
+    The filter is the cooc store's: rows that fold to 0 drop."""
+    store = _sum_store(spark, str(tmp_path / "ef_store"), None)
+    store.fold_finalize = lambda df: df.filter(F.col("v") != 0)
 
-    from galaxy_spark.streaming.state_store import (
-        ParquetUserDayStore, partial_user_days)
+    # two keys hashing to DIFFERENT buckets
+    bmap = {r.k: r.b for r in
+            _batch_df(spark, [(k, 0, "") for k in range(8)])
+            .select("k", store._bucket_expr().alias("b")).collect()}
+    zero_key = 0
+    live_key = next(k for k in bmap if bmap[k] != bmap[zero_key])
 
-    H = 14
-    store = ParquetUserDayStore(spark, str(tmp_path / "ef_store"),
-                                retention_days=H)
+    # ONE batch: a live row + a key whose values cancel to 0, alone
+    # in its bucket — its folded slice is empty
+    batch = _batch_df(spark, [(zero_key, 5, "a"), (zero_key, -5, "b"),
+                              (live_key, 1, "c")])
+    store.merge(batch, "lin.000000000000")
 
-    def ev(user, day_str, typ="view"):
-        return (1, datetime.fromisoformat(day_str + "T12:00:00"),
-                user, typ, 1.0, "{}")
-    schema = ("event_id long, ts timestamp, user_id long, "
-              "event_type string, value double, props string")
-
-    # find two users hashing to DIFFERENT buckets for their days
-    probe = spark.createDataFrame(
-        [ev(u, "2024-01-01") for u in range(8)]
-        + [ev(u, "2024-06-01") for u in range(8)], schema)
-    pk = partial_user_days(probe, H).select("user_id", "day")
-    rows = pk.collect()
-    bmap = {}
-    for r in rows:
-        b = store._buckets_for_keys(
-            pk.filter((F.col("user_id") == r.user_id)
-                      & (F.col("day") == r.day)))[0]
-        bmap[(r.user_id, str(r.day))] = b
-    old_key = next(k for k in bmap if k[1] == "2024-01-01")
-    new_key = next(k for k in bmap if k[1] == "2024-06-01"
-                   and bmap[k] != bmap[old_key])
-
-    # ONE batch: a fresh row (sets the watermark) + a >H-late row
-    # whose bucket holds nothing else — its folded slice is empty
-    batch = spark.createDataFrame(
-        [ev(new_key[0], "2024-06-01"), ev(old_key[0], "2024-01-01")],
-        schema)
-    store.merge(partial_user_days(batch, H), "lin.000000000000")
-
-    b_old = bmap[old_key]
-    assert store._applied(b_old, "lin.000000000000"), \
-        "evicted-slice bucket left unclaimed: every replay refolds"
+    assert store._applied(bmap[zero_key], "lin.000000000000"), \
+        "empty-slice bucket left unclaimed: every replay refolds"
     # the empty version is a legitimate readable slice
-    assert {(r.user_id, str(r.day)) for r in
-            store.state().select("user_id", "day").collect()} \
-        == {(new_key[0], new_key[1])}
+    assert [r.k for r in store.state().collect()] == [live_key]
     # and a replay is the claim-skip no-op, not a rewrite
     before = sorted(map(tuple, store.state().collect()))
-    store.merge(partial_user_days(batch, H), "lin.000000000000")
+    store.merge(batch, "lin.000000000000")
     assert sorted(map(tuple, store.state().collect())) == before
