@@ -101,11 +101,12 @@ ANONYMOUS_GTID_EVENT = 34
 PREVIOUS_GTIDS_EVENT = 35
 TRANSACTION_PAYLOAD_EVENT = 40
 #: MySQL >= 8.3 tagged-GTID transaction header (WL#15294). Its
-#: body uses the mysql::serialization self-describing format, which
-#: this build does not decode — the source's walkers treat it as an
-#: UNDECODABLE transaction boundary (resume-at, never skip-past;
-#: the ANONYMOUS_GTID discipline), and the GtidSet class handles
-#: tagged sets in text/wire form (replication_client.py)
+#: body uses the mysql::serialization self-describing format,
+#: decoded by cdc/mysql_serialization.py; a body that fails its
+#: validation is an undecodable transaction boundary (resume-at,
+#: never skip-past; the ANONYMOUS_GTID discipline), and the GtidSet
+#: class handles tagged sets in text/wire form
+#: (replication_client.py)
 GTID_TAGGED_EVENT = 42
 #: MariaDB's replication event range (>= 160, flavor-specific —
 #: the reference supports the flavor as a one-string go-mysql
@@ -671,6 +672,65 @@ def _detect_checksum(raw_event: bytes) -> bool:
     return True
 
 
+# The GTID body layouts, parsed once for both consumers: decode_binlog
+# (CRC-trimmed bodies) and the source's header walk
+# (sources/binlog_source.py), whose bodies may still carry the 4-byte
+# CRC trailer — every parser reads a fixed prefix or a count-bounded
+# run, so a whole event's trailer is never read as data. Short
+# bodies are refused: a slice past the end would read as zero and
+# fabricate a GTID.
+
+def gtid_text(body: bytes) -> str:
+    """GTID (33) / ANONYMOUS_GTID (34) body -> ``uuid:gno``: 1-byte
+    commit flag, 16-byte SID, u64 GNO (the logical-timestamp fields
+    after them are bookkeeping). An anonymous event's SID/GNO are
+    whatever the writer put on the wire, usually zeros."""
+    if len(body) < 25:
+        raise ValueError(
+            f"corrupt GTID event: body {len(body)} bytes < 25 "
+            "(flag + SID + GNO)")
+    u = body[1:17].hex()
+    gno = int.from_bytes(body[17:25], "little")
+    return (f"{u[0:8]}-{u[8:12]}-{u[12:16]}-{u[16:20]}-{u[20:32]}"
+            f":{gno}")
+
+
+def mariadb_gtid(body: bytes, server_id: int) -> tuple[str, bool]:
+    """MariaDB GTID (162) body -> (``domain-server-seq``,
+    standalone): u64 sequence, u32 domain, u8 flags2 (+ optional
+    commit-id/XA fields the flags gate — skipped). The GTID's
+    server_id is the event HEADER's. Without FL_STANDALONE (0x01)
+    the event opens a transaction group (MariaDB replaces the BEGIN
+    Query with it)."""
+    if len(body) < 13:
+        raise ValueError(
+            f"corrupt MariaDB GTID event: body {len(body)} bytes < 13 "
+            "(seq + domain + flags)")
+    seq = int.from_bytes(body[0:8], "little")
+    domain = int.from_bytes(body[8:12], "little")
+    return f"{domain}-{server_id}-{seq}", bool(body[12] & 0x01)
+
+
+def mariadb_gtid_list(body: bytes) -> list[str]:
+    """MariaDB GTID_LIST (163) body -> ``domain-server-seq`` texts:
+    u32 with the count in the low 28 bits, then count x (u32
+    domain, u32 server_id, u64 seq). The flavor's PREVIOUS_GTIDS
+    analog: the binlog state at segment start."""
+    if len(body) < 4:
+        raise ValueError(
+            f"corrupt MariaDB GTID_LIST event: body {len(body)} "
+            "bytes < 4 (count field)")
+    cnt = int.from_bytes(body[0:4], "little") & 0x0FFFFFFF
+    if 4 + 16 * cnt > len(body):
+        raise ValueError(
+            f"corrupt MariaDB GTID_LIST event: count {cnt} needs "
+            f"{4 + 16 * cnt} body bytes, have {len(body)}")
+    return [f"{int.from_bytes(body[p:p + 4], 'little')}-"
+            f"{int.from_bytes(body[p + 4:p + 8], 'little')}-"
+            f"{int.from_bytes(body[p + 8:p + 16], 'little')}"
+            for p in range(4, 4 + 16 * cnt, 16)]
+
+
 def decode_binlog(blob: bytes) -> list[DecodedEvent]:
     """Decode a binlog byte stream (leading magic optional) into
     DecodedEvents. Sequential: TABLE_MAP state keyed by table_id,
@@ -804,19 +864,11 @@ def decode_binlog(blob: bytes) -> list[DecodedEvent]:
         elif etype == XID_EVENT:
             events.append(DecodedEvent("xid", ts, log_pos))
         elif etype in (GTID_EVENT, ANONYMOUS_GTID_EVENT):
-            # 1 byte commit flag, 16-byte SID (uuid), u64 GNO; the
-            # remaining logical-timestamp fields are bookkeeping.
-            # A real 5.6+ server writes one of these before every
+            # a real 5.6+ server writes one of these before every
             # transaction — a decoder that raises on them cannot
-            # read any real stream.
-            r.u8()
-            sid = r.take(16)
-            gno = r.u64()
-            u = sid.hex()
-            uuid_txt = "-".join((u[0:8], u[8:12], u[12:16],
-                                 u[16:20], u[20:32]))
+            # read any real stream
             events.append(DecodedEvent("gtid", ts, log_pos,
-                                       gtid=f"{uuid_txt}:{gno}"))
+                                       gtid=gtid_text(r.rest())))
         elif etype == PREVIOUS_GTIDS_EVENT:
             # gtid-set payload: positional bookkeeping (first event
             # after the FDE on 5.6+); recognized and carried as an
@@ -919,36 +971,16 @@ def decode_binlog(blob: bytes) -> list[DecodedEvent]:
         elif etype == HEARTBEAT_EVENT:
             events.append(DecodedEvent("heartbeat", ts, log_pos))
         elif etype == MARIADB_GTID_EVENT:
-            # MariaDB GTID (type 162): u64 sequence, u32 domain, u8
-            # flags2 (+ optional commit-id/XA fields the flags gate
-            # — positional bookkeeping, skipped). The GTID's
-            # server_id is the event HEADER's server_id; text form
-            # is domain-server-sequence. An event WITHOUT
-            # FL_STANDALONE (0x01) also opens the transaction group
-            # (MariaDB replaces the BEGIN Query with it).
-            seq = r.u64()
-            domain = r.u32()
-            flags2 = r.u8()
-            events.append(DecodedEvent(
-                "gtid", ts, log_pos,
-                gtid=f"{domain}-{_server_id}-{seq}",
-                standalone=bool(flags2 & 0x01)))
+            gtid, standalone = mariadb_gtid(r.rest(), _server_id)
+            events.append(DecodedEvent("gtid", ts, log_pos, gtid=gtid,
+                                       standalone=standalone))
         elif etype == MARIADB_GTID_LIST_EVENT:
-            # MariaDB GTID_LIST (type 163): the flavor's
-            # PREVIOUS_GTIDS analog — u32 with the count in the low
-            # 28 bits, then count x (u32 domain, u32 server_id,
-            # u64 seq). Carried as text so resume logic can seed
-            # from it (MySQL's PREVIOUS_GTIDS stays opaque for
-            # compatibility with the documented file/pos scope).
-            cnt = r.u32() & 0x0FFFFFFF
-            gtids = []
-            for _ in range(cnt):
-                d = r.u32()
-                s = r.u32()
-                q = r.u64()
-                gtids.append(f"{d}-{s}-{q}")
-            events.append(DecodedEvent("gtid_list", ts, log_pos,
-                                       gtid=",".join(gtids)))
+            # carried as text so resume logic can seed from it
+            # (MySQL's PREVIOUS_GTIDS stays opaque for compatibility
+            # with the documented file/pos scope)
+            events.append(DecodedEvent(
+                "gtid_list", ts, log_pos,
+                gtid=",".join(mariadb_gtid_list(r.rest()))))
         elif etype == MARIADB_ANNOTATE_ROWS_EVENT:
             # MariaDB's ROWS_QUERY analog: the body IS the SQL text
             # (no length byte) — surfaced under the same kind so

@@ -620,7 +620,7 @@ class GtidSet:
             # exact consumption, OR exactly a 4-byte tail: a
             # PREVIOUS_GTIDS body read off a CRC32-checksummed
             # stream carries the event checksum after the set
-            # (binlog_source._decode_prev_at passes the full
+            # (binlog_source._read_gtid_event passes the full
             # esize-19 body) — requiring exact consumption there
             # rejected every REAL tagged declaration (r11 review
             # wave 2 fallout)

@@ -46,8 +46,7 @@ def _symmetrize(edges: DataFrame, src_col: str, dst_col: str) -> DataFrame:
 def connected_components(vertices: DataFrame, edges: DataFrame,
                          id_col: str = "id",
                          src_col: str = "src", dst_col: str = "dst",
-                         max_iter: int = 25,
-                         broadcast_state: bool | None = None) -> DataFrame:
+                         max_iter: int = 25) -> DataFrame:
     """Label every vertex with the smallest vertex id reachable from
     it (its component id). Returns ``(id, component)``.
 
@@ -57,13 +56,11 @@ def connected_components(vertices: DataFrame, edges: DataFrame,
     dedup-cluster graphs that means the edge set isn't the
     quasi-clique shape this operator is documented for.
 
-    ``broadcast_state`` controls the per-round broadcast hints on
-    the edge list and the improvement frame (see the in-loop note).
-    ``None`` (default) size-derives the decision from one count of
-    the already-materialized edge checkpoint against the budget in
-    ``operators.util.bcast_max_rows`` — callers with edge lists
-    past broadcast reach degrade to the shuffle-join plan without
-    editing the operator (r14 verdict/advice).
+    The per-round broadcast hints on the edge list and the
+    improvement frame (see the in-loop note) are size-derived from
+    one count of the already-materialized edge checkpoint against
+    the budget in ``operators.util.bcast_max_rows`` — edge lists
+    past broadcast reach degrade to the shuffle-join plan.
     """
     sym = _symmetrize(edges, src_col, dst_col)
     labels = vertices.select(F.col(id_col).alias("id"),
@@ -71,8 +68,7 @@ def connected_components(vertices: DataFrame, edges: DataFrame,
     # Materialize the (small relative to corpus) edge list once; it
     # is re-joined every round.
     sym = sym.localCheckpoint(eager=True)
-    if broadcast_state is None:
-        broadcast_state = within_broadcast_budget(sym)
+    broadcast_state = within_broadcast_budget(sym)
     # Broadcast discipline (r14): the DUP-PAIR edge list and the
     # per-round improvement frame are both far smaller than the
     # corpus-sized label state (dedup graphs: |E| ~ Σ cluster²,
@@ -115,9 +111,7 @@ def connected_components(vertices: DataFrame, edges: DataFrame,
 def connected_components_fixed(vertices: DataFrame, edges: DataFrame,
                                id_col: str = "id",
                                src_col: str = "src", dst_col: str = "dst",
-                               rounds: int = 6,
-                               broadcast_state: bool | None = None
-                               ) -> DataFrame:
+                               rounds: int = 6) -> DataFrame:
     """``connected_components`` as ONE lazy plan: a fixed number of
     min-propagation rounds with no driver actions, no checkpoints.
 
@@ -139,15 +133,13 @@ def connected_components_fixed(vertices: DataFrame, edges: DataFrame,
     upstream) would re-run every round as the streamed side of a
     broadcast join, which has no exchange for Spark to reuse.
 
-    ``broadcast_state`` gates the per-round hints exactly as in the
-    checked variant. The ``None`` default costs ONE driver action
-    (a count that materializes the lazy edge checkpoint at build
-    time — work the first consumer action pays anyway); callers
-    that need a fully action-free build pass an explicit bool.
+    The per-round hints are size-gated exactly as in the checked
+    variant, at the cost of ONE driver action at build time (a
+    count that materializes the lazy edge checkpoint — work the
+    first consumer action pays anyway).
     """
     sym = _symmetrize(edges, src_col, dst_col).localCheckpoint(eager=False)
-    if broadcast_state is None:
-        broadcast_state = within_broadcast_budget(sym)
+    broadcast_state = within_broadcast_budget(sym)
     labels = vertices.select(F.col(id_col).alias("id"),
                              F.col(id_col).alias("component"))
     # same broadcast discipline as the checked variant above: the
@@ -175,23 +167,20 @@ def components_with_size(vertices: DataFrame, edges: DataFrame,
                          id_col: str = "id",
                          src_col: str = "src",
                          dst_col: str = "dst",
-                         rounds: int | None = 6,
-                         broadcast_state: bool | None = None) -> DataFrame:
+                         rounds: int | None = 6) -> DataFrame:
     """``(id, component, component_size)`` — one shuffle on the
     component id past the propagation fixpoint. ``rounds=None``
     selects the convergence-checked iterative variant; an integer
     selects the lazy fixed-round plan (default: dedup-graph safe).
-    ``broadcast_state`` forwards to the propagation (the size join
-    back onto the labels broadcasts the ≤|components|-row count
-    frame unconditionally — output-contract bounded)."""
+    The propagation's hints are size-gated; the size join back onto
+    the labels broadcasts the ≤|components|-row count frame
+    unconditionally (output-contract bounded)."""
     if rounds is None:
         comp = connected_components(vertices, edges, id_col,
-                                    src_col, dst_col,
-                                    broadcast_state=broadcast_state)
+                                    src_col, dst_col)
     else:
         comp = connected_components_fixed(vertices, edges, id_col,
-                                          src_col, dst_col, rounds,
-                                          broadcast_state=broadcast_state)
+                                          src_col, dst_col, rounds)
     sizes = comp.groupBy("component").agg(
         F.count("*").alias("component_size"))
     # the ≤|components|-row size frame broadcasts back onto the
@@ -202,8 +191,7 @@ def components_with_size(vertices: DataFrame, edges: DataFrame,
 
 
 def degree_orient(edges: DataFrame, src_col: str = "src",
-                  dst_col: str = "dst",
-                  broadcast_state: bool | None = None) -> DataFrame:
+                  dst_col: str = "dst") -> DataFrame:
     """Re-orient an UNDIRECTED edge set so every edge points from
     its lower-degree endpoint to its higher-degree one (ties broken
     by id) — the classic skew fix for triangle counting
@@ -222,13 +210,11 @@ def degree_orient(edges: DataFrame, src_col: str = "src",
     Plan: one degree aggregation over the symmetrized ends (one
     shuffle), then a (|V| rows) degree join onto each endpoint, and
     a scan-local CASE to flip. The degree join broadcasts only when
-    |V| fits the budget in ``operators.util.bcast_max_rows``
-    (``broadcast_state=None``, the default: the degree frame is
-    localCheckpointed and counted once, like
+    |V| fits the budget in ``operators.util.bcast_max_rows`` (the
+    degree frame is localCheckpointed and counted once, like
     ``connected_components``' edge list); past it, e.g. at
-    billion-node |V|, it is a shuffle join. ``True``/``False``
-    force the choice. Cost is O(|E|) with no new skew: degrees
-    partial-aggregate map-side.
+    billion-node |V|, it is a shuffle join. Cost is O(|E|) with no
+    new skew: degrees partial-aggregate map-side.
     """
     # _symmetrize always emits columns named src/dst — group on
     # those, not the caller's names (non-default src_col/dst_col
@@ -236,9 +222,8 @@ def degree_orient(edges: DataFrame, src_col: str = "src",
     sym = _symmetrize(edges, src_col, dst_col)
     deg = (sym.groupBy(F.col("src").alias("node"))
            .agg(F.count("*").alias("deg")))
-    if broadcast_state is None:
-        deg = deg.localCheckpoint(eager=False)
-        broadcast_state = within_broadcast_budget(deg)
+    deg = deg.localCheckpoint(eager=False)
+    broadcast_state = within_broadcast_budget(deg)
     da = deg.select(F.col("node").alias("__a"), F.col("deg").alias("da"))
     db = deg.select(F.col("node").alias("__b"), F.col("deg").alias("db"))
     lower_first = ((F.col("da") < F.col("db"))
@@ -255,9 +240,7 @@ def degree_orient(edges: DataFrame, src_col: str = "src",
                     .otherwise(F.col(src_col)).alias(dst_col)))
 
 
-def triangle_count_oriented(edges: DataFrame,
-                            broadcast_state: bool | None = None
-                            ) -> DataFrame:
+def triangle_count_oriented(edges: DataFrame) -> DataFrame:
     """Edge-iterator triangle count over a DEGREE-ORIENTED edge set
     (see degree_orient): same successor-adjacency intersect plan as
     the registered graph_triangle_count query, but with adjacency
@@ -266,10 +249,9 @@ def triangle_count_oriented(edges: DataFrame,
     single row (n_triangles,). The closure condition intersects
     succ(a) with succ(b) for each oriented edge (a, b); because the
     orientation is acyclic, every triangle is counted exactly once
-    from its unique source-of-two-edges node. ``broadcast_state``
-    forwards to ``degree_orient`` (None = size-derived)."""
-    oriented = degree_orient(edges, broadcast_state=broadcast_state) \
-        .localCheckpoint(eager=False)
+    from its unique source-of-two-edges node. The degree join is
+    size-gated in ``degree_orient``."""
+    oriented = degree_orient(edges).localCheckpoint(eager=False)
     adj = oriented.groupBy("src").agg(
         F.sort_array(F.collect_set("dst")).alias("succ"))
     per_edge = (oriented

@@ -74,10 +74,23 @@ from __future__ import annotations
 
 import os
 from collections.abc import Iterator, Sequence
+from typing import NamedTuple
 
 from pyspark.sql.datasource import (DataSource, DataSourceStreamReader,
                                     InputPartition)
 from pyspark.sql.types import StructType
+
+from galaxy_spark.cdc.binlog import (ANONYMOUS_GTID_EVENT,
+                                     FORMAT_DESCRIPTION_EVENT,
+                                     GTID_EVENT, GTID_TAGGED_EVENT,
+                                     MARIADB_GTID_EVENT,
+                                     MARIADB_GTID_LIST_EVENT,
+                                     PREVIOUS_GTIDS_EVENT, QUERY_EVENT,
+                                     XID_EVENT, gtid_text, mariadb_gtid,
+                                     mariadb_gtid_list)
+from galaxy_spark.cdc.mysql_serialization import (decode_tagged_gtid,
+                                                  tagged_gtid_text)
+from galaxy_spark.cdc.replication_client import GtidSet, MariaDbGtidSet
 
 SCHEMA = ("database string, `table` string, action string, "
           "org_row array<array<string>>, ts_sec bigint, "
@@ -118,19 +131,16 @@ def _segments(path: str) -> list[str]:
 def _walk_event_headers(f, size: int, start: int | None = None):
     """Iterate COMPLETE event headers in an open segment file:
     yields ``(pos, etype, esize, log_pos, ts)`` per event and stops
-    at the last whole-event boundary — a torn trailing event (the
-    writer mid-append) or garbage tail ends the walk instead of
-    raising. Seeks + 19-byte header reads only, no payload decode.
-    ONE implementation of the torn-tail boundary rule, shared by
-    ``_aligned_end``, the GTID auto-position scan, the continuous
-    GTID tracker, and the timestamp seek (divergent copies were an
-    r8 review finding).
+    at the last whole-event boundary at or before ``size`` — a torn
+    trailing event (the writer mid-append) or garbage tail ends the
+    walk instead of raising, and a ``size`` below the file's
+    length bounds the walk at an offset. Seeks + 19-byte header
+    reads only, no payload decode. ONE implementation of the
+    torn-tail boundary rule, shared by ``_aligned_end``, the
+    segment fingerprint and ``_walk_segments``.
 
     ``start``: resume the walk at a KNOWN event boundary (>= 4,
-    past the magic) instead of the file head — the incremental
-    GTID tracker's steady-state path (r9 review: restarting at
-    byte 0 every micro-batch made the growing tail segment's walk
-    quadratic over its lifetime)."""
+    past the magic) instead of the file head."""
     if start is not None:
         pos = start
     else:
@@ -145,6 +155,38 @@ def _walk_event_headers(f, size: int, start: int | None = None):
                int.from_bytes(head[13:17], "little"),
                int.from_bytes(head[0:4], "little"))
         pos += esize
+
+
+def _walk_segments(path: str, upto: tuple | None = None,
+                   after: tuple = ("", 0)):
+    """The one header walk ACROSS segments, shared by the GTID
+    auto-position scan, the executed-set scan (stateless and
+    incremental) and the timestamp seek: yields ``(segment, open
+    file, headers)`` per segment in rotation order, ``headers``
+    being that segment's ``_walk_event_headers`` — callers stop
+    anywhere by returning. ``after=(file, pos)`` resumes at a
+    watermark: earlier segments are skipped and ``file`` is walked
+    from ``pos`` (an event boundary: offsets are aligned ends), so
+    a growing tail segment is never re-walked from byte 0 every
+    micro-batch (that made its cost quadratic over the segment's
+    lifetime). ``upto=(file, pos)`` stops at that offset: later
+    segments stay unopened and ``file``'s walk ends with the last
+    event ending at or before ``pos``."""
+    for s in _segments(path):
+        k = _seg_key(s)
+        if after[0] and k < _seg_key(after[0]):
+            continue
+        if upto is not None and k > _seg_key(upto[0]):
+            return
+        fpath = os.path.join(path, s)
+        size = os.path.getsize(fpath)
+        if upto is not None and s == upto[0]:
+            size = min(size, upto[1])
+        with open(fpath, "rb") as f:
+            yield s, f, _walk_event_headers(
+                f, size,
+                start=after[1] if s == after[0] and after[1] >= 4
+                else None)
 
 
 def _aligned_end(fpath: str) -> int:
@@ -165,22 +207,31 @@ def _aligned_end(fpath: str) -> int:
     return end
 
 
-def _read_gtid(f, pos: int, esize: int, where: str) -> str:
-    """``uuid:gno`` from a GTID event at ``pos`` in an open segment
-    (the walker's file handle; it reseeks per event, so reading here
-    is safe). A GTID event shorter than header + flag/SID/GNO (44
-    bytes) cannot carry a full transaction id — refused loudly, not
-    sliced into a silently-wrong GNO (r9 advice)."""
-    if esize < 19 + 25:
-        raise ValueError(
-            f"corrupt GTID event at {where}: size {esize} < 44 "
-            "(header + flag/SID/GNO)")
-    f.seek(pos + 19)
-    body = f.read(25)
-    sid = body[1:17].hex()
-    gno = int.from_bytes(body[17:25], "little")
-    return (f"{sid[0:8]}-{sid[8:12]}-{sid[12:16]}-"
-            f"{sid[16:20]}-{sid[20:32]}:{gno}")
+class _Flavor(NamedTuple):
+    """A GTID flavor: the executed-set class and the event types
+    every GTID-bearing path resolves through. MySQL: uuid:interval
+    sets over GTID/ANONYMOUS_GTID/PREVIOUS_GTIDS/GTID_TAGGED events
+    (33/34/35/42). MariaDB: domain-server-seq positions over
+    GTID/GTID_LIST events (162/163) — no anonymous mode (GTIDs are
+    always on since 10.0), no tags, and GTID_LIST plays
+    PREVIOUS_GTIDS' purge-gate/seed role. The reference flips
+    go-mysql's one-string Flavor config (sync.go:47)."""
+
+    gset: type
+    gtid: int
+    anon: int | None
+    prev: int
+    tagged: int | None
+    prev_name: str
+
+
+_FLAVORS = {
+    "mysql": _Flavor(GtidSet, GTID_EVENT, ANONYMOUS_GTID_EVENT,
+                     PREVIOUS_GTIDS_EVENT, GTID_TAGGED_EVENT,
+                     "PREVIOUS_GTIDS"),
+    "mariadb": _Flavor(MariaDbGtidSet, MARIADB_GTID_EVENT, None,
+                       MARIADB_GTID_LIST_EVENT, None, "GTID_LIST"),
+}
 
 
 #: Query prefixes that leave the enclosing transaction OPEN — BEGIN
@@ -253,125 +304,50 @@ class BinlogStreamReader(DataSourceStreamReader):
                 f"include={self.include!r}: expected 'rows' (row "
                 "changes) or 'ddl' (QUERY events for the schema-"
                 "evolution path)")
-        #: GTID flavor: MySQL uuid:interval sets over
-        #: GTID/PREVIOUS_GTIDS events (33/34/35) vs MariaDB
-        #: domain-server-seq positions over GTID/GTID_LIST events
-        #: (162/163). The reference flips go-mysql's one-string
-        #: Flavor config (sync.go:47); here every GTID-bearing
-        #: code path (auto-position scan, continuous tracker,
-        #: failover gates, purge checks) resolves its event types,
-        #: set class and event reader through this seam.
+        #: GTID flavor (``_FLAVORS``): every GTID-bearing path —
+        #: auto-position scan, executed-set tracker, failover gates,
+        #: purge checks, timestamp seek — resolves its set class and
+        #: event types through this one table entry
         self.flavor = options.get("flavor", "mysql")
-        if self.flavor not in ("mysql", "mariadb"):
+        if self.flavor not in _FLAVORS:
             raise ValueError(
                 f"flavor={self.flavor!r}: expected 'mysql' or "
                 "'mariadb'")
+        self._fl = _FLAVORS[self.flavor]
 
-    # -- flavor seam (event types, set class, event readers) -------
-    def _gset_cls(self):
-        from galaxy_spark.cdc.replication_client import (GtidSet,
-                                                         MariaDbGtidSet)
-
-        return MariaDbGtidSet if self.flavor == "mariadb" else GtidSet
-
-    def _etypes(self) -> tuple[int, int | None, int]:
-        """(gtid_etype, anonymous_etype | None, previous_etype) for
-        the flavor. MariaDB has no anonymous-GTID mode (GTIDs are
-        always on since 10.0), and GTID_LIST plays PREVIOUS_GTIDS'
-        purge-gate/seed role."""
-        from galaxy_spark.cdc.binlog import (ANONYMOUS_GTID_EVENT,
-                                             GTID_EVENT,
-                                             MARIADB_GTID_EVENT,
-                                             MARIADB_GTID_LIST_EVENT,
-                                             PREVIOUS_GTIDS_EVENT)
-
-        if self.flavor == "mariadb":
-            return (MARIADB_GTID_EVENT, None, MARIADB_GTID_LIST_EVENT)
-        return (GTID_EVENT, ANONYMOUS_GTID_EVENT, PREVIOUS_GTIDS_EVENT)
-
-    def _tagged_et(self) -> int | None:
-        """MySQL >= 8.3 GTID_TAGGED_EVENT (42) for the mysql
-        flavor, else None. Since r12 its mysql::serialization body
-        IS decoded (``cdc/mysql_serialization.py``), so the
-        auto-position scan treats a tagged transaction as a
-        first-class anchor — skip when the carried set covers its
-        (uuid, tag, gno), resume at it otherwise — and executed-set
-        tracking accumulates tagged transactions. Any body that
-        fails the decoder's validation falls back to the r11
-        conservative boundary (resume AT the event: re-delivery,
-        never a silent skip — the ANONYMOUS_GTID discipline). The
-        timestamp seek anchors on it like any transaction opener."""
-        from galaxy_spark.cdc.binlog import GTID_TAGGED_EVENT
-
-        return GTID_TAGGED_EVENT if self.flavor != "mariadb" else None
-
-    @staticmethod
-    def _read_tagged_at(f, pos: int, esize: int) -> str | None:
-        """GTID text (``uuid:tag:gno``) from a GTID_TAGGED_EVENT
-        during a header walk, or None when the body does not
-        validate (callers then take the conservative path). The
-        walk read includes the CRC trailer when checksums are on
-        and the walk cannot know the mode — crc_tail=True tolerates
-        exactly that tail."""
-        from galaxy_spark.cdc.mysql_serialization import (
-            decode_tagged_gtid, tagged_gtid_text)
-
-        f.seek(pos + 19)
-        parsed = decode_tagged_gtid(f.read(esize - 19),
-                                    crc_tail=True)
-        return tagged_gtid_text(parsed) if parsed else None
-
-    def _read_gtid_at(self, f, pos: int, esize: int,
-                      where: str) -> str:
-        """Flavor-aware GTID text from a GTID event during a header
-        walk. MariaDB: the GTID's server_id lives in the event
-        HEADER (bytes 5..9); the body leads with u64 sequence + u32
-        domain."""
-        if self.flavor == "mysql":
-            return _read_gtid(f, pos, esize, where)
-        if esize < 19 + 13:
+    def _read_gtid_event(self, f, pos: int, etype: int, esize: int):
+        """The one GTID event reader of the header walks, for an
+        event whose type the caller already matched against the
+        flavor's GTID, previous-set or tagged type: returns
+        ``("prev", set)`` for a PREVIOUS_GTIDS / GTID_LIST
+        declaration, else ``("gtid", text)``. The text is None for
+        a tagged body that fails validation: callers then resume AT
+        the event and never claim it executed (re-delivery, never
+        a silent skip — the ANONYMOUS_GTID discipline). The body
+        read carries the CRC trailer when checksums are on (the
+        walk cannot know the mode); every parser tolerates exactly
+        that tail."""
+        f.seek(pos)
+        raw = f.read(esize)
+        body = raw[19:]
+        try:
+            if etype == self._fl.prev:
+                if self._fl.gset is GtidSet:
+                    return "prev", GtidSet.decode(body)
+                return "prev", MariaDbGtidSet.parse(
+                    ",".join(mariadb_gtid_list(body)))
+            if etype == self._fl.tagged:
+                parsed = decode_tagged_gtid(body, crc_tail=True)
+                return "gtid", (tagged_gtid_text(parsed) if parsed
+                                else None)
+            if self._fl.gset is MariaDbGtidSet:
+                return "gtid", mariadb_gtid(
+                    body, int.from_bytes(raw[5:9], "little"))[0]
+            return "gtid", gtid_text(body)
+        except ValueError as exc:
             raise ValueError(
-                f"corrupt MariaDB GTID event at {where}: size "
-                f"{esize} < 32 (header + seq/domain/flags)")
-        f.seek(pos + 5)
-        server_id = int.from_bytes(f.read(4), "little")
-        f.seek(pos + 19)
-        body = f.read(12)
-        seq = int.from_bytes(body[0:8], "little")
-        domain = int.from_bytes(body[8:12], "little")
-        return f"{domain}-{server_id}-{seq}"
-
-    def _decode_prev_at(self, f, pos: int, esize: int):
-        """Flavor-aware executed-set decode of a PREVIOUS_GTIDS /
-        GTID_LIST event body during a header walk."""
-        from galaxy_spark.cdc.replication_client import GtidSet
-
-        f.seek(pos + 19)
-        body = f.read(esize - 19)
-        if self.flavor == "mysql":
-            return GtidSet.decode(body)
-        out = self._gset_cls()()
-        if len(body) < 4:
-            raise ValueError(
-                f"corrupt MariaDB GTID_LIST event: body {len(body)} "
-                "bytes < 4 (count field)")
-        cnt = int.from_bytes(body[0:4], "little") & 0x0FFFFFFF
-        if 4 + 16 * cnt > len(body):
-            # refuse-don't-guess (the _read_gtid discipline):
-            # out-of-range reads would int.from_bytes(b'') == 0 and
-            # silently fabricate 0-0-0 entries into the executed
-            # set the purge/history gates compare against
-            raise ValueError(
-                f"corrupt MariaDB GTID_LIST event: count {cnt} "
-                f"needs {4 + 16 * cnt} body bytes, have {len(body)}")
-        p = 4
-        for _ in range(cnt):
-            d = int.from_bytes(body[p:p + 4], "little")
-            s = int.from_bytes(body[p + 4:p + 8], "little")
-            q = int.from_bytes(body[p + 8:p + 16], "little")
-            out.add(f"{d}-{s}-{q}")
-            p += 16
-        return out
+                f"{exc} (at {os.path.basename(f.name)}:{pos})") \
+                from None
 
     def _end_of_dir(self) -> dict:
         segs = _segments(self.path)
@@ -415,8 +391,6 @@ class BinlogStreamReader(DataSourceStreamReader):
         file's FDE carries ITS creation time/server). Append-only
         means neither part can change on the same history: zero
         false positives. A few 19-byte reads."""
-        from galaxy_spark.cdc.binlog import FORMAT_DESCRIPTION_EVENT
-
         fpath = os.path.join(self.path, fname)
         if not os.path.exists(fpath):
             return None
@@ -458,7 +432,7 @@ class BinlogStreamReader(DataSourceStreamReader):
         self._start_verified = True
         return off
 
-    def _offset_after_gtids(self, gtid_text: str) -> dict:
+    def _offset_after_gtids(self, gtids: str) -> dict:
         """GTID auto-position over segment files: the offset just
         BEFORE the first GTID event not covered by the executed
         set — the file-tier twin of COM_BINLOG_DUMP_GTID (the
@@ -466,10 +440,10 @@ class BinlogStreamReader(DataSourceStreamReader):
         One driver-side scan at FIRST start only; the checkpoint
         owns position afterward.
 
-        The scan is a seek-based HEADER WALK (shared
-        ``_walk_event_headers``), not a decode: only event headers
-        (19 bytes) plus GTID event bodies (25 bytes: flag + SID +
-        GNO at fixed offsets) are read, so locating the resume
+        The scan is a seek-based HEADER WALK (``_walk_segments``),
+        not a decode: only event headers (19 bytes) plus the bodies
+        of GTID-bearing events (one per transaction, plus one set
+        declaration per segment) are read, so locating the resume
         point in a directory of 1 GB segments costs O(event
         headers) seeks, never gigabytes of row-image decode on the
         driver; torn trailing events end the walk at the last
@@ -479,119 +453,90 @@ class BinlogStreamReader(DataSourceStreamReader):
         transactions) are NEVER covered by an executed set — no
         set names them — so the scan resumes at the first one it
         meets, matching MySQL's own auto-position (which always
-        sends anonymous transactions). Skipping them silently
-        dropped those transactions (r8 review finding). MariaDB
-        flavor: GTID events are type 162, GTID_LIST (163) plays
-        the PREVIOUS_GTIDS purge-gate role, and no anonymous mode
-        exists."""
-        gtid_et, anon_et, prev_et = self._etypes()
-        tagged_et = self._tagged_et()
-        gset = self._gset_cls().parse(gtid_text)
-        segs = _segments(self.path)
-        for i, s in enumerate(segs):
-            fpath = os.path.join(self.path, s)
-            size = os.path.getsize(fpath)
-            with open(fpath, "rb") as f:
-                prev_end = 0
-                for pos, etype, esize, log_pos, _ts in \
-                        _walk_event_headers(f, size):
-                    if i == 0 and etype == prev_et:
+        sends anonymous transactions). A tagged transaction (8.3+)
+        is skipped only on proven coverage of its (uuid, tag, gno);
+        a body that fails validation resumes AT the event."""
+        fl = self._fl
+        gset = fl.gset.parse(gtids)
+        reads = (fl.gtid, fl.prev, fl.tagged)
+        for i, (s, f, headers) in enumerate(_walk_segments(self.path)):
+            prev_end = 0
+            for pos, etype, esize, log_pos, _ts in headers:
+                if etype == fl.anon:
+                    return {"file": s, "pos": prev_end}
+                if etype in reads:
+                    kind, got = self._read_gtid_event(f, pos, etype,
+                                                      esize)
+                    if kind == "gtid" and (got is None
+                                           or not gset.covers(got)):
+                        return {"file": s, "pos": prev_end}
+                    if kind == "prev" and i == 0 \
+                            and not gset.covers_set(got):
                         # MySQL's own purged-gap gate (error 1236):
                         # the first retained segment declares the
                         # executed set of everything BEFORE it; any
                         # transaction there that our set has not
                         # executed lives only in purged files —
-                        # resuming would silently skip it.
-                        # (MariaDB's GTID_LIST declares the binlog
-                        # state at segment start — same gate.)
-                        prev = self._decode_prev_at(f, pos, esize)
-                        if not gset.covers_set(prev):
-                            noun = ("GTID_LIST"
-                                    if self.flavor == "mariadb"
-                                    else "PREVIOUS_GTIDS")
-                            raise ValueError(
-                                f"cannot auto-position: the first "
-                                f"retained segment {s!r} declares "
-                                f"{noun} {prev} not covered "
-                                f"by the executed set {gset} — the "
-                                "gap was purged with the earlier "
-                                "segments (error 1236 analog); "
-                                "recover with a fresh checkpoint "
-                                "(recovery_v2) or restore the "
-                                "segments")
-                    if anon_et is not None and etype == anon_et:
-                        return {"file": s, "pos": prev_end}
-                    if tagged_et is not None and etype == tagged_et:
-                        # tagged transaction (8.3+): decode the
-                        # (uuid, tag, gno) anchor and skip ONLY on
-                        # proven coverage; a body that fails
-                        # validation resumes AT the event (r11
-                        # conservative path — re-delivery of a
-                        # covered transaction is recoverable,
-                        # skipping an uncovered one is data loss)
-                        tg = self._read_tagged_at(f, pos, esize)
-                        if tg is None or not gset.covers(tg):
-                            return {"file": s, "pos": prev_end}
-                    if etype == gtid_et:
-                        gtid = self._read_gtid_at(f, pos, esize,
-                                                  f"{s}:{pos}")
-                        if not gset.covers(gtid):
-                            return {"file": s, "pos": prev_end}
-                    prev_end = log_pos
+                        # resuming would silently skip it
+                        raise ValueError(
+                            f"cannot auto-position: the first "
+                            f"retained segment {s!r} declares "
+                            f"{fl.prev_name} {got} not covered "
+                            f"by the executed set {gset} — the "
+                            "gap was purged with the earlier "
+                            "segments (error 1236 analog); "
+                            "recover with a fresh checkpoint "
+                            "(recovery_v2) or restore the "
+                            "segments")
+                prev_end = log_pos
         return self._end_of_dir()       # whole directory covered
 
     def _tracker(self):
         """The lazily-initialized executed-GTID tracker (set +
         name-based walk watermark), flavor-typed."""
-        cls = self._gset_cls()
         if not hasattr(self, "_gtids"):
             #: the consumer-executed seed (startingGtids) is kept
             #: separately: those transactions were delivered BEFORE
             #: this stream, so their absence from a post-failover
             #: directory is not data loss (the deletion gate must
             #: not demand them)
-            self._seed = (cls.parse(self.starting_gtids)
-                          if self.starting_gtids else cls())
-            self._gtids = cls()
+            self._seed = (self._fl.gset.parse(self.starting_gtids)
+                          if self.starting_gtids else self._fl.gset())
+            self._gtids = self._fl.gset()
             self._gtids.merge(self._seed)
             self._scan_file, self._scan_pos = "", 0
         return self._gtids
 
     def _scan_gtids(self, file: str | None = None,
-                    pos: int | None = None):
-        """STATELESS executed-set scan of the directory up to
-        (file, pos) — the whole directory when omitted. Includes
-        PREVIOUS_GTIDS declarations (the gtid_purged seeding a real
+                    pos: int | None = None, into=None,
+                    after: tuple = ("", 0)):
+        """Executed-set scan of the directory up to (file, pos) —
+        the whole directory when ``file`` is None — merged into
+        ``into`` (a fresh set by default) and returned. ``after``
+        resumes the walk at a watermark instead of the first
+        segment: ``_gtids_at`` runs this scan from the tracker's
+        watermark into the tracker's set. Includes PREVIOUS_GTIDS
+        / GTID_LIST declarations (the gtid_purged seeding a real
         replica gets at provisioning): history purged before these
         segments is still EXECUTED history, and omitting it made
-        the error-1236 gate fire on healthy streams (r9 review
-        wave 2)."""
-        gtid_et, _anon_et, prev_et = self._etypes()
-        tagged_et = self._tagged_et()
-        out = self._gset_cls()()
-        for s in _segments(self.path):
-            if file and _seg_key(s) > _seg_key(file):
-                break
-            fpath = os.path.join(self.path, s)
-            size = os.path.getsize(fpath)
-            with open(fpath, "rb") as f:
-                for p, etype, esize, _lp, _ts in \
-                        _walk_event_headers(f, size):
-                    if file and s == file and p + esize > pos:
-                        break
-                    if etype == prev_et:
-                        out.merge(self._decode_prev_at(f, p, esize))
-                    elif etype == gtid_et:
-                        out.add(self._read_gtid_at(f, p, esize,
-                                                   f"{s}:{p}"))
-                    elif tagged_et is not None and etype == tagged_et:
-                        tg = self._read_tagged_at(f, p, esize)
-                        if tg is not None:
-                            # an unvalidatable body stays untracked:
-                            # the carried set then under-covers and
-                            # resume falls back to the conservative
-                            # boundary — never a false claim
-                            out.add(tg)
+        carried sets regress on restart and the error-1236 gate
+        fire on healthy streams. A tagged body that fails
+        validation stays untracked: the carried set then
+        under-covers and resume falls back to the conservative
+        boundary — never a false claim."""
+        fl = self._fl
+        out = fl.gset() if into is None else into
+        reads = (fl.gtid, fl.prev, fl.tagged)
+        upto = None if file is None else (file, pos)
+        for _s, f, headers in _walk_segments(self.path, upto, after):
+            for p, etype, esize, _lp, _ts in headers:
+                if etype in reads:
+                    kind, got = self._read_gtid_event(f, p, etype,
+                                                      esize)
+                    if kind == "prev":
+                        out.merge(got)
+                    elif got is not None:
+                        out.add(got)
         return out
 
     def _gtids_at(self, file: str, pos: int) -> str:
@@ -605,64 +550,24 @@ class BinlogStreamReader(DataSourceStreamReader):
         directory once. This is what makes the offsets themselves
         failover-safe MID-STREAM: every committed offset carries
         the currency that survives a primary's death, not only the
-        first start (r8 carried GTIDs at ``startingGtids``
-        resolution time and went back to bare (file, pos)
-        afterward)."""
-        gtid_et, _anon_et, prev_et = self._etypes()
-        tagged_et = self._tagged_et()
+        first start."""
         self._tracker()
-        target = (_seg_key(file), pos)
-        if target < (_seg_key(self._scan_file), self._scan_pos):
+        if (_seg_key(file), pos) < (_seg_key(self._scan_file),
+                                    self._scan_pos):
             # the watermark is already PAST the target: the
             # incremental tracker's set was computed for a LATER
             # boundary, so returning it would overstate this
             # offset's executed set — GTIDs between the target and
             # the watermark would be stamped as executed on an
             # offset that precedes them, and a relocation through
-            # that offset would skip them (r9 ADVICE, low). Rare
-            # path (latestOffset is monotone); recompute statelessly
-            # for exactly this boundary instead.
+            # that offset would skip them. Rare path (latestOffset
+            # is monotone); recompute statelessly for exactly this
+            # boundary instead.
             out = self._scan_gtids(file, pos)
             out.merge(self._seed)
             return str(out)
-        for s in _segments(self.path):
-            k = _seg_key(s)
-            if self._scan_file and k < _seg_key(self._scan_file):
-                continue                # fully merged already
-            if k > _seg_key(file):
-                break
-            fpath = os.path.join(self.path, s)
-            size = os.path.getsize(fpath)
-            # resume the watermark segment's walk AT the watermark
-            # (an event boundary by construction — offsets are
-            # aligned ends) instead of re-walking from byte 0 every
-            # micro-batch (r9 review: that made the growing tail's
-            # per-trigger cost quadratic over the segment lifetime)
-            start_at = (self._scan_pos
-                        if s == self._scan_file and self._scan_pos >= 4
-                        else None)
-            with open(fpath, "rb") as f:
-                for p, etype, esize, _lp, _ts in \
-                        _walk_event_headers(f, size, start=start_at):
-                    if s == file and p + esize > pos:
-                        break           # beyond the offset
-                    if etype == prev_et:
-                        # gtid_purged seeding: history purged before
-                        # these segments is still EXECUTED history —
-                        # without it the carried sets regress on
-                        # restart and the purged-gap gate misfires
-                        # on healthy streams (r9 review wave 2)
-                        self._gtids.merge(
-                            self._decode_prev_at(f, p, esize))
-                    elif etype == gtid_et:
-                        self._gtids.add(
-                            self._read_gtid_at(f, p, esize,
-                                               f"{s}:{p}"))
-                    elif tagged_et is not None and etype == tagged_et:
-                        tg = self._read_tagged_at(f, p, esize)
-                        if tg is not None:     # unvalidatable body:
-                            self._gtids.add(tg)  # under-cover, never
-                                                 # falsely claim
+        self._scan_gtids(file, pos, into=self._gtids,
+                         after=(self._scan_file, self._scan_pos))
         self._scan_file, self._scan_pos = file, pos
         return str(self._gtids)
 
@@ -685,50 +590,38 @@ class BinlogStreamReader(DataSourceStreamReader):
         decode. Binlog header timestamps are STATEMENT times and
         only per-transaction monotone; the scan takes the first
         match, so a clock wobble across concurrent sessions errs
-        toward replaying slightly more, never skipping."""
-        from galaxy_spark.cdc.binlog import QUERY_EVENT, XID_EVENT
-
-        gtid_et, anon_et, _prev_et = self._etypes()
-        anchor_types = ((gtid_et,) if anon_et is None
-                        else (gtid_et, anon_et))
-        if self._tagged_et() is not None:
-            # a tagged GTID opens a transaction like any other —
-            # anchoring needs only the header type, not the body
-            anchor_types += (self._tagged_et(),)
-        for s in _segments(self.path):
-            fpath = os.path.join(self.path, s)
-            size = os.path.getsize(fpath)
-            with open(fpath, "rb") as f:
-                prev_end = 0
-                anchor = None          # prev_end before the OPEN
+        toward replaying slightly more, never skipping. Every
+        transaction opener anchors — GTID, anonymous and tagged
+        alike — by header type alone."""
+        fl = self._fl
+        anchor_types = (fl.gtid, fl.anon, fl.tagged)
+        for s, f, headers in _walk_segments(self.path):
+            prev_end = 0
+            anchor = None              # prev_end before the OPEN
                                        # transaction's GTID event
-                for pos, etype, esize, log_pos, ev_ts in \
-                        _walk_event_headers(f, size):
-                    if etype in anchor_types:
-                        anchor = prev_end
-                    if ev_ts >= ts:
-                        return {"file": s,
-                                "pos": anchor if anchor is not None
-                                else prev_end}
-                    if etype == XID_EVENT:
-                        anchor = None  # transaction closed: a later
+            for pos, etype, esize, log_pos, ev_ts in headers:
+                if etype in anchor_types:
+                    anchor = prev_end
+                if ev_ts >= ts:
+                    return {"file": s,
+                            "pos": anchor if anchor is not None
+                            else prev_end}
+                if etype == XID_EVENT:
+                    anchor = None      # transaction closed: a later
                                        # match must not replay it
-                    elif etype == QUERY_EVENT and anchor is not None:
-                        # a COMMITTING Query also CLOSES the GTID
-                        # transaction (auto-commit DDL, MyISAM
-                        # COMMIT); leaving the anchor set replays a
-                        # committed transaction when the first
-                        # at/past-instant event is GTID-less (r9
-                        # review). Queries that legitimately occur
-                        # INSIDE an open row-format transaction
-                        # (BEGIN, SAVEPOINT, ROLLBACK TO, XA
-                        # START/END) must KEEP it — clearing on them
-                        # produced the torn mid-transaction resume
-                        # the suffix heuristic's first cut allowed
-                        # (review wave 2).
-                        if not _query_keeps_txn_open(f, pos, esize):
-                            anchor = None
-                    prev_end = log_pos
+                elif etype == QUERY_EVENT and anchor is not None:
+                    # a COMMITTING Query also CLOSES the GTID
+                    # transaction (auto-commit DDL, MyISAM COMMIT);
+                    # leaving the anchor set replays a committed
+                    # transaction when the first at/past-instant
+                    # event is GTID-less. Queries that legitimately
+                    # occur INSIDE an open row-format transaction
+                    # (BEGIN, SAVEPOINT, ROLLBACK TO, XA START/END)
+                    # must KEEP it — clearing on them produces a
+                    # torn mid-transaction resume.
+                    if not _query_keeps_txn_open(f, pos, esize):
+                        anchor = None
+                prev_end = log_pos
         return self._end_of_dir()      # instant is past the stream
 
     def latestOffset(self) -> dict:
@@ -848,7 +741,7 @@ class BinlogStreamReader(DataSourceStreamReader):
         different byte offsets passes this gate; full detection
         needs per-event content digests the binlog format does not
         carry."""
-        carried = self._gset_cls().parse(start["gtids"])
+        carried = self._fl.gset.parse(start["gtids"])
         observed = self._scan_gtids(start["file"], start["pos"])
         if not carried.covers_set(observed):
             raise ValueError(

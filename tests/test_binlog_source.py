@@ -1620,6 +1620,146 @@ def test_gtids_at_below_watermark_recomputes_statelessly(tmp_path):
         "boundary, not echoed from the later watermark"
 
 
+_AGREE_SID = "0f81a2b3c4d5e6f7081922aabbccddee"
+_AGREE_UUID = "0f81a2b3-c4d5-e6f7-0819-22aabbccddee"
+
+
+def _agree_segments(case: str) -> tuple[list[bytes], str, dict]:
+    """Two segments of one GTID flavor for the decoder/walk
+    agreement test: (segment bytes, the first segment's
+    PREVIOUS_GTIDS declaration text or "", reader options)."""
+    from tests.fixtures.binlog_wire_encoder import (LONG, VARCHAR,
+                                                    BinlogWriter)
+
+    cols = [(LONG, 0), (VARCHAR, 64)]
+
+    def rows(w, v):
+        w.table_map(7, "shop", "orders", cols)
+        w.write_rows(7, cols, [[v, f"o-{v}"]])
+        w.xid(900 + v)
+
+    segs = []
+    for n in (0, 1):
+        if case == "mariadb_gtid_list":
+            w = BinlogWriter(server_id=41)
+            w.format_description()
+            w.mariadb_gtid_list([(0, 41, 2 + 2 * n), (1, 7, 9)])
+            for seq in (3 + 2 * n, 4 + 2 * n):
+                w.mariadb_gtid(0, seq)
+                rows(w, seq)
+            w.mariadb_gtid(2, 1 + n, server_id=52, standalone=True)
+            w.query("shop", "CREATE TABLE t (a INT)")
+        else:
+            w = BinlogWriter(checksum="none" if case == "mysql_none"
+                             else "crc32")
+            w.format_description()
+            if n == 0:
+                w.previous_gtids(_AGREE_SID, 3)    # declares 1-2
+            for g in (3 + 2 * n, 4 + 2 * n):
+                w.gtid(_AGREE_SID, g)
+                w.query("shop", "BEGIN")
+                rows(w, g)
+            if case == "mysql_tagged":
+                w.tagged_gtid(_AGREE_SID, 1 + n, tag="patch")
+                w.query("shop", "BEGIN")
+                rows(w, 50 + n)
+        segs.append(w.bytes())
+    if case == "mariadb_gtid_list":
+        return segs, "", {"flavor": "mariadb"}
+    return segs, f"{_AGREE_UUID}:1-2", {}
+
+
+@pytest.mark.parametrize("case", ["mysql_none", "mysql_crc32",
+                                  "mysql_tagged", "mariadb_gtid_list"])
+def test_decoder_and_header_walk_read_the_same_gtids(tmp_path, case):
+    """The two consumers of the GTID body layouts agree: the
+    executed set the source's header walk builds (``_scan_gtids``)
+    equals the union of the GTID texts and GTID_LIST entries
+    ``decode_binlog`` reports plus the PREVIOUS_GTIDS declaration,
+    over both checksum modes, tagged GTIDs and the MariaDB flavor."""
+    from galaxy_spark.cdc.binlog import decode_binlog
+
+    segs, declared, opts = _agree_segments(case)
+    d = str(tmp_path / case)
+    os.makedirs(d)
+    for i, blob in enumerate(segs, 1):
+        with open(os.path.join(d, f"binlog.00000{i}.bin"), "wb") as f:
+            f.write(blob)
+    rd = _mk_reader(d, **opts)
+    want = rd._fl.gset.parse(declared)
+    n_gtids = 0
+    for blob in segs:
+        for ev in decode_binlog(blob):
+            if ev.kind in ("gtid", "gtid_tagged"):
+                want.add(ev.gtid)
+                n_gtids += 1
+            elif ev.kind == "gtid_list":
+                for g in filter(None, ev.gtid.split(",")):
+                    want.add(g)
+    assert n_gtids >= 4
+    assert str(rd._scan_gtids()) == str(want)
+    if case == "mysql_tagged":
+        assert want.covers(f"{_AGREE_UUID}:patch:2")
+
+
+def test_steady_state_tracker_walks_only_the_tail(tmp_path,
+                                                  monkeypatch):
+    """The executed-GTID tracker resumes at its watermark: after a
+    first latestOffset, appending transactions and asking again
+    walks the segment from the previous aligned end and reads only
+    the new events' headers — re-walking from byte 0 every
+    micro-batch would make a growing segment's cost quadratic."""
+    import galaxy_spark.sources.binlog_source as S
+    from tests.fixtures.binlog_wire_encoder import (LONG, VARCHAR,
+                                                    BinlogWriter)
+
+    from galaxy_spark.cdc.replication_client import GtidSet
+
+    cols = [(LONG, 0), (VARCHAR, 64)]
+    w = BinlogWriter()
+    w.format_description()
+
+    def txn(g):                         # 5 events per transaction
+        w.gtid(_AGREE_SID, g)
+        w.query("shop", "BEGIN")
+        w.table_map(7, "shop", "orders", cols)
+        w.write_rows(7, cols, [[g, f"o-{g}"]])
+        w.xid(900 + g)
+
+    d = str(tmp_path / "tail")
+    os.makedirs(d)
+    seg = os.path.join(d, "binlog.000001.bin")
+    for g in (1, 2):
+        txn(g)
+    with open(seg, "wb") as f:
+        f.write(w.bytes())
+    rd = _mk_reader(d)
+    first = rd.latestOffset()
+    assert first["pos"] == len(w.bytes())
+
+    for g in (3, 4):
+        txn(g)
+    with open(seg, "ab") as f:
+        f.write(w.bytes()[first["pos"]:])
+
+    walks = []
+    real = S._walk_event_headers
+
+    def spy(f, size, start=None):
+        walk = {"start": start, "headers": 0}
+        walks.append(walk)
+        for h in real(f, size, start=start):
+            walk["headers"] += 1
+            yield h
+
+    monkeypatch.setattr(S, "_walk_event_headers", spy)
+    second = rd.latestOffset()
+    assert second["pos"] == len(w.bytes())
+    assert str(GtidSet.parse(second["gtids"])) == f"{_AGREE_UUID}:1-4"
+    resumed = [x for x in walks if x["start"] is not None]
+    assert resumed == [{"start": first["pos"], "headers": 10}], walks
+
+
 def test_fingerprint_gate_catches_anonymous_same_name_rebuild(
         tmp_path):
     """r9 verdict #8: an ANONYMOUS stream carries gtids='' — the

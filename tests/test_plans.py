@@ -1257,9 +1257,9 @@ def test_degree_orientation_broadcast_is_size_gated(spark, monkeypatch):
 
 
 def test_connected_components_gate_preserves_results(spark, monkeypatch):
-    """r15 (r14 advice): connected_components(_fixed) take a
-    broadcast_state parameter (None = size-derived); the hinted,
-    unhinted, and budget-0 auto paths must label identically."""
+    """connected_components(_fixed) size-gate their per-round
+    broadcast hints: the default budget (hinted) and budget 0
+    (unhinted, shuffle joins) must label identically."""
     from galaxy_spark.operators.graph import connected_components_fixed
 
     edges = spark.createDataFrame(
@@ -1267,12 +1267,12 @@ def test_connected_components_gate_preserves_results(spark, monkeypatch):
     verts = spark.createDataFrame(
         [(i,) for i in (1, 2, 3, 10, 11, 99)], "id long")
 
-    def comps(**kw):
-        out = connected_components_fixed(verts, edges, rounds=3, **kw)
+    def comps():
+        out = connected_components_fixed(verts, edges, rounds=3)
         return sorted(tuple(r) for r in out.collect())
 
-    base = comps(broadcast_state=True)
+    monkeypatch.delenv("GALAXY_SPARK_BCAST_MAX_ROWS", raising=False)
+    base = comps()
     assert base[-1] == (99, 99), "isolated vertex keeps its id"
-    assert comps(broadcast_state=False) == base
     monkeypatch.setenv("GALAXY_SPARK_BCAST_MAX_ROWS", "0")
     assert comps() == base, "size-derived gate must not change labels"
