@@ -673,12 +673,10 @@ def _detect_checksum(raw_event: bytes) -> bool:
 
 
 # The GTID body layouts, parsed once for both consumers: decode_binlog
-# (CRC-trimmed bodies) and the source's header walk
-# (sources/binlog_source.py), whose bodies may still carry the 4-byte
-# CRC trailer — every parser reads a fixed prefix or a count-bounded
-# run, so a whole event's trailer is never read as data. Short
-# bodies are refused: a slice past the end would read as zero and
-# fabricate a GTID.
+# and the source's header walk (sources/binlog_source.py). Both hand
+# over the exact body, the CRC32 trailer trimmed by the segment's
+# FORMAT_DESCRIPTION checksum mode. Short bodies are refused: a slice
+# past the end would read as zero and fabricate a GTID.
 
 def gtid_text(body: bytes) -> str:
     """GTID (33) / ANONYMOUS_GTID (34) body -> ``uuid:gno``: 1-byte
@@ -887,8 +885,8 @@ def decode_binlog(blob: bytes) -> list[DecodedEvent]:
             from galaxy_spark.cdc.mysql_serialization import (
                 decode_tagged_gtid, tagged_gtid_text)
 
-            # the body is already CRC-trimmed here, so strict mode:
-            # the final bytes parse and validate like any others
+            # the body is CRC-trimmed here: the final bytes parse
+            # and validate like any others
             parsed = decode_tagged_gtid(r.rest())
             events.append(DecodedEvent(
                 "gtid_tagged", ts, log_pos,

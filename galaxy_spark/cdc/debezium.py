@@ -37,6 +37,9 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from galaxy_spark.cdc.projections import attach_schema
+from galaxy_spark.cdc.schema_registry import registry_frame
+
 #: Debezium ``op`` -> reference action. Snapshot reads ("r") are
 #: inserts for a downstream that materializes state (the reference
 #: has no snapshot phase; Debezium's bootstrap IS one). Unmapped ops
@@ -59,8 +62,7 @@ def action_from_op(op: Column) -> Column:
     return out.otherwise(op)
 
 
-def debezium_to_envelope(df: DataFrame,
-                         value_col: str = "value") -> DataFrame:
+def debezium_to_envelope(df: DataFrame) -> DataFrame:
     """Kafka-record frame (``value`` = Debezium JSON bytes/string)
     -> MQEvent-shaped frame (``cdc.envelope.MQ_EVENT_SCHEMA`` columns
     minus ``org_row``, which positional-zips back in via
@@ -74,7 +76,7 @@ def debezium_to_envelope(df: DataFrame,
     precision in ``event_header.timestamp_ms`` alongside the
     reference-shaped seconds field.
     """
-    js = F.col(value_col).cast("string")
+    js = F.col("value").cast("string")
     op = _payload(js, "op")
     return df.select(
         _payload(js, "source.db").alias("database"),
@@ -101,44 +103,32 @@ def positional_org_row(env: DataFrame, registry) -> DataFrame:
     [before, after] (canonical Debezium orientation; the reference
     pairs them inverted — divergence documented in
     ``cdc/envelope.py``). Rows for tables the registry doesn't know
-    get a NULL org_row (quarantine path). The per-table column list
-    is a literal CASE branch — scan-local, no shuffle, no Python.
+    get a NULL org_row (quarantine path). Each row finds its
+    column names through ``projections.attach_schema``'s broadcast
+    join of ``registry_frame`` — no shuffle, no Python, and a plan
+    that does not grow with the registry.
     """
-    def row_from(map_col: str, names: list[str]) -> Column:
-        return F.array(*[F.col(map_col).getItem(n) for n in names])
+    def image(doc: str) -> Column:
+        return F.transform("__cols", lambda n: F.col(doc)[n])
 
-    if not list(registry.tables()):
-        # empty registry: every row takes the quarantine path —
-        # the CASE-chain build below would otherwise emit
-        # F.array(None) and fail analysis instead of returning
-        # NULL org_rows
-        return env.withColumn(
-            "org_row",
-            F.lit(None).cast("array<array<string>>"))
-    before_row, after_row = None, None
-    for db, table in registry.tables():
-        names = registry.column_names(db, table)
-        hit = (F.col("database") == db) & (F.col("table") == table)
-        b, a = row_from("before", names), row_from("after", names)
-        before_row = (F.when(hit, b) if before_row is None
-                      else before_row.when(hit, b))
-        after_row = (F.when(hit, a) if after_row is None
-                     else after_row.when(hit, a))
-    org = (F.when(F.col("action") == "insert", F.array(after_row))
-           .when(F.col("action") == "delete", F.array(before_row))
-           .when(F.col("action") == "update",
-                 F.array(before_row, after_row)))
-    return env.withColumn("org_row", org)
+    action = F.col("action")
+    org = (F.when(action == "insert", F.array(image("after")))
+           .when(action == "delete", F.array(image("before")))
+           .when(action == "update",
+                 F.array(image("before"), image("after"))))
+    return (attach_schema(env, registry_frame(env.sparkSession, registry))
+            .withColumn("org_row",
+                        F.when(F.col("__cols").isNotNull(), org))
+            .drop("__cols"))
 
 
-def schema_change_events(df: DataFrame,
-                         value_col: str = "value") -> DataFrame:
+def schema_change_events(df: DataFrame) -> DataFrame:
     """Debezium schema-change topic records -> ``(database, ddl,
     ts_ms)`` rows (payload carries ``databaseName`` + raw ``ddl``
     text). Feed each row to ``SchemaRegistry.apply_ddl`` — the same
     P5 path the synthesized DDL stream uses. Non-DDL records (data
     events, tombstones) are filtered out by ``ddl IS NOT NULL``."""
-    js = F.col(value_col).cast("string")
+    js = F.col("value").cast("string")
     return (df.select(
         _payload(js, "databaseName").alias("database"),
         _payload(js, "ddl").alias("ddl"),

@@ -39,9 +39,9 @@ class TaskFilter:
     tables: tuple[str, ...] = field(default=())
     exclude_tables: tuple[str, ...] = field(default=())
 
-    def predicate(self, db_col: str = "database", table_col: str = "table") -> Column:
-        db = F.col(db_col)
-        qualified = F.concat(db, F.lit("."), F.col(table_col))
+    def predicate(self) -> Column:
+        db = F.col("database")
+        qualified = F.concat(db, F.lit("."), F.col("table"))
         wildcard = F.concat(db, F.lit("."), F.lit("*"))
         pred = F.lit(True)
         if self.databases:
@@ -55,6 +55,5 @@ class TaskFilter:
             )
         return pred
 
-    def apply(self, df: DataFrame, db_col: str = "database",
-              table_col: str = "table") -> DataFrame:
-        return df.filter(self.predicate(db_col, table_col))
+    def apply(self, df: DataFrame) -> DataFrame:
+        return df.filter(self.predicate())

@@ -38,9 +38,8 @@ mirrored by other public implementations of the 8.3 decode):
 
 Only fields 0-3 matter for replication resume; the tail is parsed
 for VALIDATION only (strictly-increasing known ids, well-formed
-varints, a field boundary landing exactly at the end of the buffer
-or 4 bytes before it — the CRC32 trailer a header-walk read
-includes when checksums are on).
+varints, a field boundary landing exactly at the end of the buffer —
+callers pass the body with any CRC32 trailer already trimmed).
 
 **Honesty note**: this decoder is written from the format's public
 description and validated against this repo's independently
@@ -120,57 +119,16 @@ def write_varsint(value: int) -> bytes:
                          if value < 0 else value << 1)
 
 
-def decode_tagged_gtid(body: bytes,
-                       crc_tail: bool = False
-                       ) -> tuple[str, str, int] | None:
+def decode_tagged_gtid(body: bytes) -> tuple[str, str, int] | None:
     """(uuid_text, tag, gno) from a GTID_TAGGED_EVENT body, or
     None when the body does not VALIDATE as one — truncation, a
     non-increasing or unknown field id, a malformed tag, an
     out-of-range gno, or a field boundary that does not land at
-    the end of the buffer. ``crc_tail=True`` additionally accepts
-    a boundary exactly 4 bytes before the end — for HEADER-WALK
-    reads, which include the event's CRC32 trailer when checksums
-    are on and cannot know the mode. A STRICT parse is attempted
-    first and the 4-byte-tolerant parse runs only when it fails
-    (r12 ADVICE: on a checksum-NONE stream a real untrailed body
-    whose final field boundary happened to land 4 bytes before the
-    end used to exit early, silently skipping validation of the
-    final fields; strict-first validates them, and the fallback is
-    safe because fields 0-3 parse before any tail bytes — CRC
-    garbage can at most masquerade as tail fields >= 4, which do
-    not contribute to the returned triple). Callers that already
-    CRC-trimmed the body (decode_binlog) keep the default strict
-    mode. Callers treat None as the conservative resume
-    boundary.
-
-    Ambiguity guard (r13 review): a strict success is honored in
-    crc_tail mode ONLY when every mandatory field (0-3) finished
-    parsing BEFORE the final 4 bytes. Without that check, a
-    malformed trailed body carrying just fields 0-1 could have its
-    CRC bytes parse as plausible gno/tag fields and return a bogus
-    triple; a REAL trailed body always has all its fields before
-    the CRC, so requiring mandatory-before-tail never rejects a
-    genuine event, and a body whose mandatory fields genuinely
-    extend into the last 4 bytes is indistinguishable from that
-    corruption — it degrades to the tolerant parse (which refuses
-    it for missing mandatory fields) and thence to the
-    conservative boundary."""
-    if not crc_tail:
-        out = _parse_tagged(body, crc_tail=False)
-        return out[0] if out is not None else None
-    strict = _parse_tagged(body, crc_tail=False)
-    if strict is not None and strict[1] <= len(body) - 4:
-        return strict[0]
-    tol = _parse_tagged(body, crc_tail=True)
-    return tol[0] if tol is not None else None
-
-
-def _parse_tagged(body: bytes, crc_tail: bool
-                  ) -> tuple[tuple[str, str, int], int] | None:
-    """((uuid_text, tag, gno), mandatory_end) or None — the parse
-    loop behind ``decode_tagged_gtid``; ``mandatory_end`` is the
-    byte offset right after the LAST mandatory field (id <= 3)
-    finished, the ambiguity-guard input."""
+    the end of the buffer. ``body`` is exact: both callers
+    (``decode_binlog`` and the source's header walk) trim the
+    CRC32 trailer by the segment's checksum mode first, so the
+    final bytes parse and validate like any others. Callers treat
+    None as the conservative resume boundary."""
     try:
         off = 0
         version, off = read_varuint(body, off)
@@ -178,11 +136,7 @@ def _parse_tagged(body: bytes, crc_tail: bool
             return None
         flags = uuid_hex = tag = gno = None
         last_id = -1
-        mand_end = 0
         while off < len(body):
-            if crc_tail and len(body) - off == 4 \
-                    and flags is not None:
-                break                    # CRC32 trailer
             fid, off = read_varuint(body, off)
             if fid <= last_id or fid not in _FIELDS:
                 return None
@@ -213,12 +167,6 @@ def _parse_tagged(body: bytes, crc_tail: bool
                 gno = val
             elif fid == 3:
                 tag = val
-            if fid <= 3:
-                mand_end = off
-        ok_ends = ((len(body), len(body) - 4) if crc_tail
-                   else (len(body),))
-        if off not in ok_ends:
-            return None
         if flags is None or uuid_hex is None or gno is None \
                 or tag is None:
             return None                  # 0-3 are mandatory on 42
@@ -229,7 +177,7 @@ def _parse_tagged(body: bytes, crc_tail: bool
         u = uuid_hex
         uuid_txt = "-".join((u[0:8], u[8:12], u[12:16],
                              u[16:20], u[20:32]))
-        return (uuid_txt, tag.lower(), gno), mand_end
+        return uuid_txt, tag.lower(), gno
     except (ValueError, UnicodeDecodeError):
         return None
 

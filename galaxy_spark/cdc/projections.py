@@ -1,8 +1,9 @@
-"""Row projections P2-P4 and action routing S3.
+"""Schema attach P1, row projections P2-P4 and action routing S3.
 
-The reference zips positional binlog rows with the cached column
-list into named before/after documents
-(``internal/sync_server/process.go:114-214``):
+The reference looks up each event's own table schema
+(``tableSchema(db, table)``, ``internal/sync_server/baseinfo.go:39-58``)
+and zips the positional binlog row with that column list into named
+before/after documents (``internal/sync_server/process.go:114-214``):
 
 - insert (P2): ``after``  = zip(columns, row)        (:184-214)
 - delete (P3): ``before`` = zip(columns, row)        (:151-182)
@@ -17,6 +18,12 @@ Arity handling: the reference errors out when
 emit a ``quarantined`` flag and null maps for mismatched rows; the
 caller can route them to a dead-letter sink.
 
+``project_changes`` is the one zip, arity and quarantine algebra. Its
+column names are a literal list or a per-row ``array<string>``
+column; ``attach_schema`` supplies the latter by broadcast-joining
+the schema registry, and ``project_changes_by_schema`` is the two
+composed. ``debezium.positional_org_row`` uses the same attach.
+
 Everything here is pure column algebra (``map_from_arrays``,
 ``element_at``, ``when``) — JVM-side, whole-stage-codegen'd, no
 Python in the hot path.
@@ -30,29 +37,39 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def _zip_map(names: Sequence[str], row: Column) -> Column:
-    return F.map_from_arrays(F.array(*[F.lit(n) for n in names]), row)
+def attach_schema(df: DataFrame, schemas: DataFrame) -> DataFrame:
+    """P1: give each row ``__cols``, its OWN table's ordered column
+    names — the reference resolves ``tableSchema(db, table)`` per
+    event (``baseinfo.go:39-58``). ``schemas`` is a tiny
+    (database, table, columns array<string>) frame (see
+    ``schema_registry.registry_frame``) riding a BROADCAST left join
+    (SURVEY §2.1 P1's named Spark mapping): one scan, no shuffle,
+    and a plan that does not grow with the registry. Rows whose
+    table has no entry get a NULL ``__cols``."""
+    return df.join(
+        F.broadcast(schemas.select(
+            "database", "table", F.col("columns").alias("__cols"))),
+        ["database", "table"], "left")
 
 
-def _arity_ok(names: Sequence[str], row: Column) -> Column:
-    return F.size(row) == len(names)
-
-
-def project_changes(df: DataFrame, columns: Sequence[str],
-                    org_row_col: str = "org_row",
-                    action_col: str = "action") -> DataFrame:
+def project_changes(df: DataFrame,
+                    columns: Sequence[str] | Column) -> DataFrame:
     """Attach ``before``/``after`` maps + ``quarantined`` flag.
 
     ``df`` must carry ``action`` and ``org_row`` (array of positional
     rows: insert=[after], delete=[before], update=[before, after]).
-    ``columns`` is the ordered column-name list for this table (the
-    schema-registry lookup result, P1).
+    ``columns`` is the row's ordered column names: a literal list
+    (single-table stream) or an ``array<string>`` column, e.g. the
+    ``__cols`` of ``attach_schema``. A NULL name array (no registry
+    entry) quarantines the row.
     """
-    action = F.col(action_col)
-    rows = F.col(org_row_col)
+    names = (columns if isinstance(columns, Column)
+             else F.array(*[F.lit(n) for n in columns]))
+    action = F.col("action")
+    rows = F.col("org_row")
     # F.get, not getItem: a malformed update with ONE row must take
-    # the quarantine path, and the arity check now evaluates the
-    # after image even on bad rows -- getItem(1) would raise
+    # the quarantine path, and the arity check evaluates the after
+    # image even on bad rows -- getItem(1) would raise
     # INVALID_ARRAY_INDEX there instead of yielding NULL
     first, second = F.get(rows, 0), F.get(rows, 1)
 
@@ -65,47 +82,36 @@ def project_changes(df: DataFrame, columns: Sequence[str],
         .when(action == "update", second)
     )  # delete -> NULL
 
+    def arity_ok(row: Column) -> Column:
+        # a null image passes vacuously
+        return F.coalesce(F.size(row) == F.size(names), row.isNull())
+
     expected_rows = F.when(action == "update", F.lit(2)).otherwise(F.lit(1))
     # BOTH images must pass arity — validating only the coalesced
     # (first non-null) image let an update with a short AFTER image
     # reach map_from_arrays and abort the job instead of
-    # quarantining; a null image passes vacuously
-    bad = (F.size(rows) != expected_rows) | ~(
-        F.coalesce(_arity_ok(columns, before_row),
-                   before_row.isNull())
-        & F.coalesce(_arity_ok(columns, after_row),
-                     after_row.isNull())
-        & F.coalesce(before_row, after_row).isNotNull()
+    # quarantining. A literal list folds ``size``/``isnull`` of its
+    # names to constants.
+    bad = (
+        names.isNull()
+        | (F.size(rows) != expected_rows)
+        | ~(arity_ok(before_row) & arity_ok(after_row)
+            & F.coalesce(before_row, after_row).isNotNull())
     )
+
+    def zipped(row: Column) -> Column:
+        return F.when(~bad & row.isNotNull(), F.map_from_arrays(names, row))
 
     return (
         df.withColumn("quarantined", bad)
-        .withColumn(
-            "before",
-            F.when(~bad & before_row.isNotNull(), _zip_map(columns, before_row)),
-        )
-        .withColumn(
-            "after",
-            F.when(~bad & after_row.isNotNull(), _zip_map(columns, after_row)),
-        )
+        .withColumn("before", zipped(before_row))
+        .withColumn("after", zipped(after_row))
     )
 
 
-def project_changes_by_schema(df: DataFrame, schemas: DataFrame,
-                              org_row_col: str = "org_row",
-                              action_col: str = "action") -> DataFrame:
-    """P1 fused with P2-P4: per-TABLE schema attach.
-
-    ``project_changes`` takes ONE literal column list — right for a
-    single-table stream, wrong for the reference's actual shape,
-    where every event resolves its OWN table's cached column list
-    (``tableSchema(db, table)``, ``baseinfo.go:39-58``) before
-    projection. Here the registry rides a BROADCAST join (SURVEY
-    §2.1 P1's named Spark mapping): ``schemas`` is a tiny
-    (database, table, columns array<string>) frame — see
-    ``schema_registry.registry_frame`` — joined onto the stream,
-    and the zip uses the name ARRAY COLUMN instead of literals.
-    Still pure JVM column algebra, still one scan.
+def project_changes_by_schema(df: DataFrame, schemas: DataFrame) -> DataFrame:
+    """P1 fused with P2-P4: ``attach_schema`` then
+    ``project_changes`` over each row's own ``__cols``.
 
     Rows whose table has no registry entry quarantine (the
     reference lazily runs SHOW FULL COLUMNS on a miss — a live
@@ -115,53 +121,8 @@ def project_changes_by_schema(df: DataFrame, schemas: DataFrame,
     sees the registry as of its start; DDL evolution reaches it by a
     restart, or per micro-batch on a foreachBatch path that rebuilds
     ``registry_frame`` at each batch's plan build)."""
-    action = F.col(action_col)
-    rows = F.col(org_row_col)
-    # F.get, not getItem: a malformed update with ONE row must take
-    # the quarantine path, and the arity check now evaluates the
-    # after image even on bad rows -- getItem(1) would raise
-    # INVALID_ARRAY_INDEX there instead of yielding NULL
-    first, second = F.get(rows, 0), F.get(rows, 1)
-
-    before_row = (
-        F.when(action == "delete", first)
-        .when(action == "update", first)
-    )
-    after_row = (
-        F.when(action == "insert", first)
-        .when(action == "update", second)
-    )
-    expected_rows = F.when(action == "update", F.lit(2)).otherwise(F.lit(1))
-    # same both-images arity rule as project_changes above
-    bad = (
-        F.col("__cols").isNull()
-        | (F.size(rows) != expected_rows)
-        | ~(
-            F.coalesce(F.size(before_row) == F.size("__cols"),
-                       before_row.isNull())
-            & F.coalesce(F.size(after_row) == F.size("__cols"),
-                         after_row.isNull())
-            & F.coalesce(before_row, after_row).isNotNull()
-        )
-    )
-
-    def zip_map(row: Column) -> Column:
-        return F.map_from_arrays(F.col("__cols"), row)
-
-    joined = df.join(
-        F.broadcast(schemas.select(
-            "database", "table", F.col("columns").alias("__cols"))),
-        ["database", "table"], "left")
-    return (
-        joined.withColumn("quarantined", bad)
-        .withColumn(
-            "before",
-            F.when(~bad & before_row.isNotNull(), zip_map(before_row)))
-        .withColumn(
-            "after",
-            F.when(~bad & after_row.isNotNull(), zip_map(after_row)))
-        .drop("__cols")
-    )
+    return project_changes(attach_schema(df, schemas),
+                           F.col("__cols")).drop("__cols")
 
 
 def typed_table_view(df: DataFrame, registry, db: str, table: str,
@@ -194,8 +155,7 @@ def typed_table_view(df: DataFrame, registry, db: str, table: str,
             .select(*keep, *fields))
 
 
-def route_actions(df: DataFrame, action_col: str = "action"
-                  ) -> dict[str, DataFrame]:
+def route_actions(df: DataFrame) -> dict[str, DataFrame]:
     """S3 event-type dispatch: three filtered branches of one plan.
 
     Mirrors the reference's switch on WRITE/UPDATE/DELETE_ROWS
@@ -203,6 +163,6 @@ def route_actions(df: DataFrame, action_col: str = "action"
     the upstream scan; Catalyst pushes each action predicate down.
     """
     return {
-        a: df.filter(F.col(action_col) == a)
+        a: df.filter(F.col("action") == a)
         for a in ("insert", "update", "delete")
     }

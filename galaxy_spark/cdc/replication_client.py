@@ -616,14 +616,9 @@ class GtidSet:
                     raise ValueError(
                         f"invalid tagged interval [{s}, {e})")
                 out._insert((sid, tag.lower()), s, e)
-        if p not in (len(blob), len(blob) - 4):
-            # exact consumption, OR exactly a 4-byte tail: a
-            # PREVIOUS_GTIDS body read off a CRC32-checksummed
-            # stream carries the event checksum after the set
-            # (binlog_source._read_gtid_event passes the full
-            # esize-19 body) — requiring exact consumption there
-            # rejected every REAL tagged declaration (r11 review
-            # wave 2 fallout)
+        if p != len(blob):
+            # exact consumption: every reader hands over the body
+            # with any CRC32 trailer already trimmed
             raise ValueError("trailing bytes after tagged set")
         return out
 

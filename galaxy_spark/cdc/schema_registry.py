@@ -272,9 +272,10 @@ def _spark_type_to_mysql(dt: T.DataType) -> str:
 def registry_frame(spark, registry: "SchemaRegistry"):
     """The registry as the tiny broadcastable DataFrame
     ``(database, table, columns array<string>)`` that
-    ``projections.project_changes_by_schema`` joins onto the
-    stream (P1's SURVEY-named Spark mapping: "broadcast-join event
-    stream with schema-registry table"). The frame is the registry
+    ``projections.attach_schema`` joins onto the stream (P1's
+    SURVEY-named Spark mapping: "broadcast-join event stream with
+    schema-registry table") for ``project_changes_by_schema`` and
+    ``debezium.positional_org_row``. The frame is the registry
     as of this call: after DDL evolution, build it again. A
     foreachBatch pipeline does that at each micro-batch's plan
     build; a running ``start_pipeline`` task keeps the registry it

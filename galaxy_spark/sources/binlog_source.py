@@ -86,7 +86,8 @@ from galaxy_spark.cdc.binlog import (ANONYMOUS_GTID_EVENT,
                                      MARIADB_GTID_EVENT,
                                      MARIADB_GTID_LIST_EVENT,
                                      PREVIOUS_GTIDS_EVENT, QUERY_EVENT,
-                                     XID_EVENT, gtid_text, mariadb_gtid,
+                                     XID_EVENT, _detect_checksum,
+                                     gtid_text, mariadb_gtid,
                                      mariadb_gtid_list)
 from galaxy_spark.cdc.mysql_serialization import (decode_tagged_gtid,
                                                   tagged_gtid_text)
@@ -157,19 +158,33 @@ def _walk_event_headers(f, size: int, start: int | None = None):
         pos += esize
 
 
+def _checksum_tail(f, size: int) -> int:
+    """Length of the CRC32 trailer every event of an open segment
+    carries: 4 when its FORMAT_DESCRIPTION event (the first event)
+    declares ``binlog_checksum=CRC32`` (``cdc/binlog.py:
+    _detect_checksum``, the decoder's own probe), else 0."""
+    for pos, etype, esize, _lp, _ts in _walk_event_headers(f, size):
+        if etype != FORMAT_DESCRIPTION_EVENT:
+            return 0
+        f.seek(pos)
+        return 4 if _detect_checksum(f.read(esize)) else 0
+    return 0
+
+
 def _walk_segments(path: str, upto: tuple | None = None,
                    after: tuple = ("", 0)):
     """The one header walk ACROSS segments, shared by the GTID
     auto-position scan, the executed-set scan (stateless and
     incremental) and the timestamp seek: yields ``(segment, open
-    file, headers)`` per segment in rotation order, ``headers``
-    being that segment's ``_walk_event_headers`` — callers stop
-    anywhere by returning. ``after=(file, pos)`` resumes at a
-    watermark: earlier segments are skipped and ``file`` is walked
-    from ``pos`` (an event boundary: offsets are aligned ends), so
-    a growing tail segment is never re-walked from byte 0 every
-    micro-batch (that made its cost quadratic over the segment's
-    lifetime). ``upto=(file, pos)`` stops at that offset: later
+    file, headers, tail)`` per segment in rotation order,
+    ``headers`` being that segment's ``_walk_event_headers`` and
+    ``tail`` its checksum trailer length (``_checksum_tail``, read
+    once per segment) — callers stop anywhere by returning.
+    ``after=(file, pos)`` resumes at a watermark: earlier segments
+    are skipped and ``file`` is walked from ``pos`` (an event
+    boundary: offsets are aligned ends), so a growing tail segment
+    is never re-walked from byte 0 every micro-batch (that made its
+    cost quadratic over the segment's lifetime). ``upto=(file, pos)`` stops at that offset: later
     segments stay unopened and ``file``'s walk ends with the last
     event ending at or before ``pos``."""
     for s in _segments(path):
@@ -183,10 +198,12 @@ def _walk_segments(path: str, upto: tuple | None = None,
         if upto is not None and s == upto[0]:
             size = min(size, upto[1])
         with open(fpath, "rb") as f:
+            tail = _checksum_tail(f, size)
+            f.seek(0)          # the walk below sniffs the magic here
             yield s, f, _walk_event_headers(
                 f, size,
                 start=after[1] if s == after[0] and after[1] >= 4
-                else None)
+                else None), tail
 
 
 def _aligned_end(fpath: str) -> int:
@@ -315,7 +332,8 @@ class BinlogStreamReader(DataSourceStreamReader):
                 "'mariadb'")
         self._fl = _FLAVORS[self.flavor]
 
-    def _read_gtid_event(self, f, pos: int, etype: int, esize: int):
+    def _read_gtid_event(self, f, pos: int, etype: int, esize: int,
+                         tail: int):
         """The one GTID event reader of the header walks, for an
         event whose type the caller already matched against the
         flavor's GTID, previous-set or tagged type: returns
@@ -323,13 +341,14 @@ class BinlogStreamReader(DataSourceStreamReader):
         declaration, else ``("gtid", text)``. The text is None for
         a tagged body that fails validation: callers then resume AT
         the event and never claim it executed (re-delivery, never
-        a silent skip — the ANONYMOUS_GTID discipline). The body
-        read carries the CRC trailer when checksums are on (the
-        walk cannot know the mode); every parser tolerates exactly
-        that tail."""
+        a silent skip — the ANONYMOUS_GTID discipline). ``tail``
+        is the segment's checksum trailer length
+        (``_walk_segments``): the parsers get the exact body, as
+        ``decode_binlog`` gives them, so both refuse the same
+        truncations."""
         f.seek(pos)
         raw = f.read(esize)
-        body = raw[19:]
+        body = raw[19:esize - tail]
         try:
             if etype == self._fl.prev:
                 if self._fl.gset is GtidSet:
@@ -337,7 +356,7 @@ class BinlogStreamReader(DataSourceStreamReader):
                 return "prev", MariaDbGtidSet.parse(
                     ",".join(mariadb_gtid_list(body)))
             if etype == self._fl.tagged:
-                parsed = decode_tagged_gtid(body, crc_tail=True)
+                parsed = decode_tagged_gtid(body)
                 return "gtid", (tagged_gtid_text(parsed) if parsed
                                 else None)
             if self._fl.gset is MariaDbGtidSet:
@@ -459,14 +478,15 @@ class BinlogStreamReader(DataSourceStreamReader):
         fl = self._fl
         gset = fl.gset.parse(gtids)
         reads = (fl.gtid, fl.prev, fl.tagged)
-        for i, (s, f, headers) in enumerate(_walk_segments(self.path)):
+        for i, (s, f, headers, tail) in enumerate(
+                _walk_segments(self.path)):
             prev_end = 0
             for pos, etype, esize, log_pos, _ts in headers:
                 if etype == fl.anon:
                     return {"file": s, "pos": prev_end}
                 if etype in reads:
                     kind, got = self._read_gtid_event(f, pos, etype,
-                                                      esize)
+                                                      esize, tail)
                     if kind == "gtid" and (got is None
                                            or not gset.covers(got)):
                         return {"file": s, "pos": prev_end}
@@ -528,11 +548,12 @@ class BinlogStreamReader(DataSourceStreamReader):
         out = fl.gset() if into is None else into
         reads = (fl.gtid, fl.prev, fl.tagged)
         upto = None if file is None else (file, pos)
-        for _s, f, headers in _walk_segments(self.path, upto, after):
+        for _s, f, headers, tail in _walk_segments(self.path, upto,
+                                                   after):
             for p, etype, esize, _lp, _ts in headers:
                 if etype in reads:
                     kind, got = self._read_gtid_event(f, p, etype,
-                                                      esize)
+                                                      esize, tail)
                     if kind == "prev":
                         out.merge(got)
                     elif got is not None:
@@ -595,7 +616,7 @@ class BinlogStreamReader(DataSourceStreamReader):
         alike — by header type alone."""
         fl = self._fl
         anchor_types = (fl.gtid, fl.anon, fl.tagged)
-        for s, f, headers in _walk_segments(self.path):
+        for s, f, headers, _tail in _walk_segments(self.path):
             prev_end = 0
             anchor = None              # prev_end before the OPEN
                                        # transaction's GTID event

@@ -34,7 +34,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from galaxy_spark.cdc.filters import TaskFilter
-from galaxy_spark.cdc.projections import project_changes
+from galaxy_spark.cdc.projections import (project_changes,
+                                           project_changes_by_schema)
 from galaxy_spark.cdc.schema_registry import (SchemaRegistry,
                                               local_registry_frame)
 
@@ -80,8 +81,6 @@ def transform_envelope(env: DataFrame, task_filter: TaskFilter,
     DataFrame (database, table, columns) — the per-table P1 path
     (``schema_registry.registry_frame``), broadcast-joined so each
     event projects with its OWN table's column list."""
-    from galaxy_spark.cdc.projections import project_changes_by_schema
-
     filtered = task_filter.apply(env)
     if isinstance(columns, DataFrame):
         return project_changes_by_schema(filtered, columns)
@@ -263,21 +262,18 @@ def start_pipeline_live(env_stream: DataFrame, task_id: str,
         # losing malformed payloads exactly on the pipeline meant
         # for production filter updates
         msgs = task_messages(projected, task_id)
-        if sink.kind == "kafka":
-            msgs.write.format("kafka").options(**sink.options).save()
-        elif sink.kind == "memory":
-            cap = int(sink.options.get("maxRows", 10_000))
-            buf = _LIVE_MEMORY[task_id]
-            batch = msgs.limit(cap + 1 - len(buf)).collect()
-            if len(buf) + len(batch) > cap:
-                raise RuntimeError(
-                    f"live memory sink exceeded maxRows={cap}; this "
-                    "sink is a test/debug surface — use the kafka or "
-                    "parquet sink for real volume")
-            buf.extend(batch)
-        else:                                   # parquet
-            msgs.write.mode("append").options(**sink.options).parquet(
-                sink.options["path"])
+        if sink.kind != "memory":
+            sink.apply(msgs.write.mode("append"), task_id).save()
+            return
+        cap = int(sink.options.get("maxRows", 10_000))
+        buf = _LIVE_MEMORY[task_id]
+        batch = msgs.limit(cap + 1 - len(buf)).collect()
+        if len(buf) + len(batch) > cap:
+            raise RuntimeError(
+                f"live memory sink exceeded maxRows={cap}; this "
+                "sink is a test/debug surface — use the kafka or "
+                "parquet sink for real volume")
+        buf.extend(batch)
 
     return env_stream.writeStream \
         .option("checkpointLocation", checkpoint_dir) \

@@ -1702,6 +1702,46 @@ def test_decoder_and_header_walk_read_the_same_gtids(tmp_path, case):
         assert want.covers(f"{_AGREE_UUID}:patch:2")
 
 
+@pytest.mark.parametrize("case,etype,keep,message", [
+    ("gtid", 33, 21, "corrupt GTID event: body 21 bytes < 25"),
+    ("mariadb_gtid", 162, 9,
+     "corrupt MariaDB GTID event: body 9 bytes < 13"),
+    ("mariadb_gtid_list", 163, 16,
+     "corrupt MariaDB GTID_LIST event: count 1 needs 20 body bytes, "
+     "have 16"),
+])
+def test_header_walk_refuses_truncated_gtid_bodies_on_crc32_segments(
+        tmp_path, case, etype, keep, message):
+    """On a CRC32 segment a GTID body truncated by up to 4 bytes
+    still passes a length check that counts the trailer: the walk
+    must trim the trailer by the segment's checksum mode, so
+    ``_scan_gtids`` refuses the event with the decoder's own message
+    instead of recording a GTID built from the CRC bytes."""
+    from galaxy_spark.cdc.binlog import decode_binlog
+    from tests.fixtures.binlog_wire_encoder import BinlogWriter
+
+    probe = BinlogWriter(server_id=41)
+    if case == "gtid":
+        probe.gtid(_AGREE_SID, 1)
+    elif case == "mariadb_gtid":
+        probe.mariadb_gtid(0, 5)
+    else:
+        probe.mariadb_gtid_list([(1, 7, 2)])
+    w = BinlogWriter(server_id=41)          # checksum=CRC32
+    w.format_description()
+    w._emit(etype, probe.last_body()[:keep])
+    with pytest.raises(ValueError, match=message):
+        decode_binlog(bytes(w.bytes()))
+    d = str(tmp_path / case)
+    os.makedirs(d)
+    with open(os.path.join(d, "binlog.000001.bin"), "wb") as f:
+        f.write(w.bytes())
+    rd = _mk_reader(d, **({} if case == "gtid"
+                          else {"flavor": "mariadb"}))
+    with pytest.raises(ValueError, match=message):
+        rd._scan_gtids()
+
+
 def test_steady_state_tracker_walks_only_the_tail(tmp_path,
                                                   monkeypatch):
     """The executed-GTID tracker resumes at its watermark: after a
@@ -2078,8 +2118,8 @@ def test_starting_gtids_skips_covered_tagged_transactions(spark,
 def test_tagged_body_decode_and_conservative_fallback():
     """The mysql::serialization decoder: round-trips the fixture
     encoder's independently-written bodies (plain and >1-byte
-    varints, empty and max-length tags), tolerates the 4-byte CRC
-    tail a header-walk read includes, and rejects malformed bodies
+    varints, empty and max-length tags), refuses a 4-byte tail
+    after the body, and rejects malformed bodies
     (truncation, bad tag charset, zero gno, unknown/decreasing
     field ids) -> None, which every caller maps to the r11
     conservative resume boundary."""
@@ -2116,14 +2156,10 @@ def test_tagged_body_decode_and_conservative_fallback():
                      (1, "maint_2024")):
         got = decode_tagged_gtid(body(gno, tag))
         assert got == (uuid, tag, gno), (gno, tag, got)
-        # CRC-tail tolerance is OPT-IN (header-walk reads, which
-        # can't know the checksum mode); the strict default used by
-        # the CRC-trimming decoder rejects trailing garbage — it
-        # must parse and validate the final bytes like any others
-        # (r12 review)
+        # every caller trims the CRC32 trailer first, so a 4-byte
+        # tail is refused: the final bytes parse and validate like
+        # any others
         tailed = body(gno, tag) + b"\x01\x02\x03\x04"
-        assert decode_tagged_gtid(tailed, crc_tail=True) \
-            == (uuid, tag, gno)
         assert decode_tagged_gtid(tailed) is None
 
     ok = body(5, "patch")

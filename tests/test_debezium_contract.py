@@ -221,3 +221,35 @@ def test_positional_org_row_empty_registry_quarantines(spark):
                     F.create_map(F.lit("id"), F.lit("1"))))
     out = positional_org_row(env, SchemaRegistry()).collect()
     assert out[0].org_row is None
+
+
+def test_positional_org_row_plan_does_not_grow_with_registry(spark):
+    """Each row finds its column names through one broadcast join of
+    the registry frame, so the optimized plan is the same text for a
+    2-table and a 50-table registry (expression ids stripped) — a
+    per-table branch would grow it by every table."""
+    import re
+
+    from galaxy_spark.cdc.debezium import positional_org_row
+    from galaxy_spark.cdc.schema_registry import ColumnDef
+
+    env = (spark.createDataFrame(
+        [("d", "t0", "insert")],
+        "database string, table string, action string")
+        .withColumn("before", F.lit(None).cast("map<string,string>"))
+        .withColumn("after", F.create_map(F.lit("c0"), F.lit("1"))))
+
+    def plan(n_tables):
+        reg = SchemaRegistry()
+        for t in range(n_tables):
+            reg.put("d", f"t{t}",
+                    [ColumnDef(f"c{i}", "varchar(64)") for i in range(8)])
+        qe = positional_org_row(env, reg)._jdf.queryExecution()
+        # expression ids and lambda-variable counters
+        return (re.sub(r"#\d+L?|x_\d+", "",
+                       qe.optimizedPlan().toString()),
+                qe.executedPlan().toString())
+
+    (small, _), (large, physical) = plan(2), plan(50)
+    assert small == large
+    assert "BroadcastHashJoin" in physical

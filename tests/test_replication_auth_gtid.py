@@ -1107,18 +1107,18 @@ def test_tagged_decode_rejects_malformed_and_falls_back():
 
 
 def test_tagged_decode_tolerates_checksum_tail_untagged_rejects_garbage():
-    """r11 review wave 2: (a) PREVIOUS_GTIDS bodies read off a
-    CRC32-checksummed stream carry a 4-byte checksum after the set
-    — the tagged decode must accept exactly that tail (exact
-    consumption alone rejected every REAL tagged declaration); (b)
+    """(a) the tagged decode requires exact consumption: every
+    reader trims a CRC32 trailer before decoding, so a 4-byte tail
+    after the set is refused, not read past; (b)
     the untagged branch must reject reversed intervals loudly
     instead of building a set whose covers() disagrees with its
     own text form (reproduced corruption)."""
     g = rc.GtidSet.parse(f"{SID_UUID}:patch:1-5")
     blob = g.encode()
-    assert str(rc.GtidSet.decode(blob + b"\x12\x34\x56\x78")) \
-        == str(g)
-    # a 7-byte tail is neither a valid tagged set (not a crc tail)
+    assert str(rc.GtidSet.decode(blob)) == str(g)
+    with pytest.raises((ValueError, struct.error)):
+        rc.GtidSet.decode(blob + b"\x12\x34\x56\x78")
+    # a 7-byte tail is neither a valid tagged set (trailing bytes)
     # nor a plausible untagged one (head = 9 sids needs far more
     # bytes) — refused loudly either way
     with pytest.raises((ValueError, struct.error)):
@@ -1178,9 +1178,9 @@ def test_tagged_body_decode_hypothesis_never_crashes():
         decode_tagged_gtid
 
     @settings(max_examples=400, deadline=None)
-    @given(st.binary(max_size=120), st.booleans())
-    def total(body, crc):
-        out = decode_tagged_gtid(body, crc_tail=crc)
+    @given(st.binary(max_size=120))
+    def total(body):
+        out = decode_tagged_gtid(body)
         assert out is None or (
             isinstance(out, tuple) and len(out) == 3
             and 1 <= out[2] < (1 << 63))
@@ -1260,64 +1260,3 @@ def test_tagged_body_decode_hand_assembled_spec_vectors():
         body[:22] + bytes([0x04]) + body[23:]) is None
     assert decode_tagged_gtid(
         bytes([0x12]) + body[1:]) is None  # future version 9 > 3
-
-
-def test_tagged_crc_tail_is_strict_first():
-    """r12 ADVICE: crc_tail=True must VALIDATE a real untrailed
-    body's final fields even when a field boundary lands exactly 4
-    bytes before the end — strict parse first, the 4-byte-tolerant
-    parse only as the fallback for genuinely CRC-trailed reads."""
-    from galaxy_spark.cdc.mysql_serialization import \
-        decode_tagged_gtid
-
-    # untrailed body whose FINAL field (id 8, 3-byte varint) spans
-    # exactly the last 4 bytes: 70000 needs c=2 -> raw =
-    # (70000 << 3) | 0b011
-    head = bytes([
-        0x04, 0x00, 0x01, 0x02,
-        0x3e, 0x11, 0xfa, 0x47, 0x71, 0xca, 0x11, 0xe1,
-        0x9e, 0x33, 0xc8, 0x0a, 0xa9, 0x42, 0x95, 0x62,
-        0x04, 0x1c, 0x06, 0x00,
-    ])
-    tail_field = bytes([0x10]) + (
-        (70000 << 3) | 0b011).to_bytes(3, "little")
-    body = head + tail_field
-    want = ("3e11fa47-71ca-11e1-9e33-c80aa9429562", "", 7)
-    assert decode_tagged_gtid(body, crc_tail=False) == want
-    # strict-first: same answer, final field actually parsed
-    assert decode_tagged_gtid(body, crc_tail=True) == want
-    # genuinely CRC-trailed read still tolerated (fallback path)
-    assert decode_tagged_gtid(
-        body + b"\xde\xad\xbe\xef", crc_tail=True) == want
-    # ... but only under crc_tail: the strict caller refuses
-    assert decode_tagged_gtid(
-        body + b"\xde\xad\xbe\xef", crc_tail=False) is None
-
-
-def test_tagged_crc_tail_rejects_crc_masquerading_as_mandatory():
-    """r13 review: a malformed TRAILED body carrying only fields
-    0-1 whose CRC bytes happen to parse as plausible gno/tag
-    fields (0x04 0x1c 0x06 0x00 = fid 2 -> gno 7, fid 3 -> tag "")
-    must NOT return a triple under crc_tail — mandatory fields
-    parsed out of the final 4 bytes are indistinguishable from CRC
-    garbage, and the conservative boundary (None) is the designed
-    fallback. Bodies whose mandatory fields END before the last 4
-    bytes are unaffected (the strict-first test pins those)."""
-    from galaxy_spark.cdc.mysql_serialization import \
-        decode_tagged_gtid
-
-    head = bytes([
-        0x04,                            # version 2
-        0x00, 0x01,                      # field 0: flags = 1
-        0x02,                            # field 1: uuid
-        0x3e, 0x11, 0xfa, 0x47, 0x71, 0xca, 0x11, 0xe1,
-        0x9e, 0x33, 0xc8, 0x0a, 0xa9, 0x42, 0x95, 0x62,
-    ])
-    crc_like = bytes([0x04, 0x1c, 0x06, 0x00])
-    assert decode_tagged_gtid(head + crc_like, crc_tail=True) \
-        is None
-    # the SAME bytes under the strict caller (already CRC-trimmed
-    # upstream, so they really are fields) still decode — the
-    # guard is a crc_tail-ambiguity rule, not a general rejection
-    assert decode_tagged_gtid(head + crc_like, crc_tail=False) == \
-        ("3e11fa47-71ca-11e1-9e33-c80aa9429562", "", 7)
