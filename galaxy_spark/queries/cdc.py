@@ -324,25 +324,19 @@ def scd2_history_frame(env: DataFrame) -> DataFrame:
     lookup) — one key-window over binlog position, LEAD closes
     intervals (including via delete tombstones), tombstones then
     drop. Columns: database, table, pk, value, pos, valid_to."""
-    ch = scd2_change_frame(env)
-    w = Window.partitionBy("database", "table", "pk").orderBy("pos")
-    return (ch.withColumn("valid_to", F.lead("pos").over(w))
-            .filter(F.col("action") != "delete")
-            .drop("action"))
-
-
-def scd2_change_frame(env: DataFrame) -> DataFrame:
-    """SCD2's projected change rows: (database, table, action, pk,
-    value, pos) with value = the AFTER image only (null for delete
-    tombstones — they close intervals but never open one); the
-    input of the batch window build above."""
     proj = project_changes(env, EVENT_SOURCE_COLUMNS)
     img = F.coalesce(F.col("after"), F.col("before"))
-    return proj.select(
+    # value = the AFTER image only: null for delete tombstones, which
+    # close intervals but never open one
+    ch = proj.select(
         "database", "table", "action",
         F.element_at(img, "user_id").cast("long").alias("pk"),
         F.element_at(F.col("after"), "value").cast("double").alias("value"),
         F.col("event_header.log_pos").alias("pos"))
+    w = Window.partitionBy("database", "table", "pk").orderBy("pos")
+    return (ch.withColumn("valid_to", F.lead("pos").over(w))
+            .filter(F.col("action") != "delete")
+            .drop("action"))
 
 
 def snapshot_change_frame(env: DataFrame) -> DataFrame:

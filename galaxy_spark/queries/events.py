@@ -872,14 +872,7 @@ def events_decay_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     shiftleft inside whole-stage codegen) + ONE partial-aggregated
     groupBy(user_id); the anchor join is a broadcast of one row.
     """
-    return decay_scores_from_events(
-        load_table(spark, sf_dir, "events"))
-
-
-def decay_scores_from_events(ev: DataFrame) -> DataFrame:
-    """The full decay query over any events-shaped frame — the
-    funnel_from_events pattern, so a restricted-window check runs
-    the REAL query body over a filtered frame."""
+    ev = load_table(spark, sf_dir, "events")
     anchor = ev.agg(F.max(F.to_date("ts")).alias("d0"))
     aged = (ev.crossJoin(F.broadcast(anchor))
             .select("user_id",
@@ -889,17 +882,9 @@ def decay_scores_from_events(ev: DataFrame) -> DataFrame:
                     F.when(F.col("event_type") == "purchase",
                            F.lit(1)).otherwise(F.lit(0))
                     .cast("long").alias("np")))
-    return decay_scores_from_aged(aged)
-
-
-def decay_scores_from_aged(aged: DataFrame) -> DataFrame:
-    """The decay fold of ``events_decay_score`` over any
-    (user_id, age, n, np) frame: a 40-day horizon and exact
-    integer weight arithmetic. Every
-    weight is INTEGER (shiftleft by 40 - age; the bit count must be
-    a COLUMN, so F.expr — pyspark's function form takes a literal
-    only), and n/np are exact counts, so w*n == summing w per event:
-    the per-day and per-event folds agree bit-for-bit."""
+    # every weight is INTEGER (shiftleft by 40 - age; the bit count
+    # must be a COLUMN, so F.expr — pyspark's function form takes a
+    # literal only), and n/np are exact counts
     w = F.expr("shiftleft(CAST(1 AS BIGINT), 40 - age)")
     recent = F.col("age") <= 40
     return (aged.groupBy("user_id")
@@ -1169,14 +1154,8 @@ def events_stickiness_dau_wau(spark: SparkSession,
     not decompose); the range join IS the honest exact plan, and
     the HLL query is the 100 TB approximation."""
     ev = load_table(spark, sf_dir, "events")
-    d = ev.select("user_id", F.to_date("ts").alias("day")).distinct()
-    return stickiness_from_user_days(d)
-
-
-def stickiness_from_user_days(d: DataFrame) -> DataFrame:
-    """The DAU/WAU tail of ``events_stickiness_dau_wau`` over a
-    distinct (user_id, day) frame."""
-    d = d.localCheckpoint(eager=False)     # dau + wau + grid
+    d = (ev.select("user_id", F.to_date("ts").alias("day")).distinct()
+         .localCheckpoint(eager=False))     # dau + wau + grid
     days = d.select("day").distinct()
     dau = d.groupBy("day").agg(F.count("*").cast("long")
                                .alias("dau"))

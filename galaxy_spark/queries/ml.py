@@ -21,18 +21,23 @@ _OLS_NUM = ("(CAST(n AS DOUBLE)*sxy - CAST(sx AS DOUBLE)*sy)")
 _OLS_DEN = ("(CAST(n AS DOUBLE)*sxx - CAST(sx AS DOUBLE)*sx)")
 
 
-def ols_partial_stats(li: DataFrame, key, key_name: str) -> DataFrame:
-    """The six-statistic fold in its EXACT (pre-cast) form:
-    cents-quantized x/y, int64 n/Σx/Σy, DECIMAL(38,0) product sums.
+def _ols_stats(li: DataFrame, key, key_name: str) -> DataFrame:
+    """The six-statistic fold shared by EVERY OLS query in this
+    module (the Spark twin of the `_OLS_NUM`/`_OLS_DEN` SQL
+    sharing): cents-quantized x/y, exact int64 n/Σx/Σy,
+    DECIMAL(38,0)-folded product sums cast to double. ONE
+    implementation so a determinism fix (like the r7 DECIMAL
+    overflow fix) can never apply to one fit and miss another.
     Every statistic is an exact integer under a SUM monoid, so any
     split of the input sums to the same integers, and the double
-    cast happens once, at solve time, on identical values."""
+    cast — the one lossy step — happens once, on identical
+    values."""
     q = li.select(
         key.alias(key_name),
         F.round(F.col("l_quantity") * 100, 0).cast("long").alias("xi"),
         F.round(F.col("l_extendedprice") * 100, 0).cast("long")
         .alias("yi"))
-    return q.groupBy(key_name).agg(
+    s = q.groupBy(key_name).agg(
         F.count("*").cast("long").alias("n"),
         F.sum("xi").alias("sx"),
         F.sum("yi").alias("sy"),
@@ -42,28 +47,11 @@ def ols_partial_stats(li: DataFrame, key, key_name: str) -> DataFrame:
         .alias("sxy"),
         F.sum((F.col("yi") * F.col("yi")).cast("decimal(38,0)"))
         .alias("syy"))
-
-
-def ols_cast_stats(s: DataFrame, key_name: str) -> DataFrame:
-    """Exact-integer statistics -> the solve's input layout (the
-    three product sums as correctly-rounded doubles) — the one
-    lossy step, in one place."""
     return s.select(
         key_name, "n", "sx", "sy",
         F.col("sxx").cast("double").alias("sxx"),
         F.col("sxy").cast("double").alias("sxy"),
         F.col("syy").cast("double").alias("syy"))
-
-
-def _ols_stats(li: DataFrame, key, key_name: str) -> DataFrame:
-    """The six-statistic fold shared by EVERY OLS query in this
-    module (the Spark twin of the `_OLS_NUM`/`_OLS_DEN` SQL
-    sharing): cents-quantized x/y, exact int64 n/Σx/Σy,
-    DECIMAL(38,0)-folded product sums cast to double. ONE
-    implementation so a determinism fix (like the r7 DECIMAL
-    overflow fix) can never apply to one fit and miss another."""
-    return ols_cast_stats(ols_partial_stats(li, key, key_name),
-                          key_name)
 
 
 def _ols_solve():
@@ -132,16 +120,9 @@ def ml_ols_price_on_quantity(spark: SparkSession,
     """
     li = load_table(spark, sf_dir, "lineitem")
     s = _ols_stats(li, F.col("l_returnflag"), "returnflag")
-    return ols_model_select(s, "returnflag")
-
-
-def ols_model_select(s: DataFrame, key_name: str) -> DataFrame:
-    """The flagship fit's output projection over a solved-input
-    statistics frame: the IEEE solve tree and the 1e-6 rounding of
-    ``ml_ols_price_on_quantity``."""
     num, den, ydev, intercept = _ols_solve()
     return s.select(
-        key_name, "n", "sx", "sy",
+        "returnflag", "n", "sx", "sy",
         F.round(num / den, 6).alias("slope"),
         F.round(intercept, 6).alias("intercept_cents"),
         F.round((num * num) / (den * ydev), 6).alias("r2"))

@@ -1479,16 +1479,9 @@ def customer_rfm_segments(spark: SparkSession,
              .agg(F.max(F.to_date("o_orderdate")).alias("last_day"),
                   F.count("*").cast("long").alias("f"),
                   F.sum(F.round(F.col("o_totalprice") * 100, 0)
-                        .cast("long")).cast("long").alias("m_cents")))
-    return rfm_segments_from_rollup(per_c)
-
-
-def rfm_segments_from_rollup(per_c: DataFrame) -> DataFrame:
-    """The RFM scoring tail over an already-built per-customer
-    rollup (o_custkey, last_day, f, m_cents): the quartile
-    arithmetic and tiebreaks of ``customer_rfm_segments``."""
-    # anchor + ranking both consume it — one upstream scan
-    per_c = per_c.localCheckpoint(eager=False)
+                        .cast("long")).cast("long").alias("m_cents"))
+             # anchor + ranking both consume it — one upstream scan
+             .localCheckpoint(eager=False))
     anchor = per_c.agg(F.max("last_day").alias("d0"))
     rfm = (per_c.crossJoin(F.broadcast(anchor))
            .select("o_custkey",
@@ -1565,13 +1558,6 @@ def customer_order_cadence(spark: SparkSession,
     rows = o.select("o_custkey",
                     F.to_date("o_orderdate").alias("day"),
                     "o_orderkey")
-    return cadence_from_order_rows(rows, c)
-
-
-def cadence_from_order_rows(rows: DataFrame,
-                            customer: DataFrame) -> DataFrame:
-    """The cadence tail of ``customer_order_cadence`` over
-    (o_custkey, day, o_orderkey) rows."""
     w = Window.partitionBy("o_custkey").orderBy("day", "o_orderkey")
     gaps = (rows.select(
         "o_custkey",
@@ -1583,7 +1569,7 @@ def cadence_from_order_rows(rows: DataFrame,
                   F.sum("gap").cast("long").alias("sum_gap"),
                   F.max("gap").cast("long").alias("max_gap")))
     return (per_c
-            .join(customer.select(
+            .join(c.select(
                 F.col("c_custkey").alias("o_custkey"),
                 "c_mktsegment"), "o_custkey")
             .groupBy(F.col("c_mktsegment").alias("mktsegment"))

@@ -96,6 +96,13 @@ def _with_batch_watermark(part: DataFrame, batch_df: DataFrame,
     return part.crossJoin(F.broadcast(wm))
 
 
+def _set_union(col: str) -> Column:
+    """The sorted set-union monoid over an array column: every
+    set-valued store folds through this one expression (idempotent,
+    so replays and re-deliveries cannot move it)."""
+    return F.array_sort(F.array_distinct(F.flatten(F.collect_list(col))))
+
+
 class KeyedParquetStore:
     """Generic keyed MERGE store: ``merge`` folds one partial
     DataFrame into the persisted state with ``aggs`` (which must be
@@ -171,7 +178,7 @@ class KeyedParquetStore:
         self.layout_cols = (list(layout_cols) if layout_cols is not None
                             else list(key_cols))
         #: optional post-fold row filter (DataFrame -> DataFrame),
-        #: applied after EVERY ``.agg(*self.aggs)`` fold — the seam
+        #: applied after EVERY fold (``_fold``) — the seam
         #: stores whose retention must DROP WHOLE ROWS hang their
         #: eviction on (array-valued stores evict inside the agg
         #: itself; a store keyed by the aging column, like
@@ -255,16 +262,24 @@ class KeyedParquetStore:
     def _committed(self, b: int, version: str) -> bool:
         return self.fs.committed(self._bucket_dir(b), version)
 
-    def _current(self, b: int, below: str | None = None) -> str | None:
-        """Greatest committed version of bucket ``b`` (optionally
-        strictly below ``below`` — the replay-recompute base)."""
-        best = None
-        for v in self._versions(b):
-            if below is not None and v >= below:
-                continue
-            if self._committed(b, v):
-                best = v
-        return best
+    def _current(self, b: int) -> str | None:
+        """Greatest committed base version of bucket ``b``."""
+        return max((v for v in self._versions(b)
+                    if self._committed(b, v)), default=None)
+
+    def _paths(self, b: int, upto: str | None = None) -> list[str]:
+        """Read paths of bucket ``b``'s state: its greatest committed
+        base plus the committed deltas above it — with ``upto``, only
+        the deltas at or below that epoch key (what a compaction at
+        that epoch absorbs). Names only. Posix entries are version
+        DIRS; manifest entries are the versions' exact FILE lists —
+        listings are never trusted on object stores."""
+        cur = self._current(b)
+        versions = ([] if cur is None else [cur]) + [
+            d for d in self._delta_versions(b)
+            if upto is None or d[2:] <= upto]
+        bd = self._bucket_dir(b)
+        return [p for v in versions for p in self.fs.read_paths(bd, v)]
 
     def lineages(self) -> set[str]:
         out = set()
@@ -281,7 +296,19 @@ class KeyedParquetStore:
     def merge(self, partial: DataFrame, epoch_key: str) -> None:
         """Fold one micro-batch's partial into the store. The fold
         and both I/O sides run as Spark jobs; the driver sees only
-        the touched bucket ids (<= n_buckets ints)."""
+        the touched bucket ids (<= n_buckets ints).
+
+        Both tiers run one compaction: each RIPE bucket's base and
+        its committed deltas at or below this epoch fold into a
+        fresh ``v-<epoch>`` base, so the new base's key covers
+        everything it absorbed and ``_delta_versions``'
+        strictly-above rule stays exact across crash windows. The
+        tiers differ only in what is ripe. Copy-on-write: every
+        bucket the batch touches, with the partial joining the
+        fold. Delta tier: the pre-folded partial first commits as
+        ``d-<epoch>``, and only buckets holding ``delta_threshold``
+        deltas at or below the epoch compact (amortized: every T-th
+        touch pays one bucket rewrite)."""
         # sweep crash-orphaned staging dirs HERE, on the writer's
         # path, not in __init__: read-side handles (a monitoring
         # poll constructing a store object over a RUNNING task's
@@ -305,7 +332,6 @@ class KeyedParquetStore:
                 continue              # concurrently removed
             if age > 600:
                 self.fs.remove_tree(sp)
-        version = f"v-{epoch_key}"
         # the partial is consumed twice (touched-bucket probe +
         # staged write) — cut lineage so its upstream fold runs
         # once per batch, not twice (this was re-running each
@@ -315,82 +341,42 @@ class KeyedParquetStore:
         part = partial.withColumn(_BUCKET, self._bucket_expr())
         touched = sorted(r[_BUCKET] for r in
                          part.select(_BUCKET).distinct().collect())
-
-        if self.delta_threshold is None:
-            # --- copy-on-write tier: rewrite each touched bucket --
-            todo = [b for b in touched
-                    if not self._applied(b, epoch_key)]
-            if not todo:
-                return
-            part = part.filter(
-                F.col(_BUCKET).isin([int(b) for b in todo]))
-            cur_paths = []
-            for b in todo:
-                bd = self._bucket_dir(b)
-                cur = self._current(b, below=version)
-                if cur is not None:
-                    cur_paths.extend(self.fs.read_paths(bd, cur))
-                # committed deltas STRICTLY below this epoch are
-                # prior state too (a store flipped from the delta
-                # tier back to CoW must absorb them, and the new
-                # base's vacuum then sweeps them); a delta AT this
-                # epoch is a replayed attempt's own output — the
-                # _applied skip above already returned for those
-                for dv in self._delta_versions(b):
-                    if dv[2:] < epoch_key:
-                        cur_paths.extend(self.fs.read_paths(bd, dv))
-            merged = part
-            if cur_paths:
-                cur_df = self.spark.read.parquet(*cur_paths) \
-                    .select(*part.columns)
-                merged = part.unionByName(cur_df)
-            merged = self._finalized(merged.groupBy(
-                _BUCKET, *self.key_cols).agg(*self.aggs))
-            self._commit_version(merged, version, todo)
-            for b in todo:
-                self._vacuum(b)
-            return
-
-        # --- delta tier: append O(batch), compact every T deltas --
         todo = [b for b in touched if not self._applied(b, epoch_key)]
         if not todo:
             return
         part = part.filter(F.col(_BUCKET).isin([int(b) for b in todo]))
-        # pre-fold the batch per key: the CoW path folds duplicate
-        # partial keys implicitly through its state union; a delta
-        # file must carry ONE folded row per key itself so the
-        # read-side fold sees monoid elements, not raw fragments
-        folded = self._finalized(
-            part.groupBy(_BUCKET, *self.key_cols).agg(*self.aggs))
-        self._commit_version(folded, f"d-{epoch_key}", todo)
-        # compaction: a bucket that reached T committed deltas folds
-        # base + deltas into a fresh base at THIS epoch. Only the
-        # batch's own buckets are candidates (amortized: every T-th
-        # touch pays one bucket rewrite), and only deltas <= this
-        # epoch fold — the new base's key must cover everything it
-        # absorbed so _delta_versions' strictly-above rule stays
-        # exact across crash windows.
-        ripe = [b for b in todo
-                if len([d for d in self._delta_versions(b)
-                        if d[2:] <= epoch_key])
-                >= self.delta_threshold]
+        if self.delta_threshold is None:
+            ripe = todo
+        else:
+            # a delta file must carry ONE folded row per key so the
+            # read-side fold sees monoid elements, not raw fragments
+            self._commit_version(self._fold(part, _BUCKET),
+                                 f"d-{epoch_key}", todo)
+            ripe = [b for b in todo
+                    if sum(d[2:] <= epoch_key
+                           for d in self._delta_versions(b))
+                    >= self.delta_threshold]
         if ripe:
-            paths = []
-            for b in ripe:
-                bd = self._bucket_dir(b)
-                cur = self._current(b)
-                if cur is not None:
-                    paths.extend(self.fs.read_paths(bd, cur))
-                for d in self._delta_versions(b):
-                    if d[2:] <= epoch_key:
-                        paths.extend(self.fs.read_paths(bd, d))
-            compacted = self._finalized(
-                self.spark.read.parquet(*paths)
-                .groupBy(_BUCKET, *self.key_cols)
-                .agg(*self.aggs))
-            self._commit_version(compacted, version, ripe)
+            # on the CoW path _applied returned False, so no d-<epoch>
+            # is committed and the base is below the epoch: the
+            # deltas at or below it are all strictly below, the
+            # prior state of a store flipped back from the delta
+            # tier, which this base absorbs and the vacuum sweeps
+            paths = [p for b in ripe for p in self._paths(b, epoch_key)]
+            state = self.spark.read.parquet(*paths) if paths else None
+            if self.delta_threshold is None:
+                state = (part if state is None
+                         else part.unionByName(state.select(*part.columns)))
+            self._commit_version(self._fold(state, _BUCKET),
+                                 f"v-{epoch_key}", ripe)
         for b in todo:
             self._vacuum(b)
+
+    def _fold(self, df: DataFrame, *lead: str) -> DataFrame:
+        """The store's one per-key fold: ``aggs`` grouped by the
+        ``lead`` columns and the key, then ``_finalized``."""
+        return self._finalized(
+            df.groupBy(*lead, *self.key_cols).agg(*self.aggs))
 
     def _finalized(self, folded: DataFrame) -> DataFrame:
         """Apply the optional post-fold row filter (see
@@ -399,11 +385,11 @@ class KeyedParquetStore:
                 else self.fold_finalize(folded))
 
     def _applied(self, b: int, epoch_key: str) -> bool:
-        """Replay-skip test for the delta tier: this epoch's
-        contribution to bucket ``b`` is durable if its delta
-        committed OR a base at-or-above the epoch exists (a
-        compaction at epoch E vacuums the d-E it absorbed — the
-        base IS that epoch's durability witness)."""
+        """Replay-skip test: this epoch's contribution to bucket
+        ``b`` is durable if its delta committed OR a base
+        at-or-above the epoch exists (a compaction at epoch E
+        vacuums the d-E it absorbed — the base IS that epoch's
+        durability witness)."""
         if self._committed(b, f"d-{epoch_key}"):
             return True
         cur = self._current(b)
@@ -472,24 +458,12 @@ class KeyedParquetStore:
             self.fs.drop_version(bd, v)
 
     def _current_paths(self, buckets: set[int] | None = None) -> list[str]:
-        """Current-state dirs for the given buckets (None = all):
-        each bucket's greatest committed base plus any committed
-        deltas above it. Names only — the caller decides what to
-        read (and folds iff a delta is among them). Posix entries
-        are version DIRS (unchanged plans); manifest entries are
-        the versions' exact FILE lists — listings are never
-        trusted on object stores."""
-        paths = []
-        for b in self._bucket_ids():
-            if buckets is not None and b not in buckets:
-                continue
-            bd = self._bucket_dir(b)
-            cur = self._current(b)
-            if cur is not None:
-                paths.extend(self.fs.read_paths(bd, cur))
-            for dv in self._delta_versions(b):
-                paths.extend(self.fs.read_paths(bd, dv))
-        return paths
+        """``_paths`` of the given buckets (None = all) — the caller
+        decides what to read (and folds iff a delta is among
+        them)."""
+        return [p for b in self._bucket_ids()
+                if buckets is None or b in buckets
+                for p in self._paths(b)]
 
     @staticmethod
     def _version_dir(p: str) -> str:
@@ -523,9 +497,7 @@ class KeyedParquetStore:
                        if bucket_of(p) not in delta_buckets]
         plain = (self.spark.read.parquet(*plain_paths).drop(_BUCKET)
                  if plain_paths else None)
-        folded = (self._finalized(
-                      self.spark.read.parquet(*folded_paths)
-                      .groupBy(*self.key_cols).agg(*self.aggs))
+        folded = (self._fold(self.spark.read.parquet(*folded_paths))
                   if folded_paths else None)
         if folded is None:
             return plain
@@ -1309,9 +1281,8 @@ class ParquetWinnowStore(KeyedParquetStore):
         self.df_cap = _WINNOW_DF_CAP if df_cap is None else df_cap
         super().__init__(
             spark, path, ["fp"],
-            [F.slice(F.array_sort(F.array_distinct(F.flatten(
-                F.collect_list("doc_ids")))), 1,
-                self.df_cap + 1).alias("doc_ids")],
+            [F.slice(_set_union("doc_ids"), 1,
+                     self.df_cap + 1).alias("doc_ids")],
             n_buckets,
             state_schema="fp string, doc_ids array<bigint>")
 
@@ -1550,8 +1521,7 @@ class ParquetBasketStore(KeyedParquetStore):
         #: clock — also the state right after a restart,
         #: re-established by the next trigger)
         self.current_wm = None
-        parts = F.array_sort(F.array_distinct(F.flatten(
-            F.collect_list("parts")))).alias("parts")
+        parts = _set_union("parts").alias("parts")
         if retention_days is None:
             aggs = [parts]
             schema = "o long, parts array<bigint>"
@@ -2118,7 +2088,60 @@ def streaming_bm25(postings: ParquetPostingsStore,
     return bm25_score_topk(tf, dl, st)
 
 
-class ParquetEventIndexStore(KeyedParquetStore):
+class _TimelineStore(KeyedParquetStore):
+    """Per-key sorted distinct set of timed facts (``_col``) under
+    set union, with the optional retention horizon both timeline
+    stores share: with ``retention_days=H`` each partial carries
+    ``wm`` = (its batch's max event micros) − H days, folded under
+    MAX, and the fold drops facts whose micros (``_micros``) fall
+    below the folded watermark."""
+
+    _col: str
+
+    @staticmethod
+    def _micros(fact: Column) -> Column:
+        return fact
+
+    def __init__(self, spark: SparkSession, path: str,
+                 key_cols: list[str], schema: str, n_buckets: int,
+                 retention_days: int | None) -> None:
+        self.retention_days = _retention_days(retention_days)
+        facts = _set_union(self._col)
+        if retention_days is None:
+            aggs = [facts.alias(self._col)]
+        else:
+            # the folded watermark gates the folded array IN the
+            # same agg projection: filter(union, max(wm)) — at a
+            # higher watermark this absorbs any earlier filter, so
+            # the fold stays associative and idempotent
+            aggs = [F.filter(facts,
+                             lambda x: self._micros(x) >= F.max("wm"))
+                    .alias(self._col),
+                    F.max("wm").alias("wm")]
+            schema += ", wm long"
+        super().__init__(spark, path, key_cols, aggs, n_buckets,
+                         state_schema=schema)
+
+    def retained_state(self) -> DataFrame:
+        """State rows restricted to the GLOBAL retention window
+        (max folded watermark — per-key watermarks can lag for
+        keys untouched since the horizon moved). With no retention
+        configured this is plain ``state()``."""
+        st = self.state()
+        if self.retention_days is None:
+            return st
+        st = st.localCheckpoint(eager=False)   # read once, used 2x
+        gwm = st.agg(F.max("wm").alias("gwm"))
+        return (st.crossJoin(F.broadcast(gwm))
+                .select(*self.key_cols,
+                        F.filter(self._col,
+                                 lambda x: self._micros(x)
+                                 >= F.col("gwm"))
+                        .alias(self._col))
+                .filter(F.size(self._col) > 0))
+
+
+class ParquetEventIndexStore(_TimelineStore):
     """Per-(user, event_type) sorted distinct event-time index under
     set-union — a true idempotent monoid, so arrival order and
     replay cannot move it. This is the exact-state funnel twin's
@@ -2141,47 +2164,15 @@ class ParquetEventIndexStore(KeyedParquetStore):
     batch queries restricted to the retained window. Default None
     keeps the exact-forever behavior and schema unchanged."""
 
+    _col = "tss"
+
     def __init__(self, spark: SparkSession, path: str,
                  n_buckets: int = 4,
                  retention_days: int | None = None) -> None:
-        self.retention_days = _retention_days(retention_days)
-        if retention_days is None:
-            aggs = [F.array_sort(F.array_distinct(F.flatten(
-                F.collect_list("tss")))).alias("tss")]
-            schema = ("user_id long, event_type string, "
-                      "tss array<bigint>")
-        else:
-            # the folded watermark gates the folded array IN the
-            # same agg projection: filter(union, max(wm)) — at a
-            # higher watermark this absorbs any earlier filter, so
-            # the fold stays associative and idempotent
-            aggs = [F.filter(
-                        F.array_sort(F.array_distinct(F.flatten(
-                            F.collect_list("tss")))),
-                        lambda x: x >= F.max("wm")).alias("tss"),
-                    F.max("wm").alias("wm")]
-            schema = ("user_id long, event_type string, "
-                      "tss array<bigint>, wm long")
         super().__init__(
-            spark, path, ["user_id", "event_type"], aggs,
-            n_buckets, state_schema=schema)
-
-    def retained_state(self) -> DataFrame:
-        """State rows restricted to the GLOBAL retention window
-        (max folded watermark — per-key watermarks can lag for
-        keys untouched since the horizon moved). With no retention
-        configured this is plain ``state()``."""
-        st = self.state()
-        if self.retention_days is None:
-            return st
-        st = st.localCheckpoint(eager=False)   # read once, used 2x
-        gwm = st.agg(F.max("wm").alias("gwm"))
-        return (st.crossJoin(F.broadcast(gwm))
-                .select("user_id", "event_type",
-                        F.filter("tss",
-                                 lambda x: x >= F.col("gwm"))
-                        .alias("tss"))
-                .filter(F.size("tss") > 0))
+            spark, path, ["user_id", "event_type"],
+            "user_id long, event_type string, tss array<bigint>",
+            n_buckets, retention_days)
 
 
 def partial_event_index(batch_df: DataFrame,
@@ -2287,8 +2278,7 @@ class ParquetPurchaseStore(KeyedParquetStore):
                  n_buckets: int = 2) -> None:
         super().__init__(
             spark, path, ["user_id"],
-            [F.array_sort(F.array_distinct(F.flatten(
-                F.collect_list("ps")))).alias("ps")],
+            [_set_union("ps").alias("ps")],
             n_buckets,
             state_schema=("user_id long, ps array<struct<"
                           "id: long, t: long, c: long>>"))
@@ -2403,7 +2393,7 @@ def streaming_time_to_convert(
                  .alias("n_users")))
 
 
-class ParquetUserSeqStore(KeyedParquetStore):
+class ParquetUserSeqStore(_TimelineStore):
     """Per-user TYPED event timeline — (micros, event_id, type)
     structs under sorted-distinct set union (idempotent: event_id
     makes each fact self-identifying, so replay and re-delivery
@@ -2433,42 +2423,20 @@ class ParquetUserSeqStore(KeyedParquetStore):
     bug). Default None keeps exact-forever behavior and the
     schema unchanged."""
 
+    _col = "es"
+
+    @staticmethod
+    def _micros(fact: Column) -> Column:
+        return fact["t"]
+
     def __init__(self, spark: SparkSession, path: str,
                  n_buckets: int = 4,
                  retention_days: int | None = None) -> None:
-        self.retention_days = _retention_days(retention_days)
-        if retention_days is None:
-            aggs = [F.array_sort(F.array_distinct(F.flatten(
-                F.collect_list("es")))).alias("es")]
-            schema = ("user_id long, es array<struct<"
-                      "t: long, id: long, et: string>>")
-        else:
-            aggs = [F.filter(
-                        F.array_sort(F.array_distinct(F.flatten(
-                            F.collect_list("es")))),
-                        lambda x: x["t"] >= F.max("wm"))
-                    .alias("es"),
-                    F.max("wm").alias("wm")]
-            schema = ("user_id long, es array<struct<"
-                      "t: long, id: long, et: string>>, wm long")
         super().__init__(
-            spark, path, ["user_id"], aggs, n_buckets,
-            state_schema=schema)
-
-    def retained_state(self) -> DataFrame:
-        """State rows restricted to the GLOBAL retention window
-        (the event-index reader, struct-array flavored)."""
-        st = self.state()
-        if self.retention_days is None:
-            return st
-        st = st.localCheckpoint(eager=False)   # read once, used 2x
-        gwm = st.agg(F.max("wm").alias("gwm"))
-        return (st.crossJoin(F.broadcast(gwm))
-                .select("user_id",
-                        F.filter("es",
-                                 lambda x: x["t"] >= F.col("gwm"))
-                        .alias("es"))
-                .filter(F.size("es") > 0))
+            spark, path, ["user_id"],
+            "user_id long, es array<struct<t: long, id: long, "
+            "et: string>>",
+            n_buckets, retention_days)
 
 
 def partial_user_seq(batch_df: DataFrame,

@@ -204,9 +204,8 @@ def test_debezium_parse_on_streaming_frames(spark, tmp_path):
 
 
 def test_positional_org_row_empty_registry_quarantines(spark):
-    """An empty registry (nothing bootstrapped yet) must produce
-    NULL org_rows — the quarantine path — not an analysis error
-    from an empty CASE chain."""
+    """An empty registry (nothing bootstrapped yet) gives every row
+    a NULL ``__cols``, so a NULL org_row — the quarantine path."""
     from pyspark.sql import functions as F
 
     from galaxy_spark.cdc.debezium import positional_org_row

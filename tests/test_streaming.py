@@ -1777,6 +1777,32 @@ def test_delta_tier_state_matches_cow(spark, tmp_path, threshold):
     assert sorted(map(tuple, dlt.state().collect())) == want
 
 
+@pytest.mark.parametrize("threshold,want", [(None, [4, 5, 5, 5, 5]),
+                                            (2, [4, 7, 7, 4, 7])])
+def test_merge_spark_job_count(spark, tmp_path, threshold, want):
+    """Spark jobs per merge, pinned on each tier: the job count is
+    the store's per-trigger cost beside its bytes (touched-bucket
+    collect, staged writes, compaction reads), so a change that
+    adds a job to every merge, or drops one, shows here. At T=2 the
+    compacting merges (epochs 1, 2 and 4) pay the delta write and
+    the base rewrite; epoch 3 touches one bucket holding only one
+    delta and pays the delta write alone."""
+    sc = spark.sparkContext
+    store = _sum_store(spark, str(tmp_path / "jobs"), threshold)
+    got = []
+    try:
+        for i, rows in enumerate(_DELTA_BATCHES[:5]):
+            group = f"merge-jobs-{threshold}-{i}"
+            sc.setJobGroup(group, group)
+            store.merge(_batch_df(spark, rows), f"lin.{i:012d}")
+            got.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+    finally:
+        for prop in ("spark.jobGroup.id", "spark.job.description",
+                     "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(prop, None)
+    assert got == want
+
+
 def test_delta_merge_reads_no_state(spark, tmp_path, monkeypatch):
     """THE write-amplification pin: a non-compacting delta merge
     performs ZERO reads of store state (its I/O is the batch,
