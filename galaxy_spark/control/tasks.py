@@ -49,7 +49,6 @@ from galaxy_spark.streaming.pipeline import (LIVE_SINK_KINDS,
                                              LiveFilterRef, SinkConfig,
                                              start_pipeline,
                                              start_pipeline_live)
-from galaxy_spark.streaming.store_fs import store_fs
 
 
 @dataclass
@@ -242,15 +241,17 @@ class TaskManager:
         spec = self._spec(spec_or_id)
         opts = _index_options(spec)
         root = self.store_root(spec)
-        out = []
-        for subdir, cls, big, ctor_opts in _KINDS[spec.task_kind].stores:
-            store = cls(self.spark, os.path.join(root, subdir),
-                        **{k: opts.get(k) for k in ctor_opts})
-            store.delta_threshold = opts.get(
-                "delta_threshold", _BIG_STORE_DELTA if big else None)
-            store.fs = store_fs(opts.get("fs", "posix"))
-            out.append(store)
-        return tuple(out)
+        kind = _KINDS[spec.task_kind]
+        tunables = {k: opts.get(k) for k in kind.store_options}
+        return tuple(
+            ss.KeyedParquetStore(
+                self.spark, os.path.join(root, subdir),
+                store_spec(**tunables) if callable(store_spec)
+                else store_spec,
+                delta_threshold=opts.get(
+                    "delta_threshold", _BIG_STORE_DELTA if big else None),
+                fs=opts.get("fs", "posix"))
+            for subdir, store_spec, big in kind.stores)
 
     def near_dup_pairs(self, task_id: str) -> DataFrame:
         """All near-dup pairs the task has emitted so far (the
@@ -564,18 +565,20 @@ _BIG_STORE_DELTA = 8
 class _Kind(NamedTuple):
     """One stateful task kind."""
 
-    #: (subdir, store class, delta tier by default, constructor
-    #: options) per store, in the starter's argument order. Delta
-    #: tier (O(batch) appends, compaction every 8th touch) suits the
-    #: corpus-sized stores; small hot stores stay CoW, because their
-    #: rewrite is already cheap and every read of a delta-bearing
-    #: bucket pays a groupBy fold over up to T-1 delta files (r11
-    #: ADVICE)
+    #: (subdir, store spec, delta tier by default) per store, in
+    #: the starter's argument order; a spec function is called with
+    #: the kind's ``store_options``. Delta tier (O(batch) appends,
+    #: compaction every 8th touch) suits the corpus-sized stores;
+    #: small hot stores stay CoW, because their rewrite is already
+    #: cheap and every read of a delta-bearing bucket pays a groupBy
+    #: fold over up to T-1 delta files (r11 ADVICE)
     stores: tuple
     #: the ``streaming.state_store`` starter that runs the task
     starter: Callable
     #: the starter's keyword options and their types
     options: dict = {}
+    #: the options the kind's spec functions take (integers)
+    store_options: tuple = ()
 
 
 _DOC_COLS = {"text_col": str, "id_col": str}
@@ -596,11 +599,11 @@ _KINDS = {
         # doc/LSH/pair are insert-heavy and bucket-rewrite-bound,
         # exactly where amortized compaction pays; cluster/redirect
         # are tiny and hot
-        (("lsh", ss.ParquetLshStore, True, ()),
-         ("doc", ss.ParquetDocStore, True, ()),
-         ("pair", ss.ParquetPairStore, True, ()),
-         ("cluster", ss.ParquetClusterStore, False, ()),
-         ("redirect", ss.ParquetRedirectStore, False, ())),
+        (("lsh", ss.LSH_SPEC, True),
+         ("doc", ss.DOC_SPEC, True),
+         ("pair", ss.PAIR_SPEC, True),
+         ("cluster", ss.CLUSTER_SPEC, False),
+         ("redirect", ss.REDIRECT_SPEC, False)),
         ss.start_streaming_near_dup_clustering,
         {"n": int, "n_hashes": int, "bands": int, "threshold": float,
          **_DOC_COLS}),
@@ -608,21 +611,21 @@ _KINDS = {
     "search_index": _Kind(
         # postings/doclen are corpus-sized; the corpus stats store is
         # ONE row read on every query
-        (("postings", ss.ParquetPostingsStore, True, ()),
-         ("doclen", ss.ParquetDocLenStore, True, ()),
-         ("stats", ss.ParquetCorpusStatsStore, False, ())),
+        (("postings", ss.POSTINGS_SPEC, True),
+         ("doclen", ss.DOC_LEN_SPEC, True),
+         ("stats", ss.CORPUS_STATS_SPEC, False)),
         ss.start_streaming_search_index, _DOC_COLS),
     # the multi-grain time-series hub (r12): (grain, bucket,
     # type)-keyed counters, a calendar-bounded key space but touched
     # broadly every batch, so O(batch) appends beat a per-trigger
     # rewrite of most buckets
     "rollup": _Kind(
-        (("rollup", ss.ParquetRollupStore, True, ()),),
+        (("rollup", ss.ROLLUP_SPEC, True),),
         ss.start_incremental_rollup_parquet),
     # the winnowing-fingerprint near-dup index (r13): one bounded row
     # per distinct fingerprint, corpus-sized
     "winnow_index": _Kind(
-        (("winnow", ss.ParquetWinnowStore, True, ()),),
+        (("winnow", ss.winnow_spec, True),),
         ss.start_streaming_winnowing_index, _DOC_COLS),
     # the co-occurrence hub (r13). Baskets and pair counts are
     # corpus-sized; the degree store is |items| rows probed
@@ -631,26 +634,26 @@ _KINDS = {
     # (the streaming cap_mega_baskets, r14), at least 2 because a
     # 1-item sample never emits a pair
     "item_cf": _Kind(
-        (("basket", ss.ParquetBasketStore, True,
-          ("retention_days", "basket_cap")),
-         ("cooc", ss.ParquetCoocStore, True, ()),
-         ("deg", ss.ParquetItemDegStore, False, ())),
-        ss.start_streaming_item_cf),
+        (("basket", ss.basket_spec, True),
+         ("cooc", ss.COOC_SPEC, True),
+         ("deg", ss.ITEM_DEG_SPEC, False)),
+        ss.start_streaming_item_cf,
+        store_options=("retention_days", "basket_cap")),
     # the events-analytics hub (r14): purchase facts + the per-(user,
     # type) event-time index, both user-keyed activity stores growing
     # with the corpus. retention_days bounds the INDEX (readers
     # answer over the retained window); the purchase store stays
     # exact, it is the revenue ledger
     "event_index": _Kind(
-        (("purchase", ss.ParquetPurchaseStore, True, ()),
-         ("evindex", ss.ParquetEventIndexStore, True,
-          ("retention_days",))),
-        ss.start_streaming_attribution_hub),
+        (("purchase", ss.PURCHASE_SPEC, True),
+         ("evindex", ss.event_index_spec, True)),
+        ss.start_streaming_attribution_hub,
+        store_options=("retention_days",)),
     # the per-user typed-timeline store (r14), growing with the
     # corpus; retention_days bounds the timelines
     "user_seq": _Kind(
-        (("userseq", ss.ParquetUserSeqStore, True, ("retention_days",)),),
-        ss.start_streaming_user_seq),
+        (("userseq", ss.user_seq_spec, True),),
+        ss.start_streaming_user_seq, store_options=("retention_days",)),
 }
 
 #: integer options -> their floor; null keeps the option's default
@@ -669,8 +672,7 @@ def _index_options(spec: TaskSpec, strict: bool = False) -> dict:
     spec carrying one still recovers."""
     kind = _KINDS[spec.task_kind]
     opts = spec.index_options or {}
-    takes = {"delta_threshold", "fs", *kind.options,
-             *(o for store in kind.stores for o in store[3])}
+    takes = {"delta_threshold", "fs", *kind.options, *kind.store_options}
     unknown = sorted(set(opts) - takes)
     if strict and unknown:
         raise ValueError(

@@ -618,7 +618,7 @@ def cdc_incremental_view_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the second exchange moves O(partitions x groups). In the
     streaming deployment the LAG state is the per-key last image
     the snapshot store already holds
-    (``state_store.ParquetSnapshotStore``), and
+    (``state_store.SNAPSHOT_SPEC``), and
     each micro-batch ships only its partial delta sums — the view
     update cost is independent of both history length and key
     cardinality, which is the entire point of the delta rule.

@@ -1061,7 +1061,7 @@ def winnow_fingerprints(docs: DataFrame, text_col: str = "text",
                         id_col: str = "doc_id") -> DataFrame:
     """Distinct (doc_id, fp) winnowing fingerprints — THE selection
     arithmetic of ``dedup_winnowing_pairs``, factored out so the
-    streaming index (state_store.ParquetWinnowStore) imports it
+    streaming index (state_store.winnow_spec) imports it
     instead of re-deriving it: one drifting constant (k, w, the
     gram hash, the full-window rule) would silently fork streaming
     emissions from the batch oracle. See the batch query's

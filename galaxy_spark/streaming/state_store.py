@@ -27,7 +27,7 @@ Layout and protocol::
   only those buckets (copy-on-write MERGE; per-batch cost ∝
   touched-bucket bytes, never full-state bytes). ``layout_cols``
   defaults to the full key, but a store may declare a PREFIX of its
-  key as the layout (``ParquetLshStore`` lays out by (band, bucket)
+  key as the layout (``LSH_SPEC`` lays out by (band, bucket)
   while keying rows by (band, bucket, id)) so that READERS who know
   only those columns can prune: ``state_for_keys`` computes the
   touched bucket set from a key frame and opens only those buckets'
@@ -60,10 +60,11 @@ Layout and protocol::
 from __future__ import annotations
 
 import functools
-import inspect
 import json
 import os
 import uuid
+from dataclasses import dataclass, field
+from typing import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -103,34 +104,82 @@ def _set_union(col: str) -> Column:
     return F.array_sort(F.array_distinct(F.flatten(F.collect_list(col))))
 
 
+@dataclass(frozen=True)
+class StoreSpec:
+    """What a keyed store folds and how it lays out: one row of the
+    store table below. Every store in the package is a
+    ``KeyedParquetStore`` over one of these rows, configured by data
+    rather than by subclassing; stores that take tunables (a winnow
+    DF cap, a retention horizon) get theirs from a spec function of
+    those tunables."""
+
+    #: the row key: state holds one folded row per key
+    key_cols: tuple[str, ...]
+    #: builds the fold — an associative/commutative fold over the
+    #: union of old state rows and partial rows (latest-wins max_by,
+    #: sums, counts). Called once per store: Columns need a live
+    #: session, and the table is built at import
+    aggs: Callable[[], list[Column]]
+    #: DDL schema of state() rows, used so a never-written store's
+    #: empty state is TYPED — without it snapshot() / history()
+    #: raised UNRESOLVED_COLUMN when polled before the first
+    #: micro-batch committed
+    state_schema: str
+    #: default bucket count (a store may be opened with another)
+    n_buckets: int = 8
+    #: columns the bucket layout hashes (None = the key) — a subset
+    #: of the key, so readers that know only these columns (an LSH
+    #: probe's (band, bucket) signatures) can compute the touched
+    #: bucket set and prune the read. Hash-type sensitivity:
+    #: xxhash64 over INT and BIGINT differ, so a key frame passed to
+    #: state_for_keys must carry the same column types the merge
+    #: partials carried.
+    layout_cols: tuple[str, ...] | None = None
+    #: optional post-fold row filter ``(store, folded) -> folded``,
+    #: applied after EVERY fold (``_fold``) with the store it folds
+    #: for — the seam stores whose retention must DROP WHOLE ROWS
+    #: hang their eviction on (array-valued stores evict inside the
+    #: agg itself; a store keyed by the aging column, like (user,
+    #: day), cannot). Must be idempotent and absorbed by
+    #: re-application at a later watermark, like the in-agg gates,
+    #: so replay and fold order cannot move state.
+    finalize: Callable | None = None
+    #: optional ``state -> rows`` reader behind ``retained_state``:
+    #: the global retention window of a timeline store
+    retained: Callable | None = None
+    #: optional ``state -> sorted tuples`` reader behind
+    #: ``snapshot`` (the CDC snapshot and the rollup)
+    snapshot: Callable | None = None
+    #: the tunables a spec function was called with; the store
+    #: carries each as an attribute (a winnow store's ``df_cap``)
+    options: dict = field(default_factory=dict)
+
+
 class KeyedParquetStore:
     """Generic keyed MERGE store: ``merge`` folds one partial
-    DataFrame into the persisted state with ``aggs`` (which must be
-    an associative/commutative fold over the union of old state
-    rows and partial rows — latest-wins max_by, sums, counts)."""
+    DataFrame into the persisted state with the ``spec``'s aggs."""
 
-    def __new__(cls, *args, **kwargs):
-        self = super().__new__(cls)
-        #: the constructor call, as made — ``_clone`` replays it at a
-        #: new path and bucket count, so every tunable a subclass
-        #: takes (a winnow store's df_cap, a retention horizon)
-        #: survives a rebuild without a per-subclass override
-        self._init_args = (args, kwargs)
-        return self
+    #: a stream-time eviction horizon (a datetime.date) the store's
+    #: starter advances — the basket store's, read by its finalize;
+    #: None until the first timed batch (no eviction before the
+    #: stream has a clock — also the state right after a restart,
+    #: re-established by the next trigger)
+    current_wm = None
 
-    def __init__(self, spark: SparkSession, path: str,
-                 key_cols: list[str], aggs: list[Column],
-                 n_buckets: int = 8,
-                 state_schema: str | None = None,
-                 layout_cols: list[str] | None = None,
+    def __init__(self, spark: SparkSession, path: str, spec: StoreSpec,
+                 n_buckets: int | None = None,
                  delta_threshold: int | None = None,
                  fs=None,
                  vacuum_grace_seconds: float = 0.0) -> None:
         self.spark = spark
         self.path = path
-        self.key_cols = list(key_cols)
-        self.aggs = list(aggs)
-        self.n_buckets = n_buckets
+        self.spec = spec
+        self.key_cols = list(spec.key_cols)
+        self.aggs = spec.aggs()
+        self.n_buckets = spec.n_buckets if n_buckets is None else n_buckets
+        self.state_schema = spec.state_schema
+        self.layout_cols = list(spec.layout_cols or spec.key_cols)
+        vars(self).update(spec.options)
         #: HOW a version becomes durable/visible — the commit
         #: protocol seam (store_fs.py). "posix" (default): atomic
         #: directory rename + _COMMITTED marker, correct on POSIX/
@@ -168,35 +217,12 @@ class KeyedParquetStore:
         #: merge-fold); with no deltas present the read plan is
         #: byte-identical to CoW mode.
         self.delta_threshold = delta_threshold
-        #: columns the bucket layout hashes — a subset of the key,
-        #: so readers that know only these columns (an LSH probe's
-        #: (band, bucket) signatures) can compute the touched bucket
-        #: set and prune the read. Hash-type sensitivity: xxhash64
-        #: over INT and BIGINT differ, so a key frame passed to
-        #: state_for_keys must carry the same column types the
-        #: merge partials carried.
-        self.layout_cols = (list(layout_cols) if layout_cols is not None
-                            else list(key_cols))
-        #: optional post-fold row filter (DataFrame -> DataFrame),
-        #: applied after EVERY fold (``_fold``) — the seam
-        #: stores whose retention must DROP WHOLE ROWS hang their
-        #: eviction on (array-valued stores evict inside the agg
-        #: itself; a store keyed by the aging column, like
-        #: (user, day), cannot). Must be idempotent and absorbed by
-        #: re-application at a later watermark, like the in-agg
-        #: gates, so replay and fold order cannot move state.
-        self.fold_finalize = None
         missing = set(self.layout_cols) - set(self.key_cols)
         if missing:
             raise ValueError(
                 f"layout_cols {sorted(missing)} not in key_cols "
                 f"{self.key_cols}: the layout must be a function of "
                 "the row key or a key's rows scatter across buckets")
-        #: DDL schema of state() rows, used so a never-written
-        #: store's empty state is TYPED — without it snapshot() /
-        #: history() raised UNRESOLVED_COLUMN when polled before
-        #: the first micro-batch committed
-        self.state_schema = state_schema
         self.fs.ensure_dir(path)
 
     @property
@@ -205,12 +231,12 @@ class KeyedParquetStore:
 
     @delta_threshold.setter
     def delta_threshold(self, value: int | None) -> None:
-        # the knob's BLESSED mutation path is attribute assignment
-        # (_clone copies it post-construction; pipelines flip it
-        # at epoch boundaries), so the >= 1 guard must live on the
-        # setter, not just __init__ — a 0/negative value would
-        # silently degrade to compact-every-merge, which is WORSE
-        # than CoW (delta write + bucket rewrite per epoch)
+        # the constructor assigns through here, and the value may
+        # be re-assigned between merges (the tier is a write
+        # strategy; tests flip it per epoch), so the >= 1 guard
+        # lives on the setter — a 0/negative value would silently
+        # degrade to compact-every-merge, which is WORSE than CoW
+        # (delta write + bucket rewrite per epoch)
         if value is not None and value < 1:
             raise ValueError("delta_threshold must be >= 1 or None")
         self._delta_threshold = value
@@ -242,42 +268,39 @@ class KeyedParquetStore:
                 out.append(int(suffix))
         return sorted(out)
 
-    def _versions(self, b: int) -> list[str]:
-        return sorted(
-            v for v in self.fs.version_names(self._bucket_dir(b))
-            if v.startswith("v-"))
-
-    def _delta_versions(self, b: int) -> list[str]:
-        """Committed delta versions of bucket ``b`` with an epoch
-        key STRICTLY greater than the current base's (a delta at or
-        below the base epoch is a crash-mid-compaction leftover the
-        base already folded — applying it would double-count)."""
-        base = self._current(b)
-        floor = base[2:] if base is not None else ""
-        return sorted(
-            v for v in self.fs.version_names(self._bucket_dir(b))
-            if v.startswith("d-") and v[2:] > floor
-            and self._committed(b, v))
-
     def _committed(self, b: int, version: str) -> bool:
         return self.fs.committed(self._bucket_dir(b), version)
 
-    def _current(self, b: int) -> str | None:
-        """Greatest committed base version of bucket ``b``."""
-        return max((v for v in self._versions(b)
-                    if self._committed(b, v)), default=None)
+    def _base(self, b: int, names: list[str]) -> str | None:
+        """Greatest committed base version among bucket ``b``'s
+        listed version ``names``."""
+        return next((v for v in sorted(names, reverse=True)
+                     if v.startswith("v-") and self._committed(b, v)),
+                    None)
+
+    def _state_versions(self, b: int) -> tuple[str | None, list[str]]:
+        """Bucket ``b``'s greatest committed base and the committed
+        deltas with an epoch key STRICTLY greater than it (a delta at
+        or below the base epoch is a crash-mid-compaction leftover
+        the base already folded — applying it would double-count),
+        from one listing. Names only."""
+        names = self.fs.version_names(self._bucket_dir(b))
+        base = self._base(b, names)
+        floor = base[2:] if base is not None else ""
+        return base, sorted(v for v in names
+                            if v.startswith("d-") and v[2:] > floor
+                            and self._committed(b, v))
 
     def _paths(self, b: int, upto: str | None = None) -> list[str]:
         """Read paths of bucket ``b``'s state: its greatest committed
         base plus the committed deltas above it — with ``upto``, only
         the deltas at or below that epoch key (what a compaction at
-        that epoch absorbs). Names only. Posix entries are version
-        DIRS; manifest entries are the versions' exact FILE lists —
+        that epoch absorbs). Posix entries are version DIRS;
+        manifest entries are the versions' exact FILE lists —
         listings are never trusted on object stores."""
-        cur = self._current(b)
-        versions = ([] if cur is None else [cur]) + [
-            d for d in self._delta_versions(b)
-            if upto is None or d[2:] <= upto]
+        base, deltas = self._state_versions(b)
+        versions = ([] if base is None else [base]) + [
+            d for d in deltas if upto is None or d[2:] <= upto]
         bd = self._bucket_dir(b)
         return [p for v in versions for p in self.fs.read_paths(bd, v)]
 
@@ -301,7 +324,7 @@ class KeyedParquetStore:
         Both tiers run one compaction: each RIPE bucket's base and
         its committed deltas at or below this epoch fold into a
         fresh ``v-<epoch>`` base, so the new base's key covers
-        everything it absorbed and ``_delta_versions``'
+        everything it absorbed and ``_state_versions``'
         strictly-above rule stays exact across crash windows. The
         tiers differ only in what is ripe. Copy-on-write: every
         bucket the batch touches, with the partial joining the
@@ -354,7 +377,7 @@ class KeyedParquetStore:
                                  f"d-{epoch_key}", todo)
             ripe = [b for b in todo
                     if sum(d[2:] <= epoch_key
-                           for d in self._delta_versions(b))
+                           for d in self._state_versions(b)[1])
                     >= self.delta_threshold]
         if ripe:
             # on the CoW path _applied returned False, so no d-<epoch>
@@ -379,10 +402,10 @@ class KeyedParquetStore:
             df.groupBy(*lead, *self.key_cols).agg(*self.aggs))
 
     def _finalized(self, folded: DataFrame) -> DataFrame:
-        """Apply the optional post-fold row filter (see
-        ``fold_finalize``)."""
-        return (folded if self.fold_finalize is None
-                else self.fold_finalize(folded))
+        """Apply the spec's optional post-fold row filter (see
+        ``StoreSpec.finalize``) for this store."""
+        return (folded if self.spec.finalize is None
+                else self.spec.finalize(self, folded))
 
     def _applied(self, b: int, epoch_key: str) -> bool:
         """Replay-skip test: this epoch's contribution to bucket
@@ -392,8 +415,8 @@ class KeyedParquetStore:
         durability witness)."""
         if self._committed(b, f"d-{epoch_key}"):
             return True
-        cur = self._current(b)
-        return cur is not None and cur[2:] >= epoch_key
+        base = self._base(b, self.fs.version_names(self._bucket_dir(b)))
+        return base is not None and base[2:] >= epoch_key
 
     def _commit_version(self, df: DataFrame, version: str,
                         todo: list[int]) -> None:
@@ -414,7 +437,7 @@ class KeyedParquetStore:
         for b in todo:
             src = os.path.join(stage, f"__pb={b}")
             if not self.fs.is_dir(src):
-                # reachable ONLY through fold_finalize (r13 review):
+                # reachable ONLY through a finalize (r13 review):
                 # a retention filter can evict a touched bucket's
                 # ENTIRE folded slice, and skipping the publish
                 # would leave the epoch unclaimed for b — every
@@ -422,7 +445,7 @@ class KeyedParquetStore:
                 # Publish a legitimate EMPTY slice instead (a 0-row
                 # parquet file with the folded schema, so readers
                 # scan it like any other version).
-                if self.fold_finalize is None:
+                if self.spec.finalize is None:
                     continue  # plain folds: every todo bucket wrote
                 # staged files carry exactly df's columns (the
                 # __pb partition column is stripped by the write)
@@ -443,9 +466,10 @@ class KeyedParquetStore:
         dropping young versions so concurrent readers mid-scan can
         drain (the replay/next-merge sweep re-collects them)."""
         bd = self._bucket_dir(b)
-        base = self._current(b)
+        names = self.fs.version_names(bd)
+        base = self._base(b, names)
         floor = base[2:] if base is not None else ""
-        for v in self.fs.version_names(bd):
+        for v in names:
             stale = ((v.startswith("v-") and base is not None
                       and v != base)
                      or (v.startswith("d-") and v[2:] <= floor))
@@ -506,8 +530,7 @@ class KeyedParquetStore:
         return plain.unionByName(folded)
 
     def _empty_state(self) -> DataFrame:
-        schema = self.state_schema or "x int"
-        return self.spark.createDataFrame([], schema).limit(0)
+        return self.spark.createDataFrame([], self.state_schema).limit(0)
 
     def state(self) -> DataFrame:
         """Current accumulated state as a DataFrame (distributed
@@ -545,81 +568,453 @@ class KeyedParquetStore:
             return self._empty_state()
         return self._read_state(paths)
 
-    def _clone(self, new_path: str, n_buckets: int) -> "KeyedParquetStore":
-        """Same-configuration store at a new path / bucket count —
-        the ``rebucket`` reconstruction seam. Replays the recorded
-        constructor call with only ``path`` and ``n_buckets``
-        replaced, then carries what may have changed since
-        construction: the write strategy (``delta_threshold``,
-        ``fs``, ``vacuum_grace_seconds`` shape only HOW versions are
-        written, never the folded state) and a ``fold_finalize``
-        hook assigned after construction. A hook the constructor
-        derives is derived again, bound to the new store."""
-        args, kwargs = self._init_args
-        call = inspect.signature(type(self).__init__).bind(
-            self, *args, **kwargs).arguments
-        del call["self"]
-        call.update(path=new_path, n_buckets=n_buckets)
-        new = type(self)(**call)
-        new.delta_threshold = self.delta_threshold
-        new.fs = self.fs
-        new.vacuum_grace_seconds = self.vacuum_grace_seconds
-        if new.fold_finalize is None:
-            new.fold_finalize = self.fold_finalize
-        return new
+    def retained_state(self) -> DataFrame:
+        """State rows restricted to the spec's global retention
+        window (``StoreSpec.retained``, a timeline store with a
+        horizon); without one this is plain ``state()``."""
+        st = self.state()
+        return st if self.spec.retained is None else self.spec.retained(st)
+
+    def snapshot(self) -> list[tuple]:
+        """The spec's sorted presentation rows (``StoreSpec.snapshot``).
+        Collect happens HERE, in the test/read path — the streaming
+        merge path never materializes state rows."""
+        return self.spec.snapshot(self.state())
 
 
-class ParquetSnapshotStore(KeyedParquetStore):
-    """The incremental CDC snapshot: latest-wins state keyed by
-    (database, table, pk), the streaming fold of the batch
-    ``queries.cdc.cdc_apply_snapshot``."""
+# ------------------------------------------------------------------
+# The store table: one StoreSpec per store (spec functions for the
+# stores that take tunables)
+# ------------------------------------------------------------------
 
-    def __init__(self, spark: SparkSession, path: str,
-                 n_buckets: int = 8) -> None:
-        super().__init__(
-            spark, path, ["database", "table", "pk"],
-            [F.max_by("last_action", "last_pos").alias("last_action"),
+# The incremental CDC snapshot: latest-wins state keyed by
+# (database, table, pk), the streaming fold of the batch
+# ``queries.cdc.cdc_apply_snapshot``. ``snapshot()`` is the live rows
+# only (delete tombstones drop), sorted — the same contract as
+# cdc_apply_snapshot's output.
+SNAPSHOT_SPEC = StoreSpec(
+    ("database", "table", "pk"),
+    lambda: [F.max_by("last_action", "last_pos").alias("last_action"),
              F.max_by("last_value", "last_pos").alias("last_value"),
              F.max("last_pos").alias("last_pos"),
              F.sum("n_changes").cast("long").alias("n_changes")],
-            n_buckets,
-            state_schema="database string, table string, pk long, "
-                         "last_action string, last_value double, "
-                         "last_pos long, n_changes long")
+    "database string, table string, pk long, last_action string, "
+    "last_value double, last_pos long, n_changes long",
+    snapshot=lambda st: sorted(
+        (r.database, r["table"], r.pk, r.last_value, r.last_pos,
+         r.n_changes)
+        for r in st.filter(F.col("last_action") != "delete").collect()))
 
-    def snapshot(self) -> list[tuple]:
-        """Live rows only (delete tombstones drop), sorted — the
-        same contract as cdc_apply_snapshot's output. Collect happens
-        HERE, in the test/read path — the streaming merge path never
-        materializes state rows."""
-        st = self.state().filter(F.col("last_action") != "delete")
-        return sorted(
-            (r.database, r["table"], r.pk, r.last_value, r.last_pos,
-             r.n_changes) for r in st.collect())
-
-
-class ParquetRollupStore(KeyedParquetStore):
-    """The continuous rollup: multi-grain (``GRAINS``) aggregate
-    keyed by (grain, bucket_start, event_type), the streaming fold
-    of the batch ``queries.events.events_multi_rollup``. Count and
-    sum are commutative monoids, so per-batch partials merge into
-    the same numbers a full re-aggregation gives."""
-
-    def __init__(self, spark: SparkSession, path: str,
-                 n_buckets: int = 8) -> None:
-        super().__init__(
-            spark, path, ["grain", "bucket_start", "event_type"],
-            [F.sum("n_events").cast("long").alias("n_events"),
+# The continuous rollup: multi-grain (``GRAINS``) aggregate keyed by
+# (grain, bucket_start, event_type), the streaming fold of the batch
+# ``queries.events.events_multi_rollup``. Count and sum are
+# commutative monoids, so per-batch partials merge into the same
+# numbers a full re-aggregation gives.
+ROLLUP_SPEC = StoreSpec(
+    ("grain", "bucket_start", "event_type"),
+    lambda: [F.sum("n_events").cast("long").alias("n_events"),
              F.sum("total_value").alias("total_value")],
-            n_buckets,
-            state_schema="grain string, bucket_start timestamp, "
-                         "event_type string, n_events long, "
-                         "total_value double")
+    "grain string, bucket_start timestamp, event_type string, "
+    "n_events long, total_value double",
+    snapshot=lambda st: sorted(
+        (r.grain, r.bucket_start, r.event_type, r.n_events,
+         round(r.total_value, 2)) for r in st.collect()))
 
-    def snapshot(self) -> list[tuple]:
-        return sorted(
-            (r.grain, r.bucket_start, r.event_type, r.n_events,
-             round(r.total_value, 2)) for r in self.state().collect())
+# Durable GROWING MinHash-LSH index: every streamed document's
+# (band, bucket) signature rows, so each incoming micro-batch can be
+# near-dup-checked against ALL previously streamed documents — not
+# just exact-digest history (``dropDuplicates``) or a static
+# precomputed reference index (the r6 stream-static gate). This was
+# the last first-class gap in the LLM-pipeline axis (r9 verdict #1):
+# batch dedup answers "is this corpus internally near-duplicated";
+# this store answers the operational question "is this NEW batch a
+# near-dup of anything we already ingested".
+#
+# State rows are set MEMBERS — the fold is an idempotent MAX over a
+# constant marker, so a replayed insert cannot change the index (an
+# idempotent fold, strictly stronger than the epoch-claim skip it
+# also gets). Signature arithmetic is the batch tier's own
+# ``minhash_band_buckets`` (operators/dedup.py), imported not copied,
+# so streaming and batch can never drift.
+#
+# Scale shape: the index is O(bands) rows per document with an
+# 8-byte bucket key; the per-batch probe is ONE equi-join on (band,
+# bucket) — the same only-wide-operation contract as the batch tier
+# (no reference equivalent: galaxy has no dedup at all; this is
+# driver-brief-mandated surface).
+#
+# Layout: bucketed by (band, bucket) — a PREFIX of the row key — so
+# the per-trigger probe, which knows only the incoming batch's
+# signatures, prunes its read to the store buckets those signatures
+# hash to (``state_for_keys``). Before r11 the layout hashed the full
+# (band, bucket, id) key and the probe had to read ALL accumulated
+# index state every trigger — the one remaining O(history)
+# per-trigger cost (r10 verdict #1).
+LSH_SPEC = StoreSpec(
+    ("band", "bucket", "id"),
+    lambda: [F.max("seen").cast("int").alias("seen")],
+    "band int, bucket int, id long, seen int", 2,
+    layout_cols=("band", "bucket"))
+
+# The verification corpus behind the LSH index: id -> text,
+# latest-wins under MAX (ids are unique in the pipeline contract, so
+# MAX is a deterministic no-op tie-break, and a replayed insert is
+# idempotent). Near-dup emission is EXACT-Jaccard verified (the batch
+# tier's contract), and exactness needs the matched documents' text
+# — at warehouse scale this store is the ingested documents table
+# itself; here it is the dependency-free stand-in on the same
+# bucketed MERGE discipline.
+DOC_SPEC = StoreSpec(("id",), lambda: [F.max("text").alias("text")],
+                     "id long, text string", 2)
+
+# Accumulated near-dup EMISSIONS: (id_a, id_b) -> exact jaccard. MAX
+# over identical recomputed values is idempotent, so a replayed
+# batch's re-emission cannot move a pair, and a pair discovered in
+# two batches (a duplicated stream element) folds to itself.
+PAIR_SPEC = StoreSpec(("id_a", "id_b"),
+                      lambda: [F.max("jaccard").alias("jaccard")],
+                      "id_a long, id_b long, jaccard double", 2)
+
+# Per-document cluster assignment: id -> label (the smallest
+# reachable doc id at last touch). New pairs can only MERGE clusters,
+# so labels are monotone non-increasing over time and the MIN fold is
+# both the correct accumulator and idempotent, so a replay cannot
+# move it. Rows exist only for ids that ever appeared in a near-dup
+# pair — singletons resolve to themselves at read time — so state is
+# O(near-dup docs), not O(corpus).
+CLUSTER_SPEC = StoreSpec(
+    ("id",), lambda: [F.min("label").cast("long").alias("label")],
+    "id long, label long", 2)
+
+# Label forwarding (the union-find parent map over LABELS): when a
+# batch merges the cluster labeled L into a smaller min m, untouched
+# members still pointing at L re-resolve through (L -> m) at read
+# time instead of being rewritten — per-batch write cost stays
+# bounded by the batch's pairs, never by the losing cluster's size.
+#
+# Rows are SET MEMBERS keyed by the full (label, target) edge — NOT a
+# per-label MIN fold — and that is load-bearing for replay (r11
+# review): with MIN, a partially-committed epoch could fold (L -> m)
+# over an older (L -> m1) in a committed bucket while the (m1 -> m)
+# row's bucket was lost; the replay walk then short-circuited
+# L -> m, never revisited m1, and the lost redirect was never
+# regenerated — a PERMANENT cluster split. Keeping every edge makes
+# the walk rediscover all historical intermediates, so a replay
+# regenerates exactly the missing rows. Read-side resolution takes
+# the per-label MIN target (targets are monotone non-increasing for
+# a fixed label, so min = latest); state stays O(cluster-merge
+# events), each label carrying one row per merge it was on the
+# losing side of — chains and fan-outs stay short because every
+# batch path-compresses the labels it visits.
+#
+# Schema note: this edge-set layout is the store's FIRST released
+# schema (the per-label MIN variant existed only in unreleased
+# intra-round commits); there is deliberately no migration shim for
+# it.
+REDIRECT_SPEC = StoreSpec(
+    ("label", "target"),
+    lambda: [F.max("seen").cast("int").alias("seen")],
+    "label long, target long, seen int", 2, layout_cols=("label",))
+
+
+def winnow_spec(df_cap: int | None = None) -> StoreSpec:
+    """Durable GROWING winnowing-fingerprint index: fp -> the
+    member doc ids, completing the streaming near-dup family's
+    third selection axis (MinHash-LSH probabilistic, embedding-LSH
+    cosine, and now the guaranteed-local winnowing tier of
+    ``dedup_winnowing_pairs``).
+
+    State is ONE bounded array row per fingerprint under the min-k
+    truncation monoid (a k-minimum-values fold): members = the
+    DF_CAP+1 smallest distinct doc ids ever seen for the fp.
+    Truncation at cap+1 IS the merge-time DF-cap enforcement — the
+    batch query drops fingerprints appearing in more than
+    ``df_cap`` (default _WINNOW_DF_CAP) documents as boilerplate, so
+    a reader only ever needs to distinguish ``<= cap`` (all members
+    retained exactly) from ``> cap`` (excluded; cap+1 members
+    retained as the witness) — per-fp state stays O(cap) no matter
+    how hot a boilerplate fingerprint runs, and the fold is
+    idempotent (set-union + deterministic truncation), so replays
+    cannot move it. Laid out by fp, so per-trigger probes open only
+    the store buckets the batch's fingerprints hash to."""
+    from galaxy_spark.queries.llm import _WINNOW_DF_CAP
+
+    cap = _WINNOW_DF_CAP if df_cap is None else df_cap
+    return StoreSpec(
+        ("fp",),
+        lambda: [F.slice(_set_union("doc_ids"), 1,
+                         cap + 1).alias("doc_ids")],
+        "fp string, doc_ids array<bigint>", 2,
+        options={"df_cap": cap})
+
+
+def basket_spec(retention_days: int | None = None,
+                basket_cap: int | None = None) -> StoreSpec:
+    """order -> the distinct items seen for it so far, under
+    set-union (sorted distinct arrays — idempotent, so replays and
+    re-deliveries cannot move it). Laid out by order id, so the
+    per-trigger delta probe opens only the incoming orders'
+    buckets. This is the EXACTNESS anchor of the co-occurrence
+    hub: an order's lines can arrive across many micro-batches,
+    and "which pairs are NEW for this order" is only answerable
+    against its accumulated basket.
+
+    ``retention_days=H`` (r13 verdict #4): the store's only job is
+    dedup of an order's lines, and orders QUIESCE — once the
+    stream has moved H days past an order's last ship activity,
+    further lines for it are >H-late stragglers. Each row then
+    carries ``t`` = the order's newest l_shipdate seen (MAX-
+    folded), and ``cooc_deltas`` advances the STORE-LEVEL watermark
+    ``current_wm`` = max-so-far(batch max l_shipdate) − H (one
+    1-row agg collect per trigger — the audited bounded-collect
+    class) before probing. Two consumers read it:
+
+    - the finalize drops rows with t < current_wm of the store it
+      folds for, at every fold site. Unlike the event-index/
+      user-seq stores' per-key folded watermark (their keys keep
+      being touched; basket keys quiesce, so a per-key wm would
+      never advance for exactly the rows that need evicting), the
+      store-level literal applies to EVERY row of a folded bucket
+      — CoW merges and compactions sweep whole touched buckets, so
+      under continuous traffic (the layout hash spreads new orders
+      over all buckets) state is O(orders active within H) plus
+      the tails of buckets not touched since.
+    - the probe filters stale baskets IN-PLAN (t >= wm), so a
+      basket past the horizon reads as absent even before its
+      bucket's next physical fold — probe semantics and physical
+      eviction cannot disagree.
+
+    The accepted inexactness is the watermark contract: lines
+    arriving MORE than H days after their order's last activity
+    start a FRESH fragment — pairs inside the fragment count
+    (duplicating any that already counted pre-horizon, degree +1
+    again), while pairs STRADDLING the horizon (an expired item x
+    a late item of the same order) are lost, exactly like data
+    below a Structured Streaming watermark. (If the stale row was
+    not yet physically folded away, the late fragment's merge
+    re-unions its parts — which only REDUCES future straddle
+    losses; fragment-internal counting is unaffected.)
+    Replay-deterministic: a replayed epoch recomputes the same
+    watermark from the same batch (monotone max, so replay after
+    a later epoch can only see a HIGHER wm — whose extra
+    evictions the claim-skip makes unobservable, merges for
+    replayed epochs never run). The cooc/deg READERS are
+    unchanged — they never see the basket store. Default None
+    keeps exact-forever behavior and the schema unchanged.
+
+    ``basket_cap=k`` (r14, the hot-basket lever): the tracked
+    basket becomes the ≤k-item HASH SAMPLE under the
+    ``cap_mega_baskets`` ranking (``_basket_sample_expr``), a
+    truncation monoid — per-order state is O(k) and the
+    per-trigger pair fan-out is bounded by changed-orders × k²
+    however many lines a mega-order accumulates (uncapped, a
+    100k-item order emits 10¹⁰ ordered pairs over its lifetime).
+    Deltas come from ``_cooc_deltas_capped`` (± telescoping
+    against the sample), and the hub's counts equal the batch
+    queries run with the same ``basket_cap``. Default None keeps
+    the exact uncapped hub."""
+    _retention_days(retention_days)
+    if basket_cap is not None and basket_cap < 2:
+        raise ValueError(f"basket cap must allow pairs: {basket_cap!r}")
+
+    def aggs():
+        parts = _set_union("parts").alias("parts")
+        return [parts] if retention_days is None else \
+            [parts, F.max("t").alias("t")]
+
+    def finalize(store, df):
+        # re-truncate the folded union to the cap sample (union of
+        # ≤cap fragments can exceed the cap; the truncation monoid
+        # re-applies — partials arrive pre-truncated, so the fold
+        # input per key is bounded by (state + per-epoch partial)
+        # ≤ 2·cap rows of items), then the retention row filter
+        if basket_cap is not None:
+            df = df.withColumn("parts", _basket_sample_expr(
+                F.col("o"), F.col("parts"), basket_cap))
+        if retention_days is not None and store.current_wm is not None:
+            df = df.filter(F.col("t") >= F.lit(store.current_wm))
+        return df
+
+    return StoreSpec(
+        ("o",), aggs,
+        "o long, parts array<bigint>"
+        + ("" if retention_days is None else ", t date"), 4,
+        finalize=(None if retention_days is None and basket_cap is None
+                  else finalize),
+        options={"retention_days": retention_days,
+                 "basket_cap": basket_cap})
+
+
+# (part_a, part_b) -> number of co-orders, under SUM of the
+# per-trigger DELTAS (each order contributes an ordered pair exactly
+# once: when the later of the two items first joins its basket). SUM
+# is not idempotent — replay safety is the store's per-(bucket,
+# epoch) claim discipline plus the delta computation's
+# insert-insensitivity (deltas derive from PRE-insert basket state,
+# and the basket merge runs LAST in the handler, so a crash-window
+# replay recomputes byte-identical deltas).
+#
+# Under a capped basket store (r14) deltas can be NEGATIVE (a pair
+# leaves an order's hash sample when a better-hashed item evicts one
+# of its ends); per order a pair's net contribution is always 0 or 1,
+# so folded counts stay >= 0 and the finalize drops exact-zero rows —
+# the batch query has no row for a pair no current sample contains.
+# Uncapped deltas are all-positive, so the filter is a no-op there.
+COOC_SPEC = StoreSpec(
+    ("part_a", "part_b"), lambda: [F.sum("n").cast("long").alias("n")],
+    "part_a long, part_b long, n long", 4,
+    finalize=lambda _store, df: df.filter(F.col("n") != 0))
+
+# item -> number of distinct orders containing it (the CF cosine's
+# degree and the frequent-pairs confidence denominator) — SUM of
+# first-membership deltas, same replay story as the co-occurrence
+# store (including the capped-sample negative deltas and the
+# zero-row finalize).
+ITEM_DEG_SPEC = StoreSpec(
+    ("p",), lambda: [F.sum("d").cast("long").alias("d")],
+    "p long, d long", 2,
+    finalize=lambda _store, df: df.filter(F.col("d") != 0))
+
+# Incrementally-maintained inverted index: (term, doc_id) -> term
+# frequency, laid out by TERM so a query's postings read opens only
+# the buckets its terms hash to (the searchable twin of the LSH
+# index's (band, bucket) layout). MAX over an identical recomputed tf
+# is idempotent (doc ids are unique in the pipeline contract), so
+# replayed inserts fold away.
+POSTINGS_SPEC = StoreSpec(
+    ("term", "doc_id"), lambda: [F.max("tf").cast("long").alias("tf")],
+    "term string, doc_id long, tf long", layout_cols=("term",))
+
+# doc_id -> token count, the per-document half of the BM25
+# statistics; layout by doc_id lets the scorer attach lengths for
+# CANDIDATE docs only (state_for_keys).
+DOC_LEN_SPEC = StoreSpec(
+    ("doc_id",), lambda: [F.max("dl").cast("long").alias("dl")],
+    "doc_id long, dl long")
+
+# The O(1)-state corpus aggregates BM25 needs globally (doc count,
+# total token count) under a plain SUM — one row, so a query-time
+# read costs one file open regardless of corpus size.
+CORPUS_STATS_SPEC = StoreSpec(
+    ("scope",),
+    lambda: [F.sum("n_docs").cast("long").alias("n_docs"),
+             F.sum("sum_dl").cast("long").alias("sum_dl")],
+    "scope string, n_docs long, sum_dl long", 1)
+
+
+def _timeline_spec(key_cols: tuple[str, ...], col: str, schema: str,
+                   retention_days: int | None,
+                   micros=lambda fact: fact) -> StoreSpec:
+    """Per-key sorted distinct set of timed facts ``col`` under set
+    union, with the optional retention horizon both timeline stores
+    share: with ``retention_days=H`` each partial carries ``wm`` =
+    (its batch's max event micros) − H days, folded under MAX, the
+    fold drops facts whose ``micros`` fall below the folded
+    watermark, and ``retained_state()`` re-applies the GLOBAL max
+    watermark (per-key watermarks can lag for keys untouched since
+    the horizon moved)."""
+    options = {"retention_days": _retention_days(retention_days)}
+    if retention_days is None:
+        return StoreSpec(key_cols, lambda: [_set_union(col).alias(col)],
+                         schema, 4, options=options)
+
+    def aggs():
+        # the folded watermark gates the folded array IN the same
+        # agg projection: filter(union, max(wm)) — at a higher
+        # watermark this absorbs any earlier filter, so the fold
+        # stays associative and idempotent
+        return [F.filter(_set_union(col),
+                         lambda x: micros(x) >= F.max("wm")).alias(col),
+                F.max("wm").alias("wm")]
+
+    def retained(st):
+        st = st.localCheckpoint(eager=False)   # read once, used 2x
+        gwm = st.agg(F.max("wm").alias("gwm"))
+        return (st.crossJoin(F.broadcast(gwm))
+                .select(*key_cols,
+                        F.filter(col, lambda x: micros(x)
+                                 >= F.col("gwm")).alias(col))
+                .filter(F.size(col) > 0))
+
+    return StoreSpec(key_cols, aggs, schema + ", wm long", 4,
+                     retained=retained, options=options)
+
+
+def event_index_spec(retention_days: int | None = None) -> StoreSpec:
+    """Per-(user, event_type) sorted distinct event-time index under
+    set-union — a true idempotent monoid, so arrival order and
+    replay cannot move it. This is the exact-state funnel twin's
+    honest cost: stage-gated funnels ("first click AFTER the first
+    view") are NOT expressible over bounded per-user scalars when
+    events arrive out of order — a late earlier view can re-gate
+    which clicks qualify, so any click may become the answer later —
+    and the minimal exact state is the event-time index itself
+    (O(user activity), cheap next to the
+    raw log since it collapses duplicates and carries no payload).
+
+    ``retention_days=H`` (r11 verdict #3) bounds that state: each
+    partial carries a watermark ``wm`` = (its batch's max event
+    micros) − H days, folded under MAX — a monotone monoid, so
+    replay/arrival order cannot move it — and the fold drops micros
+    below the folded watermark. Eviction happens whenever a key is
+    touched (untouched keys' arrays never grow, so state stays
+    bounded by in-horizon activity plus frozen tails); readers then
+    apply the GLOBAL max watermark, making answers exactly the
+    batch queries restricted to the retained window. Default None
+    keeps the exact-forever behavior and schema unchanged."""
+    return _timeline_spec(
+        ("user_id", "event_type"), "tss",
+        "user_id long, event_type string, tss array<bigint>",
+        retention_days)
+
+
+# Per-user purchase facts — (event_id, event micros, integer cents)
+# structs under sorted-distinct set union (idempotent: event_id makes
+# each fact self-identifying, so replay and re-delivery cannot move
+# the state). The attribution twin's honest minimal state (r13
+# verdict #5): last-touch needs every purchase's timestamp AND value,
+# which the event-time index deliberately does not carry — a small
+# dedicated store beats widening the multi-reader index's payload.
+# State is O(users x purchases), strictly smaller than the raw log
+# (clicks and views dominate event traffic).
+PURCHASE_SPEC = StoreSpec(
+    ("user_id",), lambda: [_set_union("ps").alias("ps")],
+    "user_id long, ps array<struct<id: long, t: long, c: long>>", 2)
+
+
+def user_seq_spec(retention_days: int | None = None) -> StoreSpec:
+    """Per-user TYPED event timeline — (micros, event_id, type)
+    structs under sorted-distinct set union (idempotent: event_id
+    makes each fact self-identifying, so replay and re-delivery
+    cannot move the state; struct field order (t, id, et) makes
+    array_sort the batch queries' (ts, event_id) total order).
+
+    This is the sequence-mining twin's honest minimal exact state
+    (the event-index docstring's argument, one step further): path
+    trigrams are order-sensitive over the INTERLEAVED type
+    sequence, so a late event landing mid-timeline rewrites
+    trigrams on both sides of it — no bounded per-user scalar and
+    no per-(user, type) timestamp index can answer exactly (the
+    index drops event_id, so same-instant cross-type order is
+    unrecoverable from it). State is O(user activity) — the raw
+    log re-keyed with payload collapsed to (t, id, type) — the
+    same class as the event-time index plus the id column it
+    deliberately omits.
+
+    ``retention_days=H`` bounds that state exactly as the
+    event-index design (its docstring has the full argument): each
+    partial carries ``wm`` = (its batch's max event micros) − H
+    days folded under MAX, the fold drops facts below the folded
+    watermark, and ``retained_state()`` re-applies the GLOBAL max
+    watermark so readers answer the batch queries restricted to
+    the retained window (a trigram straddling the horizon is
+    dropped with its evicted step — the window semantics, not a
+    bug). Default None keeps exact-forever behavior and the
+    schema unchanged."""
+    return _timeline_spec(
+        ("user_id",), "es",
+        "user_id long, es array<struct<t: long, id: long, et: string>>",
+        retention_days, lambda fact: fact["t"])
 
 
 def rebucket(store: KeyedParquetStore, new_path: str,
@@ -628,7 +1023,7 @@ def rebucket(store: KeyedParquetStore, new_path: str,
     is baked into both the directory layout and the data column, so
     resizing is a rewrite by design — same as re-bucketing a Hive
     table). Reads the current state once, distributed, and writes
-    it into a NEW store of the same class at ``new_path`` as a
+    it into a NEW store of the same spec at ``new_path`` as a
     single synthetic merge carrying over the source's lineage and
     max committed epoch, so a streaming query restarted from its
     ORIGINAL checkpoint continues cleanly against the new store
@@ -663,17 +1058,22 @@ def rebucket(store: KeyedParquetStore, new_path: str,
             "write migrates with the replay-skip hazard described "
             "in the docstring; pass checkpoint_dir to have it "
             "checked", stacklevel=2)
-    new_store = store._clone(new_path, n_buckets)
+    # the same spec at the new path and bucket count, with the write
+    # strategy carried (delta_threshold, fs and vacuum_grace_seconds
+    # shape only HOW versions are written, never the folded state)
+    new_store = KeyedParquetStore(
+        store.spark, new_path, store.spec, n_buckets,
+        store.delta_threshold, store.fs, store.vacuum_grace_seconds)
     if not lineages:
         return new_store                       # empty store: done
     currents = []
     for b in store._bucket_ids():
-        cur = store._current(b)
+        cur, dvs = store._state_versions(b)
         if cur is not None:
             currents.append(cur[2:])
-        dvs = store._delta_versions(b)         # a delta-tier store's
-        if dvs:                                # max claimed epoch may
-            currents.append(dvs[-1][2:])       # live in a delta
+        if dvs:                                # a delta-tier store's
+            currents.append(dvs[-1][2:])       # max claimed epoch may
+            #                                    live in a delta
     epoch_key = max(currents)                  # prefixes stripped;
     #                                          same lineage -> lexical
     #                                          max is the max epoch
@@ -767,7 +1167,7 @@ def partial_snapshot(changes: DataFrame) -> DataFrame:
 
 
 def start_incremental_snapshot_parquet(
-        changes_stream: DataFrame, store: ParquetSnapshotStore,
+        changes_stream: DataFrame, store: KeyedParquetStore,
         checkpoint_dir: str) -> StreamingQuery:
     """The incremental CDC snapshot as a stream: per-batch
     distributed latest-wins partial -> bucketed parquet
@@ -796,7 +1196,7 @@ def _partial_rollup(batch_df: DataFrame) -> DataFrame:
 
 
 def start_incremental_rollup_parquet(
-        stream: DataFrame, store: ParquetRollupStore,
+        stream: DataFrame, store: KeyedParquetStore,
         checkpoint_dir: str) -> StreamingQuery:
     """The continuous rollup as a stream: per-batch distributed
     partial aggregate -> bucketed parquet MERGE."""
@@ -808,83 +1208,6 @@ def start_incremental_rollup_parquet(
 # ------------------------------------------------------------------
 # Streaming incremental near-dup index (durable MinHash-LSH)
 # ------------------------------------------------------------------
-
-class ParquetLshStore(KeyedParquetStore):
-    """Durable GROWING MinHash-LSH index: every streamed document's
-    (band, bucket) signature rows, so each incoming micro-batch can
-    be near-dup-checked against ALL previously streamed documents —
-    not just exact-digest history (``dropDuplicates``) or a static
-    precomputed reference index (the r6 stream-static gate). This
-    was the last first-class gap in the LLM-pipeline axis (r9
-    verdict #1): batch dedup answers "is this corpus internally
-    near-duplicated"; this store answers the operational question
-    "is this NEW batch a near-dup of anything we already ingested".
-
-    State rows are set MEMBERS — the fold is an idempotent MAX over
-    a constant marker, so a replayed insert cannot change the index
-    (an idempotent fold, strictly stronger than the
-    epoch-claim skip it also gets). Signature arithmetic is the
-    batch tier's own ``minhash_band_buckets`` (operators/dedup.py),
-    imported not copied, so streaming and batch can never drift.
-
-    Scale shape: the index is O(bands) rows per document with an
-    8-byte bucket key; the per-batch probe is ONE equi-join on
-    (band, bucket) — the same only-wide-operation contract as the
-    batch tier (no reference equivalent: galaxy has no dedup at
-    all; this is driver-brief-mandated surface).
-
-    Layout: bucketed by (band, bucket) — a PREFIX of the row key —
-    so the per-trigger probe, which knows only the incoming batch's
-    signatures, prunes its read to the store buckets those
-    signatures hash to (``state_for_keys``). Before r11 the layout
-    hashed the full (band, bucket, id) key and the probe had to
-    read ALL accumulated index state every trigger — the one
-    remaining O(history) per-trigger cost (r10 verdict #1)."""
-
-    def __init__(self, spark: SparkSession, path: str,
-                 n_buckets: int = 2) -> None:
-        super().__init__(
-            spark, path, ["band", "bucket", "id"],
-            [F.max("seen").cast("int").alias("seen")],
-            n_buckets,
-            state_schema="band int, bucket int, id long, seen int",
-            layout_cols=["band", "bucket"])
-
-
-class ParquetDocStore(KeyedParquetStore):
-    """The verification corpus behind the LSH index: id -> text,
-    latest-wins under MAX (ids are unique in the pipeline contract,
-    so MAX is a deterministic no-op tie-break, and a replayed
-    insert is idempotent). Near-dup emission is EXACT-Jaccard
-    verified (the batch tier's contract), and exactness needs the
-    matched documents' text — at warehouse scale this store is the
-    ingested documents table itself; here it is the dependency-free
-    stand-in on the same bucketed MERGE discipline."""
-
-    def __init__(self, spark: SparkSession, path: str,
-                 n_buckets: int = 2) -> None:
-        super().__init__(
-            spark, path, ["id"],
-            [F.max("text").alias("text")],
-            n_buckets,
-            state_schema="id long, text string")
-
-
-class ParquetPairStore(KeyedParquetStore):
-    """Accumulated near-dup EMISSIONS: (id_a, id_b) -> exact
-    jaccard. MAX over identical recomputed values is idempotent, so
-    a replayed batch's re-emission cannot move a pair, and a pair
-    discovered in two batches (a duplicated stream element) folds
-    to itself."""
-
-    def __init__(self, spark: SparkSession, path: str,
-                 n_buckets: int = 2) -> None:
-        super().__init__(
-            spark, path, ["id_a", "id_b"],
-            [F.max("jaccard").alias("jaccard")],
-            n_buckets,
-            state_schema="id_a long, id_b long, jaccard double")
-
 
 def partial_lsh_index(batch_df: DataFrame, n: int = 5,
                       n_hashes: int = 32, bands: int = 8,
@@ -902,8 +1225,8 @@ def partial_lsh_index(batch_df: DataFrame, n: int = 5,
                     F.lit(1).alias("seen")))
 
 
-def lsh_probe_pairs(batch_df: DataFrame, lsh_store: ParquetLshStore,
-                    doc_store: ParquetDocStore, n: int = 5,
+def lsh_probe_pairs(batch_df: DataFrame, lsh_store: KeyedParquetStore,
+                    doc_store: KeyedParquetStore, n: int = 5,
                     n_hashes: int = 32, bands: int = 8,
                     threshold: float = 0.5, text_col: str = "text",
                     id_col: str = "doc_id") -> DataFrame:
@@ -984,7 +1307,7 @@ def lsh_probe_pairs(batch_df: DataFrame, lsh_store: ParquetLshStore,
             .select("id_a", "id_b", "jaccard"))
 
 
-def streaming_near_dup_pairs(pair_store: ParquetPairStore) -> DataFrame:
+def streaming_near_dup_pairs(pair_store: KeyedParquetStore) -> DataFrame:
     """All near-dup pairs emitted so far, in the batch query's
     output shape (``dedup_minhash_lsh``: id_a < id_b, jaccard
     rounded at 1e-4) — the union of per-batch emissions over a
@@ -998,67 +1321,9 @@ def streaming_near_dup_pairs(pair_store: ParquetPairStore) -> DataFrame:
 # Streaming incremental near-dup CLUSTERING (union-find on stores)
 # ------------------------------------------------------------------
 
-class ParquetClusterStore(KeyedParquetStore):
-    """Per-document cluster assignment: id -> label (the smallest
-    reachable doc id at last touch). New pairs can only MERGE
-    clusters, so labels are monotone non-increasing over time and
-    the MIN fold is both the correct accumulator and idempotent,
-    so a replay cannot move it. Rows exist only for ids that
-    ever appeared in a near-dup pair — singletons resolve to
-    themselves at read time — so state is O(near-dup docs), not
-    O(corpus)."""
-
-    def __init__(self, spark: SparkSession, path: str,
-                 n_buckets: int = 2) -> None:
-        super().__init__(
-            spark, path, ["id"],
-            [F.min("label").cast("long").alias("label")],
-            n_buckets,
-            state_schema="id long, label long")
-
-
-class ParquetRedirectStore(KeyedParquetStore):
-    """Label forwarding (the union-find parent map over LABELS):
-    when a batch merges the cluster labeled L into a smaller min m,
-    untouched members still pointing at L re-resolve through
-    (L -> m) at read time instead of being rewritten — per-batch
-    write cost stays bounded by the batch's pairs, never by the
-    losing cluster's size.
-
-    Rows are SET MEMBERS keyed by the full (label, target) edge —
-    NOT a per-label MIN fold — and that is load-bearing for replay
-    (r11 review): with MIN, a partially-committed epoch could fold
-    (L -> m) over an older (L -> m1) in a committed bucket while
-    the (m1 -> m) row's bucket was lost; the replay walk then
-    short-circuited L -> m, never revisited m1, and the lost
-    redirect was never regenerated — a PERMANENT cluster split.
-    Keeping every edge makes the walk rediscover all historical
-    intermediates, so a replay regenerates exactly the missing
-    rows. Read-side resolution takes the per-label MIN target
-    (targets are monotone non-increasing for a fixed label, so min
-    = latest); state stays O(cluster-merge events), each label
-    carrying one row per merge it was on the losing side of —
-    chains and fan-outs stay short because every batch
-    path-compresses the labels it visits.
-
-    Schema note: this edge-set layout is the store's FIRST released
-    schema (the per-label MIN variant existed only in unreleased
-    intra-round commits); there is deliberately no migration shim
-    for it."""
-
-    def __init__(self, spark: SparkSession, path: str,
-                 n_buckets: int = 2) -> None:
-        super().__init__(
-            spark, path, ["label", "target"],
-            [F.max("seen").cast("int").alias("seen")],
-            n_buckets,
-            state_schema="label long, target long, seen int",
-            layout_cols=["label"])
-
-
 def _cluster_partials(pairs: DataFrame,
-                      cluster_store: ParquetClusterStore,
-                      redirect_store: ParquetRedirectStore,
+                      cluster_store: KeyedParquetStore,
+                      redirect_store: KeyedParquetStore,
                       max_hops: int = 25
                       ) -> tuple[DataFrame, DataFrame]:
     """One batch's (redirect_partial, id_partial) from its near-dup
@@ -1107,7 +1372,7 @@ def _cluster_partials(pairs: DataFrame,
         # every (label -> target) edge of the frontier labels, not
         # a folded single target: historical intermediates must be
         # rediscovered for the replay-regeneration guarantee (see
-        # ParquetRedirectStore)
+        # REDIRECT_SPEC)
         hops = (redirect_store.state_for_keys(frontier)
                 .select("label", "target")
                 .join(frontier, "label", "left_semi")
@@ -1150,10 +1415,10 @@ def _cluster_partials(pairs: DataFrame,
 
 
 def start_streaming_near_dup_clustering(
-        stream: DataFrame, lsh_store: ParquetLshStore,
-        doc_store: ParquetDocStore, pair_store: ParquetPairStore,
-        cluster_store: ParquetClusterStore,
-        redirect_store: ParquetRedirectStore,
+        stream: DataFrame, lsh_store: KeyedParquetStore,
+        doc_store: KeyedParquetStore, pair_store: KeyedParquetStore,
+        cluster_store: KeyedParquetStore,
+        redirect_store: KeyedParquetStore,
         checkpoint_dir: str, n: int = 5, n_hashes: int = 32,
         bands: int = 8, threshold: float = 0.5,
         text_col: str = "text",
@@ -1199,8 +1464,8 @@ def start_streaming_near_dup_clustering(
 
 
 def streaming_cluster_assignments(
-        docs: DataFrame, cluster_store: ParquetClusterStore,
-        redirect_store: ParquetRedirectStore,
+        docs: DataFrame, cluster_store: KeyedParquetStore,
+        redirect_store: KeyedParquetStore,
         id_col: str = "doc_id", max_hops: int = 25) -> DataFrame:
     """Cluster assignments for a document universe off the stores,
     in the batch query's shape (``dedup_cluster_canonical``:
@@ -1254,39 +1519,6 @@ def streaming_cluster_assignments(
 # Streaming WINNOWING near-dup index (r12 verdict #3)
 # ------------------------------------------------------------------
 
-class ParquetWinnowStore(KeyedParquetStore):
-    """Durable GROWING winnowing-fingerprint index: fp -> the
-    member doc ids, completing the streaming near-dup family's
-    third selection axis (MinHash-LSH probabilistic, embedding-LSH
-    cosine, and now the guaranteed-local winnowing tier of
-    ``dedup_winnowing_pairs``).
-
-    State is ONE bounded array row per fingerprint under the min-k
-    truncation monoid (a k-minimum-values fold): members = the
-    DF_CAP+1 smallest distinct doc ids ever seen for the fp.
-    Truncation at cap+1 IS the merge-time DF-cap enforcement — the
-    batch query drops fingerprints appearing in more than
-    _WINNOW_DF_CAP documents as boilerplate, so a reader only ever
-    needs to distinguish ``<= cap`` (all members retained exactly)
-    from ``> cap`` (excluded; cap+1 members retained as the
-    witness) — per-fp state stays O(cap) no matter how hot a
-    boilerplate fingerprint runs, and the fold is idempotent
-    (set-union + deterministic truncation), so replays cannot move
-    it. Laid out by fp, so per-trigger probes open only the store
-    buckets the batch's fingerprints hash to."""
-
-    def __init__(self, spark: SparkSession, path: str,
-                 n_buckets: int = 2, df_cap: int = None) -> None:
-        from galaxy_spark.queries.llm import _WINNOW_DF_CAP
-        self.df_cap = _WINNOW_DF_CAP if df_cap is None else df_cap
-        super().__init__(
-            spark, path, ["fp"],
-            [F.slice(_set_union("doc_ids"), 1,
-                     self.df_cap + 1).alias("doc_ids")],
-            n_buckets,
-            state_schema="fp string, doc_ids array<bigint>")
-
-
 def partial_winnow_index(batch_df: DataFrame,
                          text_col: str = "text",
                          id_col: str = "doc_id",
@@ -1309,7 +1541,7 @@ def partial_winnow_index(batch_df: DataFrame,
                          1, cap + 1).alias("doc_ids")))
 
 
-def _winnow_members(store: ParquetWinnowStore) -> DataFrame:
+def _winnow_members(store: KeyedParquetStore) -> DataFrame:
     """(doc_id, fp) member rows of the KEPT fingerprints — df in
     [2, cap]; arrays longer than cap are the truncation witness
     for boilerplate fps and are excluded exactly like the batch
@@ -1320,7 +1552,7 @@ def _winnow_members(store: ParquetWinnowStore) -> DataFrame:
             .select("fp", F.explode("doc_ids").alias("doc_id")))
 
 
-def streaming_winnowing_pairs(store: ParquetWinnowStore) -> DataFrame:
+def streaming_winnowing_pairs(store: KeyedParquetStore) -> DataFrame:
     """Near-dup pairs over EVERYTHING streamed so far, in the
     batch query's output shape — == ``dedup_winnowing_pairs`` over
     the replayed corpus, row for row (pinned in tests). This is
@@ -1348,7 +1580,7 @@ def streaming_winnowing_pairs(store: ParquetWinnowStore) -> DataFrame:
 
 
 def winnow_probe_pairs(batch_df: DataFrame,
-                       store: ParquetWinnowStore,
+                       store: KeyedParquetStore,
                        text_col: str = "text",
                        id_col: str = "doc_id") -> DataFrame:
     """Candidate near-dup pairs for ONE incoming micro-batch
@@ -1404,7 +1636,7 @@ def winnow_probe_pairs(batch_df: DataFrame,
 
 
 def start_streaming_winnowing_index(
-        stream: DataFrame, store: ParquetWinnowStore,
+        stream: DataFrame, store: KeyedParquetStore,
         checkpoint_dir: str, text_col: str = "text",
         id_col: str = "doc_id") -> StreamingQuery:
     """Maintain the growing winnowing index from one document
@@ -1441,164 +1673,8 @@ def _basket_sample_expr(o_col: Column, parts_col: Column,
         F.transform(F.slice(keyed, 1, k), lambda s: s["p"]))
 
 
-class ParquetBasketStore(KeyedParquetStore):
-    """order -> the distinct items seen for it so far, under
-    set-union (sorted distinct arrays — idempotent, so replays and
-    re-deliveries cannot move it). Laid out by order id, so the
-    per-trigger delta probe opens only the incoming orders'
-    buckets. This is the EXACTNESS anchor of the co-occurrence
-    hub: an order's lines can arrive across many micro-batches,
-    and "which pairs are NEW for this order" is only answerable
-    against its accumulated basket.
-
-    ``retention_days=H`` (r13 verdict #4): the store's only job is
-    dedup of an order's lines, and orders QUIESCE — once the
-    stream has moved H days past an order's last ship activity,
-    further lines for it are >H-late stragglers. Each row then
-    carries ``t`` = the order's newest l_shipdate seen (MAX-
-    folded), and ``cooc_deltas`` advances a STORE-LEVEL watermark
-    ``current_wm`` = max-so-far(batch max l_shipdate) − H (one
-    1-row agg collect per trigger — the audited bounded-collect
-    class) before probing. Two consumers read it:
-
-    - the ``fold_finalize`` hook drops rows with t < current_wm
-      at every fold site. Unlike the event-index/user-seq stores'
-      per-key folded watermark (their keys keep being touched;
-      basket keys quiesce, so a per-key wm would never advance
-      for exactly the rows that need evicting), the store-level
-      literal applies to EVERY row of a folded bucket — CoW
-      merges and compactions sweep whole touched buckets, so
-      under continuous traffic (the layout hash spreads new
-      orders over all buckets) state is O(orders active within
-      H) plus the tails of buckets not touched since.
-    - the probe filters stale baskets IN-PLAN (t >= wm), so a
-      basket past the horizon reads as absent even before its
-      bucket's next physical fold — probe semantics and physical
-      eviction cannot disagree.
-
-    The accepted inexactness is the watermark contract: lines
-    arriving MORE than H days after their order's last activity
-    start a FRESH fragment — pairs inside the fragment count
-    (duplicating any that already counted pre-horizon, degree +1
-    again), while pairs STRADDLING the horizon (an expired item x
-    a late item of the same order) are lost, exactly like data
-    below a Structured Streaming watermark. (If the stale row was
-    not yet physically folded away, the late fragment's merge
-    re-unions its parts — which only REDUCES future straddle
-    losses; fragment-internal counting is unaffected.)
-    Replay-deterministic: a replayed epoch recomputes the same
-    watermark from the same batch (monotone max, so replay after
-    a later epoch can only see a HIGHER wm — whose extra
-    evictions the claim-skip makes unobservable, merges for
-    replayed epochs never run). The cooc/deg READERS are
-    unchanged — they never see the basket store. Default None
-    keeps exact-forever behavior and the schema unchanged.
-
-    ``basket_cap=k`` (r14, the hot-basket lever): the tracked
-    basket becomes the ≤k-item HASH SAMPLE under the
-    ``cap_mega_baskets`` ranking (``_basket_sample_expr``), a
-    truncation monoid — per-order state is O(k) and the
-    per-trigger pair fan-out is bounded by changed-orders × k²
-    however many lines a mega-order accumulates (uncapped, a
-    100k-item order emits 10¹⁰ ordered pairs over its lifetime).
-    Deltas come from ``_cooc_deltas_capped`` (± telescoping
-    against the sample), and the hub's counts equal the batch
-    queries run with the same ``basket_cap``. Default None keeps
-    the exact uncapped hub."""
-
-    def __init__(self, spark: SparkSession, path: str,
-                 n_buckets: int = 4,
-                 retention_days: int | None = None,
-                 basket_cap: int | None = None) -> None:
-        self.retention_days = _retention_days(retention_days)
-        if basket_cap is not None and basket_cap < 2:
-            raise ValueError(
-                f"basket cap must allow pairs: {basket_cap!r}")
-        self.basket_cap = basket_cap
-        #: the stream-time eviction horizon (a datetime.date),
-        #: advanced monotonically by cooc_deltas; None until the
-        #: first timed batch (no eviction before the stream has a
-        #: clock — also the state right after a restart,
-        #: re-established by the next trigger)
-        self.current_wm = None
-        parts = _set_union("parts").alias("parts")
-        if retention_days is None:
-            aggs = [parts]
-            schema = "o long, parts array<bigint>"
-        else:
-            aggs = [parts, F.max("t").alias("t")]
-            schema = "o long, parts array<bigint>, t date"
-        super().__init__(
-            spark, path, ["o"], aggs, n_buckets,
-            state_schema=schema)
-        if retention_days is not None or basket_cap is not None:
-            self.fold_finalize = self._finalize
-
-    def _finalize(self, df: DataFrame) -> DataFrame:
-        """Fold-site hook: re-truncate the folded union to the cap
-        sample (union of ≤cap fragments can exceed the cap; the
-        truncation monoid re-applies — partials arrive
-        pre-truncated, so the fold input per key is bounded by
-        (state + per-epoch partial) ≤ 2·cap rows of items), then
-        the retention row filter."""
-        if self.basket_cap is not None:
-            df = df.withColumn("parts", _basket_sample_expr(
-                F.col("o"), F.col("parts"), self.basket_cap))
-        if self.retention_days is not None \
-                and self.current_wm is not None:
-            df = df.filter(F.col("t") >= F.lit(self.current_wm))
-        return df
-
-
-class ParquetCoocStore(KeyedParquetStore):
-    """(part_a, part_b) -> number of co-orders, under SUM of the
-    per-trigger DELTAS (each order contributes an ordered pair
-    exactly once: when the later of the two items first joins its
-    basket). SUM is not idempotent — replay safety is the store's
-    per-(bucket, epoch) claim discipline plus the delta
-    computation's insert-insensitivity (deltas derive from
-    PRE-insert basket state, and the basket merge runs LAST in the
-    handler, so a crash-window replay recomputes byte-identical
-    deltas).
-
-    Under a capped basket store (r14) deltas can be NEGATIVE (a
-    pair leaves an order's hash sample when a better-hashed item
-    evicts one of its ends); per order a pair's net contribution
-    is always 0 or 1, so folded counts stay >= 0 and the
-    ``fold_finalize`` filter drops exact-zero rows — the batch
-    query has no row for a pair no current sample contains.
-    Uncapped deltas are all-positive, so the filter is a no-op
-    there."""
-
-    def __init__(self, spark: SparkSession, path: str,
-                 n_buckets: int = 4) -> None:
-        super().__init__(
-            spark, path, ["part_a", "part_b"],
-            [F.sum("n").cast("long").alias("n")],
-            n_buckets,
-            state_schema="part_a long, part_b long, n long")
-        self.fold_finalize = lambda df: df.filter(F.col("n") != 0)
-
-
-class ParquetItemDegStore(KeyedParquetStore):
-    """item -> number of distinct orders containing it (the CF
-    cosine's degree and the frequent-pairs confidence denominator)
-    — SUM of first-membership deltas, same replay story as the
-    co-occurrence store (including the capped-sample negative
-    deltas and the zero-row fold filter)."""
-
-    def __init__(self, spark: SparkSession, path: str,
-                 n_buckets: int = 2) -> None:
-        super().__init__(
-            spark, path, ["p"],
-            [F.sum("d").cast("long").alias("d")],
-            n_buckets,
-            state_schema="p long, d long")
-        self.fold_finalize = lambda df: df.filter(F.col("d") != 0)
-
-
 def cooc_deltas(batch_df: DataFrame,
-                basket_store: ParquetBasketStore
+                basket_store: KeyedParquetStore
                 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """(pair deltas, degree deltas, basket partials) for one
     lineitem-shaped micro-batch against PRE-insert basket state.
@@ -1646,7 +1722,7 @@ def cooc_deltas(batch_df: DataFrame,
     if h is not None and basket_store.current_wm is not None:
         # expired baskets read as ABSENT: the plain (non-delta)
         # read path applies no fold, so the probe must mirror the
-        # fold_finalize filter itself
+        # finalize filter itself
         probed = probed.filter(
             F.col("t") >= F.lit(basket_store.current_wm))
     cap = getattr(basket_store, "basket_cap", None)
@@ -1774,9 +1850,9 @@ def _cooc_deltas_capped(batch_df: DataFrame, items: DataFrame,
 
 
 def start_streaming_item_cf(stream: DataFrame,
-                            basket_store: ParquetBasketStore,
-                            cooc_store: ParquetCoocStore,
-                            deg_store: ParquetItemDegStore,
+                            basket_store: KeyedParquetStore,
+                            cooc_store: KeyedParquetStore,
+                            deg_store: KeyedParquetStore,
                             checkpoint_dir: str) -> StreamingQuery:
     """Maintain the co-occurrence hub from a lineitem-shaped
     stream. Merge order is load-bearing: the delta merges (SUM
@@ -1794,8 +1870,8 @@ def start_streaming_item_cf(stream: DataFrame,
                                merges)
 
 
-def streaming_item_cf_topk(cooc_store: ParquetCoocStore,
-                           deg_store: ParquetItemDegStore
+def streaming_item_cf_topk(cooc_store: KeyedParquetStore,
+                           deg_store: KeyedParquetStore
                            ) -> DataFrame:
     """Top-3 most-similar items per item off the accumulated
     co-occurrence counts — == the batch ``similarity_item_cf_topk``
@@ -1809,8 +1885,8 @@ def streaming_item_cf_topk(cooc_store: ParquetCoocStore,
         deg_store.state())
 
 
-def streaming_frequent_pairs(cooc_store: ParquetCoocStore,
-                             deg_store: ParquetItemDegStore
+def streaming_frequent_pairs(cooc_store: KeyedParquetStore,
+                             deg_store: KeyedParquetStore
                              ) -> DataFrame:
     """Frequent pairs + confidence off the same hub — the second
     reader (== batch ``mining_frequent_pairs``), one write path
@@ -1822,9 +1898,9 @@ def streaming_frequent_pairs(cooc_store: ParquetCoocStore,
         deg_store.state())
 
 
-def streaming_pair_lift(cooc_store: ParquetCoocStore,
-                        deg_store: ParquetItemDegStore,
-                        basket_store: ParquetBasketStore
+def streaming_pair_lift(cooc_store: KeyedParquetStore,
+                        deg_store: KeyedParquetStore,
+                        basket_store: KeyedParquetStore
                         ) -> DataFrame:
     """Association lift off the same hub — the THIRD reader (==
     batch ``mining_pair_lift``): the basket total N is one 1-row
@@ -1841,7 +1917,7 @@ def streaming_pair_lift(cooc_store: ParquetCoocStore,
         deg_store.state(), nb)
 
 
-def streaming_clustering_coefficient(cooc_store: ParquetCoocStore
+def streaming_clustering_coefficient(cooc_store: KeyedParquetStore
                                      ) -> DataFrame:
     """Per-node local clustering coefficient off the same hub —
     the FOURTH reader (== batch ``graph_clustering_coefficient``):
@@ -1868,7 +1944,7 @@ def streaming_clustering_coefficient(cooc_store: ParquetCoocStore
     return clustering_from_half(_half_from_cooc(cooc_store))
 
 
-def _half_from_cooc(cooc_store: ParquetCoocStore) -> DataFrame:
+def _half_from_cooc(cooc_store: KeyedParquetStore) -> DataFrame:
     """The id-oriented half edge frame derived from cooc state
     (part_a < part_b keeps one orientation of each symmetric
     pair), lazily checkpointed — every graph tail feeds it to
@@ -1880,7 +1956,7 @@ def _half_from_cooc(cooc_store: ParquetCoocStore) -> DataFrame:
             .localCheckpoint(eager=False))
 
 
-def streaming_degree_assortativity(cooc_store: ParquetCoocStore
+def streaming_degree_assortativity(cooc_store: KeyedParquetStore
                                    ) -> DataFrame:
     """Degree assortativity off the same hub — the FIFTH reader
     (== batch ``graph_degree_assortativity``): the same
@@ -1894,7 +1970,7 @@ def streaming_degree_assortativity(cooc_store: ParquetCoocStore
     return assortativity_from_half(_half_from_cooc(cooc_store))
 
 
-def streaming_common_neighbors(cooc_store: ParquetCoocStore,
+def streaming_common_neighbors(cooc_store: KeyedParquetStore,
                                max_degree: int | None = None
                                ) -> DataFrame:
     """Per-edge common-neighbor/Jaccard link features off the same
@@ -1918,7 +1994,7 @@ def streaming_common_neighbors(cooc_store: ParquetCoocStore,
     return common_neighbors_from_half(_half_from_cooc(cooc_store))
 
 
-def streaming_resource_allocation(cooc_store: ParquetCoocStore
+def streaming_resource_allocation(cooc_store: KeyedParquetStore
                                   ) -> DataFrame:
     """Resource-allocation link index off the same hub — the
     SEVENTH reader (== batch ``graph_resource_allocation``,
@@ -1932,54 +2008,6 @@ def streaming_resource_allocation(cooc_store: ParquetCoocStore
 # ------------------------------------------------------------------
 # Streaming full-text search index and events-analytics hubs
 # ------------------------------------------------------------------
-
-class ParquetPostingsStore(KeyedParquetStore):
-    """Incrementally-maintained inverted index: (term, doc_id) ->
-    term frequency, laid out by TERM so a query's postings read
-    opens only the buckets its terms hash to (the searchable twin
-    of the LSH index's (band, bucket) layout). MAX over an
-    identical recomputed tf is idempotent (doc ids are unique in
-    the pipeline contract), so replayed inserts fold away."""
-
-    def __init__(self, spark: SparkSession, path: str,
-                 n_buckets: int = 8) -> None:
-        super().__init__(
-            spark, path, ["term", "doc_id"],
-            [F.max("tf").cast("long").alias("tf")],
-            n_buckets,
-            state_schema="term string, doc_id long, tf long",
-            layout_cols=["term"])
-
-
-class ParquetDocLenStore(KeyedParquetStore):
-    """doc_id -> token count, the per-document half of the BM25
-    statistics; layout by doc_id lets the scorer attach lengths
-    for CANDIDATE docs only (state_for_keys)."""
-
-    def __init__(self, spark: SparkSession, path: str,
-                 n_buckets: int = 8) -> None:
-        super().__init__(
-            spark, path, ["doc_id"],
-            [F.max("dl").cast("long").alias("dl")],
-            n_buckets,
-            state_schema="doc_id long, dl long")
-
-
-class ParquetCorpusStatsStore(KeyedParquetStore):
-    """The O(1)-state corpus aggregates BM25 needs globally
-    (doc count, total token count) under a plain SUM — one row,
-    so a query-time read costs one file open regardless of corpus
-    size."""
-
-    def __init__(self, spark: SparkSession, path: str,
-                 n_buckets: int = 1) -> None:
-        super().__init__(
-            spark, path, ["scope"],
-            [F.sum("n_docs").cast("long").alias("n_docs"),
-             F.sum("sum_dl").cast("long").alias("sum_dl")],
-            n_buckets,
-            state_schema="scope string, n_docs long, sum_dl long")
-
 
 def partial_postings(batch_df: DataFrame, text_col: str = "text",
                      id_col: str = "doc_id") -> DataFrame:
@@ -2009,8 +2037,8 @@ def partial_doc_stats(batch_df: DataFrame, text_col: str = "text",
 
 
 def start_streaming_search_index(
-        stream: DataFrame, postings: ParquetPostingsStore,
-        doclen: ParquetDocLenStore, stats: ParquetCorpusStatsStore,
+        stream: DataFrame, postings: KeyedParquetStore,
+        doclen: KeyedParquetStore, stats: KeyedParquetStore,
         checkpoint_dir: str, text_col: str = "text",
         id_col: str = "doc_id") -> StreamingQuery:
     """Maintain the full-text search index from a document stream:
@@ -2040,7 +2068,7 @@ def start_streaming_search_index(
 
 
 def streaming_inverted_index(
-        postings: ParquetPostingsStore) -> DataFrame:
+        postings: KeyedParquetStore) -> DataFrame:
     """The accumulated index in the batch query's output shape —
     over the same corpus this equals ``text_inverted_index``
     row-for-row (df >= 5, sorted 100-id posting prefix)."""
@@ -2053,9 +2081,9 @@ def streaming_inverted_index(
             .select("term", "df", "postings"))
 
 
-def streaming_bm25(postings: ParquetPostingsStore,
-                   doclen: ParquetDocLenStore,
-                   stats: ParquetCorpusStatsStore,
+def streaming_bm25(postings: KeyedParquetStore,
+                   doclen: KeyedParquetStore,
+                   stats: KeyedParquetStore,
                    terms: tuple[str, ...]) -> DataFrame:
     """Query the incrementally-built index: top-20 BM25 for a
     multi-term query under DISJUNCTIVE semantics (any doc matching
@@ -2088,93 +2116,6 @@ def streaming_bm25(postings: ParquetPostingsStore,
     return bm25_score_topk(tf, dl, st)
 
 
-class _TimelineStore(KeyedParquetStore):
-    """Per-key sorted distinct set of timed facts (``_col``) under
-    set union, with the optional retention horizon both timeline
-    stores share: with ``retention_days=H`` each partial carries
-    ``wm`` = (its batch's max event micros) − H days, folded under
-    MAX, and the fold drops facts whose micros (``_micros``) fall
-    below the folded watermark."""
-
-    _col: str
-
-    @staticmethod
-    def _micros(fact: Column) -> Column:
-        return fact
-
-    def __init__(self, spark: SparkSession, path: str,
-                 key_cols: list[str], schema: str, n_buckets: int,
-                 retention_days: int | None) -> None:
-        self.retention_days = _retention_days(retention_days)
-        facts = _set_union(self._col)
-        if retention_days is None:
-            aggs = [facts.alias(self._col)]
-        else:
-            # the folded watermark gates the folded array IN the
-            # same agg projection: filter(union, max(wm)) — at a
-            # higher watermark this absorbs any earlier filter, so
-            # the fold stays associative and idempotent
-            aggs = [F.filter(facts,
-                             lambda x: self._micros(x) >= F.max("wm"))
-                    .alias(self._col),
-                    F.max("wm").alias("wm")]
-            schema += ", wm long"
-        super().__init__(spark, path, key_cols, aggs, n_buckets,
-                         state_schema=schema)
-
-    def retained_state(self) -> DataFrame:
-        """State rows restricted to the GLOBAL retention window
-        (max folded watermark — per-key watermarks can lag for
-        keys untouched since the horizon moved). With no retention
-        configured this is plain ``state()``."""
-        st = self.state()
-        if self.retention_days is None:
-            return st
-        st = st.localCheckpoint(eager=False)   # read once, used 2x
-        gwm = st.agg(F.max("wm").alias("gwm"))
-        return (st.crossJoin(F.broadcast(gwm))
-                .select(*self.key_cols,
-                        F.filter(self._col,
-                                 lambda x: self._micros(x)
-                                 >= F.col("gwm"))
-                        .alias(self._col))
-                .filter(F.size(self._col) > 0))
-
-
-class ParquetEventIndexStore(_TimelineStore):
-    """Per-(user, event_type) sorted distinct event-time index under
-    set-union — a true idempotent monoid, so arrival order and
-    replay cannot move it. This is the exact-state funnel twin's
-    honest cost: stage-gated funnels ("first click AFTER the first
-    view") are NOT expressible over bounded per-user scalars when
-    events arrive out of order — a late earlier view can re-gate
-    which clicks qualify, so any click may become the answer later —
-    and the minimal exact state is the event-time index itself
-    (O(user activity), cheap next to the
-    raw log since it collapses duplicates and carries no payload).
-
-    ``retention_days=H`` (r11 verdict #3) bounds that state: each
-    partial carries a watermark ``wm`` = (its batch's max event
-    micros) − H days, folded under MAX — a monotone monoid, so
-    replay/arrival order cannot move it — and the fold drops micros
-    below the folded watermark. Eviction happens whenever a key is
-    touched (untouched keys' arrays never grow, so state stays
-    bounded by in-horizon activity plus frozen tails); readers then
-    apply the GLOBAL max watermark, making answers exactly the
-    batch queries restricted to the retained window. Default None
-    keeps the exact-forever behavior and schema unchanged."""
-
-    _col = "tss"
-
-    def __init__(self, spark: SparkSession, path: str,
-                 n_buckets: int = 4,
-                 retention_days: int | None = None) -> None:
-        super().__init__(
-            spark, path, ["user_id", "event_type"],
-            "user_id long, event_type string, tss array<bigint>",
-            n_buckets, retention_days)
-
-
 def partial_event_index(batch_df: DataFrame,
                         retention_days: int | None = None
                         ) -> DataFrame:
@@ -2195,7 +2136,7 @@ def partial_event_index(batch_df: DataFrame,
     return _with_batch_watermark(part, batch_df, retention_days)
 
 
-def streaming_funnel(store: ParquetEventIndexStore) -> DataFrame:
+def streaming_funnel(store: KeyedParquetStore) -> DataFrame:
     """The stage-gated funnel off the accumulated index: first
     view, first click AFTER it, first purchase AFTER that — pure
     array expressions (array_min over a gated filter), with NULLs
@@ -2226,7 +2167,7 @@ def streaming_funnel(store: ParquetEventIndexStore) -> DataFrame:
                 .alias("t_purchase")))
 
 
-def streaming_funnel_windowed(store: ParquetEventIndexStore
+def streaming_funnel_windowed(store: KeyedParquetStore
                               ) -> DataFrame:
     """The conversion-window funnel off the SAME event-time index
     the unbounded funnel reads (r13 verdict #5): first view, first
@@ -2262,28 +2203,6 @@ def streaming_funnel_windowed(store: ParquetEventIndexStore
                 .alias("t_purchase")))
 
 
-class ParquetPurchaseStore(KeyedParquetStore):
-    """Per-user purchase facts — (event_id, event micros, integer
-    cents) structs under sorted-distinct set union (idempotent:
-    event_id makes each fact self-identifying, so replay and
-    re-delivery cannot move the state). The attribution twin's
-    honest minimal state (r13 verdict #5): last-touch needs every
-    purchase's timestamp AND value, which the event-time index
-    deliberately does not carry — a small dedicated store beats
-    widening the multi-reader index's payload. State is O(users x
-    purchases), strictly smaller than the raw log (clicks and
-    views dominate event traffic)."""
-
-    def __init__(self, spark: SparkSession, path: str,
-                 n_buckets: int = 2) -> None:
-        super().__init__(
-            spark, path, ["user_id"],
-            [_set_union("ps").alias("ps")],
-            n_buckets,
-            state_schema=("user_id long, ps array<struct<"
-                          "id: long, t: long, c: long>>"))
-
-
 def partial_purchases(batch_df: DataFrame) -> DataFrame:
     """One micro-batch's per-user purchase-fact sets (cents exact:
     events.value is 2-decimal by contract)."""
@@ -2299,8 +2218,8 @@ def partial_purchases(batch_df: DataFrame) -> DataFrame:
 
 
 def start_streaming_attribution_hub(
-        stream: DataFrame, purchase_store: ParquetPurchaseStore,
-        index_store: ParquetEventIndexStore,
+        stream: DataFrame, purchase_store: KeyedParquetStore,
+        index_store: KeyedParquetStore,
         checkpoint_dir: str) -> StreamingQuery:
     """One write path maintaining BOTH attribution inputs — the
     purchase facts and the (user, type) event-time index (clicks
@@ -2317,8 +2236,8 @@ def start_streaming_attribution_hub(
 
 
 def streaming_attribution_last_touch(
-        purchase_store: ParquetPurchaseStore,
-        index_store: ParquetEventIndexStore) -> DataFrame:
+        purchase_store: KeyedParquetStore,
+        index_store: KeyedParquetStore) -> DataFrame:
     """Daily last-touch attribution off the two accumulated
     stores: each stored purchase credits its user's latest click
     within the 7 preceding days — the bounded-lookback as-of
@@ -2357,8 +2276,8 @@ def streaming_attribution_last_touch(
 
 
 def streaming_time_to_convert(
-        purchase_store: ParquetPurchaseStore,
-        index_store: ParquetEventIndexStore) -> DataFrame:
+        purchase_store: KeyedParquetStore,
+        index_store: KeyedParquetStore) -> DataFrame:
     """Time-to-convert buckets off the attribution hub's two
     stores (the event_index task kind's FIFTH reader): each stored
     click's NEXT same-user purchase, resolved scan-locally — the
@@ -2393,52 +2312,6 @@ def streaming_time_to_convert(
                  .alias("n_users")))
 
 
-class ParquetUserSeqStore(_TimelineStore):
-    """Per-user TYPED event timeline — (micros, event_id, type)
-    structs under sorted-distinct set union (idempotent: event_id
-    makes each fact self-identifying, so replay and re-delivery
-    cannot move the state; struct field order (t, id, et) makes
-    array_sort the batch queries' (ts, event_id) total order).
-
-    This is the sequence-mining twin's honest minimal exact state
-    (the event-index docstring's argument, one step further): path
-    trigrams are order-sensitive over the INTERLEAVED type
-    sequence, so a late event landing mid-timeline rewrites
-    trigrams on both sides of it — no bounded per-user scalar and
-    no per-(user, type) timestamp index can answer exactly (the
-    index drops event_id, so same-instant cross-type order is
-    unrecoverable from it). State is O(user activity) — the raw
-    log re-keyed with payload collapsed to (t, id, type) — the
-    same class as the event-time index plus the id column it
-    deliberately omits.
-
-    ``retention_days=H`` bounds that state exactly as the
-    event-index design (its docstring has the full argument): each
-    partial carries ``wm`` = (its batch's max event micros) − H
-    days folded under MAX, the fold drops facts below the folded
-    watermark, and ``retained_state()`` re-applies the GLOBAL max
-    watermark so readers answer the batch queries restricted to
-    the retained window (a trigram straddling the horizon is
-    dropped with its evicted step — the window semantics, not a
-    bug). Default None keeps exact-forever behavior and the
-    schema unchanged."""
-
-    _col = "es"
-
-    @staticmethod
-    def _micros(fact: Column) -> Column:
-        return fact["t"]
-
-    def __init__(self, spark: SparkSession, path: str,
-                 n_buckets: int = 4,
-                 retention_days: int | None = None) -> None:
-        super().__init__(
-            spark, path, ["user_id"],
-            "user_id long, es array<struct<t: long, id: long, "
-            "et: string>>",
-            n_buckets, retention_days)
-
-
 def partial_user_seq(batch_df: DataFrame,
                      retention_days: int | None = None
                      ) -> DataFrame:
@@ -2457,7 +2330,7 @@ def partial_user_seq(batch_df: DataFrame,
 
 
 def start_streaming_user_seq(stream: DataFrame,
-                             store: ParquetUserSeqStore,
+                             store: KeyedParquetStore,
                              checkpoint_dir: str) -> StreamingQuery:
     """Maintain the per-user typed event timeline; the partial
     shape follows the STORE's retention knob, so the two cannot
@@ -2467,7 +2340,7 @@ def start_streaming_user_seq(stream: DataFrame,
         lambda b: [(store, partial_user_seq(b, store.retention_days))])
 
 
-def streaming_path_trigrams(store: ParquetUserSeqStore
+def streaming_path_trigrams(store: KeyedParquetStore
                             ) -> DataFrame:
     """Second-order path mining off the accumulated timelines (==
     batch ``events_path_trigrams``): each user's sorted struct
@@ -2501,7 +2374,7 @@ def streaming_path_trigrams(store: ParquetUserSeqStore
     return trigrams_from_walks(walks)
 
 
-def streaming_markov_transitions(store: ParquetUserSeqStore
+def streaming_markov_transitions(store: KeyedParquetStore
                                  ) -> DataFrame:
     """First-order transition matrix off the same timelines — the
     user-sequence store's SECOND reader (== batch
@@ -2524,7 +2397,7 @@ def streaming_markov_transitions(store: ParquetUserSeqStore
     return markov_from_pairs(pairs)
 
 
-def streaming_interarrival_burstiness(store: ParquetUserSeqStore
+def streaming_interarrival_burstiness(store: KeyedParquetStore
                                       ) -> DataFrame:
     """Per-type burstiness off the same timelines — the
     user-sequence store's THIRD reader (== batch
@@ -2543,7 +2416,7 @@ def streaming_interarrival_burstiness(store: ParquetUserSeqStore
     return burstiness_from_typed_rows(rows)
 
 
-def streaming_retention(store: ParquetEventIndexStore) -> DataFrame:
+def streaming_retention(store: KeyedParquetStore) -> DataFrame:
     """Weekly retention cohorts off the SAME event-time index the
     funnel reads (one store, many readers — the point of keeping
     sufficient state instead of materialized answers): explode the
@@ -2563,7 +2436,7 @@ def streaming_retention(store: ParquetEventIndexStore) -> DataFrame:
     return retention_cohorts_from_events(ev_times)
 
 
-def streaming_gapfill(store: ParquetRollupStore) -> DataFrame:
+def streaming_gapfill(store: KeyedParquetStore) -> DataFrame:
     """Regularized gap-filled hourly series off the continuously
     maintained multi-grain rollup store: the hour-grain state rows
     feed the batch query's exact grid/zero-fill/moving-window tree
@@ -2584,7 +2457,7 @@ def streaming_gapfill(store: ParquetRollupStore) -> DataFrame:
     return gapfill_from_hourly(hourly)
 
 
-def streaming_anomaly(store: ParquetRollupStore) -> DataFrame:
+def streaming_anomaly(store: KeyedParquetStore) -> DataFrame:
     """Volume-anomaly flags off the continuously maintained rollup
     store: the day-grain state rows feed the batch query's exact
     cross-multiplied integer |z| > 2 test

@@ -195,7 +195,7 @@ def test_bytes_to_snapshot_store_full_chain(spark, binlog_dir, tmp_path):
     from galaxy_spark.cdc.projections import project_changes
     from galaxy_spark.sources.binlog_source import BinlogDataSource
     from galaxy_spark.streaming.state_store import (
-        ParquetSnapshotStore, start_incremental_snapshot_parquet)
+        SNAPSHOT_SPEC, KeyedParquetStore, start_incremental_snapshot_parquet)
 
     try:
         spark.dataSource.register(BinlogDataSource)
@@ -212,7 +212,7 @@ def test_bytes_to_snapshot_store_full_chain(spark, binlog_dir, tmp_path):
                                   F.col("before.amount"))
                        .cast("double").alias("v"),
                        F.col("log_pos").alias("pos")))
-    store = ParquetSnapshotStore(spark, str(tmp_path / "snap"))
+    store = KeyedParquetStore(spark, str(tmp_path / "snap"), SNAPSHOT_SPEC)
     q = start_incremental_snapshot_parquet(
         changes, store, str(tmp_path / "ck"))
     q.processAllAvailable()
@@ -295,8 +295,8 @@ def test_reference_shape_pipeline_end_to_end(spark, binlog_dir,
     from galaxy_spark.sinks_topic import TopicFilesDataSource
     from galaxy_spark.sources.binlog_source import binlog_envelope_factory
     from galaxy_spark.streaming.pipeline import SinkConfig, start_pipeline
-    from galaxy_spark.streaming.state_store import partial_snapshot
-    from galaxy_spark.streaming.state_store import ParquetSnapshotStore
+    from galaxy_spark.streaming.state_store import (
+        SNAPSHOT_SPEC, KeyedParquetStore, partial_snapshot)
 
     try:
         spark.dataSource.register(TopicFilesDataSource)
@@ -366,7 +366,8 @@ def test_reference_shape_pipeline_end_to_end(spark, binlog_dir,
                        F.element_at(img, "amount").cast("double")
                        .alias("v"),
                        F.col("m.event_header.log_pos").alias("pos")))
-    store = ParquetSnapshotStore(spark, str(tmp_path / "consumer_snap"))
+    store = KeyedParquetStore(spark, str(tmp_path / "consumer_snap"),
+                              SNAPSHOT_SPEC)
     store.merge(partial_snapshot(changes), "consume.000000000000")
     # hand-derived truth of segment 1: id 1 inserted then deleted
     # (tombstone), id 2 inserted@299 then updated@390 -> 21.0

@@ -60,8 +60,8 @@ def test_snapshot_fold_correct_under_100x_hot_key(spark, tmp_path):
     keep AQE skew-join on via the session defaults asserted here."""
     import random
 
-    from galaxy_spark.streaming.state_store import partial_snapshot
-    from galaxy_spark.streaming.state_store import ParquetSnapshotStore
+    from galaxy_spark.streaming.state_store import (
+        SNAPSHOT_SPEC, KeyedParquetStore, partial_snapshot)
 
     rng = random.Random(42)
     rows = []
@@ -94,8 +94,8 @@ def test_snapshot_fold_correct_under_100x_hot_key(spark, tmp_path):
 
     # streaming twin: two skewed "micro-batches" merged into the
     # durable store end at the identical state
-    store = ParquetSnapshotStore(spark, str(tmp_path / "hot_store"),
-                                 n_buckets=4)
+    store = KeyedParquetStore(spark, str(tmp_path / "hot_store"),
+                              SNAPSHOT_SPEC, n_buckets=4)
     half = len(rows) // 2
     for i, chunk in enumerate((rows[:half], rows[half:])):
         b = spark.createDataFrame(

@@ -474,8 +474,8 @@ def test_mariadb_reference_shape_chain(spark, tmp_path):
     from galaxy_spark.sources.binlog_source import BinlogDataSource
     from galaxy_spark.streaming.pipeline import (SinkConfig,
                                                  start_pipeline)
-    from galaxy_spark.streaming.state_store import partial_snapshot
-    from galaxy_spark.streaming.state_store import ParquetSnapshotStore
+    from galaxy_spark.streaming.state_store import (
+        SNAPSHOT_SPEC, KeyedParquetStore, partial_snapshot)
 
     for ds in (BinlogDataSource, TopicFilesDataSource):
         try:
@@ -559,7 +559,7 @@ def test_mariadb_reference_shape_chain(spark, tmp_path):
                        F.element_at(img, "id").cast("long").alias("pk"),
                        F.element_at(img, "id").cast("double").alias("v"),
                        F.col("m.event_header.log_pos").alias("pos")))
-    store = ParquetSnapshotStore(spark, str(tmp_path / "m_snap"))
+    store = KeyedParquetStore(spark, str(tmp_path / "m_snap"), SNAPSHOT_SPEC)
     store.merge(partial_snapshot(changes), "mconsume.000000000000")
     assert [(r[0], r[1], r[2]) for r in store.snapshot()] == \
         [("shop", "orders", 10), ("shop", "orders", 20),

@@ -292,7 +292,8 @@ def test_delta_tier_any_schedule_matches_cow(spark, batches, modes):
 
     from pyspark.sql import functions as F
 
-    from galaxy_spark.streaming.state_store import KeyedParquetStore
+    from galaxy_spark.streaming.state_store import (KeyedParquetStore,
+                                                    StoreSpec)
 
     root = tempfile.mkdtemp()
     try:
@@ -300,12 +301,12 @@ def test_delta_tier_any_schedule_matches_cow(spark, batches, modes):
         # counts rows, not prior counts; the first draft used it in
         # aggs and hypothesis immediately found the divergence), so
         # the partial carries w and the store folds SUM(w)
+        spec = StoreSpec(("k",), lambda: [F.sum("v").cast("long").alias("v"),
+                                          F.sum("w").cast("long").alias("w")],
+                         "k long, v long, w long", 3)
+
         def mk(name):
-            return KeyedParquetStore(
-                spark, f"{root}/{name}", ["k"],
-                [F.sum("v").cast("long").alias("v"),
-                 F.sum("w").cast("long").alias("w")],
-                n_buckets=3, state_schema="k long, v long, w long")
+            return KeyedParquetStore(spark, f"{root}/{name}", spec)
         cow, dlt = mk("cow"), mk("dlt")
         for i, (rows, mode) in enumerate(zip(batches, modes)):
             bdf = (spark.createDataFrame(

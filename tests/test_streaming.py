@@ -19,11 +19,32 @@ from pyspark.sql import functions as F
 
 from galaxy_spark.cdc.envelope import EVENT_SOURCE_COLUMNS, envelope_from_events
 from galaxy_spark.control.metrics import MetricsListener
-from galaxy_spark.control.tasks import TaskManager, TaskSpec
+from galaxy_spark.control.tasks import _KINDS, TaskManager, TaskSpec
 from galaxy_spark.streaming.pipeline import (
     SinkConfig,
     ddl_apply_batch,
     routed_messages,
+)
+from galaxy_spark.streaming.state_store import (
+    CLUSTER_SPEC,
+    COOC_SPEC,
+    CORPUS_STATS_SPEC,
+    DOC_LEN_SPEC,
+    DOC_SPEC,
+    ITEM_DEG_SPEC,
+    LSH_SPEC,
+    PAIR_SPEC,
+    POSTINGS_SPEC,
+    PURCHASE_SPEC,
+    REDIRECT_SPEC,
+    ROLLUP_SPEC,
+    SNAPSHOT_SPEC,
+    KeyedParquetStore,
+    StoreSpec,
+    basket_spec,
+    event_index_spec,
+    user_seq_spec,
+    winnow_spec,
 )
 from galaxy_spark.tables import load_table
 
@@ -325,9 +346,9 @@ def test_parquet_store_rejects_foreign_lineage(spark, events_dir,
     from pyspark.errors.exceptions.captured import StreamingQueryException
 
     from galaxy_spark.streaming.state_store import (
-        ParquetRollupStore, start_incremental_rollup_parquet)
+        start_incremental_rollup_parquet)
 
-    store = ParquetRollupStore(spark, str(tmp_path / "pr_store"))
+    store = KeyedParquetStore(spark, str(tmp_path / "pr_store"), ROLLUP_SPEC)
     q = start_incremental_rollup_parquet(
         _stream_events(spark, events_dir), store, str(tmp_path / "ckpt_a"))
     q.processAllAvailable()
@@ -454,7 +475,7 @@ def test_stream_static_bloom_gate_matches_batch(spark, tmp_path):
 def test_parquet_snapshot_store_matches_batch_and_stays_off_driver(
         spark, events_dir, tmp_path):
     """The DEFAULT durable snapshot backend (bucketed parquet MERGE,
-    state_store.ParquetSnapshotStore) must end at exactly the batch
+    state_store.SNAPSHOT_SPEC) must end at exactly the batch
     cdc_apply_snapshot rows — and the accumulated state must live in
     FILES, not in any driver-side Python container: the store object
     holds only session/path/config metadata, while every state row
@@ -466,11 +487,12 @@ def test_parquet_snapshot_store_matches_batch_and_stays_off_driver(
     from galaxy_spark.queries.cdc import (cdc_apply_snapshot,
                                           snapshot_change_frame)
     from galaxy_spark.streaming.state_store import (
-        ParquetSnapshotStore, start_incremental_snapshot_parquet)
+        start_incremental_snapshot_parquet)
 
     changes = snapshot_change_frame(
         envelope_from_events(_stream_events(spark, events_dir)))
-    store = ParquetSnapshotStore(spark, str(tmp_path / "snap_store"))
+    store = KeyedParquetStore(spark, str(tmp_path / "snap_store"),
+                              SNAPSHOT_SPEC)
     q = start_incremental_snapshot_parquet(
         changes, store, str(tmp_path / "snap_ckpt"))
     q.processAllAvailable()
@@ -502,10 +524,9 @@ def test_parquet_store_epoch_replay_is_idempotent(spark, tmp_path):
     must be a no-op (the per-bucket _COMMITTED claim), while a new
     epoch key folds in — so the non-idempotent n_changes counter
     never double-counts on replay."""
-    from galaxy_spark.streaming.state_store import ParquetSnapshotStore
 
-    store = ParquetSnapshotStore(spark, str(tmp_path / "st"),
-                                 n_buckets=4)
+    store = KeyedParquetStore(spark, str(tmp_path / "st"), SNAPSHOT_SPEC,
+                              n_buckets=4)
 
     def partial(rows):
         return spark.createDataFrame(
@@ -538,24 +559,23 @@ def test_parquet_store_merge_rewrites_only_touched_buckets(
     ONLY that key's bucket; every other bucket keeps its prior
     version dir untouched — the property that keeps per-batch cost
     proportional to the batch at 100 TB state."""
-    from galaxy_spark.streaming.state_store import ParquetSnapshotStore
 
-    store = ParquetSnapshotStore(spark, str(tmp_path / "st"),
-                                 n_buckets=4)
+    store = KeyedParquetStore(spark, str(tmp_path / "st"), SNAPSHOT_SPEC,
+                              n_buckets=4)
     wide = spark.createDataFrame(
         [("d", "t", pk, "insert", float(pk), pk, 1)
          for pk in range(40)],
         "database string, `table` string, pk long, last_action string,"
         " last_value double, last_pos long, n_changes long")
     store.merge(wide, "lin.000000000000")
-    before = {b: store._versions(int(b.split("-")[1]))
+    before = {b: sorted(os.listdir(os.path.join(store.path, b)))
               for b in os.listdir(store.path) if b.startswith("bucket-")}
     assert len(before) == 4  # 40 keys cover all 4 buckets
 
     one = wide.filter(F.col("pk") == 7) \
         .withColumn("last_pos", F.lit(100).cast("long"))
     store.merge(one, "lin.000000000001")
-    after = {b: store._versions(int(b.split("-")[1]))
+    after = {b: sorted(os.listdir(os.path.join(store.path, b)))
              for b in os.listdir(store.path) if b.startswith("bucket-")}
     changed = [b for b in before if after[b] != before[b]]
     assert len(changed) == 1  # pk=7's bucket, vacuumed + new version
@@ -570,10 +590,10 @@ def test_parquet_rollup_store_matches_batch(spark, events_dir, tmp_path):
     aggregation (the same pin as the dict-store twin, now with the
     accumulated buckets in executor-written parquet)."""
     from galaxy_spark.streaming.state_store import (
-        ParquetRollupStore, start_incremental_rollup_parquet)
+        start_incremental_rollup_parquet)
 
     stream = _stream_events(spark, events_dir)
-    store = ParquetRollupStore(spark, str(tmp_path / "roll_store"))
+    store = KeyedParquetStore(spark, str(tmp_path / "roll_store"), ROLLUP_SPEC)
     q = start_incremental_rollup_parquet(
         stream, store, str(tmp_path / "roll_ckpt"))
     q.processAllAvailable()
@@ -622,10 +642,10 @@ def test_parquet_rollup_store_survives_spark_epoch_replay(
     versions and skip the replayed batch — totals unchanged, no new
     version dirs minted."""
     from galaxy_spark.streaming.state_store import (
-        ParquetRollupStore, start_incremental_rollup_parquet)
+        start_incremental_rollup_parquet)
 
     ckpt = str(tmp_path / "pr_ckpt")
-    store = ParquetRollupStore(spark, str(tmp_path / "pr_store"))
+    store = KeyedParquetStore(spark, str(tmp_path / "pr_store"), ROLLUP_SPEC)
     q = start_incremental_rollup_parquet(
         _stream_events(spark, events_dir), store, ckpt)
     q.processAllAvailable()
@@ -727,8 +747,6 @@ def test_streaming_histogram_quantile_on_durable_store(spark, events_dir,
     agg_histogram_quantile_value_bound.)"""
     import math
 
-    from galaxy_spark.streaming.state_store import KeyedParquetStore
-
     ev = load_table(spark, SF, "events").filter(F.col("value").isNotNull())
     B = 128
     mm = ev.agg(
@@ -746,9 +764,9 @@ def test_streaming_histogram_quantile_on_durable_store(spark, events_dir,
                 .groupBy("bin")
                 .agg(F.count("*").cast("long").alias("cnt")))
 
-    store = KeyedParquetStore(
-        spark, str(tmp_path / "hist_store"), ["bin"],
-        [F.sum("cnt").cast("long").alias("cnt")], n_buckets=2)
+    store = KeyedParquetStore(spark, str(tmp_path / "hist_store"), StoreSpec(
+        ("bin",), lambda: [F.sum("cnt").cast("long").alias("cnt")],
+        "bin int, cnt long", 2))
     q = (_stream_events(spark, events_dir).writeStream
          .option("checkpointLocation", str(tmp_path / "hist_ck"))
          .foreachBatch(lambda b, e: store.merge(
@@ -787,11 +805,10 @@ def test_streaming_hll_registers_on_durable_store(spark, events_dir,
     cell-for-cell (the same continuous-aggregate guarantee as the
     histogram sketch, for the COUNT DISTINCT axis)."""
     from galaxy_spark.queries.indexing import hll_registers
-    from galaxy_spark.streaming.state_store import KeyedParquetStore
 
-    store = KeyedParquetStore(
-        spark, str(tmp_path / "hll_store"), ["bucket"],
-        [F.max("register").alias("register")], n_buckets=2)
+    store = KeyedParquetStore(spark, str(tmp_path / "hll_store"), StoreSpec(
+        ("bucket",), lambda: [F.max("register").alias("register")],
+        "bucket long, register int", 2))
     q = (_stream_events(spark, events_dir).writeStream
          .option("checkpointLocation", str(tmp_path / "hll_ck"))
          .foreachBatch(lambda b, e: store.merge(
@@ -817,8 +834,7 @@ def test_rebucket_preserves_state_and_resumes_stream(spark, events_dir,
     from galaxy_spark.queries.cdc import (cdc_apply_snapshot,
                                           snapshot_change_frame)
     from galaxy_spark.streaming.state_store import (
-        ParquetSnapshotStore, rebucket,
-        start_incremental_snapshot_parquet)
+        rebucket, start_incremental_snapshot_parquet)
     from galaxy_spark.tables import load_table as _lt
 
     ev = _lt(spark, SF, "events")
@@ -827,8 +843,8 @@ def test_rebucket_preserves_state_and_resumes_stream(spark, events_dir,
     ev.filter(F.col("event_id") <= mid).write.parquet(src)
 
     ckpt = str(tmp_path / "rb_ckpt")
-    store = ParquetSnapshotStore(spark, str(tmp_path / "rb_a"),
-                                 n_buckets=2)
+    store = KeyedParquetStore(spark, str(tmp_path / "rb_a"), SNAPSHOT_SPEC,
+                              n_buckets=2)
 
     def start(st):
         return start_incremental_snapshot_parquet(
@@ -942,10 +958,8 @@ def test_parquet_store_recovers_from_crash_debris(spark, tmp_path):
     max-committed-version rule and swept by the next merge."""
     import time as _time
 
-    from galaxy_spark.streaming.state_store import ParquetSnapshotStore
-
     path = str(tmp_path / "st")
-    store = ParquetSnapshotStore(spark, path, n_buckets=1)
+    store = KeyedParquetStore(spark, path, SNAPSHOT_SPEC, n_buckets=1)
 
     def partial(pk, pos, v):
         return spark.createDataFrame(
@@ -971,7 +985,7 @@ def test_parquet_store_recovers_from_crash_debris(spark, tmp_path):
     with open(os.path.join(torn, "garbage"), "w") as f:
         f.write("not parquet")
 
-    store2 = ParquetSnapshotStore(spark, path, n_buckets=1)
+    store2 = KeyedParquetStore(spark, path, SNAPSHOT_SPEC, n_buckets=1)
     assert os.path.exists(stale), \
         "construction must not sweep (readers share the path)"
     assert store2.snapshot() == base          # torn version invisible
@@ -1264,21 +1278,19 @@ def test_topic_files_lineage_scopes_batch_names(tmp_path, monkeypatch):
 
 
 def test_rebucket_base_class_store_and_quiesce_warning(spark, tmp_path):
-    """rebucket on a plain KeyedParquetStore must forward
-    key_cols/aggs (the subclass-shaped constructor call raised a
+    """rebucket on a store over an ad-hoc StoreSpec must carry its
+    key_cols/aggs (a subclass-shaped constructor call once raised a
     bare TypeError), and omitting checkpoint_dir warns that the
     quiesce check is skipped."""
     import warnings
 
     from pyspark.sql import functions as F
 
-    from galaxy_spark.streaming.state_store import (KeyedParquetStore,
-                                                    rebucket)
+    from galaxy_spark.streaming.state_store import rebucket
 
-    store = KeyedParquetStore(
-        spark, str(tmp_path / "base_a"), ["k"],
-        [F.sum("v").cast("long").alias("v")], n_buckets=2,
-        state_schema="k string, v long")
+    store = KeyedParquetStore(spark, str(tmp_path / "base_a"), StoreSpec(
+        ("k",), lambda: [F.sum("v").cast("long").alias("v")],
+        "k string, v long", 2))
     store.merge(spark.createDataFrame([("a", 1), ("b", 2)],
                                       "k string, v long"),
                 "ck1.000000000000")
@@ -1296,18 +1308,11 @@ def test_rebucket_base_class_store_and_quiesce_warning(spark, tmp_path):
 # ------------------------------------------------------------------
 
 def _near_dup_stores(spark, tmp_path, tag, delta=None, fs="posix"):
-    from galaxy_spark.streaming.state_store import (ParquetDocStore,
-                                                    ParquetLshStore,
-                                                    ParquetPairStore)
-    from galaxy_spark.streaming.store_fs import store_fs
-
-    stores = (ParquetLshStore(spark, str(tmp_path / f"{tag}_lsh")),
-              ParquetDocStore(spark, str(tmp_path / f"{tag}_docs")),
-              ParquetPairStore(spark, str(tmp_path / f"{tag}_pairs")))
-    for s in stores:       # write-strategy knobs: safe to set at any
-        s.delta_threshold = delta         # epoch boundary (r11);
-        s.fs = store_fs(fs)               # fs before first commit
-    return stores
+    return tuple(
+        KeyedParquetStore(spark, str(tmp_path / f"{tag}_{name}"), spec,
+                          delta_threshold=delta, fs=fs)
+        for name, spec in (("lsh", LSH_SPEC), ("docs", DOC_SPEC),
+                           ("pairs", PAIR_SPEC)))
 
 
 def test_lsh_probe_plans_as_equi_join(spark, tmp_path):
@@ -1340,15 +1345,11 @@ def test_lsh_probe_plans_as_equi_join(spark, tmp_path):
 
 
 def _cluster_stores(spark, tmp_path, tag):
-    from galaxy_spark.streaming.state_store import (
-        ParquetClusterStore, ParquetDocStore, ParquetLshStore,
-        ParquetPairStore, ParquetRedirectStore)
-
-    return (ParquetLshStore(spark, str(tmp_path / f"{tag}_lsh")),
-            ParquetDocStore(spark, str(tmp_path / f"{tag}_doc")),
-            ParquetPairStore(spark, str(tmp_path / f"{tag}_pair")),
-            ParquetClusterStore(spark, str(tmp_path / f"{tag}_cl")),
-            ParquetRedirectStore(spark, str(tmp_path / f"{tag}_rd")))
+    return tuple(
+        KeyedParquetStore(spark, str(tmp_path / f"{tag}_{name}"), spec)
+        for name, spec in (("lsh", LSH_SPEC), ("doc", DOC_SPEC),
+                           ("pair", PAIR_SPEC), ("cl", CLUSTER_SPEC),
+                           ("rd", REDIRECT_SPEC)))
 
 
 def test_streaming_clustering_matches_batch(spark, tmp_path):
@@ -1479,12 +1480,11 @@ def test_cluster_redirect_replay_regenerates_lost_edges(spark,
     replay rediscovers 20 through the retained (30 -> 20) edge and
     regenerates the lost row."""
     from galaxy_spark.streaming.state_store import (
-        ParquetClusterStore, ParquetRedirectStore, _cluster_partials,
-        streaming_cluster_assignments)
+        _cluster_partials, streaming_cluster_assignments)
 
-    cstore = ParquetClusterStore(spark, str(tmp_path / "rp_c"))
-    rstore = ParquetRedirectStore(spark, str(tmp_path / "rp_r"),
-                                  n_buckets=8)
+    cstore = KeyedParquetStore(spark, str(tmp_path / "rp_c"), CLUSTER_SPEC)
+    rstore = KeyedParquetStore(spark, str(tmp_path / "rp_r"), REDIRECT_SPEC,
+                               n_buckets=8)
 
     def pairs_df(rows):
         return spark.createDataFrame(rows, "id_a long, id_b long")
@@ -1546,10 +1546,10 @@ def test_state_for_keys_opens_only_touched_buckets(spark, tmp_path,
     strategies prune identically: the layout is above the seam."""
     import pyspark.sql.readwriter as rw
 
-    from galaxy_spark.streaming.state_store import ParquetDocStore
     from galaxy_spark.streaming.store_fs import store_fs
 
-    store = ParquetDocStore(spark, str(tmp_path / "sfk"), n_buckets=8)
+    store = KeyedParquetStore(spark, str(tmp_path / "sfk"), DOC_SPEC,
+                              n_buckets=8)
     store.fs = store_fs(fs)
     docs = load_table(spark, SF, "documents") \
         .select(F.col("doc_id").alias("id"), "text")
@@ -1595,18 +1595,16 @@ def test_lsh_probe_reads_are_layout_pruned(spark, tmp_path,
 
     from galaxy_spark.operators.dedup import minhash_band_buckets
     from galaxy_spark.registry import all_queries
-    from galaxy_spark.streaming.state_store import (ParquetDocStore,
-                                                    ParquetLshStore,
-                                                    lsh_probe_pairs,
-                                                    partial_lsh_index)
+    from galaxy_spark.streaming.state_store import (
+        lsh_probe_pairs, partial_lsh_index)
 
     docs = load_table(spark, SF, "documents")
     a, b = sorted((r.id_a, r.id_b) for r in all_queries()
                   ["dedup_minhash_lsh"](spark, SF).collect())[0]
-    lsh = ParquetLshStore(spark, str(tmp_path / "pr_lsh"),
-                          n_buckets=16)
-    dstore = ParquetDocStore(spark, str(tmp_path / "pr_doc"),
-                             n_buckets=16)
+    lsh = KeyedParquetStore(spark, str(tmp_path / "pr_lsh"), LSH_SPEC,
+                            n_buckets=16)
+    dstore = KeyedParquetStore(spark, str(tmp_path / "pr_doc"), DOC_SPEC,
+                               n_buckets=16)
     hist = docs.filter(F.col("doc_id") != b)     # everything but b
     lsh.merge(partial_lsh_index(hist), "lin.000000000000")
     dstore.merge(hist.select(F.col("doc_id").alias("id"), "text"),
@@ -1691,8 +1689,7 @@ def test_near_dup_stores_survive_rebucket(spark, tmp_path):
     moving to a different bucket count."""
     from galaxy_spark.registry import all_queries
     from galaxy_spark.streaming.state_store import (
-        ParquetLshStore, ParquetPairStore, lsh_probe_pairs,
-        partial_lsh_index, rebucket, streaming_near_dup_pairs)
+        lsh_probe_pairs, partial_lsh_index, rebucket, streaming_near_dup_pairs)
 
     docs = load_table(spark, SF, "documents")
     lsh, dstore, pairs = _near_dup_stores(spark, tmp_path, "rb")
@@ -1710,13 +1707,13 @@ def test_near_dup_stores_survive_rebucket(spark, tmp_path):
 
     pairs2 = rebucket(pairs, str(tmp_path / "rb_pairs7"),
                       n_buckets=7)
-    assert isinstance(pairs2, ParquetPairStore)
+    assert pairs2.spec is PAIR_SPEC
     assert sorted((r.id_a, r.id_b, r.jaccard)
                   for r in streaming_near_dup_pairs(pairs2)
                   .collect()) == want
 
     lsh2 = rebucket(lsh, str(tmp_path / "rb_lsh5"), n_buckets=5)
-    assert isinstance(lsh2, ParquetLshStore)
+    assert lsh2.spec is LSH_SPEC
     assert lsh2.state().count() == lsh.state().count()
     a = sorted(map(tuple, lsh.state()
                    .select("band", "bucket", "id").collect()))
@@ -1729,15 +1726,15 @@ def test_near_dup_stores_survive_rebucket(spark, tmp_path):
 # Delta-tier merges (r11): O(batch) appends + amortized compaction
 # ------------------------------------------------------------------
 
-def _sum_store(spark, path, delta, fs="posix"):
-    from galaxy_spark.streaming.state_store import KeyedParquetStore
+_SUM_SPEC = StoreSpec(
+    ("k",), lambda: [F.sum("v").cast("long").alias("v"),
+                     F.max("last").alias("last")],
+    "k long, v long, last string", 4)
 
-    return KeyedParquetStore(
-        spark, path, ["k"],
-        [F.sum("v").cast("long").alias("v"),
-         F.max("last").alias("last")],
-        n_buckets=4, state_schema="k long, v long, last string",
-        delta_threshold=delta, fs=fs)
+
+def _sum_store(spark, path, delta, fs="posix"):
+    return KeyedParquetStore(spark, path, _SUM_SPEC,
+                             delta_threshold=delta, fs=fs)
 
 
 _DELTA_BATCHES = [
@@ -1999,9 +1996,7 @@ def test_streaming_search_index_matches_batch(spark, tmp_path,
     from galaxy_spark.queries.indexing import _BM25_TERMS
     from galaxy_spark.registry import all_queries
     from galaxy_spark.streaming.state_store import (
-        ParquetCorpusStatsStore, ParquetDocLenStore,
-        ParquetPostingsStore, start_streaming_search_index,
-        streaming_bm25, streaming_inverted_index)
+        start_streaming_search_index, streaming_bm25, streaming_inverted_index)
 
     docs = load_table(spark, SF, "documents")
     src = str(tmp_path / "six_src")
@@ -2010,14 +2005,15 @@ def test_streaming_search_index_matches_batch(spark, tmp_path,
          .coalesce(1).write.mode("append").parquet(src))
         _time.sleep(1.1)
 
-    postings = ParquetPostingsStore(spark,
-                                    str(tmp_path / "six_post"))
+    postings = KeyedParquetStore(spark, str(tmp_path / "six_post"),
+                                 POSTINGS_SPEC)
     # 32 dl buckets: the template corpus's rarest term still hits
     # 25 docs, which covers all 8 default buckets — strict-subset
     # pruning needs the layout finer than the candidate set
-    doclen = ParquetDocLenStore(spark, str(tmp_path / "six_dl"),
-                                n_buckets=32)
-    stats = ParquetCorpusStatsStore(spark, str(tmp_path / "six_st"))
+    doclen = KeyedParquetStore(spark, str(tmp_path / "six_dl"), DOC_LEN_SPEC,
+                               n_buckets=32)
+    stats = KeyedParquetStore(spark, str(tmp_path / "six_st"),
+                              CORPUS_STATS_SPEC)
     stream = spark.readStream.schema(docs.schema) \
         .option("maxFilesPerTrigger", 1).parquet(src)
     q = start_streaming_search_index(stream, postings, doclen,
@@ -2101,9 +2097,7 @@ def test_streaming_funnel_matches_batch(spark, tmp_path):
 
     from galaxy_spark.registry import all_queries
     from galaxy_spark.streaming.state_store import (
-        ParquetEventIndexStore, ParquetPurchaseStore,
-        partial_event_index, start_streaming_attribution_hub,
-        streaming_funnel)
+        partial_event_index, start_streaming_attribution_hub, streaming_funnel)
 
     ev = load_table(spark, SF, "events")
     src = str(tmp_path / "fun_src")
@@ -2112,12 +2106,14 @@ def test_streaming_funnel_matches_batch(spark, tmp_path):
          .coalesce(1).write.mode("append").parquet(src))
         _time.sleep(1.1)
 
-    store = ParquetEventIndexStore(spark, str(tmp_path / "fun_store"))
+    store = KeyedParquetStore(spark, str(tmp_path / "fun_store"),
+                              event_index_spec())
     store.delta_threshold = 2
     stream = spark.readStream.schema(ev.schema) \
         .option("maxFilesPerTrigger", 1).parquet(src)
     q = start_streaming_attribution_hub(
-        stream, ParquetPurchaseStore(spark, str(tmp_path / "fun_pur")),
+        stream, KeyedParquetStore(spark, str(tmp_path / "fun_pur"),
+                                  PURCHASE_SPEC),
         store, str(tmp_path / "fun_ck"))
     q.processAllAvailable()
     q.stop()
@@ -2186,7 +2182,6 @@ def test_streaming_attribution_matches_batch(spark, tmp_path):
 
     from galaxy_spark.registry import all_queries
     from galaxy_spark.streaming.state_store import (
-        ParquetEventIndexStore, ParquetPurchaseStore,
         partial_purchases, start_streaming_attribution_hub,
         streaming_attribution_last_touch)
 
@@ -2197,9 +2192,9 @@ def test_streaming_attribution_matches_batch(spark, tmp_path):
          .coalesce(1).write.mode("append").parquet(src))
         _time.sleep(1.1)
 
-    pur = ParquetPurchaseStore(spark, str(tmp_path / "att_p"))
+    pur = KeyedParquetStore(spark, str(tmp_path / "att_p"), PURCHASE_SPEC)
     pur.delta_threshold = 2
-    idx = ParquetEventIndexStore(spark, str(tmp_path / "att_i"))
+    idx = KeyedParquetStore(spark, str(tmp_path / "att_i"), event_index_spec())
     ck = str(tmp_path / "att_ck")
 
     def start():
@@ -2263,8 +2258,7 @@ def test_streaming_path_trigrams_matches_batch(spark, tmp_path):
 
     from galaxy_spark.registry import all_queries
     from galaxy_spark.streaming.state_store import (
-        ParquetUserSeqStore, partial_user_seq,
-        start_streaming_user_seq, streaming_path_trigrams)
+        partial_user_seq, start_streaming_user_seq, streaming_path_trigrams)
 
     ev = load_table(spark, SF, "events")
     src = str(tmp_path / "seq_src")
@@ -2273,7 +2267,8 @@ def test_streaming_path_trigrams_matches_batch(spark, tmp_path):
          .coalesce(1).write.mode("append").parquet(src))
         _time.sleep(1.1)
 
-    store = ParquetUserSeqStore(spark, str(tmp_path / "seq_store"))
+    store = KeyedParquetStore(spark, str(tmp_path / "seq_store"),
+                              user_seq_spec())
     store.delta_threshold = 2
     ck = str(tmp_path / "seq_ck")
 
@@ -2341,8 +2336,7 @@ def test_user_seq_retention_bounds_state(spark, tmp_path):
 
     from galaxy_spark.queries.events import path_trigrams_from_events
     from galaxy_spark.streaming.state_store import (
-        ParquetUserSeqStore, start_streaming_user_seq,
-        streaming_path_trigrams)
+        start_streaming_user_seq, streaming_path_trigrams)
 
     ev = load_table(spark, SF, "events")
     src = str(tmp_path / "usr_src")
@@ -2352,8 +2346,8 @@ def test_user_seq_retention_bounds_state(spark, tmp_path):
         _time.sleep(1.1)
 
     H = 14
-    store = ParquetUserSeqStore(spark, str(tmp_path / "usr_store"),
-                                retention_days=H)
+    store = KeyedParquetStore(spark, str(tmp_path / "usr_store"),
+                              user_seq_spec(retention_days=H))
     store.delta_threshold = 2
     stream = spark.readStream.schema(ev.schema) \
         .option("maxFilesPerTrigger", 1).parquet(src)
@@ -2381,11 +2375,11 @@ def test_user_seq_retention_bounds_state(spark, tmp_path):
         f"no merge-time eviction: {stored} stored vs {n_all} full"
 
     # default behavior unchanged: no retention -> no wm column
-    plain = ParquetUserSeqStore(spark, str(tmp_path / "usr_plain"))
+    plain = KeyedParquetStore(spark, str(tmp_path / "usr_plain"),
+                              user_seq_spec())
     assert "wm" not in (plain.state_schema or "")
     with pytest.raises(ValueError, match="retention_days"):
-        ParquetUserSeqStore(spark, str(tmp_path / "usr_bad"),
-                            retention_days=0)
+        user_seq_spec(retention_days=0)
 
 
 def test_state_for_keys_prunes_and_folds_under_deltas(spark, tmp_path,
@@ -2396,10 +2390,8 @@ def test_state_for_keys_prunes_and_folds_under_deltas(spark, tmp_path,
     come back FOLDED — never a raw delta fragment."""
     import pyspark.sql.readwriter as rw
 
-    from galaxy_spark.streaming.state_store import ParquetLshStore
-
-    store = ParquetLshStore(spark, str(tmp_path / "lshd"),
-                            n_buckets=8)
+    store = KeyedParquetStore(spark, str(tmp_path / "lshd"), LSH_SPEC,
+                              n_buckets=8)
     store.delta_threshold = 4            # stays un-compacted here
 
     def rows_df(vals):
@@ -2596,7 +2588,7 @@ def test_cross_strategy_path_refused(spark, tmp_path):
 
 
 def test_rebucket_carries_fs_and_grace(spark, tmp_path):
-    """rebucket reconstructs the store through _clone; the commit
+    """rebucket rebuilds the store from its spec; the commit
     strategy and vacuum grace ride along like delta_threshold —
     and the migrated state re-reads identically under the carried
     strategy."""
@@ -2615,34 +2607,48 @@ def test_rebucket_carries_fs_and_grace(spark, tmp_path):
         sorted(map(tuple, st.state().collect()))
 
 
-@pytest.mark.parametrize("cls_name, tunables", [
-    ("ParquetWinnowStore", {"df_cap": 3}),
-    ("ParquetBasketStore", {"retention_days": 5, "basket_cap": 4}),
-    ("ParquetEventIndexStore", {"retention_days": 2}),
-    ("ParquetUserSeqStore", {"retention_days": 2}),
-])
+#: every store spec: each task kind's stores, and the CDC snapshot
+_ALL_SPECS = [*((sub, spec) for kind in _KINDS.values()
+                for sub, spec, _ in kind.stores),
+              ("snapshot", SNAPSHOT_SPEC)]
+#: a non-default value of every tunable the spec functions take
+_TUNABLES = {"winnow": {"df_cap": 3},
+             "basket": {"retention_days": 5, "basket_cap": 4},
+             "evindex": {"retention_days": 2},
+             "userseq": {"retention_days": 2}}
+
+
+def _spec(spec, **tunables):
+    """A table entry as a StoreSpec: spec functions are called."""
+    return spec(**tunables) if callable(spec) else spec
+
+
+@pytest.mark.parametrize("name, spec", _ALL_SPECS,
+                         ids=[name for name, _ in _ALL_SPECS])
 def test_rebucket_keeps_parametric_store_tunables(spark, tmp_path,
-                                                  cls_name, tunables):
-    """Every store whose constructor takes a tunable beyond
-    (spark, path, n_buckets) must come out of rebucket with the same
-    class, the same non-default tunable and the same fold: a
-    rebuild through the bare signature once reset a KMV store's k
-    to 256 and re-truncated its sketches under the wrong k."""
+                                                  name, spec):
+    """Every store must come out of rebucket with the same spec,
+    the same non-default tunables and the same fold: a rebuild
+    through the bare signature once reset a KMV store's k to 256
+    and re-truncated its sketches under the wrong k."""
     import re
 
-    from galaxy_spark.streaming import state_store as ss
+    from galaxy_spark.streaming.state_store import rebucket
 
-    cls = getattr(ss, cls_name)
-    default = cls(spark, str(tmp_path / "default"))
-    for name, value in tunables.items():
-        assert getattr(default, name) != value, "tunable is the default"
-    src = cls(spark, str(tmp_path / "src"), **tunables)
+    tunables = _TUNABLES.get(name, {})
+    default = KeyedParquetStore(spark, str(tmp_path / "default"),
+                                _spec(spec))
+    for tunable, value in tunables.items():
+        assert getattr(default, tunable) != value, \
+            "tunable is the default"
+    src = KeyedParquetStore(spark, str(tmp_path / "src"),
+                            _spec(spec, **tunables))
     with pytest.warns(UserWarning, match="quiesced"):
-        new = ss.rebucket(src, str(tmp_path / "dst"), 5)
-    assert type(new) is cls
+        new = rebucket(src, str(tmp_path / "dst"), 5)
+    assert type(new) is type(src) and new.spec is src.spec
     assert new.n_buckets == 5
-    for name, value in tunables.items():
-        assert getattr(new, name) == value
+    for tunable, value in tunables.items():
+        assert getattr(new, tunable) == value
     assert new.key_cols == src.key_cols
     assert new.layout_cols == src.layout_cols
     assert new.state_schema == src.state_schema
@@ -2650,7 +2656,42 @@ def test_rebucket_keeps_parametric_store_tunables(spark, tmp_path,
     def fold(store):
         return [re.sub(r"_\d+\b", "", str(c)) for c in store.aggs]
     assert fold(new) == fold(src)
-    assert (new.fold_finalize is None) == (src.fold_finalize is None)
+    assert (new.spec.finalize is None) == (src.spec.finalize is None)
+
+
+def _sample(dt):
+    """One value of a Spark type, for a one-row partial."""
+    import datetime
+
+    from pyspark.sql import types as T
+
+    if isinstance(dt, T.ArrayType):
+        return [_sample(dt.elementType)]
+    if isinstance(dt, T.StructType):
+        return tuple(_sample(f.dataType) for f in dt.fields)
+    return {T.StringType: "a", T.LongType: 1, T.IntegerType: 1,
+            T.DoubleType: 1.5, T.DateType: datetime.date(2024, 1, 2),
+            T.TimestampType: datetime.datetime(2024, 1, 2, 3)}[type(dt)]
+
+
+@pytest.mark.parametrize("name, spec", _ALL_SPECS,
+                         ids=[name for name, _ in _ALL_SPECS])
+def test_spec_schema_matches_folded_state(spark, tmp_path, name, spec):
+    """A spec's ``state_schema`` is what its aggs fold to: an empty
+    store's state() has the same column names and types as its
+    state() after one merge of a one-row partial, with default and
+    with non-default tunables (retention adds a column)."""
+    for i, tunables in enumerate(({}, _TUNABLES.get(name, {}))):
+        store = KeyedParquetStore(spark, str(tmp_path / str(i)),
+                                  _spec(spec, **tunables))
+        empty = store.state().schema
+        store.merge(spark.createDataFrame(
+            [tuple(_sample(f.dataType) for f in empty)], empty),
+            "lin.000000000000")
+        merged = store.state()
+        assert merged.count() == 1
+        assert [(f.name, f.dataType.simpleString()) for f in merged.schema] \
+            == [(f.name, f.dataType.simpleString()) for f in empty]
 
 
 def test_rebucket_basket_retention_reads_new_store_watermark(spark,
@@ -2662,11 +2703,10 @@ def test_rebucket_basket_retention_reads_new_store_watermark(spark,
     watermark, not the source's."""
     import datetime
 
-    from galaxy_spark.streaming.state_store import (ParquetBasketStore,
-                                                    rebucket)
+    from galaxy_spark.streaming.state_store import rebucket
 
-    src = ParquetBasketStore(spark, str(tmp_path / "src"),
-                             retention_days=5)
+    src = KeyedParquetStore(spark, str(tmp_path / "src"),
+                            basket_spec(retention_days=5))
     with pytest.warns(UserWarning, match="quiesced"):
         new = rebucket(src, str(tmp_path / "dst"), 3)
     new.current_wm = datetime.date(2024, 1, 10)
@@ -3027,9 +3067,7 @@ def test_event_index_retention_bounds_state(spark, tmp_path):
     from galaxy_spark.queries.events import (
         funnel_from_events, retention_cohorts_from_events)
     from galaxy_spark.streaming.state_store import (
-        ParquetEventIndexStore, ParquetPurchaseStore,
-        start_streaming_attribution_hub, streaming_funnel,
-        streaming_retention)
+        start_streaming_attribution_hub, streaming_funnel, streaming_retention)
 
     ev = load_table(spark, SF, "events")
     src = str(tmp_path / "ret_src")
@@ -3039,13 +3077,14 @@ def test_event_index_retention_bounds_state(spark, tmp_path):
         _time.sleep(1.1)
 
     H = 14
-    store = ParquetEventIndexStore(spark, str(tmp_path / "ret_store"),
-                                   retention_days=H)
+    store = KeyedParquetStore(spark, str(tmp_path / "ret_store"),
+                              event_index_spec(retention_days=H))
     store.delta_threshold = 2
     stream = spark.readStream.schema(ev.schema) \
         .option("maxFilesPerTrigger", 1).parquet(src)
     q = start_streaming_attribution_hub(
-        stream, ParquetPurchaseStore(spark, str(tmp_path / "ret_pur")),
+        stream, KeyedParquetStore(spark, str(tmp_path / "ret_pur"),
+                                  PURCHASE_SPEC),
         store, str(tmp_path / "ret_ck"))
     q.processAllAvailable()
     q.stop()
@@ -3089,11 +3128,11 @@ def test_event_index_retention_bounds_state(spark, tmp_path):
     # above
 
     # default behavior unchanged: no retention -> no wm column
-    plain = ParquetEventIndexStore(spark, str(tmp_path / "plain"))
+    plain = KeyedParquetStore(spark, str(tmp_path / "plain"),
+                              event_index_spec())
     assert "wm" not in (plain.state_schema or "")
     with pytest.raises(ValueError, match="retention_days"):
-        ParquetEventIndexStore(spark, str(tmp_path / "bad"),
-                               retention_days=0)
+        event_index_spec(retention_days=0)
 
 
 def test_streaming_gapfill_matches_batch(spark, tmp_path):
@@ -3107,8 +3146,7 @@ def test_streaming_gapfill_matches_batch(spark, tmp_path):
 
     from galaxy_spark.registry import all_queries
     from galaxy_spark.streaming.state_store import (
-        ParquetRollupStore, start_incremental_rollup_parquet,
-        streaming_gapfill)
+        start_incremental_rollup_parquet, streaming_gapfill)
 
     ev = load_table(spark, SF, "events")
     src = str(tmp_path / "gf_src")
@@ -3117,7 +3155,7 @@ def test_streaming_gapfill_matches_batch(spark, tmp_path):
          .coalesce(1).write.mode("append").parquet(src))
         _time.sleep(1.1)
 
-    store = ParquetRollupStore(spark, str(tmp_path / "gf_store"))
+    store = KeyedParquetStore(spark, str(tmp_path / "gf_store"), ROLLUP_SPEC)
     store.delta_threshold = 2
     stream = spark.readStream.schema(ev.schema) \
         .option("maxFilesPerTrigger", 1).parquet(src)
@@ -3146,8 +3184,7 @@ def test_streaming_anomaly_matches_batch(spark, tmp_path):
 
     from galaxy_spark.registry import all_queries
     from galaxy_spark.streaming.state_store import (
-        ParquetRollupStore, start_incremental_rollup_parquet,
-        streaming_anomaly)
+        start_incremental_rollup_parquet, streaming_anomaly)
 
     ev = load_table(spark, SF, "events")
     src = str(tmp_path / "an_src")
@@ -3156,7 +3193,7 @@ def test_streaming_anomaly_matches_batch(spark, tmp_path):
          .coalesce(1).write.mode("append").parquet(src))
         _time.sleep(1.1)
 
-    store = ParquetRollupStore(spark, str(tmp_path / "an_store"))
+    store = KeyedParquetStore(spark, str(tmp_path / "an_store"), ROLLUP_SPEC)
     store.delta_threshold = 2
     stream = spark.readStream.schema(ev.schema) \
         .option("maxFilesPerTrigger", 1).parquet(src)
@@ -3195,8 +3232,8 @@ def test_streaming_winnowing_index_matches_batch(spark, tmp_path,
 
     from galaxy_spark.registry import all_queries
     from galaxy_spark.streaming.state_store import (
-        ParquetWinnowStore, start_streaming_winnowing_index,
-        streaming_winnowing_pairs, winnow_probe_pairs)
+        start_streaming_winnowing_index, streaming_winnowing_pairs,
+        winnow_probe_pairs)
     from galaxy_spark.streaming.store_fs import store_fs
 
     docs = load_table(spark, SF, "documents")
@@ -3206,7 +3243,7 @@ def test_streaming_winnowing_index_matches_batch(spark, tmp_path,
          .coalesce(1).write.mode("append").parquet(src))
         _time.sleep(1.1)
 
-    store = ParquetWinnowStore(spark, str(tmp_path / "wn_store"))
+    store = KeyedParquetStore(spark, str(tmp_path / "wn_store"), winnow_spec())
     store.delta_threshold = delta
     store.fs = store_fs(fs)
     ck = str(tmp_path / "wn_ck")
@@ -3258,8 +3295,7 @@ def test_winnow_store_caps_boilerplate_and_probe_is_superset(
     reader once later arrivals push the fingerprint over the cap —
     probe union is a superset, the store reader is the truth."""
     from galaxy_spark.streaming.state_store import (
-        ParquetWinnowStore, partial_winnow_index,
-        streaming_winnowing_pairs, winnow_probe_pairs)
+        partial_winnow_index, streaming_winnowing_pairs, winnow_probe_pairs)
 
     # a 20-word shared run -> several distinct shared fingerprints
     # (>= the min-shared floor of 2)
@@ -3273,8 +3309,8 @@ def test_winnow_store_caps_boilerplate_and_probe_is_superset(
     batch2 = spark.createDataFrame([mk(i) for i in (4, 5, 6, 7, 8)],
                                    "doc_id long, text string")
 
-    store = ParquetWinnowStore(spark, str(tmp_path / "bp_store"),
-                               df_cap=3)
+    store = KeyedParquetStore(spark, str(tmp_path / "bp_store"),
+                              winnow_spec(df_cap=3))
     store.merge(partial_winnow_index(batch1), "lin.000000000000")
     early = {(r.doc_a, r.doc_b) for r in
              winnow_probe_pairs(batch1, store).collect()}
@@ -3311,9 +3347,8 @@ def test_streaming_item_cf_matches_batch(spark, tmp_path):
 
     from galaxy_spark.registry import all_queries
     from galaxy_spark.streaming.state_store import (
-        ParquetBasketStore, ParquetCoocStore, ParquetItemDegStore,
-        cooc_deltas, start_streaming_item_cf,
-        streaming_frequent_pairs, streaming_item_cf_topk)
+        cooc_deltas, start_streaming_item_cf, streaming_frequent_pairs,
+        streaming_item_cf_topk)
 
     li = load_table(spark, SF, "lineitem") \
         .select("l_orderkey", "l_partkey")
@@ -3323,10 +3358,10 @@ def test_streaming_item_cf_matches_batch(spark, tmp_path):
          .coalesce(1).write.mode("append").parquet(src))
         _time.sleep(1.1)
 
-    baskets = ParquetBasketStore(spark, str(tmp_path / "cf_b"))
-    cooc = ParquetCoocStore(spark, str(tmp_path / "cf_c"))
+    baskets = KeyedParquetStore(spark, str(tmp_path / "cf_b"), basket_spec())
+    cooc = KeyedParquetStore(spark, str(tmp_path / "cf_c"), COOC_SPEC)
     cooc.delta_threshold = 2
-    deg = ParquetItemDegStore(spark, str(tmp_path / "cf_d"))
+    deg = KeyedParquetStore(spark, str(tmp_path / "cf_d"), ITEM_DEG_SPEC)
     ck = str(tmp_path / "cf_ck")
 
     def start():
@@ -3433,14 +3468,12 @@ def test_basket_retention_recount_contract(spark, tmp_path):
     evicted (empty) basket — it re-counts as new (degree +1 again)
     and pairs only against later arrivals; counts can only
     over-count, never lose a pair. Deterministic micro-case."""
-    from galaxy_spark.streaming.state_store import (
-        ParquetBasketStore, ParquetCoocStore, ParquetItemDegStore,
-        cooc_deltas)
+    from galaxy_spark.streaming.state_store import cooc_deltas
 
-    baskets = ParquetBasketStore(spark, str(tmp_path / "br_b"),
-                                 n_buckets=1, retention_days=10)
-    cooc = ParquetCoocStore(spark, str(tmp_path / "br_c"))
-    deg = ParquetItemDegStore(spark, str(tmp_path / "br_d"))
+    baskets = KeyedParquetStore(spark, str(tmp_path / "br_b"),
+                                basket_spec(retention_days=10), n_buckets=1)
+    cooc = KeyedParquetStore(spark, str(tmp_path / "br_c"), COOC_SPEC)
+    deg = KeyedParquetStore(spark, str(tmp_path / "br_d"), ITEM_DEG_SPEC)
     schema = "l_orderkey long, l_partkey long, l_shipdate date"
 
     def merge(rows, eid):
@@ -3474,8 +3507,7 @@ def test_basket_retention_recount_contract(spark, tmp_path):
             [(3, 301)], "l_orderkey long, l_partkey long"),
             baskets)
     with pytest.raises(ValueError, match="retention_days"):
-        ParquetBasketStore(spark, str(tmp_path / "br_bad"),
-                           retention_days=0)
+        basket_spec(retention_days=0)
 
 
 def test_basket_retention_bounds_state(spark, tmp_path):
@@ -3495,9 +3527,7 @@ def test_basket_retention_bounds_state(spark, tmp_path):
       advance, probe filter — without any eviction)."""
     import time as _time
 
-    from galaxy_spark.streaming.state_store import (
-        ParquetBasketStore, ParquetCoocStore, ParquetItemDegStore,
-        start_streaming_item_cf)
+    from galaxy_spark.streaming.state_store import start_streaming_item_cf
 
     li = load_table(spark, SF, "lineitem") \
         .select("l_orderkey", "l_partkey",
@@ -3517,18 +3547,18 @@ def test_basket_retention_bounds_state(spark, tmp_path):
         _time.sleep(1.1)
 
     H = 180
-    ret_b = ParquetBasketStore(spark, str(tmp_path / "brb_b"),
-                               retention_days=H)
+    ret_b = KeyedParquetStore(spark, str(tmp_path / "brb_b"),
+                              basket_spec(retention_days=H))
     ret_b.delta_threshold = 2          # exercise every fold site
-    cooc = ParquetCoocStore(spark, str(tmp_path / "brb_c"))
-    deg = ParquetItemDegStore(spark, str(tmp_path / "brb_d"))
-    wide_b = ParquetBasketStore(spark, str(tmp_path / "brb_wb"),
-                                retention_days=9999)
-    wcooc = ParquetCoocStore(spark, str(tmp_path / "brb_wc"))
-    wdeg = ParquetItemDegStore(spark, str(tmp_path / "brb_wd"))
-    full_b = ParquetBasketStore(spark, str(tmp_path / "brb_fb"))
-    fcooc = ParquetCoocStore(spark, str(tmp_path / "brb_fc"))
-    fdeg = ParquetItemDegStore(spark, str(tmp_path / "brb_fd"))
+    cooc = KeyedParquetStore(spark, str(tmp_path / "brb_c"), COOC_SPEC)
+    deg = KeyedParquetStore(spark, str(tmp_path / "brb_d"), ITEM_DEG_SPEC)
+    wide_b = KeyedParquetStore(spark, str(tmp_path / "brb_wb"),
+                               basket_spec(retention_days=9999))
+    wcooc = KeyedParquetStore(spark, str(tmp_path / "brb_wc"), COOC_SPEC)
+    wdeg = KeyedParquetStore(spark, str(tmp_path / "brb_wd"), ITEM_DEG_SPEC)
+    full_b = KeyedParquetStore(spark, str(tmp_path / "brb_fb"), basket_spec())
+    fcooc = KeyedParquetStore(spark, str(tmp_path / "brb_fc"), COOC_SPEC)
+    fdeg = KeyedParquetStore(spark, str(tmp_path / "brb_fd"), ITEM_DEG_SPEC)
     for bst, cst, dst, ck in ((ret_b, cooc, deg, "brb_ck"),
                               (wide_b, wcooc, wdeg, "brb_wck"),
                               (full_b, fcooc, fdeg, "brb_fck")):
@@ -3573,10 +3603,8 @@ def test_streaming_item_cf_basket_cap_matches_capped_batch(
         mining_pair_lift as batch_lift,
         similarity_item_cf_topk as batch_cf)
     from galaxy_spark.streaming.state_store import (
-        ParquetBasketStore, ParquetCoocStore, ParquetItemDegStore,
-        cooc_deltas, start_streaming_item_cf,
-        streaming_frequent_pairs, streaming_item_cf_topk,
-        streaming_pair_lift)
+        cooc_deltas, start_streaming_item_cf, streaming_frequent_pairs,
+        streaming_item_cf_topk, streaming_pair_lift)
 
     K = 3                     # TPC-H baskets reach 7 -> cap bites
     li = load_table(spark, SF, "lineitem") \
@@ -3587,11 +3615,11 @@ def test_streaming_item_cf_basket_cap_matches_capped_batch(
          .coalesce(1).write.mode("append").parquet(src))
         _time.sleep(1.1)
 
-    baskets = ParquetBasketStore(spark, str(tmp_path / "cap_b"),
-                                 basket_cap=K)
-    cooc = ParquetCoocStore(spark, str(tmp_path / "cap_c"))
+    baskets = KeyedParquetStore(spark, str(tmp_path / "cap_b"),
+                                basket_spec(basket_cap=K))
+    cooc = KeyedParquetStore(spark, str(tmp_path / "cap_c"), COOC_SPEC)
     cooc.delta_threshold = 2
-    deg = ParquetItemDegStore(spark, str(tmp_path / "cap_d"))
+    deg = KeyedParquetStore(spark, str(tmp_path / "cap_d"), ITEM_DEG_SPEC)
     ck = str(tmp_path / "cap_ck")
 
     def start():
@@ -3647,19 +3675,22 @@ def test_streaming_item_cf_basket_cap_matches_capped_batch(
     assert got_fp != uncapped_fp
 
     with pytest.raises(ValueError, match="basket cap"):
-        ParquetBasketStore(spark, str(tmp_path / "cap_bad"),
-                           basket_cap=1)
+        basket_spec(basket_cap=1)
 
 
 def test_fold_finalize_empty_bucket_slice_still_claims_epoch(
         spark, tmp_path):
-    """r13 review: a ``fold_finalize`` filter can drop a touched
+    """r13 review: a spec ``finalize`` filter can drop a touched
     bucket's ENTIRE folded slice — the commit must still publish
     (an empty 0-row version) so the epoch is claimed and replays
     skip, instead of re-running the fold for that bucket forever.
     The filter is the cooc store's: rows that fold to 0 drop."""
-    store = _sum_store(spark, str(tmp_path / "ef_store"), None)
-    store.fold_finalize = lambda df: df.filter(F.col("v") != 0)
+    import dataclasses
+
+    store = KeyedParquetStore(
+        spark, str(tmp_path / "ef_store"), dataclasses.replace(
+            _SUM_SPEC,
+            finalize=lambda _store, df: df.filter(F.col("v") != 0)))
 
     # two keys hashing to DIFFERENT buckets
     bmap = {r.k: r.b for r in
