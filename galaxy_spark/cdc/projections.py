@@ -125,36 +125,6 @@ def project_changes_by_schema(df: DataFrame, schemas: DataFrame) -> DataFrame:
                            F.col("__cols")).drop("__cols")
 
 
-def typed_table_view(df: DataFrame, registry, db: str, table: str,
-                     image: str = "after") -> DataFrame:
-    """SURVEY §1.3's analytics mapping: one table's change rows as
-    a TYPED DataFrame — each registry column cast from the string
-    transport map to its Spark type (``mysql_type_to_spark``:
-    DECIMAL(p,s) stays DecimalType, so the byte tier's digit-exact
-    strings land as exact decimals, never doubles; datetime/date
-    parse from the decoder's canonical text). The transport layer
-    stays schema-fluid maps (the reference's JSON degrade); typing
-    is a per-table VIEW applied where analytics wants columns."""
-    from galaxy_spark.cdc.schema_registry import mysql_type_to_spark
-
-    ts = registry.get(db, table)
-    if ts is None:
-        raise KeyError(f"no schema for {db}.{table}")
-    img = F.col(image)
-    keep = [c for c in ("action", "log_pos") if c in df.columns]
-    if "event_header" in df.columns and "log_pos" not in keep:
-        keep.append("event_header.log_pos")
-    fields = [
-        F.element_at(img, c.name).cast(mysql_type_to_spark(c.col_type))
-        .alias(c.name)
-        for c in ts.columns
-    ]
-    return (df.filter((F.col("database") == db)
-                      & (F.col("table") == table)
-                      & img.isNotNull())
-            .select(*keep, *fields))
-
-
 def route_actions(df: DataFrame) -> dict[str, DataFrame]:
     """S3 event-type dispatch: three filtered branches of one plan.
 

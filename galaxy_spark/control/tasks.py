@@ -177,7 +177,7 @@ class TaskManager:
             if spec.index_options:
                 # r13 ADVICE: index_options tune the stateful kinds'
                 # stores; a cdc task has none, so accepting (say)
-                # fs='manifest_cas' here would silently do nothing —
+                # fs='manifest' here would silently do nothing —
                 # the same trap as a typo'd task_kind. Fail at
                 # creation, like every other dead-config path.
                 raise ValueError(
@@ -589,9 +589,11 @@ _DOC_COLS = {"text_col": str, "id_col": str}
 #: ``delta_threshold`` (absent -> the per-store defaults below, null
 #: -> CoW everywhere, an integer -> that cadence everywhere) and
 #: ``fs``, the commit protocol of ALL the task's stores, because a
-#: task deploys onto one storage class: 'posix' (default),
-#: 'manifest' (object-store rename-less commits) or 'manifest_cas'
-#: (manifest + two-live-writer conditional-put fencing)
+#: task deploys onto one storage class: 'posix' (default) or
+#: 'manifest' (object-store rename-less commits, fenced by a
+#: conditional manifest put). 'manifest_cas' is accepted as a
+#: second name for 'manifest', so task specs persisted under it
+#: still recover
 _KINDS = {
     # the LLM-pipeline growing near-dup index + incremental
     # clustering over a document stream (r10 verdict #8)
@@ -693,8 +695,8 @@ def _index_options(spec: TaskSpec, strict: bool = False) -> dict:
         elif key == "fs" and v not in ("posix", "manifest",
                                        "manifest_cas"):
             raise ValueError(
-                f"index_options['fs'] must be 'posix', 'manifest' or "
-                f"'manifest_cas', got {v!r}")
+                f"index_options['fs'] must be 'posix' or 'manifest', "
+                f"got {v!r}")
         elif key in kind.options:
             v = kind.options[key](v)
         out[key] = v

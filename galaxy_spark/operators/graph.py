@@ -188,77 +188,3 @@ def components_with_size(vertices: DataFrame, edges: DataFrame,
     # left in the cluster queries' output plans)
     return comp.join(F.broadcast(sizes), "component").select(
         "id", "component", "component_size")
-
-
-def degree_orient(edges: DataFrame, src_col: str = "src",
-                  dst_col: str = "dst") -> DataFrame:
-    """Re-orient an UNDIRECTED edge set so every edge points from
-    its lower-degree endpoint to its higher-degree one (ties broken
-    by id) — the classic skew fix for triangle counting
-    (Suri & Vassilvitskii 2011 / Chiba-Nishizeki ordering): under
-    degree orientation every node's out-adjacency is bounded by
-    O(sqrt(|E|)), so the hot-node adjacency arrays the id-oriented
-    edge-iterator builds (bounded only by max degree) cannot form.
-    Input: one row per undirected edge in either id order; output:
-    one row per edge, (src, dst) with src the lower-(degree, id)
-    endpoint. Total triangle counts are orientation-invariant
-    (each triangle has exactly one cyclic ordering under ANY
-    acyclic orientation), which
-    tests/test_graph.py::test_degree_oriented_triangles pins
-    against the id-oriented query.
-
-    Plan: one degree aggregation over the symmetrized ends (one
-    shuffle), then a (|V| rows) degree join onto each endpoint, and
-    a scan-local CASE to flip. The degree join broadcasts only when
-    |V| fits the budget in ``operators.util.bcast_max_rows`` (the
-    degree frame is localCheckpointed and counted once, like
-    ``connected_components``' edge list); past it, e.g. at
-    billion-node |V|, it is a shuffle join. Cost is O(|E|) with no
-    new skew: degrees partial-aggregate map-side.
-    """
-    # _symmetrize always emits columns named src/dst — group on
-    # those, not the caller's names (non-default src_col/dst_col
-    # used to raise UNRESOLVED_COLUMN here)
-    sym = _symmetrize(edges, src_col, dst_col)
-    deg = (sym.groupBy(F.col("src").alias("node"))
-           .agg(F.count("*").alias("deg")))
-    deg = deg.localCheckpoint(eager=False)
-    broadcast_state = within_broadcast_budget(deg)
-    da = deg.select(F.col("node").alias("__a"), F.col("deg").alias("da"))
-    db = deg.select(F.col("node").alias("__b"), F.col("deg").alias("db"))
-    lower_first = ((F.col("da") < F.col("db"))
-                   | ((F.col("da") == F.col("db"))
-                      & (F.col(src_col) < F.col(dst_col))))
-    return (edges
-            .join(state_broadcast(da, broadcast_state),
-                  edges[src_col] == F.col("__a"))
-            .join(state_broadcast(db, broadcast_state),
-                  edges[dst_col] == F.col("__b"))
-            .select(F.when(lower_first, F.col(src_col))
-                    .otherwise(F.col(dst_col)).alias(src_col),
-                    F.when(lower_first, F.col(dst_col))
-                    .otherwise(F.col(src_col)).alias(dst_col)))
-
-
-def triangle_count_oriented(edges: DataFrame) -> DataFrame:
-    """Edge-iterator triangle count over a DEGREE-ORIENTED edge set
-    (see degree_orient): same successor-adjacency intersect plan as
-    the registered graph_triangle_count query, but with adjacency
-    arrays bounded by O(sqrt(|E|)) instead of max degree — the
-    100x-scale variant the query's docstring names. Returns a
-    single row (n_triangles,). The closure condition intersects
-    succ(a) with succ(b) for each oriented edge (a, b); because the
-    orientation is acyclic, every triangle is counted exactly once
-    from its unique source-of-two-edges node. The degree join is
-    size-gated in ``degree_orient``."""
-    oriented = degree_orient(edges).localCheckpoint(eager=False)
-    adj = oriented.groupBy("src").agg(
-        F.sort_array(F.collect_set("dst")).alias("succ"))
-    per_edge = (oriented
-                .join(adj.select(F.col("src"), F.col("succ")
-                                 .alias("succ_a")), "src")
-                .join(adj.select(F.col("src").alias("dst"),
-                                 F.col("succ").alias("succ_b")), "dst")
-                .select(F.size(F.array_intersect("succ_a", "succ_b"))
-                        .alias("nc")))
-    return per_edge.agg(F.sum("nc").cast("long").alias("n_triangles"))

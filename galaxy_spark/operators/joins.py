@@ -129,47 +129,3 @@ def range_join(
         .filter((dt >= lower_us) & (dt <= upper_us))
         .drop("__cell")
     )
-
-
-def salted_join(left: DataFrame, right: DataFrame, key: str,
-                n_salts: int = 16, how: str = "inner",
-                salt_source: str | None = None) -> DataFrame:
-    """Skew-resistant equi-join: salt the hot side, replicate the
-    other.
-
-    A shuffle join hashes rows by ``key``; one hot key then lands
-    its entire volume on ONE reducer — the classic 100 TB stall
-    (AQE's skew-join splits oversized partitions post-hoc; salting
-    pre-spreads them and also works where AQE can't, e.g. skewed
-    aggregations). Shape:
-
-    - left rows get ``salt = xxhash64(salt_source or whole row) %
-      n_salts`` — deterministic, no RNG state, stable under retry
-      (a task rerun re-salts identically, required for
-      exactly-once).
-    - right rows replicate into all ``n_salts`` buckets via explode.
-    - equi-join on (key, salt) → hot keys now spread over
-      ``n_salts`` reducers; result identical to the unsalted join.
-
-    Cost: ``n_salts``x replication of the right side — use for
-    medium right sides where broadcast is too big and skew is real.
-
-    Supported ``how``: inner / left / left_outer / cross / semi /
-    anti variants — joins where unmatched RIGHT rows are dropped.
-    Right/full outer would emit each unmatched right row once per
-    salt replica (``n_salts`` duplicate null-left rows), so they are
-    rejected; for those, salt the right side instead (swap the
-    inputs) or fall back to AQE skew-join handling.
-    """
-    if how.lower().replace("outer", "").strip("_") in ("right", "full", ""):
-        raise ValueError(
-            f"salted_join does not support how={how!r}: unmatched right "
-            "rows would duplicate once per salt replica")
-    salt_cols = [F.col(salt_source)] if salt_source else [
-        F.col(c) for c in left.columns]
-    lx = left.withColumn(
-        "__salt", F.pmod(F.xxhash64(*salt_cols), F.lit(n_salts)).cast("int"))
-    rx = right.withColumn(
-        "__salt",
-        F.explode(F.array(*[F.lit(s) for s in range(n_salts)])))
-    return lx.join(rx, on=[key, "__salt"], how=how).drop("__salt")

@@ -357,36 +357,6 @@ def _decode_gif(payload: bytes) -> np.ndarray:
     return np.stack(frames)
 
 
-REAL_DECODED_SCHEMA = T.StructType([
-    T.StructField("media_id", T.LongType(), False),
-    T.StructField("shape", T.ArrayType(T.IntegerType()), False),
-    T.StructField("values", T.ArrayType(T.LongType()), False),
-])
-
-
-def decode_real(media: DataFrame) -> DataFrame:
-    """Decode GENUINE payloads (PCM WAV / PNG) with ``real_decode``
-    inside the standard Arrow-batched ``mapInPandas`` stage — the
-    same plumbing as the fixture-path operators, driven by the real
-    codecs. Emits ``(media_id, shape, values)`` with the flattened
-    sample/pixel tensor; video rows raise (no stdlib H.264), so
-    filter them out upstream exactly like the fixture path does."""
-    sel = media.select("media_id", "payload", F.col("meta.fmt").alias("fmt"))
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload, fmt in zip(pdf["media_id"], pdf["payload"],
-                                         pdf["fmt"]):
-                arr = real_decode(bytes(payload), fmt)
-                rows.append((int(mid), list(arr.shape),
-                             arr.astype(np.int64).ravel().tolist()))
-            yield pd.DataFrame(rows,
-                               columns=["media_id", "shape", "values"])
-
-    return sel.mapInPandas(decode, REAL_DECODED_SCHEMA)
-
-
 def _fake_decode(payload: bytes, height: int, width: int) -> np.ndarray:
     """Deterministic fake decoder: payload bytes -> uint8 HxW tensor
     (truncate/clip to the metadata dimensions)."""

@@ -128,22 +128,6 @@ def with_global_row_index(df, order_cols, index_col: str = "row_idx",
     return (out, acc) if return_total else out
 
 
-def stratified_sample(df, strata_col: str, fractions: dict,
-                      seed: int = 42):
-    """Per-stratum Bernoulli sampling (``sampleBy``): deterministic
-    under a fixed seed AND a fixed partitioning of the input.
-
-    The scale story: sampling is a scan-local filter — no shuffle,
-    no state; downsampling skewed strata (e.g. capping an
-    over-represented language before tokenizer training) costs one
-    pass. Note determinism is per (seed, partition layout): resample
-    after repartitioning and rows hash differently — pin the layout
-    (or sample straight off the immutable source files) when the
-    sample must be reproducible.
-    """
-    return df.sampleBy(strata_col, fractions=fractions, seed=seed)
-
-
 def stratified_hash_sample(df: DataFrame, strata_col: str, key_col: str,
                            fractions: dict, seed: int = 42) -> DataFrame:
     """Layout-independent stratified Bernoulli sample: keep a row iff

@@ -1483,9 +1483,9 @@ def _oriented_triangles_from_half(half: DataFrame,
     frame against the budget (``operators.util.bcast_max_rows``)
     decides them; past broadcast reach the same plan runs as a
     shuffle join with one more exchange instead of a forced
-    broadcast (degree-orienting first —
-    ``operators.graph.degree_orient`` bounds every array at
-    ~sqrt(|E|) — remains the 100 TB refinement)."""
+    broadcast (orienting each edge from its lower-degree endpoint
+    instead of its lower id would bound every array at ~sqrt(|E|);
+    that remains the 100 TB refinement)."""
     if small is None:
         small = within_broadcast_budget(half)
     adj = (half.groupBy("src")

@@ -32,33 +32,6 @@ def write_partitioned(df: DataFrame, path: str,
        .parquet(path))
 
 
-def read_partitioned(spark: SparkSession, path: str) -> DataFrame:
-    """Read a partitioned layout back; predicates on the partition
-    columns become PartitionFilters (pruned before any file I/O)."""
-    return spark.read.parquet(path)
-
-
-def write_bucketed(df: DataFrame, table: str, bucket_col: str,
-                   n_buckets: int, path: str, sort_col: str | None = None,
-                   mode: str = "overwrite") -> None:
-    """Write a bucketed (hash-clustered) table: rows are pre-hashed
-    into ``n_buckets`` files per partition by ``bucket_col``.
-
-    THE co-location tool for repeated fact-fact joins at 100 TB:
-    two tables bucketed on the same key with the same bucket count
-    join with NO exchange on either side (Spark trusts the on-disk
-    hash layout), turning the biggest shuffle in a star-schema
-    pipeline into a local merge. Sorting within buckets
-    additionally removes the join's sort step.
-    """
-    writer = (df.write.mode(mode)
-              .option("path", path)
-              .bucketBy(n_buckets, bucket_col))
-    if sort_col:
-        writer = writer.sortBy(sort_col)
-    writer.saveAsTable(table)
-
-
 def compact(spark: SparkSession, path: str,
             target_file_mb: int = 256,
             partition_by: Sequence[str] | None = None) -> int:
@@ -116,48 +89,6 @@ def compact(spark: SparkSession, path: str,
     os.rename(tmp, path)
     shutil.rmtree(bak)
     return n_files
-
-
-def write_training_shards(df: DataFrame, path: str, n_shards: int,
-                          key_col: str = "doc_id",
-                          mode: str = "overwrite") -> None:
-    """Terminal step of the curation pipeline: materialize the
-    curated corpus as ``n_shards`` deterministic, load-balanced
-    shards (``shard=<i>`` hive partitions, one file per shard).
-
-    Shard assignment is ``crc32(md5(key)) % n_shards`` — a pure
-    function of the KEY, never of layout or partition count, so
-    re-running the pipeline on a differently-partitioned input
-    yields byte-identical shard membership (the property trainers
-    rely on for resumable data loading). md5 uniformizes skewed key
-    spaces first, so shards stay balanced even for sequential ids.
-
-    ``repartition(n_shards, shard)`` lines executor tasks up with
-    shards — each task writes exactly its own shard file, no
-    post-hoc compaction pass. At 100 TB pick n_shards so one shard
-    ~= one training-loader chunk (hundreds of MB to a few GB).
-    """
-    from pyspark.sql import functions as F
-
-    # null keys hash through COALESCE('') — md5(NULL) is NULL, and a
-    # NULL shard lands in __HIVE_DEFAULT_PARTITION__, unreachable by
-    # read_training_shard's shard == i filters (silent corpus loss)
-    key = F.coalesce(F.col(key_col).cast("string"), F.lit(""))
-    shard = (F.crc32(F.md5(key)) % n_shards).cast("int").alias("shard")
-    out = df.withColumn("shard", shard)
-    (out.repartition(n_shards, F.col("shard"))
-        .write.mode(mode)
-        .partitionBy("shard")
-        .parquet(path))
-
-
-def read_training_shard(spark: SparkSession, path: str,
-                        shard: int) -> DataFrame:
-    """Read ONE shard; the ``shard=<i>`` predicate prunes at
-    partition-discovery time (no other shard's files are listed)."""
-    from pyspark.sql import functions as F
-
-    return spark.read.parquet(path).filter(F.col("shard") == shard)
 
 
 def write_sorted(df: DataFrame, path: str, sort_cols: Sequence[str],

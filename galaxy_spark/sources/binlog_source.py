@@ -206,20 +206,25 @@ def _walk_segments(path: str, upto: tuple | None = None,
                 else None), tail
 
 
-def _aligned_end(fpath: str) -> int:
+def _aligned_end(fpath: str, start: int | None = None) -> int:
     """End byte-offset of the last COMPLETE event in a (possibly
     growing) segment. The writer may be mid-append when
     ``latestOffset`` samples the file, and an offset landing inside
     a half-written event would make every retry of that micro-batch
     re-slice the same torn bytes and fail permanently. A trailing
     partial event simply stays beyond the offset until a later
-    ``latestOffset`` sees it complete."""
+    ``latestOffset`` sees it complete. ``start`` resumes the walk
+    at a known event boundary (``_walk_event_headers``) instead of
+    the file head."""
     size = os.path.getsize(fpath)
     with open(fpath, "rb") as f:
-        end = 4 if f.read(4) == b"\xfebin" else 0
-        f.seek(0)
-        for pos, _etype, esize, _lp, _ts in _walk_event_headers(f,
-                                                                size):
+        if start is None:
+            end = 4 if f.read(4) == b"\xfebin" else 0
+            f.seek(0)
+        else:
+            end = start
+        for pos, _etype, esize, _lp, _ts in _walk_event_headers(
+                f, size, start=start):
             end = pos + esize
     return end
 
@@ -373,8 +378,16 @@ class BinlogStreamReader(DataSourceStreamReader):
         if not segs:
             return {"file": "", "pos": 0}
         last = segs[-1]
-        return {"file": last,
-                "pos": _aligned_end(os.path.join(self.path, last))}
+        fpath = os.path.join(self.path, last)
+        # resume the alignment walk at the GTID tracker's watermark
+        # (an aligned end already returned for this file, trusted
+        # as ``_gtids_at`` trusts it), so a growing tail segment is
+        # not re-walked from byte 0 every trigger
+        start = None
+        if getattr(self, "_scan_file", "") == last and \
+                4 <= self._scan_pos <= os.path.getsize(fpath):
+            start = self._scan_pos
+        return {"file": last, "pos": _aligned_end(fpath, start)}
 
     #: fingerprint recipe version — stamped INTO every stored fp so
     #: a future recipe change skips (never falsely flags) offsets

@@ -138,10 +138,3 @@ def read_json_table(spark: SparkSession, path: str, schema=None,
         reader = reader.schema(schema)
     return reader.json(path)
 
-
-def read_orc_table(spark: SparkSession, path: str) -> DataFrame:
-    """ORC scan — the columnar alternative some lakehouses mandate.
-    Spark's native vectorized ORC reader gives the same pushdown +
-    pruning story as parquet (PushedFilters/ReadSchema in the scan
-    node); no schema arg needed because ORC files are self-typed."""
-    return spark.read.orc(path)

@@ -42,8 +42,8 @@ Layout and protocol::
   (``store_fs.py``): the POSIX default is write to a staging dir ->
   fsync -> ``os.rename`` into place -> touch ``_COMMITTED``; the
   object-store strategy (``fs="manifest"``) is rename-less —
-  per-object puts then one atomic per-bucket manifest put — because
-  S3-class stores have no atomic directory rename. foreachBatch is
+  per-object puts then one conditional per-bucket manifest put —
+  because S3-class stores have no atomic directory rename. foreachBatch is
   at-least-once; a REPLAYED epoch finds ``_COMMITTED`` present for
   already-applied buckets and skips them, while buckets the crash
   left unfinished recompute from their pre-epoch version — the
@@ -184,15 +184,14 @@ class KeyedParquetStore:
         #: protocol seam (store_fs.py). "posix" (default): atomic
         #: directory rename + _COMMITTED marker, correct on POSIX/
         #: HDFS. "manifest": rename-less per-object puts + one
-        #: atomic per-bucket manifest put — the object-store (S3)
-        #: deployment path, where directory rename is copy+delete
-        #: (r11 verdict's one weak). "manifest_cas": same layout
-        #: plus two-live-writer fencing — manifest puts are
-        #: conditional (If-Match ETag, retry-with-merge), so a
+        #: conditional per-bucket manifest put (If-Match ETag,
+        #: retry-with-merge) — the object-store (S3) deployment
+        #: path, where directory rename is copy+delete, fenced so a
         #: zombie driver racing a live one cannot erase published
-        #: versions (r12 verdict #1). Accepts a name or a StoreFs
-        #: instance; everything above this seam (layout, replay
-        #: skip, vacuum floors, the delta tier) is strategy-blind.
+        #: versions ("manifest_cas" is a second name for it).
+        #: Accepts a name or a StoreFs instance; everything above
+        #: this seam (layout, replay skip, vacuum floors, the delta
+        #: tier) is strategy-blind.
         self.fs = store_fs(fs) if fs is not None else PosixStoreFs()
         #: _vacuum skips superseded versions younger than this —
         #: a drain window for concurrent monitoring readers that

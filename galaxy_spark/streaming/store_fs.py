@@ -17,17 +17,16 @@ storage class:
   where directory rename is copy+delete and therefore neither
   atomic nor cheap. Data files are put individually at their
   final keys (each single-object put is atomic on S3), then the
-  bucket's ``_MANIFEST.json`` is published with ONE atomic
+  bucket's ``_MANIFEST.json`` is published with ONE conditional
   single-key put naming the version's exact file list. Readers
   resolve versions AND file lists from the manifest — never from
   listings — so a crash between the file puts and the manifest
   put leaves only invisible orphan objects (the replayed epoch
   publishes its own uniquely-named files; the orphans are swept
-  when the version is eventually dropped). Locally the atomic
-  put is emulated with write-temp + ``os.replace`` on the
-  manifest FILE, which has exactly the visibility property of an
-  S3 PUT: readers see the old or the new manifest, never a
-  partial one.
+  when the version is eventually dropped).
+
+These are the two protocols; a store path is bound to one of them
+for its lifetime.
 
 Writer-concurrency contract:
 
@@ -40,11 +39,9 @@ Writer-concurrency contract:
   the ``committed`` pre-check plus the no-op mutate under replay.
 - A zombie driver that is STILL MID-PUBLISH while a new live
   driver commits later epochs is the failure object stores are
-  bought to survive, and it needs real fencing: the plain
-  ``ManifestStoreFs`` manifest put is last-writer-wins, so a
-  zombie completing a read-modify-write from a stale read would
-  erase every version the live writer published in between.
-  ``CasManifestStoreFs`` closes exactly that window: the manifest
+  bought to survive. A last-writer-wins manifest put would let
+  the zombie's read-modify-write from a stale read erase every
+  version the live writer published in between, so the manifest
   put is CONDITIONAL (If-Match on the manifest's ETag) and
   conflicts retry-with-merge — the mutation is re-applied to the
   fresh manifest, so a lost race degrades to a no-op, never a
@@ -223,82 +220,85 @@ class PosixStoreFs(StoreFs):
 
 
 class ManifestStoreFs(StoreFs):
-    """Rename-less commits: per-object puts + one atomic manifest
-    put per bucket. The manifest maps version name ->
-    ``{"files": [...], "ts": publish-seconds}`` and is the single
-    source of truth for visibility."""
+    """Rename-less, fenced commits: per-object puts + one
+    conditional manifest put per bucket. The manifest maps version
+    name -> ``{"files": [...], "ts": publish-seconds}`` and is the
+    single source of truth for visibility. Every manifest mutation
+    is a conditional put (If-Match on the manifest's ETag) with
+    retry-with-merge on conflict: a zombie driver completing a
+    read-modify-write from a stale read cannot erase versions a
+    live driver published in between — its put fails the
+    precondition, the mutation re-applies against the fresh
+    manifest, and a version the winner already published degrades
+    to a no-op instead of a duplicate or an overwrite. The ETag is
+    content-derived, not stored, so the on-disk format is the plain
+    manifest JSON."""
 
     name = "manifest"
 
-    def __init__(self) -> None:
-        #: per-bucket (stat-signature, manifest) cache — one state()
-        #: read walks versions/committed/read_paths over the same
-        #: manifest many times (r12 review: each was a separate
-        #: load, and on the S3 backend a GET round-trip); the stat
-        #: check keeps a concurrent writer's atomic replace visible.
-        #: The signature is (inode, mtime_ns, size), NOT mtime alone
-        #: (r12 ADVICE: coarse-mtime filesystems can land two
-        #: publishes in one quantum and leave a second in-process
-        #: reader serving the stale manifest; os.replace always
-        #: installs a fresh inode, so the triple cannot collide).
-        #: The S3 backend swaps this for a conditional GET
-        #: (If-None-Match on the cached ETag).
-        self._cache: dict[str, tuple[tuple, dict]] = {}
+    #: bounded only as a corruption backstop — each retry observes
+    #: a manifest another writer just advanced, so real contention
+    #: between two drivers converges in a handful of rounds
+    _MAX_CAS_RETRIES = 64
 
-    @staticmethod
-    def _stat_sig(path: str) -> tuple:
-        st = os.stat(path)
-        return (st.st_ino, st.st_mtime_ns, st.st_size)
+    def __init__(self, object_store: LocalObjectStore | None = None
+                 ) -> None:
+        self.objects = object_store or LocalObjectStore()
+        #: per-bucket (etag, manifest) cache — one state() read walks
+        #: versions/committed/read_paths over the same manifest many
+        #: times; keyed on the content ETag, so any publish (this
+        #: instance's or another writer's) invalidates it
+        self._cache: dict[str, tuple[str, dict]] = {}
 
     # -- manifest I/O ---------------------------------------------
     def _load_manifest(self, bucket_dir: str) -> dict:
-        path = os.path.join(bucket_dir, _MANIFEST)
-        try:
-            sig = self._stat_sig(path)
-            hit = self._cache.get(bucket_dir)
-            if hit is None or hit[0] != sig:
-                with open(path) as f:
-                    hit = (sig, json.load(f))
-                self._cache[bucket_dir] = hit
-            # SHALLOW COPY: publish/drop mutate the dict they get
-            # before the atomic put — handing out the cached object
-            # itself let a CRASHED publish's mutation leak into
-            # later reads as committed state (caught by the
-            # crash-window test when the cache landed)
-            return dict(hit[1])
-        except (FileNotFoundError, NotADirectoryError):
+        raw, etag = self.objects.get(os.path.join(bucket_dir, _MANIFEST))
+        if raw is None:
             self._cache.pop(bucket_dir, None)
             return {}
-        # a torn manifest cannot exist under os.replace / S3 PUT
-        # atomicity; json errors here mean external corruption and
-        # must raise loudly rather than read as empty state
-
-    def _put_manifest(self, bucket_dir: str, manifest: dict) -> None:
-        """The atomic single-key publish. Local emulation of an
-        object-store PUT; an S3 backend swaps this one method for
-        a conditional put (If-Match ETag + retry)."""
-        tmp = os.path.join(
-            bucket_dir, f".manifest-{uuid.uuid4().hex[:8]}.tmp")
-        with open(tmp, "w") as f:
-            json.dump(manifest, f, sort_keys=True)
-            f.flush()
-            os.fsync(f.fileno())
-        dest = os.path.join(bucket_dir, _MANIFEST)
-        os.replace(tmp, dest)
-        _fsync_path(bucket_dir)
-        self._cache[bucket_dir] = (self._stat_sig(dest),
-                                   dict(manifest))
+        hit = self._cache.get(bucket_dir)
+        if hit is None or hit[0] != etag:
+            # a torn manifest cannot exist under the atomic put; json
+            # errors here mean external corruption and raise loudly
+            # rather than read as empty state
+            hit = (etag, json.loads(raw))
+            self._cache[bucket_dir] = hit
+        # SHALLOW COPY: publish/drop mutate the dict they get before
+        # the put — handing out the cached object itself let a
+        # CRASHED publish's mutation leak into later reads as
+        # committed state (caught by the crash-window test)
+        return dict(hit[1])
 
     def _update_manifest(self, bucket_dir: str, mutate) -> None:
         """Apply ``mutate(manifest) -> manifest | None`` (None =
-        no-op) and publish the result. Base strategy: plain read-
-        modify-write ending in the atomic local put — safe under
-        the single-live-writer contract; ``CasManifestStoreFs``
-        overrides this with the fenced conditional-put loop."""
-        manifest = self._load_manifest(bucket_dir)
-        new = mutate(dict(manifest))
-        if new is not None:
-            self._put_manifest(bucket_dir, new)
+        no-op) and publish the result with a conditional put,
+        re-applying the mutation to the fresh manifest on conflict."""
+        key = os.path.join(bucket_dir, _MANIFEST)
+        for _ in range(self._MAX_CAS_RETRIES):
+            raw, etag = self.objects.get(key)
+            manifest = json.loads(raw) if raw is not None else {}
+            new = mutate(dict(manifest))
+            if new is None:
+                # the fresh read already satisfies the mutation
+                # (e.g. the live writer published this version) —
+                # retry-with-merge converged to a no-op
+                if raw is not None:
+                    self._cache[bucket_dir] = (etag, manifest)
+                else:
+                    self._cache.pop(bucket_dir, None)
+                return
+            data = json.dumps(new, sort_keys=True).encode()
+            try:
+                new_etag = self.objects.put_if_match(key, data, etag)
+            except PreconditionFailed:
+                continue                 # merge onto the fresh state
+            self._cache[bucket_dir] = (new_etag, new)
+            return
+        raise CasExhausted(
+            f"manifest CAS on {key} did not converge after "
+            f"{self._MAX_CAS_RETRIES} attempts — either pathological "
+            "writer contention (more than two drivers?) or a "
+            "misbehaving object-store client")
 
     # -- protocol -------------------------------------------------
     def version_names(self, bucket_dir: str) -> list[str]:
@@ -451,7 +451,7 @@ class CasExhausted(RuntimeError):
 class LocalObjectStore:
     """In-repo fake object store enforcing ATOMIC
     put-with-precondition semantics — the exact contract a real S3
-    deployment of ``CasManifestStoreFs`` needs from its client:
+    deployment of ``ManifestStoreFs`` needs from its client:
 
     - ``get(key) -> (bytes | None, etag | None)``
     - ``put_if_match(key, data, etag) -> new_etag`` where
@@ -533,79 +533,10 @@ class LocalObjectStore:
                 fcntl.flock(lf.fileno(), fcntl.LOCK_UN)
 
 
-class CasManifestStoreFs(ManifestStoreFs):
-    """``ManifestStoreFs`` with two-live-writer fencing (r12
-    verdict #1): every manifest mutation is a conditional put —
-    If-Match on the manifest's ETag — with retry-with-merge on
-    conflict. A zombie driver completing a read-modify-write from
-    a stale read can no longer erase versions a new live driver
-    published in between: its put fails the precondition, the
-    mutation re-applies against the fresh manifest, and a version
-    the winner already published degrades to a no-op instead of a
-    duplicate or an overwrite. On-disk format is IDENTICAL to the
-    plain strategy (the ETag is content-derived, not stored), so a
-    path can be upgraded to fencing without migration."""
-
-    name = "manifest_cas"
-
-    #: bounded only as a corruption backstop — each retry observes
-    #: a manifest another writer just advanced, so real contention
-    #: between two drivers converges in a handful of rounds
-    _MAX_CAS_RETRIES = 64
-
-    def __init__(self, object_store: LocalObjectStore | None = None
-                 ) -> None:
-        super().__init__()
-        self.objects = object_store or LocalObjectStore()
-
-    def _load_manifest(self, bucket_dir: str) -> dict:
-        key = os.path.join(bucket_dir, _MANIFEST)
-        raw, etag = self.objects.get(key)
-        if raw is None:
-            self._cache.pop(bucket_dir, None)
-            return {}
-        hit = self._cache.get(bucket_dir)
-        if hit is None or hit[0] != etag:
-            hit = (etag, json.loads(raw))
-            self._cache[bucket_dir] = hit
-        return dict(hit[1])
-
-    def _put_manifest(self, bucket_dir: str, manifest: dict) -> None:
-        raise NotImplementedError(       # pragma: no cover
-            "CasManifestStoreFs routes every manifest write through "
-            "the conditional-put loop (_update_manifest)")
-
-    def _update_manifest(self, bucket_dir: str, mutate) -> None:
-        key = os.path.join(bucket_dir, _MANIFEST)
-        for _ in range(self._MAX_CAS_RETRIES):
-            raw, etag = self.objects.get(key)
-            manifest = json.loads(raw) if raw is not None else {}
-            new = mutate(dict(manifest))
-            if new is None:
-                # the fresh read already satisfies the mutation
-                # (e.g. the live writer published this version) —
-                # retry-with-merge converged to a no-op
-                if raw is not None:
-                    self._cache[bucket_dir] = (etag, manifest)
-                else:
-                    self._cache.pop(bucket_dir, None)
-                return
-            data = json.dumps(new, sort_keys=True).encode()
-            try:
-                new_etag = self.objects.put_if_match(key, data, etag)
-            except PreconditionFailed:
-                continue                 # merge onto the fresh state
-            self._cache[bucket_dir] = (new_etag, new)
-            return
-        raise CasExhausted(
-            f"manifest CAS on {key} did not converge after "
-            f"{self._MAX_CAS_RETRIES} attempts — either pathological "
-            "writer contention (more than two drivers?) or a "
-            "misbehaving object-store client")
-
-
+#: "manifest_cas" is a second name for the one manifest protocol:
+#: task specs persisted when fencing was a separate option name it
 _STRATEGIES = {"posix": PosixStoreFs, "manifest": ManifestStoreFs,
-               "manifest_cas": CasManifestStoreFs}
+               "manifest_cas": ManifestStoreFs}
 
 
 def store_fs(strategy) -> StoreFs:

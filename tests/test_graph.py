@@ -307,44 +307,6 @@ def test_hyperball_bound_and_exact_instrument(spark):
         assert len(ball) == r.exact_ball2, r.part
 
 
-def test_degree_oriented_triangles(spark):
-    """The skew-hardened triangle path: degree orientation must (a)
-    preserve the total triangle count (orientation-invariance — the
-    id-oriented registered query is the instrument), and (b)
-    actually deliver its bound: no node's out-adjacency under the
-    orientation exceeds sqrt(2|E|), regardless of max degree."""
-    import math
-
-    from pyspark.sql import functions as F
-
-    from galaxy_spark.operators.graph import (degree_orient,
-                                              triangle_count_oriented)
-    from galaxy_spark.registry import all_queries
-    from galaxy_spark.tables import load_table
-
-    sf = "/root/testdata/sf0.001"
-    li = load_table(spark, sf, "lineitem")
-    baskets = (li.select(F.col("l_orderkey").alias("o"),
-                         F.col("l_partkey").alias("p")).distinct())
-    half = (baskets.alias("a")
-            .join(baskets.alias("b"),
-                  (F.col("a.o") == F.col("b.o"))
-                  & (F.col("a.p") < F.col("b.p")))
-            .select(F.col("a.p").alias("src"), F.col("b.p").alias("dst"))
-            .distinct())
-
-    want = all_queries()["graph_triangle_count"](spark, sf) \
-        .collect()[0].n_triangles
-    got = triangle_count_oriented(half).collect()[0].n_triangles
-    assert got == want and want > 0
-
-    oriented = degree_orient(half)
-    n_e = half.count()
-    max_out = (oriented.groupBy("src").agg(F.count("*").alias("d"))
-               .agg(F.max("d")).collect()[0][0])
-    assert max_out <= math.ceil(math.sqrt(2 * n_e)), (max_out, n_e)
-
-
 def test_mega_basket_cap_bounds_fanout_and_preserves_small(spark):
     """r12 verdict #2: the deterministic mega-basket cap. On a
     synthetic power-law basket set (40 bounded baskets + one

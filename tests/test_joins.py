@@ -5,8 +5,6 @@ from __future__ import annotations
 
 import datetime as dt
 
-from pyspark.sql import functions as F
-
 from galaxy_spark.operators.joins import asof_join
 
 
@@ -34,23 +32,6 @@ def test_asof_join_semantics(spark):
     got = {r.event_id: r.payload for r in out.collect()}
     assert got == {1: 12, 2: 11, 3: None, 4: 21, 5: None}
     assert out.count() == left.count()  # never duplicates left rows
-
-
-def test_salted_join_equals_plain_join(spark):
-    from galaxy_spark.operators.joins import salted_join
-    from galaxy_spark.tables import load_table
-    from tests.conftest import SF_SMOKE
-
-    # events.user_id is a naturally repeating key
-    ev = load_table(spark, SF_SMOKE, "events") \
-        .select("event_id", "user_id", "value")
-    cust = load_table(spark, SF_SMOKE, "customer") \
-        .select(F.col("c_custkey").alias("user_id"), "c_name")
-    plain = ev.join(cust, "user_id").select("event_id", "c_name")
-    salted = salted_join(ev, cust, "user_id", n_salts=8) \
-        .select("event_id", "c_name")
-    assert sorted(map(tuple, plain.collect())) == \
-        sorted(map(tuple, salted.collect()))
 
 
 def test_asof_join_carries_whole_rows_not_columns(spark):

@@ -110,23 +110,6 @@ def test_range_join_is_equi_join(spark):
     assert "BroadcastNestedLoopJoin" not in plan
 
 
-def test_stratified_sample_no_shuffle(spark):
-    from galaxy_spark.operators.util import stratified_sample
-    from galaxy_spark.tables import load_table
-    docs = load_table(spark, SF_SMOKE, "documents")
-    s = stratified_sample(docs, "lang", {"en": 0.5, "de": 0.1}, seed=7)
-    assert exchange_count(s) == 0
-    # deterministic under fixed seed + layout
-    a = sorted(r.doc_id for r in s.collect())
-    b = sorted(r.doc_id for r in
-               stratified_sample(docs, "lang", {"en": 0.5, "de": 0.1},
-                                 seed=7).collect())
-    assert a == b and len(a) > 0
-    # only requested strata survive
-    assert set(r.lang for r in s.select("lang").distinct().collect()) \
-        <= {"en", "de"}
-
-
 def test_lsh_near_dup_all_band_joins_are_equi(spark):
     """Every per-table band join in the LSH near-dup tier must plan
     as a hash equi-join on the signature column — a nested-loop or
@@ -1236,24 +1219,6 @@ def test_graph_state_broadcasts_are_size_gated(q, monkeypatch):
         "budget=0 must drop every gated hint"
     assert "SortMergeJoin" in p or "ShuffledHashJoin" in p, \
         "the degraded plan must fall back to a shuffle join"
-
-
-def test_degree_orientation_broadcast_is_size_gated(spark, monkeypatch):
-    """``degree_orient`` (the orientation ``triangle_count_oriented``
-    runs) size-derives its degree-join broadcast by default, like
-    ``connected_components``: with a budget of 0 rows its plan has
-    no broadcast join, and the triangle count is unchanged."""
-    from galaxy_spark.operators.graph import (degree_orient,
-                                              triangle_count_oriented)
-    from galaxy_spark.plans import physical_plan
-
-    monkeypatch.setenv("GALAXY_SPARK_BCAST_MAX_ROWS", "0")
-    edges = spark.createDataFrame([(1, 2), (2, 3), (1, 3), (3, 4)],
-                                  "src long, dst long")
-    p = physical_plan(degree_orient(edges))
-    assert "BroadcastHashJoin" not in p, \
-        "budget=0 must drop the degree-join hint"
-    assert triangle_count_oriented(edges).collect()[0].n_triangles == 1
 
 
 def test_connected_components_gate_preserves_results(spark, monkeypatch):

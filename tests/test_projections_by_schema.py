@@ -175,62 +175,3 @@ def test_ddl_evolution_refreshes_per_table_projection(spark, tmp_path):
     assert by_code["SAVE10"] == {"code": "SAVE10", "pct": "10"}
     assert by_code["SAVE20"] == {"code": "SAVE20", "pct": "20",
                                  "expires": "2026-12-31"}
-
-
-def test_typed_table_view_lands_exact_decimals(spark, tmp_path):
-    """SURVEY §1.3's typed-per-table analytics mapping: the string
-    transport maps cast into the registry's Spark types — DECIMAL
-    columns arrive as EXACT DecimalType values (the UseDecimal
-    guarantee surviving all the way into typed analytics columns),
-    temporals as real timestamps/dates, ints as ints."""
-    from decimal import Decimal
-
-    from pyspark.sql import types as T
-
-    from galaxy_spark.cdc.binlog import mq_rows_from_binlog
-    from galaxy_spark.cdc.projections import typed_table_view
-
-    reg = SchemaRegistry()
-    reg.put("shop", "payments", [
-        ColumnDef("id", "bigint", False),
-        ColumnDef("amount", "decimal(12,4)", False),
-        ColumnDef("big_int_dec", "decimal(20,0)", False),
-        ColumnDef("paid_on", "date", True),
-        ColumnDef("created", "datetime", True),
-        ColumnDef("ts", "datetime", True),
-        ColumnDef("dur", "varchar(20)", True),
-        ColumnDef("note", "varchar(255)", True),
-        ColumnDef("yr", "int", True),
-        ColumnDef("cnt", "int", True),
-        ColumnDef("label", "varchar(300)", True),
-        ColumnDef("qty", "int", True),
-        ColumnDef("ratio", "double", True),
-        ColumnDef("props", "varchar(1000)", True),
-    ])
-    rich = os.path.join(FIXDIR, "binlog_v4_rich.bin")
-    with open(rich, "rb") as f:
-        tuples = mq_rows_from_binlog(f.read())
-    env = spark.createDataFrame(
-        tuples, "database string, `table` string, action string, "
-                "org_row array<array<string>>, ts_sec bigint, "
-                "log_pos bigint")
-    proj = project_changes_by_schema(
-        env, registry_frame(spark, reg))
-    typed = typed_table_view(proj, reg, "shop", "payments")
-    schema = {f.name: f.dataType for f in typed.schema.fields}
-    assert schema["amount"] == T.DecimalType(12, 4)
-    assert schema["big_int_dec"] == T.DecimalType(20, 0)
-    assert isinstance(schema["paid_on"], T.DateType)
-    assert isinstance(schema["created"], T.TimestampType)
-    assert isinstance(schema["qty"], T.IntegerType)
-
-    rows = {(r.action, r.id): r for r in typed.collect()}
-    ins = rows[("insert", 101)]
-    assert ins.amount == Decimal("12345678.9999")
-    assert ins.big_int_dec == Decimal("99999999999999999999")
-    assert float(ins.big_int_dec) != int(ins.big_int_dec)  # > 2^53
-    assert str(ins.paid_on) == "2024-02-29"
-    assert ins.created.microsecond == 123400
-    assert ins.qty == -7 and ins.ratio == 2.5
-    upd = rows[("update", 102)]
-    assert upd.amount == Decimal("-987654.3210")

@@ -1,8 +1,7 @@
 """Real-codec verification (VERDICT r4 "What's missing" #3): the
 multimodal tier's ``real_decode`` genuinely decodes PCM WAV and PNG
-— stdlib-produced REAL files round-trip bit-exactly through both
-the pure function and the Spark ``decode_real`` operator. Video
-stays honestly NotImplementedError (no stdlib H.264)."""
+— stdlib-produced REAL files round-trip bit-exactly through it.
+Video stays honestly NotImplementedError (no stdlib H.264)."""
 
 from __future__ import annotations
 
@@ -116,31 +115,6 @@ def test_png_rejects_garbage_and_unsupported():
         M.real_decode(b"not a png at all", "png")
     with pytest.raises(NotImplementedError):
         M.real_decode(b"\x00\x00\x00\x18ftypmp42", "mp4")
-
-
-def test_decode_real_spark_operator(spark):
-    """The Arrow mapInPandas plumbing drives the REAL codecs: a
-    DataFrame of genuine WAV + PNG payloads decodes to the exact
-    tensors, distributed."""
-    rng = np.random.default_rng(5)
-    img = rng.integers(0, 256, size=(4, 4), dtype=np.uint8)
-    snd = rng.integers(-1000, 1000, size=(64, 2), dtype=np.int64)
-    media = spark.createDataFrame([
-        Row(media_id=1, payload=make_png(img, [0, 1, 2, 4]),
-            meta=Row(modality="image", fmt="png", width=4, height=4,
-                     channels=1, sample_rate=None, n_frames=None)),
-        Row(media_id=2, payload=make_wav(snd),
-            meta=Row(modality="audio", fmt="wav", width=None, height=None,
-                     channels=2, sample_rate=16000, n_frames=None)),
-    ], schema=M.MEDIA_META_TYPE and
-        "media_id long, payload binary, meta struct<"
-        "modality:string,fmt:string,width:int,height:int,"
-        "channels:int,sample_rate:int,n_frames:int>")
-    out = {r.media_id: r for r in M.decode_real(media).collect()}
-    assert out[1].shape == [4, 4]
-    assert out[1].values == [int(v) for v in img.ravel()]
-    assert out[2].shape == [64, 2]
-    assert out[2].values == [int(v) for v in snd.ravel()]
 
 
 # --- GIF (r6: the video-adjacent tier gets a REAL decoder) --------

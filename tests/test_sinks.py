@@ -6,7 +6,7 @@ from pyspark.sql import functions as F
 
 from galaxy_spark.cdc.envelope import envelope_from_events
 from galaxy_spark.plans import partition_filters
-from galaxy_spark.sinks import read_partitioned, write_partitioned
+from galaxy_spark.sinks import write_partitioned
 from galaxy_spark.tables import load_table
 from tests.conftest import SF_SMOKE
 
@@ -16,7 +16,7 @@ def test_partitioned_write_and_pruning(spark, tmp_path):
     out = str(tmp_path / "routed")
     write_partitioned(env, out, ("database", "table"))
 
-    back = read_partitioned(spark, out)
+    back = spark.read.parquet(out)
     assert back.count() == env.count()
 
     pruned = back.filter((F.col("database") == "db0")
@@ -27,38 +27,6 @@ def test_partitioned_write_and_pruning(spark, tmp_path):
     exp = env.filter((F.col("database") == "db0")
                      & (F.col("table") == "click")).count()
     assert pruned.count() == exp > 0
-
-
-def test_bucketed_join_has_no_shuffle(spark, tmp_path):
-    """Two tables bucketed on the join key must join with ZERO
-    exchanges — the co-located fact-fact join layout."""
-    from galaxy_spark.plans import exchange_count
-    from galaxy_spark.sinks import write_bucketed
-
-    orders = load_table(spark, SF_SMOKE, "orders") \
-        .select("o_orderkey", "o_custkey", "o_totalprice")
-    li = load_table(spark, SF_SMOKE, "lineitem") \
-        .select("l_orderkey", "l_quantity")
-    try:
-        write_bucketed(orders, "b_orders", "o_orderkey", 8,
-                       str(tmp_path / "b_orders"), sort_col="o_orderkey")
-        write_bucketed(li, "b_lineitem", "l_orderkey", 8,
-                       str(tmp_path / "b_lineitem"), sort_col="l_orderkey")
-        bo = spark.table("b_orders")
-        bl = spark.table("b_lineitem")
-        joined = bo.join(bl, bo.o_orderkey == bl.l_orderkey) \
-                   .groupBy("o_custkey") \
-                   .agg(F.sum("l_quantity").alias("qty"))
-        # the ONLY exchange is the final groupBy — the join itself
-        # rides the bucket layout
-        assert exchange_count(joined) <= 1
-        plain = orders.join(li, orders.o_orderkey == li.l_orderkey) \
-                      .groupBy("o_custkey").agg(F.sum("l_quantity").alias("qty"))
-        assert sorted(map(tuple, joined.collect())) == \
-            sorted(map(tuple, plain.collect()))
-    finally:
-        spark.sql("DROP TABLE IF EXISTS b_orders")
-        spark.sql("DROP TABLE IF EXISTS b_lineitem")
 
 
 def test_compact_preserves_data(spark, tmp_path):
@@ -75,38 +43,6 @@ def test_compact_preserves_data(spark, tmp_path):
     files = glob.glob(out + "/*.parquet")
     assert len(files) == n == 1   # tiny data -> one file
     assert sorted(map(tuple, spark.read.parquet(out).collect())) == before
-
-
-def test_training_shards_deterministic_balanced_and_pruned(spark, tmp_path):
-    from galaxy_spark.sinks import read_training_shard, write_training_shards
-    from galaxy_spark.tables import load_table
-    from pyspark.sql import functions as F
-
-    docs = load_table(spark, "/root/testdata/sf0.01", "documents")
-    p1 = str(tmp_path / "shards1")
-    write_training_shards(docs, p1, n_shards=8)
-
-    # layout independence: a differently-partitioned input yields
-    # the identical shard membership
-    p2 = str(tmp_path / "shards2")
-    write_training_shards(docs.repartition(13), p2, n_shards=8)
-    a = {(r.doc_id, r.shard) for r in spark.read.parquet(p1)
-         .select("doc_id", "shard").collect()}
-    b = {(r.doc_id, r.shard) for r in spark.read.parquet(p2)
-         .select("doc_id", "shard").collect()}
-    assert a == b and len(a) == docs.count()
-
-    # balance: md5 uniformization keeps the largest shard within
-    # 2x of the mean even for sequential ids
-    sizes = [n for (_, n) in spark.read.parquet(p1)
-             .groupBy("shard").count().collect()]
-    assert len(sizes) == 8 and max(sizes) <= 2 * (sum(sizes) / 8)
-
-    # single-shard read prunes to that partition only
-    one = read_training_shard(spark, p1, 3)
-    from galaxy_spark.plans import partition_filters
-    assert any("shard" in f for f in partition_filters(one))
-    assert one.count() == sum(1 for (_, s) in a if s == 3)
 
 
 def test_sorted_write_produces_disjoint_row_group_ranges(spark, tmp_path):
@@ -292,26 +228,6 @@ def test_compact_repairs_crash_leftovers_and_keeps_partitions(spark,
     compact(spark, path, partition_by=("database", "table"))
     assert not os.path.exists(bak)
     assert spark.read.parquet(path).count() == 200
-
-
-def test_training_shards_null_keys_stay_reachable(spark, tmp_path):
-    """A null shard key must land in a REAL shard (hashed via
-    coalesce('')), not in __HIVE_DEFAULT_PARTITION__ where the
-    shard == i readers can never see it — silent corpus loss."""
-    from pyspark.sql import functions as F
-
-    from galaxy_spark.sinks import read_training_shard, \
-        write_training_shards
-
-    path = str(tmp_path / "shards_null")
-    df = spark.range(50).select(
-        F.when(F.col("id") % 10 == 0, F.lit(None))
-        .otherwise(F.col("id").cast("string")).alias("doc_id"),
-        F.col("id").alias("v"))
-    write_training_shards(df, path, n_shards=4)
-    total = sum(read_training_shard(spark, path, i).count()
-                for i in range(4))
-    assert total == 50
 
 
 def test_zorder_all_null_column_degrades_cleanly(spark, tmp_path):

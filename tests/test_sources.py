@@ -147,25 +147,6 @@ def test_information_schema_bootstrap_against_live_catalog():
         ["id", "name", "email", "phone", "balance"]
 
 
-def test_orc_roundtrip_with_pushdown(spark, tmp_path):
-    """ORC write -> read roundtrip preserves values, and predicates
-    push into the native ORC scan exactly like parquet."""
-    from galaxy_spark.sources.readers import read_orc_table
-    from galaxy_spark.tables import load_table
-    from galaxy_spark.plans import pushed_filters
-
-    docs = load_table(spark, "/root/testdata/sf0.001", "documents")
-    p = str(tmp_path / "docs_orc")
-    docs.write.orc(p)
-    back = read_orc_table(spark, p)
-    assert back.count() == docs.count()
-    assert sorted(back.columns) == sorted(docs.columns)
-    q = back.filter("n_chars > 300").select("doc_id", "n_chars")
-    assert any("n_chars" in f for f in pushed_filters(q))
-    exp = docs.filter("n_chars > 300").count()
-    assert q.count() == exp
-
-
 def test_jdbc_roundtrip_and_live_catalog_bootstrap(spark, tmp_path):
     """A GENUINE JDBC round-trip (embedded Derby, the RDBMS shipped
     in Spark's own jars): Spark writes a table over JDBC, reads it

@@ -1534,7 +1534,7 @@ def test_cluster_redirect_replay_regenerates_lost_edges(spark,
         f"cluster split after replay: {got}"
 
 
-@pytest.mark.parametrize("fs", ["posix", "manifest", "manifest_cas"])
+@pytest.mark.parametrize("fs", ["posix", "manifest"])
 def test_state_for_keys_opens_only_touched_buckets(spark, tmp_path,
                                                    monkeypatch, fs):
     """``state_for_keys`` is the probe-side twin of merge's
@@ -2436,18 +2436,16 @@ def test_state_for_keys_prunes_and_folds_under_deltas(spark, tmp_path,
 # Commit-protocol seam (r12): object-store-safe manifest commits
 # ------------------------------------------------------------------
 
-@pytest.mark.parametrize("fs", ["manifest", "manifest_cas"])
+@pytest.mark.parametrize("fs", ["manifest"])
 @pytest.mark.parametrize("delta", [None, 2], ids=["cow", "delta2"])
 def test_manifest_strategy_state_matches_posix(spark, tmp_path,
                                                delta, fs):
     """The manifest (rename-less) strategy is a commit-protocol
     change, never a semantics change: after every epoch — and
     after an at-least-once replay — its folded state equals the
-    posix twin's row for row, in both write modes and under both
-    manifest backends (plain local put / fenced conditional put).
-    And it must be genuinely rename-less on the commit path: no
-    _COMMITTED markers anywhere, a _MANIFEST.json in every
-    written bucket."""
+    posix twin's row for row, in both write modes. And it must
+    be genuinely rename-less on the commit path: no _COMMITTED
+    markers anywhere, a _MANIFEST.json in every written bucket."""
     ref = _sum_store(spark, str(tmp_path / "p"), delta)
     man = _sum_store(spark, str(tmp_path / "m"), delta, fs=fs)
     for i, rows in enumerate(_DELTA_BATCHES):
@@ -2469,7 +2467,7 @@ def test_manifest_strategy_state_matches_posix(spark, tmp_path,
     assert man.lineages() == {"lin"}
 
 
-@pytest.mark.parametrize("fs", ["manifest", "manifest_cas"])
+@pytest.mark.parametrize("fs", ["manifest"])
 def test_manifest_crash_between_put_and_publish(spark, tmp_path,
                                                 monkeypatch, fs):
     """THE object-store crash window: files put at their final
@@ -2478,9 +2476,8 @@ def test_manifest_crash_between_put_and_publish(spark, tmp_path,
     it, and the orphan objects from the crashed attempt must never
     be read (the manifest names the exact file list) and must be
     swept when the version is eventually dropped. The crash seam
-    is each backend's actual publish primitive: the local atomic
-    put (manifest) / the conditional object-store put
-    (manifest_cas)."""
+    is the actual publish primitive, the conditional object-store
+    put."""
     from galaxy_spark.streaming import store_fs as sfs
 
     store = _sum_store(spark, str(tmp_path / "cw"), None, fs=fs)
@@ -2490,12 +2487,7 @@ def test_manifest_crash_between_put_and_publish(spark, tmp_path,
     def boom(self, *a, **kw):
         raise OSError("simulated crash after puts, before publish")
 
-    if fs == "manifest":
-        monkeypatch.setattr(sfs.ManifestStoreFs, "_put_manifest",
-                            boom)
-    else:
-        monkeypatch.setattr(sfs.LocalObjectStore, "put_if_match",
-                            boom)
+    monkeypatch.setattr(sfs.LocalObjectStore, "put_if_match", boom)
     with pytest.raises(OSError, match="simulated crash"):
         store.merge(_batch_df(spark, [(1, 5, "b")]),
                     "lin.000000000001")
@@ -2743,10 +2735,9 @@ def test_manifest_cache_survives_mtime_collision(tmp_path):
     """r12 ADVICE: on coarse-mtime filesystems two manifest
     publishes can land in one mtime quantum, leaving a second
     in-process reader instance serving the stale manifest when the
-    cache is keyed on mtime alone. The cache key is the full stat
-    signature (inode, mtime_ns, size); os.replace installs a fresh
-    inode on every publish, so even a FORCED mtime collision (the
-    worst case, emulated here with utime) must invalidate."""
+    cache is keyed on mtime. The cache key is the manifest's
+    content ETag, so even a FORCED mtime collision (the worst case,
+    emulated here with utime) must invalidate."""
     from galaxy_spark.streaming.store_fs import _MANIFEST, \
         ManifestStoreFs
 
@@ -2773,8 +2764,7 @@ def test_manifest_cache_survives_mtime_collision(tmp_path):
 
 
 def test_store_fs_resolver():
-    from galaxy_spark.streaming.store_fs import (CasManifestStoreFs,
-                                                 ManifestStoreFs,
+    from galaxy_spark.streaming.store_fs import (ManifestStoreFs,
                                                  PosixStoreFs,
                                                  store_fs)
 
@@ -2782,7 +2772,7 @@ def test_store_fs_resolver():
     assert store_fs(inst) is inst
     assert isinstance(store_fs("posix"), PosixStoreFs)
     assert isinstance(store_fs("manifest"), ManifestStoreFs)
-    assert isinstance(store_fs("manifest_cas"), CasManifestStoreFs)
+    assert isinstance(store_fs("manifest_cas"), ManifestStoreFs)
     with pytest.raises(ValueError, match="unknown store commit"):
         store_fs("s3")
 
@@ -2800,7 +2790,7 @@ def _stage_one_file(tmp_path, name: str) -> str:
 
 def test_local_object_store_precondition_semantics(tmp_path):
     """The fake object store honors the exact contract a real S3
-    client must provide to CasManifestStoreFs: create-only puts
+    client must provide to ManifestStoreFs: create-only puts
     refuse existing keys, If-Match puts refuse a stale ETag, and a
     winning put changes the ETag."""
     from galaxy_spark.streaming.store_fs import (LocalObjectStore,
@@ -2823,18 +2813,18 @@ def test_manifest_cas_two_writer_race_loses_no_version(tmp_path):
     """r12 verdict #1, the fencing scenario: a ZOMBIE driver still
     mid-publish of epoch N's version while the new LIVE driver
     commits N and N+1. The zombie's manifest put is made from a
-    stale read; under the plain last-writer-wins emulation it
-    would erase the live writer's versions. Under the fenced
-    strategy the put fails its If-Match precondition, the mutation
-    re-applies on the fresh manifest (where the version already
-    exists), and the race degrades to a no-op: NO version lost,
-    replay-skip lineage (the committed set) stays consistent."""
-    from galaxy_spark.streaming.store_fs import (CasManifestStoreFs,
-                                                 LocalObjectStore)
+    stale read; a last-writer-wins put would erase the live
+    writer's versions. The fenced put fails its If-Match
+    precondition, the mutation re-applies on the fresh manifest
+    (where the version already exists), and the race degrades to a
+    no-op: NO version lost, replay-skip lineage (the committed set)
+    stays consistent."""
+    from galaxy_spark.streaming.store_fs import (LocalObjectStore,
+                                                 ManifestStoreFs)
 
     objects = LocalObjectStore()
-    live = CasManifestStoreFs(objects)
-    zombie = CasManifestStoreFs(objects)
+    live = ManifestStoreFs(objects)
+    zombie = ManifestStoreFs(objects)
     bd = str(tmp_path / "bucket-0")
     vN, vN1 = "v-lin.000000000005", "v-lin.000000000006"
 
@@ -2860,41 +2850,6 @@ def test_manifest_cas_two_writer_race_loses_no_version(tmp_path):
         assert paths and all(os.path.exists(p) for p in paths)
     assert [os.path.basename(p)
             for p in live.read_paths(bd, vN)] == ["part-ln.parquet"]
-
-
-def test_manifest_unfenced_race_demonstrates_lost_version(tmp_path):
-    """The CONVERSE of the fenced test — documents WHY the CAS
-    strategy exists: under plain ManifestStoreFs (single-key
-    last-writer-wins put, the correct local emulation of S3's
-    unconditional PUT), the same zombie interleave erases the live
-    writer's in-between version. This is the documented contract
-    boundary (store_fs.py module docstring), not a bug: deploys
-    with any chance of two live writers must use manifest_cas."""
-    from galaxy_spark.streaming.store_fs import ManifestStoreFs
-
-    live = ManifestStoreFs()
-    zombie = ManifestStoreFs()
-    bd = str(tmp_path / "bucket-0")
-    vN, vN1 = "v-lin.000000000005", "v-lin.000000000006"
-
-    orig = ManifestStoreFs._put_manifest
-    fired = []
-
-    def hooked(self, bucket_dir, manifest):
-        if self is zombie and not fired:
-            fired.append(True)
-            live.publish_version(bd, vN,
-                                 _stage_one_file(tmp_path, "ln"))
-            live.publish_version(bd, vN1,
-                                 _stage_one_file(tmp_path, "l1"))
-        orig(self, bucket_dir, manifest)
-
-    import unittest.mock as mock
-    with mock.patch.object(ManifestStoreFs, "_put_manifest", hooked):
-        zombie.publish_version(bd, vN,
-                               _stage_one_file(tmp_path, "zn"))
-    # vN1 is GONE from the manifest — the lost-version hazard
-    assert zombie.version_names(bd) == [vN]
 
 
 def test_posix_zombie_replay_cannot_erase_live_versions(tmp_path):
@@ -2974,9 +2929,9 @@ def _cas_publisher_worker(bd: str, stage_root: str, tag: str,
     import os as _os
     import uuid as _uuid
 
-    from galaxy_spark.streaming.store_fs import CasManifestStoreFs
+    from galaxy_spark.streaming.store_fs import ManifestStoreFs
 
-    fs = CasManifestStoreFs()
+    fs = ManifestStoreFs()
     barrier.wait()
     for j in range(n_versions):
         stage = _os.path.join(
@@ -2998,7 +2953,7 @@ def test_manifest_cas_two_process_race_loses_no_version(tmp_path):
     lineage and every manifest-listed file exists."""
     import multiprocessing as mp
 
-    from galaxy_spark.streaming.store_fs import CasManifestStoreFs
+    from galaxy_spark.streaming.store_fs import ManifestStoreFs
 
     ctx = mp.get_context("fork")
     bd = str(tmp_path / "bucket-0")
@@ -3015,7 +2970,7 @@ def test_manifest_cas_two_process_race_loses_no_version(tmp_path):
         p.join(120)
         assert p.exitcode == 0
 
-    reader = CasManifestStoreFs()
+    reader = ManifestStoreFs()
     expect = sorted(f"v-{t}.{j:09d}"
                     for t in tags for j in range(n_versions))
     assert sorted(reader.version_names(bd)) == expect
@@ -3035,7 +2990,7 @@ def test_manifest_publish_failure_sweeps_orphan_version_dir(
     versions untouched."""
     from galaxy_spark.streaming import store_fs as sfs
 
-    fs = sfs.CasManifestStoreFs()
+    fs = sfs.ManifestStoreFs()
     bd = str(tmp_path / "bucket-0")
     v0, v1 = "v-lin.000000000001", "v-lin.000000000002"
     fs.publish_version(bd, v0, _stage_one_file(tmp_path, "ok"))
