@@ -119,8 +119,7 @@ def project_changes_by_schema(df: DataFrame, schemas: DataFrame) -> DataFrame:
     shape at scale; bootstrap the registry up front and route
     unknown tables to the DLQ). A running ``start_pipeline`` task
     sees the registry as of its start; DDL evolution reaches it by a
-    restart, or per micro-batch on a foreachBatch path that rebuilds
-    ``registry_frame`` at each batch's plan build)."""
+    restart (applying DDL in stream order is ROADMAP direction 2)."""
     return project_changes(attach_schema(df, schemas),
                            F.col("__cols")).drop("__cols")
 

@@ -119,14 +119,6 @@ class SchemaRegistry:
     def put(self, db: str, table: str, columns: list[ColumnDef]) -> None:
         self._tables[(db, table)] = TableSchema(list(columns))
 
-    def put_from_struct(self, db: str, table: str, schema: T.StructType) -> None:
-        """Bootstrap from a Spark StructType (e.g. inferred from a
-        JDBC ``information_schema.columns`` read — the Spark-native
-        replacement for the reference's SHOW FULL COLUMNS probe)."""
-        cols = [ColumnDef(f.name, _spark_type_to_mysql(f.dataType), not f.nullable)
-                for f in schema.fields]
-        self.put(db, table, cols)
-
     # -- lookup ------------------------------------------------------
     def get(self, db: str, table: str) -> TableSchema | None:
         return self._tables.get((db, table))
@@ -253,22 +245,6 @@ def _insert(cols: list[ColumnDef], new: ColumnDef,
     return cols + [new]
 
 
-def _spark_type_to_mysql(dt: T.DataType) -> str:
-    if isinstance(dt, T.DecimalType):
-        return f"decimal({dt.precision},{dt.scale})"
-    return {
-        T.LongType(): "bigint",
-        T.IntegerType(): "int",
-        T.ShortType(): "smallint",
-        T.BooleanType(): "tinyint(1)",
-        T.DoubleType(): "double",
-        T.FloatType(): "float",
-        T.TimestampType(): "datetime",
-        T.DateType(): "date",
-        T.BinaryType(): "blob",
-    }.get(dt, "varchar(255)")
-
-
 def registry_frame(spark, registry: "SchemaRegistry"):
     """The registry as the tiny broadcastable DataFrame
     ``(database, table, columns array<string>)`` that
@@ -277,9 +253,9 @@ def registry_frame(spark, registry: "SchemaRegistry"):
     schema-registry table") for ``project_changes_by_schema`` and
     ``debezium.positional_org_row``. The frame is the registry
     as of this call: after DDL evolution, build it again. A
-    foreachBatch pipeline does that at each micro-batch's plan
-    build; a running ``start_pipeline`` task keeps the registry it
-    started with until it restarts."""
+    running ``start_pipeline`` task keeps the registry it started
+    with, so DDL reaches it by a restart (applying DDL in stream
+    order is ROADMAP direction 2)."""
     return local_registry_frame(
         spark, [(db, tbl, registry.column_names(db, tbl))
                 for db, tbl in registry.tables()])

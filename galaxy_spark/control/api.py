@@ -9,8 +9,8 @@ Route parity with ``/root/reference/internal/scheduler/api.go:13-40``
 - ``POST /v1/stop_task``          body {task_id, stop_type}: ``stop``
   | ``recovery_v1`` (resume saved position) | ``recovery_v2`` (jump
   to latest) (update_task.go:19-96)
-- ``POST /v1/update_task``        live filter update
-  (update_task.go:150-197)
+- ``POST /v1/update_task``        filter update: restart from the
+  task's checkpoint (update_task.go:150-197)
 - ``POST /v1/delete_task/{id}``   delete (update_task.go:98-127)
 - ``POST /v1/restoration_task/{id}`` attempt repair: cancel the
   running query and relaunch from its saved position
@@ -60,11 +60,6 @@ def _spec_from_body(body: dict) -> TaskSpec:
         columns=tuple(body.get("columns") or ()),
         sink_kind=body.get("sink_kind", "memory"),
         sink_options=dict(body.get("sink_options") or {}),
-        # without this mapping the documented no-restart live
-        # filter-update path was unreachable over HTTP: every task
-        # silently created static and update_task fell into the
-        # stop+restart branch
-        live=bool(body.get("live", False)),
         task_kind=body.get("task_kind", "cdc"),
         index_options=dict(body.get("index_options") or {}),
     )

@@ -6,22 +6,19 @@ Reference surface (``internal/scheduler/api.go:13-27`` +
 - create task (db/table filters + sink config), returns position info
 - stop: ``stop`` | ``recovery_v1`` (resume saved position) |
   ``recovery_v2`` (jump to latest)
-- live filter update, delete, restore
+- filter update, delete, restore
 - durability goroutine persists task JSON on every change; boot
   recovery re-launches all non-stopped tasks.
 
 Spark mapping: each task is one StreamingQuery. ``stop`` =
 ``query.stop()`` + flag; recovery_v1 = restart with the SAME
 checkpointLocation (offset log resumes); recovery_v2 = restart with
-a FRESH checkpoint + ``startingOffsets=latest``; filter update: for
-``live=True`` tasks the predicate is swapped into a per-batch
-filter cell — NO restart, same runId (reference parity with the
-RWMutex map swap; see ``streaming.pipeline.LiveFilterRef``) — while
-static tasks restart with the new predicate compiled into the plan
-(the streaming checkpoint explicitly supports a changed plan). Task
-metadata persists as JSON next to the checkpoints; boot recovery
-iterates it and restarts non-stopped tasks — the analog of
-``taskRecovery`` (``scheduler.go:69-116``).
+a FRESH checkpoint + ``startingOffsets=latest``; filter update =
+restart from the SAME checkpoint with the new predicate compiled
+into the plan (``update_filters``). Task metadata persists as JSON
+next to the checkpoints; boot recovery iterates it and restarts
+non-stopped tasks — the analog of ``taskRecovery``
+(``scheduler.go:69-116``).
 
 This module is deliberately framework-free; the HTTP layer serving
 the reference's gin routes lives in ``galaxy_spark.control.api``
@@ -45,10 +42,7 @@ from pyspark.sql import functions as F
 
 from galaxy_spark.cdc.filters import TaskFilter
 from galaxy_spark.streaming import state_store as ss
-from galaxy_spark.streaming.pipeline import (LIVE_SINK_KINDS,
-                                             LiveFilterRef, SinkConfig,
-                                             start_pipeline,
-                                             start_pipeline_live)
+from galaxy_spark.streaming.pipeline import SinkConfig, start_pipeline
 
 
 @dataclass
@@ -66,11 +60,6 @@ class TaskSpec:
     stopped: bool = False
     #: bumped on recovery_v2 to point at a fresh checkpoint dir
     checkpoint_epoch: int = 0
-    #: live=True runs the foreachBatch pipeline whose filter is
-    #: re-read per micro-batch, so update_filters applies WITHOUT a
-    #: query restart (reference parity: update_task.go's RWMutex
-    #: swap; see streaming.pipeline.LiveFilterRef)
-    live: bool = False
     #: what the task RUNS: "cdc" = the reference's replication
     #: pipeline (source -> filter -> project -> keyed sink); every
     #: other kind is a stateful store task, one row of ``_KINDS``
@@ -107,7 +96,6 @@ class TaskManager:
         self.source_factory = source_factory
         self.tasks: dict[str, TaskSpec] = {}
         self.queries: dict[str, object] = {}
-        self.live_filters: dict[str, LiveFilterRef] = {}
         #: task_id -> exception from the last recover_all; empty on
         #: a fresh manager (r12 ADVICE: the attribute only existed
         #: after recover_all ran, so status probes on a manager that
@@ -134,6 +122,8 @@ class TaskManager:
             d = dict(d)
             for k in ("databases", "tables", "exclude_tables", "columns"):
                 d[k] = tuple(d.get(k) or ())
+            # dropped field: specs persisted with it still recover
+            d.pop("live", None)
             out[tid] = TaskSpec(**d)
         return out
 
@@ -184,25 +174,10 @@ class TaskManager:
                     f"index_options apply to stateful task kinds only "
                     f"(task_kind='cdc' got "
                     f"{sorted(spec.index_options)!r})")
-            if spec.live and spec.sink_kind not in LIVE_SINK_KINDS:
-                # the live handler writes only these; any other sink
-                # would pass here and kill the query on its first
-                # micro-batch
-                raise ValueError(
-                    f"live=True needs sink_kind "
-                    f"{', '.join(map(repr, LIVE_SINK_KINDS))} "
-                    f"(got {spec.sink_kind!r})")
         else:
             # fail configuration errors at creation, not at the
             # first store construction mid-stream (r11 ADVICE)
             _index_options(spec, strict=True)
-            if spec.live:
-                # live filter swapping is a CDC-pipeline feature; the
-                # near-dup handler has no filter cell, and accepting
-                # live=True left update_filters with a KeyError path
-                raise ValueError(
-                    f"live=True applies to cdc tasks only (task_kind="
-                    f"{spec.task_kind!r})")
             if (spec.databases or spec.tables or spec.exclude_tables
                     or spec.columns):
                 # consistent with update_filters' rejection: accepting
@@ -392,24 +367,12 @@ class TaskManager:
         return ss.streaming_interarrival_burstiness(
             self.stores(task_id)[0])
 
-    def _start_cdc(self, spec: TaskSpec, env: DataFrame):
-        if not spec.live:
-            return start_pipeline(
-                env, spec.task_id, spec.task_filter(), list(spec.columns),
-                spec.sink(), self.checkpoint_dir(spec),
-            )
-        ref = LiveFilterRef(spec.task_filter())
-        query = start_pipeline_live(
-            env, spec.task_id, ref, list(spec.columns),
-            spec.sink(), self.checkpoint_dir(spec),
-        )
-        self.live_filters[spec.task_id] = ref
-        return query
-
     def _start(self, spec: TaskSpec) -> None:
         env = self.source_factory(self.spark, spec)
         if spec.task_kind == "cdc":
-            query = self._start_cdc(spec, env)
+            query = start_pipeline(
+                env, spec.task_id, spec.task_filter(), list(spec.columns),
+                spec.sink(), self.checkpoint_dir(spec))
         else:
             kind = _KINDS[spec.task_kind]
             opts = _index_options(spec)
@@ -425,7 +388,6 @@ class TaskManager:
         q = self.queries.pop(task_id, None)
         if q is not None:
             q.stop()
-        self.live_filters.pop(task_id, None)
         self.tasks[task_id].stopped = True
         self._persist()
 
@@ -454,33 +416,33 @@ class TaskManager:
         """Filter update (reference mutates shared maps under an
         RWMutex, ``update_task.go:150-197``).
 
-        live=True tasks (foreachBatch pipeline): the new predicate
-        is swapped into the task's ``LiveFilterRef`` and takes
-        effect on the NEXT micro-batch — NO query restart, offsets
-        and accumulated state untouched, same runId.
-
-        live=False tasks compile the predicate into the streaming
-        plan, so the update is a restart from the same checkpoint —
-        offsets preserved, no events lost, but in-memory state
-        rebuilds; use live=True when hours of state matter."""
+        The predicate is compiled into the streaming plan, so a
+        running task stops and starts again from the same
+        checkpoint: the new filter applies from the next
+        micro-batch, and no event is lost or published twice beyond
+        the sink's at-least-once contract. The CDC query holds no
+        state, so the restart rebuilds nothing. A restart that fails
+        leaves the task stopped, durably, as ``recover_all`` leaves a
+        task it cannot start, and raises."""
         spec = self.tasks[task_id]
         if spec.task_kind != "cdc":
             raise ValueError(
                 f"task {task_id} is a {spec.task_kind!r} task; "
                 "db/table filters apply to cdc tasks only")
-        running = task_id in self.queries
         if databases is not None:
             spec.databases = tuple(databases)
         if tables is not None:
             spec.tables = tuple(tables)
         if exclude_tables is not None:
             spec.exclude_tables = tuple(exclude_tables)
-        if running and spec.live:
-            self.live_filters[task_id].set(spec.task_filter())
-        elif running:
-            q = self.queries.pop(task_id)
-            q.stop()
-            self._start(spec)
+        if task_id in self.queries:
+            self.queries.pop(task_id).stop()
+            try:
+                self._start(spec)
+            except Exception:
+                spec.stopped = True
+                self._persist()
+                raise
         self._persist()
 
     def delete_task(self, task_id: str, drop_state: bool = True) -> None:
@@ -584,8 +546,8 @@ class _Kind(NamedTuple):
 _DOC_COLS = {"text_col": str, "id_col": str}
 
 #: task_kind -> its stores, starter and options; with "cdc" (the
-#: replication pipeline, ``TaskManager._start_cdc``) this is the list
-#: of kinds ``create_task`` accepts. Every kind also takes
+#: replication pipeline, ``streaming.pipeline.start_pipeline``) this
+#: is the list of kinds ``create_task`` accepts. Every kind also takes
 #: ``delta_threshold`` (absent -> the per-store defaults below, null
 #: -> CoW everywhere, an integer -> that cadence everywhere) and
 #: ``fs``, the commit protocol of ALL the task's stores, because a

@@ -47,9 +47,10 @@ class SinkConfig:
     The reference registers kafka > nsq > mongodb > es by first
     non-nil config (``internal/mq_manager/manager.go:28-63``; only
     Kafka is implemented there — the rest are
-    ``panic("implement me")`` stubs). Here: kafka and memory are
-    implemented; others raise NotImplementedError just like the
-    reference's stubs, but without killing the process.
+    ``panic("implement me")`` stubs). Here: kafka, memory, parquet
+    and topic_files are implemented; others raise
+    NotImplementedError just like the reference's stubs, but without
+    killing the process.
     """
 
     kind: str = "memory"          # kafka | memory | parquet | topic_files
@@ -155,8 +156,12 @@ def start_pipeline(env_stream: DataFrame, task_id: str,
     frame is read ONCE, here: the task projects with the registry as
     of its start, held as a driver-local relation so each
     micro-batch's broadcast of it runs no Python. DDL evolution
-    reaches a running task by a restart (or use a foreachBatch
-    pipeline, which rebuilds ``registry_frame`` per batch).
+    reaches a running task by a restart; applying DDL in stream
+    order is ROADMAP direction 2.
+
+    The query must stay stateless (filter, broadcast join, select,
+    append sink): ``TaskManager.update_filters`` applies a new
+    filter by restarting it from its checkpoint.
 
     Rows the projection quarantines (arity mismatch, malformed
     image — projections.py) are NOT silently dropped; they route to
@@ -177,109 +182,6 @@ def start_pipeline(env_stream: DataFrame, task_id: str,
     return sink.apply(writer, query_name=task_id).start()
 
 
-class LiveFilterRef:
-    """Mutable filter cell read at each micro-batch — the Spark
-    analog of the reference's RWMutex-guarded include/exclude map
-    swap (``update_task.go:150-197``).
-
-    A literal predicate is compiled into a streaming plan at start,
-    so swapping it needs a restart; ``foreachBatch`` instead builds
-    a fresh BATCH plan per micro-batch, and a predicate read from
-    this cell at batch-plan time takes effect on the NEXT
-    micro-batch — no restart, offsets and state untouched, the query
-    object (id/runId) stays the same. Granularity is the micro-batch
-    (the reference's is the event), which is the natural consistency
-    unit in Spark: a batch is never half-filtered.
-
-    Chosen over the stream-static config-join variant (config table
-    re-read per batch): the join needs empty-include = pass-all and
-    exclude-beats-include encoded as outer-join null-handling, while
-    this reuses TaskFilter.predicate() verbatim — same tested
-    semantics on both the static and live paths.
-    """
-
-    def __init__(self, task_filter: TaskFilter) -> None:
-        import threading
-
-        self._lock = threading.Lock()
-        self._tf = task_filter
-
-    def get(self) -> TaskFilter:
-        with self._lock:
-            return self._tf
-
-    def set(self, task_filter: TaskFilter) -> None:
-        with self._lock:
-            self._tf = task_filter
-
-
-#: driver-side buffers for the live pipeline's memory sink
-#: (test/debug surface, like the stock memory sink it replaces)
-_LIVE_MEMORY: dict[str, list] = {}
-
-
-def live_memory_rows(task_id: str) -> list:
-    return list(_LIVE_MEMORY.get(task_id, []))
-
-
-#: the sinks the live handler writes
-LIVE_SINK_KINDS = ("kafka", "memory", "parquet")
-
-
-def start_pipeline_live(env_stream: DataFrame, task_id: str,
-                        live_filter: LiveFilterRef,
-                        columns: Sequence[str], sink: SinkConfig,
-                        checkpoint_dir: str) -> StreamingQuery:
-    """``start_pipeline`` with LIVE filter updates: the task filter
-    is re-read from ``live_filter`` at every micro-batch, so
-    ``TaskManager.update_filters`` swaps take effect without a query
-    restart. Filter/projection/routing are the identical column
-    algebra — only the evaluation point moves from stream-plan time
-    to batch-plan time.
-
-    Sink semantics: ``kafka``/``parquet`` write DISTRIBUTED per
-    batch (the production paths — no rows ever reach the driver);
-    ``memory`` is the TEST/DEBUG surface only, like the stock
-    memory sink it replaces: it collects each batch to a driver
-    buffer and therefore HARD-CAPS total buffered rows
-    (``sink.options["maxRows"]``, default 10_000) — exceeding the
-    cap kills the query with a clear error instead of silently
-    eating driver memory at real volume. Any other sink kind is
-    refused here, before the query starts.
-    """
-    if sink.kind not in LIVE_SINK_KINDS:
-        raise NotImplementedError(
-            f"live sink {sink.kind!r} not implemented: use one of "
-            f"{', '.join(map(repr, LIVE_SINK_KINDS))}")
-    _LIVE_MEMORY[task_id] = []
-
-    def handle(batch_df: DataFrame, epoch_id: int) -> None:
-        projected = transform_envelope(batch_df, live_filter.get(),
-                                       columns)
-        # same DLQ contract as start_pipeline: quarantined rows
-        # route to <task>.deadletter.<db>.<table> through the SAME
-        # sink — the live variant used to drop them on the floor,
-        # losing malformed payloads exactly on the pipeline meant
-        # for production filter updates
-        msgs = task_messages(projected, task_id)
-        if sink.kind != "memory":
-            sink.apply(msgs.write.mode("append"), task_id).save()
-            return
-        cap = int(sink.options.get("maxRows", 10_000))
-        buf = _LIVE_MEMORY[task_id]
-        batch = msgs.limit(cap + 1 - len(buf)).collect()
-        if len(buf) + len(batch) > cap:
-            raise RuntimeError(
-                f"live memory sink exceeded maxRows={cap}; this "
-                "sink is a test/debug surface — use the kafka or "
-                "parquet sink for real volume")
-        buf.extend(batch)
-
-    return env_stream.writeStream \
-        .option("checkpointLocation", checkpoint_dir) \
-        .foreachBatch(handle).start()
-
-
 def ddl_apply_batch(registry: SchemaRegistry, default_db: str,
                     save_path: str | None = None):
     """foreachBatch handler for the QueryEvent/DDL branch (P5).
@@ -288,9 +190,9 @@ def ddl_apply_batch(registry: SchemaRegistry, default_db: str,
     (``process.go:216-242``); in Spark the DDL stream is a separate
     low-volume branch whose batches mutate the registry on the
     driver, then persist. The data plane sees the change where it
-    next builds ``registry_frame``: at the next micro-batch of a
-    foreachBatch pipeline, at the next start of a ``start_pipeline``
-    task (which snapshots the registry when it starts).
+    next builds ``registry_frame``: a running ``start_pipeline`` task
+    snapshots the registry when it starts, so DDL reaches it by a
+    restart; applying DDL in stream order is ROADMAP direction 2.
 
     ``save_path`` is the persistence half of that contract: the
     registry is saved (atomic tmp+rename) after each batch BEFORE

@@ -85,8 +85,6 @@ class StoreFs:
     store also routes through here so it holds no direct ``os``
     calls on its commit/vacuum paths."""
 
-    name = "abstract"
-
     # -- generic helpers (local scratch; shared by strategies) ----
     def ensure_dir(self, path: str) -> None:
         os.makedirs(path, exist_ok=True)
@@ -142,8 +140,6 @@ class StoreFs:
 class PosixStoreFs(StoreFs):
     """Atomic-directory-rename commits (the r6-r11 protocol,
     moved verbatim from ``KeyedParquetStore._commit_version``)."""
-
-    name = "posix"
 
     def version_names(self, bucket_dir: str) -> list[str]:
         names = self.list_names(bucket_dir)
@@ -233,8 +229,6 @@ class ManifestStoreFs(StoreFs):
     to a no-op instead of a duplicate or an overwrite. The ETag is
     content-derived, not stored, so the on-disk format is the plain
     manifest JSON."""
-
-    name = "manifest"
 
     #: bounded only as a corruption backstop — each retry observes
     #: a manifest another writer just advanced, so real contention

@@ -14,7 +14,7 @@ import pytest
 from galaxy_spark.cdc.envelope import EVENT_SOURCE_COLUMNS, envelope_from_events
 from galaxy_spark.control.api import ControlPlane
 from galaxy_spark.control.metrics import MetricsListener
-from galaxy_spark.control.tasks import TaskManager
+from galaxy_spark.control.tasks import TaskManager, TaskSpec
 from galaxy_spark.tables import load_table
 
 SF = "/root/testdata/sf0.001"
@@ -249,7 +249,7 @@ def test_live_task_recovery_and_filter_update_end_to_end(spark, tmp_path):
             "recovery_v1 re-emitted already-committed events"
         assert sink.filter(~F.col("key").startswith("db0.")).count() == 0
 
-        # live filter update over HTTP: db0 -> db1; rows emitted
+        # filter update over HTTP: db0 -> db1; rows emitted
         # after the restart must honor the NEW predicate
         status, _ = _call(cp, "POST", "/v1/update_task",
                           {"task_id": "api_e2e", "database": ["db1"]})
@@ -360,8 +360,8 @@ def test_near_dup_index_task_lifecycle(spark, tmp_path):
 def test_task_kind_and_live_validation(spark, tmp_path):
     """r11 review: a typo'd task_kind must fail at creation (not
     silently run the CDC pipeline over a document stream), and
-    live=True / filter updates are rejected for non-cdc kinds
-    instead of KeyError'ing later."""
+    db/table filters are rejected for non-cdc kinds, at creation and
+    on update."""
     import pytest as _pytest
 
     from galaxy_spark.control.tasks import TaskManager, TaskSpec
@@ -371,10 +371,10 @@ def test_task_kind_and_live_validation(spark, tmp_path):
     with _pytest.raises(ValueError, match="task_kind"):
         mgr.create_task(TaskSpec(task_id="t1",
                                  task_kind="near-dup-index"))
-    with _pytest.raises(ValueError, match="live"):
+    with _pytest.raises(ValueError, match="cdc tasks only"):
         mgr.create_task(TaskSpec(task_id="t2",
                                  task_kind="near_dup_index",
-                                 live=True))
+                                 databases=("shop",)))
     assert mgr.tasks == {}
     mgr.tasks["t3"] = TaskSpec(task_id="t3",
                                task_kind="near_dup_index")
@@ -405,34 +405,106 @@ def test_failed_start_leaves_no_task(tmp_path):
         raise OSError("source unavailable")
 
     mgr = TaskManager(None, str(tmp_path / "ft_state"), boom)
-    spec = TaskSpec(task_id="t1", live=True)
+    spec = TaskSpec(task_id="t1")
     with _pytest.raises(OSError, match="source unavailable"):
         mgr.create_task(spec)
     assert mgr.tasks == {} and mgr.queries == {}
-    assert mgr.live_filters == {}
     mgr._persist()
     with open(tmp_path / "ft_state" / "tasks.json") as f:
         assert "t1" not in json.load(f)
     with _pytest.raises(OSError, match="source unavailable"):
-        mgr.create_task(TaskSpec(task_id="t1", live=True))
+        mgr.create_task(TaskSpec(task_id="t1"))
 
 
-def test_live_task_refuses_sink_the_live_pipeline_cannot_write(tmp_path):
-    """The live handler writes kafka, memory and parquet only; any
-    other sink used to pass creation and kill the query on its first
-    micro-batch."""
-    import pytest as _pytest
+def test_failed_filter_restart_leaves_task_stopped(spark, events_dir,
+                                                 tmp_path):
+    """A filter update restarts a running task. If the restart
+    fails, the old query is already gone, so the task must be
+    stopped and persisted as stopped, as boot recovery leaves a task
+    it cannot start; a later persist must not write it as running.
+    recovery_v1 then resumes it under the new filter."""
+    factory = _source_factory(events_dir)
+    calls = []
 
-    from galaxy_spark.control.tasks import TaskManager, TaskSpec
+    def flaky(spark_, spec):
+        calls.append(spec.task_id)
+        if len(calls) == 2:
+            raise OSError("source unavailable")
+        return factory(spark_, spec)
 
-    mgr = TaskManager(None, str(tmp_path / "ls_state"),
-                      lambda s, spec: None)
-    with _pytest.raises(ValueError,
-                        match="'kafka', 'memory', 'parquet'"):
-        mgr.create_task(TaskSpec(
-            task_id="t1", live=True, sink_kind="topic_files",
-            sink_options={"path": str(tmp_path / "topics")}))
-    assert mgr.tasks == {} and mgr.queries == {}
+    state = tmp_path / "fr_state"
+    mgr = TaskManager(spark, str(state), flaky)
+    mgr.create_task(TaskSpec(
+        task_id="t_fr", databases=("db0",),
+        columns=EVENT_SOURCE_COLUMNS, sink_kind="parquet",
+        sink_options={"path": str(tmp_path / "fr_out")}))
+    mgr.await_all()
+    with pytest.raises(OSError, match="source unavailable"):
+        mgr.update_filters("t_fr", databases=("db1",))
+    spec = mgr.tasks["t_fr"]
+    assert "t_fr" not in mgr.queries
+    assert spec.stopped and spec.databases == ("db1",)
+    assert not mgr.status()["t_fr"]["active"]
+    with open(state / "tasks.json") as f:
+        saved = json.load(f)["t_fr"]
+    assert saved["stopped"] and saved["databases"] == ["db1"]
+    assert TaskManager(spark, str(state), flaky).recover_all() == []
+
+    mgr.recover_v1("t_fr")
+    mgr.await_all()
+    assert mgr.status()["t_fr"]["active"] and not spec.stopped
+    mgr.stop_task("t_fr")
+
+
+def test_legacy_live_task_spec_recovers(spark, tmp_path):
+    """Task specs once carried a ``live`` flag that picked a second
+    CDC pipeline. A tasks.json written with ``"live": true`` still
+    recovers through recover_all, and a filter update on the
+    recovered task applies from the next micro-batch."""
+    from pyspark.sql import functions as F
+
+    ev = load_table(spark, SF, "events")
+    src = str(tmp_path / "lg_src")
+    out = str(tmp_path / "lg_out")
+    ev.filter(F.col("event_id") < 100).write.parquet(src)
+    state = tmp_path / "lg_state"
+    mgr = TaskManager(spark, str(state), _source_factory(src))
+    mgr.create_task(TaskSpec(
+        task_id="t_lg", databases=("db0",),
+        columns=EVENT_SOURCE_COLUMNS, sink_kind="parquet",
+        sink_options={"path": out}))
+    mgr.await_all()
+    mgr.queries.pop("t_lg").stop()         # the process dies
+    n1 = spark.read.parquet(out).count()
+    assert n1 > 0
+    meta = state / "tasks.json"
+    with open(meta) as f:
+        raw = json.load(f)
+    raw["t_lg"]["live"] = True
+    with open(meta, "w") as f:
+        json.dump(raw, f)
+
+    mgr2 = TaskManager(spark, str(state), _source_factory(src))
+    assert mgr2.recover_all() == ["t_lg"]
+    assert mgr2.recovery_errors == {}
+    mgr2.await_all()
+    assert spark.read.parquet(out).count() == n1   # nothing re-emitted
+
+    mgr2.update_filters("t_lg", databases=("db1",))
+    with open(meta) as f:
+        assert "live" not in json.load(f)["t_lg"]
+    ev.filter(F.col("event_id").between(100, 199)) \
+        .write.mode("append").parquet(src)
+    mgr2.await_all()
+    sink = spark.read.parquet(out)
+    new = sink.filter(~F.col("key").startswith("db0."))
+    env = envelope_from_events(ev.filter(F.col("event_id").between(100, 199)))
+    n_db1 = env.filter(F.col("database") == "db1").count()
+    assert new.count() == n_db1 > 0
+    assert new.filter(~F.col("key").startswith("db1.")).count() == 0
+    log_pos = F.get_json_object("value", "$.event_header.log_pos")
+    assert sink.select(log_pos).distinct().count() == n1 + n_db1
+    mgr2.stop_task("t_lg")
 
 
 def test_create_refuses_index_option_the_kind_does_not_read(spark,

@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 from galaxy_spark.cdc import debezium
 from galaxy_spark.cdc.filters import TaskFilter
 from galaxy_spark.cdc.projections import project_changes
-from galaxy_spark.cdc.schema_registry import SchemaRegistry
+from galaxy_spark.cdc.schema_registry import ColumnDef, SchemaRegistry
 
 FIX = os.path.join(os.path.dirname(__file__), "fixtures")
 EVENTS = os.path.join(FIX, "debezium_mysql_events.jsonl")
@@ -106,19 +106,15 @@ def test_filters_f1_f3_on_real_envelopes(env):
     assert got == {("inventory", "customers")}     # exclude beats include
 
 
-def test_projection_roundtrip_matches_debezium_documents(spark, env):
+def test_projection_roundtrip_matches_debezium_documents(env):
     """P1+P2-P4 against real payloads: positional org_row rebuilt
     from the registry's column order, then project_changes zips it
     back — the maps must equal Debezium's own before/after documents
     (nothing quarantined). This is the zip/projection chain the
     reference runs on binlog rows, driven by connector output."""
     reg = SchemaRegistry()
-    reg.put_from_struct(
-        "inventory", "customers",
-        spark.createDataFrame(
-            [], "id string, first_name string, last_name string, "
-                "email string, balance string, created_days string"
-        ).schema)
+    reg.put("inventory", "customers",
+            [ColumnDef(c, "varchar(255)") for c in CUSTOMER_COLS])
     data = (env.filter(F.col("action").isin("insert", "update", "delete"))
             .filter((F.col("database") == "inventory")
                     & (F.col("table") == "customers")))
@@ -135,13 +131,11 @@ def test_projection_roundtrip_matches_debezium_documents(spark, env):
         assert r.after == r.dbz_after, r
 
 
-def test_unknown_table_quarantines(spark, env):
+def test_unknown_table_quarantines(env):
     """orders isn't registered: org_row stays NULL and the
     projection flags the row instead of crashing the stream."""
     reg = SchemaRegistry()
-    reg.put_from_struct(
-        "inventory", "customers",
-        spark.createDataFrame([], "id string").schema)
+    reg.put("inventory", "customers", [ColumnDef("id", "varchar(255)")])
     data = env.filter((F.col("table") == "orders")
                       & F.col("action").isNotNull())
     out = project_changes(
@@ -157,12 +151,8 @@ def test_schema_change_events_evolve_registry(spark):
     changes = debezium.schema_change_events(df).collect()
     assert [c.database for c in changes] == ["inventory", "inventory"]
     reg = SchemaRegistry()
-    reg.put_from_struct(
-        "inventory", "customers",
-        spark.createDataFrame(
-            [], "id string, first_name string, last_name string, "
-                "email string, balance string, created_days string"
-        ).schema)
+    reg.put("inventory", "customers",
+            [ColumnDef(c, "varchar(255)") for c in CUSTOMER_COLS])
     for c in sorted(changes, key=lambda c: c.ts_ms):
         assert reg.apply_ddl(c.database, c.ddl)
     # ADD COLUMN phone AFTER email, then DROP created_days
@@ -230,7 +220,6 @@ def test_positional_org_row_plan_does_not_grow_with_registry(spark):
     import re
 
     from galaxy_spark.cdc.debezium import positional_org_row
-    from galaxy_spark.cdc.schema_registry import ColumnDef
 
     env = (spark.createDataFrame(
         [("d", "t0", "insert")],

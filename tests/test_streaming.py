@@ -364,72 +364,52 @@ def test_parquet_store_rejects_foreign_lineage(spark, events_dir,
     q2.stop()
 
 
-def test_live_filter_update_no_restart(spark, tmp_path):
+def test_filter_update_restarts_from_checkpoint(spark, tmp_path):
     """VERDICT r4 #8 / reference ``update_task.go:150-197``: flip an
-    include list MID-STREAM and the change applies on the next
-    micro-batch with NO query restart — same query id, same runId,
-    offsets/state untouched. Batch 1 flows under databases=('db0',);
-    after the swap to ('db1',) batch 2's db0 rows are dropped and
-    its db1 rows pass — both proving the swap took effect live."""
-    from galaxy_spark.streaming.pipeline import live_memory_rows
-
-    src = str(tmp_path / "live_src")
+    include list MID-STREAM and the change applies from the next
+    micro-batch. The update restarts the query from the same
+    checkpoint. Batch 1 flows under databases=('db0',); after the
+    update to ('db1',) batch 2's db0 rows are dropped and exactly its
+    db1 rows pass, and no event is published twice."""
+    src = str(tmp_path / "upd_src")
+    out = str(tmp_path / "upd_out")
     ev = load_table(spark, SF, "events")
     # batch 1: the first 100 events
     ev.filter(F.col("event_id") < 100).write.mode("overwrite").parquet(src)
     mgr = TaskManager(spark, str(tmp_path / "state"),
                       _source_factory(src))
-    spec = TaskSpec(task_id="t_live", columns=EVENT_SOURCE_COLUMNS,
-                    sink_kind="memory", databases=("db0",), live=True)
+    spec = TaskSpec(task_id="t_upd", columns=EVENT_SOURCE_COLUMNS,
+                    sink_kind="parquet", sink_options={"path": out},
+                    databases=("db0",))
     mgr.create_task(spec)
-    q = mgr.queries["t_live"]
-    q.processAllAvailable()
-    qid, run_id = q.id, q.runId
+    mgr.queries["t_upd"].processAllAvailable()
 
-    rows1 = live_memory_rows("t_live")
-    assert rows1 and all(r.topic.startswith("t_live.db0.") for r in rows1)
+    rows1 = spark.read.parquet(out).collect()
+    assert rows1 and all(r.topic.startswith("t_upd.db0.") for r in rows1)
     n1 = len(rows1)
 
-    # live swap: db0 -> db1 (no restart anywhere in this path)
-    mgr.update_filters("t_live", databases=("db1",))
+    mgr.update_filters("t_upd", databases=("db1",))
     # batch 2: the next 100 events land as a new file
     ev.filter(F.col("event_id").between(100, 199)) \
         .write.mode("append").parquet(src)
+    q = mgr.queries["t_upd"]
     q.processAllAvailable()
-
-    assert mgr.queries["t_live"] is q          # same query object
-    assert (q.id, q.runId) == (qid, run_id)    # never restarted
     assert q.isActive
-    rows2 = live_memory_rows("t_live")[n1:]
+
+    sink = spark.read.parquet(out)
+    rows2 = sink.filter(~F.col("topic").startswith("t_upd.db0.")).collect()
     assert rows2, "batch 2 produced no rows"
-    assert all(r.topic.startswith("t_live.db1.") for r in rows2)
-    # db0 events exist in batch 2's id range but were filtered live
+    assert all(r.topic.startswith("t_upd.db1.") for r in rows2)
+    # db0 events exist in batch 2's id range but were filtered out
     env = envelope_from_events(ev.filter(F.col("event_id").between(100, 199)))
     assert env.filter(F.col("database") == "db0").count() > 0
     n_db1 = env.filter(F.col("database") == "db1").count()
     assert len(rows2) == n_db1                 # exactly the db1 rows
-    mgr.stop_task("t_live")
-
-
-def test_live_task_survives_filter_identity_update(spark, tmp_path):
-    """Updating a live task's filter to the SAME value is a no-op
-    that must not disturb the stream (regression guard for the
-    restart-path fallthrough)."""
-    src = str(tmp_path / "live_src2")
-    load_table(spark, SF, "events").limit(50) \
-        .write.mode("overwrite").parquet(src)
-    mgr = TaskManager(spark, str(tmp_path / "state2"),
-                      _source_factory(src))
-    mgr.create_task(TaskSpec(task_id="t_live2",
-                             columns=EVENT_SOURCE_COLUMNS,
-                             sink_kind="memory", live=True))
-    q = mgr.queries["t_live2"]
-    q.processAllAvailable()
-    run_id = q.runId
-    mgr.update_filters("t_live2", databases=())
-    q.processAllAvailable()
-    assert q.runId == run_id and q.isActive
-    mgr.stop_task("t_live2")
+    assert sink.count() == n1 + n_db1
+    log_pos = F.get_json_object("value", "$.event_header.log_pos")
+    assert sink.select(log_pos).distinct().count() == n1 + n_db1, \
+        "an event was published twice"
+    mgr.stop_task("t_upd")
 
 
 def test_stream_static_bloom_gate_matches_batch(spark, tmp_path):
@@ -610,28 +590,6 @@ def test_parquet_rollup_store_matches_batch(spark, events_dir, tmp_path):
                   .agg(F.count("*").alias("n_events"),
                        F.sum("value").alias("total_value"))).collect())
     assert store.snapshot() == exp
-
-
-def test_live_memory_sink_hard_caps_driver_buffer(spark, events_dir,
-                                                  tmp_path):
-    """The live pipeline's memory sink is a test surface: it must
-    REFUSE to buffer past maxRows (killing the query with a clear
-    error) rather than silently accumulate a 100 TB stream on the
-    driver. The kafka/parquet paths write distributed and have no
-    cap."""
-    from galaxy_spark.cdc.filters import TaskFilter
-    from galaxy_spark.streaming.pipeline import (LiveFilterRef,
-                                                 start_pipeline_live)
-
-    env = envelope_from_events(_stream_events(spark, events_dir))
-    q = start_pipeline_live(
-        env, "t_cap", LiveFilterRef(TaskFilter()),
-        EVENT_SOURCE_COLUMNS,
-        SinkConfig(kind="memory", options={"maxRows": "50"}),
-        str(tmp_path / "cap_ckpt"))
-    with pytest.raises(Exception, match="maxRows=50"):
-        q.processAllAvailable()
-    q.stop()
 
 
 def test_parquet_rollup_store_survives_spark_epoch_replay(
@@ -1190,16 +1148,13 @@ def test_store_rename_failure_raises_not_skips(tmp_path, monkeypatch):
     assert fs.committed(bucket, "v-lin.000000000002")
 
 
-def test_live_pipeline_routes_quarantined_to_dlq(spark, tmp_path):
-    """The LIVE pipeline must honor the same dead-letter contract
-    as start_pipeline: a malformed (short-arity) row routes to
-    <task>.deadletter.<db>.<table> through the same sink — it used
-    to be silently dropped on exactly the pipeline variant meant
-    for production filter updates."""
+def test_literal_columns_pipeline_routes_quarantined_to_dlq(spark,
+                                                           tmp_path):
+    """With a literal column list, a malformed (short-arity) row
+    routes to <task>.deadletter.<db>.<table> through the same memory
+    sink as the good row."""
     from galaxy_spark.cdc.filters import TaskFilter
-    from galaxy_spark.streaming.pipeline import (LiveFilterRef,
-                                                 _LIVE_MEMORY,
-                                                 start_pipeline_live)
+    from galaxy_spark.streaming.pipeline import start_pipeline
 
     src = str(tmp_path / "dlq_env")
     rows = [
@@ -1217,15 +1172,17 @@ def test_live_pipeline_routes_quarantined_to_dlq(spark, tmp_path):
      .write.parquet(src))
     env = spark.readStream.schema(
         spark.read.parquet(src).schema).parquet(src)
-    q = start_pipeline_live(
-        env, "t_dlq", LiveFilterRef(TaskFilter()),
+    q = start_pipeline(
+        env, "t_dlq_cols", TaskFilter(),
         ("event_id", "user_id", "value"),
         SinkConfig(kind="memory", options={}),
         str(tmp_path / "dlq_ckpt"))
     q.processAllAvailable()
     q.stop()
-    topics = sorted(r.topic for r in _LIVE_MEMORY["t_dlq"])
-    assert topics == ["t_dlq.db0.click", "t_dlq.deadletter.db0.click"]
+    topics = sorted(r.topic for r in
+                    spark.sql("SELECT topic FROM t_dlq_cols").collect())
+    assert topics == ["t_dlq_cols.db0.click",
+                      "t_dlq_cols.deadletter.db0.click"]
 
 
 def test_topic_files_lineage_scopes_batch_names(tmp_path, monkeypatch):
