@@ -122,9 +122,23 @@ class TaskManager:
             d = dict(d)
             for k in ("databases", "tables", "exclude_tables", "columns"):
                 d[k] = tuple(d.get(k) or ())
-            # dropped field: specs persisted with it still recover
-            d.pop("live", None)
-            out[tid] = TaskSpec(**d)
+            # dropped field: ``live`` picked a foreachBatch pipeline
+            # that wrote each batch with a plain append. Only its kafka
+            # output resumes safely on start_pipeline: the streaming
+            # file sink would start a _spark_metadata log in the
+            # parquet output, hiding every row written before it, and
+            # a memory sink cannot restart from a checkpoint
+            live = d.pop("live", False)
+            out[tid] = spec = TaskSpec(**d)
+            if live and spec.sink_kind != "kafka":
+                spec.stopped = True
+                self.recovery_errors[tid] = ValueError(
+                    f"task {tid} ran the removed live pipeline with a "
+                    f"{spec.sink_kind!r} sink, which cannot resume from "
+                    "its checkpoint: "
+                    + ("delete it and create it again with a new output "
+                       "path" if spec.sink_kind == "parquet"
+                       else "use recovery_v2"))
         return out
 
     def checkpoint_dir(self, spec: TaskSpec) -> str:
@@ -421,14 +435,21 @@ class TaskManager:
         checkpoint: the new filter applies from the next
         micro-batch, and no event is lost or published twice beyond
         the sink's at-least-once contract. The CDC query holds no
-        state, so the restart rebuilds nothing. A restart that fails
-        leaves the task stopped, durably, as ``recover_all`` leaves a
-        task it cannot start, and raises."""
+        state, so the restart rebuilds nothing. A running task on the
+        memory sink is refused and keeps running: that sink cannot
+        restart from a checkpoint. A restart that fails leaves the
+        task stopped, durably, as ``recover_all`` leaves a task it
+        cannot start, and raises."""
         spec = self.tasks[task_id]
         if spec.task_kind != "cdc":
             raise ValueError(
                 f"task {task_id} is a {spec.task_kind!r} task; "
                 "db/table filters apply to cdc tasks only")
+        if spec.sink_kind == "memory" and task_id in self.queries:
+            raise ValueError(
+                f"task {task_id} writes the memory sink, which cannot "
+                "restart from its checkpoint; a running task's filter "
+                "update needs a kafka, parquet or topic_files sink")
         if databases is not None:
             spec.databases = tuple(databases)
         if tables is not None:
@@ -476,9 +497,11 @@ class TaskManager:
         the reference's own taskRecovery logs and continues).
         Failed task ids -> exceptions land in ``recovery_errors``
         for the operator; the task stays registered and stopped so
-        it can be fixed and resumed."""
-        self.tasks = self._load_meta()
+        it can be fixed and resumed. A spec of the removed live
+        pipeline that cannot resume (``_load_meta``) lands there
+        too."""
         self.recovery_errors = {}
+        self.tasks = self._load_meta()
         started = []
         for tid, spec in self.tasks.items():
             if spec.stopped:

@@ -456,55 +456,106 @@ def test_failed_filter_restart_leaves_task_stopped(spark, events_dir,
     mgr.stop_task("t_fr")
 
 
-def test_legacy_live_task_spec_recovers(spark, tmp_path):
-    """Task specs once carried a ``live`` flag that picked a second
-    CDC pipeline. A tasks.json written with ``"live": true`` still
-    recovers through recover_all, and a filter update on the
-    recovered task applies from the next micro-batch."""
+def test_update_filters_refuses_running_memory_sink_task(spark,
+                                                         events_dir,
+                                                         tmp_path):
+    """The memory sink cannot restart from its checkpoint, so a filter
+    update, which restarts the query, would stop the task for good.
+    It is refused before the query stops: the task keeps running
+    under its old filter, in memory and in tasks.json."""
+    state = tmp_path / "mr_state"
+    mgr = TaskManager(spark, str(state), _source_factory(events_dir))
+    mgr.create_task(TaskSpec(task_id="t_mr", databases=("db0",),
+                             columns=EVENT_SOURCE_COLUMNS))
+    mgr.await_all()
+    q = mgr.queries["t_mr"]
+    with pytest.raises(ValueError, match="memory sink"):
+        mgr.update_filters("t_mr", databases=("db1",))
+    assert mgr.queries["t_mr"] is q and q.isActive
+    assert mgr.tasks["t_mr"].databases == ("db0",)
+    assert mgr.status()["t_mr"] == {
+        "stopped": False, "active": True,
+        "checkpoint": mgr.checkpoint_dir(mgr.tasks["t_mr"])}
+    with open(state / "tasks.json") as f:
+        assert json.load(f)["t_mr"]["databases"] == ["db0"]
+    mgr.stop_task("t_mr")
+
+
+def test_legacy_live_task_specs_resume_only_on_kafka(spark, tmp_path):
+    """Task specs once carried a ``live`` flag that ran a foreachBatch
+    pipeline writing each batch with a plain append. Resuming its
+    parquet output through the streaming file sink would start a
+    _spark_metadata log there and hide every row published before,
+    and a memory sink cannot restart from a checkpoint; so boot
+    recovery leaves such tasks stopped, durably, with an error
+    saying what to do, and the published rows stay readable. A
+    legacy kafka task resumes as before."""
     from pyspark.sql import functions as F
+
+    from galaxy_spark.cdc.filters import TaskFilter
+    from galaxy_spark.streaming.pipeline import (task_messages,
+                                                 transform_envelope)
 
     ev = load_table(spark, SF, "events")
     src = str(tmp_path / "lg_src")
     out = str(tmp_path / "lg_out")
     ev.filter(F.col("event_id") < 100).write.parquet(src)
     state = tmp_path / "lg_state"
-    mgr = TaskManager(spark, str(state), _source_factory(src))
-    mgr.create_task(TaskSpec(
-        task_id="t_lg", databases=("db0",),
-        columns=EVENT_SOURCE_COLUMNS, sink_kind="parquet",
-        sink_options={"path": out}))
+    factory = _source_factory(src)
+
+    # the state the live pipeline left: batch appends to the parquet
+    # output under a foreachBatch checkpoint
+    def handle(batch_df, epoch_id):
+        projected = transform_envelope(batch_df, TaskFilter(("db0",)),
+                                       EVENT_SOURCE_COLUMNS)
+        task_messages(projected, "t_lp").write.mode("append") \
+            .parquet(out)
+
+    q = factory(spark, None).writeStream \
+        .option("checkpointLocation",
+                str(state / "checkpoints" / "t_lp-e0")) \
+        .foreachBatch(handle).start()
+    q.processAllAvailable()
+    q.stop()
+    published = sorted(spark.read.parquet(out).collect())
+    assert published
+
+    base = {"databases": ["db0"], "columns": list(EVENT_SOURCE_COLUMNS),
+            "live": True, "stopped": False}
+    with open(state / "tasks.json", "w") as f:
+        json.dump({
+            "t_lp": {**base, "task_id": "t_lp", "sink_kind": "parquet",
+                     "sink_options": {"path": out}},
+            "t_lm": {**base, "task_id": "t_lm", "sink_kind": "memory"},
+            "t_lk": {**base, "task_id": "t_lk", "sink_kind": "kafka",
+                     "sink_options": {"topic": "t_lk"}},
+        }, f)
+    started = []
+
+    def no_broker(spark_, spec):
+        started.append(spec.task_id)
+        raise OSError("no kafka broker")
+
+    mgr = TaskManager(spark, str(state), no_broker)
+    assert mgr.recover_all() == []
+    assert started == ["t_lk"]             # only kafka is resumed
+    errors = mgr.recovery_errors
+    assert str(errors["t_lk"]) == "no kafka broker"
+    assert "new output path" in str(errors["t_lp"])
+    assert "recovery_v2" in str(errors["t_lm"])
+    with open(state / "tasks.json") as f:
+        saved = json.load(f)
+    assert all(saved[t]["stopped"] and "live" not in saved[t]
+               for t in ("t_lp", "t_lm", "t_lk"))
+    assert not os.path.exists(os.path.join(out, "_spark_metadata"))
+    assert sorted(spark.read.parquet(out).collect()) == published
+
+    # the memory task restarts as its error says, on a fresh checkpoint
+    mgr.source_factory = factory
+    mgr.recover_v2("t_lm")
     mgr.await_all()
-    mgr.queries.pop("t_lg").stop()         # the process dies
-    n1 = spark.read.parquet(out).count()
-    assert n1 > 0
-    meta = state / "tasks.json"
-    with open(meta) as f:
-        raw = json.load(f)
-    raw["t_lg"]["live"] = True
-    with open(meta, "w") as f:
-        json.dump(raw, f)
-
-    mgr2 = TaskManager(spark, str(state), _source_factory(src))
-    assert mgr2.recover_all() == ["t_lg"]
-    assert mgr2.recovery_errors == {}
-    mgr2.await_all()
-    assert spark.read.parquet(out).count() == n1   # nothing re-emitted
-
-    mgr2.update_filters("t_lg", databases=("db1",))
-    with open(meta) as f:
-        assert "live" not in json.load(f)["t_lg"]
-    ev.filter(F.col("event_id").between(100, 199)) \
-        .write.mode("append").parquet(src)
-    mgr2.await_all()
-    sink = spark.read.parquet(out)
-    new = sink.filter(~F.col("key").startswith("db0."))
-    env = envelope_from_events(ev.filter(F.col("event_id").between(100, 199)))
-    n_db1 = env.filter(F.col("database") == "db1").count()
-    assert new.count() == n_db1 > 0
-    assert new.filter(~F.col("key").startswith("db1.")).count() == 0
-    log_pos = F.get_json_object("value", "$.event_header.log_pos")
-    assert sink.select(log_pos).distinct().count() == n1 + n_db1
-    mgr2.stop_task("t_lg")
+    assert mgr.status()["t_lm"]["active"]
+    mgr.stop_task("t_lm")
 
 
 def test_create_refuses_index_option_the_kind_does_not_read(spark,

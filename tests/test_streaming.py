@@ -1148,43 +1148,6 @@ def test_store_rename_failure_raises_not_skips(tmp_path, monkeypatch):
     assert fs.committed(bucket, "v-lin.000000000002")
 
 
-def test_literal_columns_pipeline_routes_quarantined_to_dlq(spark,
-                                                           tmp_path):
-    """With a literal column list, a malformed (short-arity) row
-    routes to <task>.deadletter.<db>.<table> through the same memory
-    sink as the good row."""
-    from galaxy_spark.cdc.filters import TaskFilter
-    from galaxy_spark.streaming.pipeline import start_pipeline
-
-    src = str(tmp_path / "dlq_env")
-    rows = [
-        ("db0", "click", "insert", [["1", "10", "0.5"]]),   # good
-        ("db0", "click", "insert", [["2", "11"]]),          # short
-    ]
-    (spark.createDataFrame(
-        rows, "database string, table string, action string, "
-              "org_row array<array<string>>")
-     .withColumn("event_header",
-                 F.struct(F.lit(1).cast("long").alias("timestamp"),
-                          F.lit(10).cast("long").alias("log_pos"),
-                          F.lit(1000).cast("long")
-                          .alias("timestamp_ms")))
-     .write.parquet(src))
-    env = spark.readStream.schema(
-        spark.read.parquet(src).schema).parquet(src)
-    q = start_pipeline(
-        env, "t_dlq_cols", TaskFilter(),
-        ("event_id", "user_id", "value"),
-        SinkConfig(kind="memory", options={}),
-        str(tmp_path / "dlq_ckpt"))
-    q.processAllAvailable()
-    q.stop()
-    topics = sorted(r.topic for r in
-                    spark.sql("SELECT topic FROM t_dlq_cols").collect())
-    assert topics == ["t_dlq_cols.db0.click",
-                      "t_dlq_cols.deadletter.db0.click"]
-
-
 def test_topic_files_lineage_scopes_batch_names(tmp_path, monkeypatch):
     """After a checkpoint reset (recovery_v2 bumps the task's
     checkpoint epoch; batchIds restart at 0), the new generation's
